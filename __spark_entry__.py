@@ -129,22 +129,11 @@ def entry(spark: SparkSession) -> DataFrame:
 # ------------------------------------------------------------------ queries
 
 
-def _target_rows(spark: SparkSession, sf_dir: str) -> int:
-    """~4 native-reader tasks per core at the corpus size (the split floor
-    is one parquet row group)."""
-    count = _SF_COUNT.get(_sf_of(sf_dir), 200)
-    cores = spark.sparkContext.defaultParallelism or 8
-    return max(20, count // (4 * cores))
-
-
 def _q_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     # python-native source path (tests assert ≡ the DataFrame path)
     from ragflow_spark.sources.parquet_spans import extract_spans_native
 
-    return extract_spans_native(
-        spark, _corpus_path(spark, sf_dir),
-        target_rows=_target_rows(spark, sf_dir),
-    )
+    return extract_spans_native(spark, _corpus_path(spark, sf_dir))
 
 
 def _scalarize_media(df: DataFrame) -> DataFrame:
@@ -168,7 +157,6 @@ def _mk_chunk(chunker: str, budget: int):
         return _scalarize_media(extract_chunks_native(
             spark, _corpus_path(spark, sf_dir), chunker=chunker,
             chunk_token_num=budget,
-            target_rows=_target_rows(spark, sf_dir),
         ))
 
     return q
@@ -178,10 +166,7 @@ def _q_chunk_one(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ragflow_spark.sources.parquet_spans import extract_spans_native
 
     return assembly.one_chunk(
-        extract_spans_native(
-            spark, _corpus_path(spark, sf_dir),
-            target_rows=_target_rows(spark, sf_dir),
-        )
+        extract_spans_native(spark, _corpus_path(spark, sf_dir))
     )
 
 
@@ -1926,16 +1911,25 @@ def _q_extract_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag is true, the driver pins the row count. Re-runs are no-ops by
     construction (checkpoint + batch_id partition overwrite), so the
     output is stable across invocations."""
+    import glob
+    import hashlib
     import os
     import tempfile
 
+    import ragflow_spark.kernels as kernels
     from ragflow_spark.datagen import CORPUS_VERSION, corpus_df
     from ragflow_spark.operators.extract import extract_chunks_fused
     from ragflow_spark.streaming.extract_stream import stream_extract
 
+    # key the cached stream (input, sink, checkpoint) on the kernel sources
+    # too: a kernel change must never reuse a stale checkpoint's output
+    h = hashlib.sha256()
+    for f in sorted(glob.glob(os.path.join(os.path.dirname(kernels.__file__), "*.py"))):
+        with open(f, "rb") as fh:
+            h.update(fh.read())
     base = os.path.join(
         tempfile.gettempdir(),
-        f"rs_stream_drv_v{CORPUS_VERSION}_{_STREAM_DOCS}",
+        f"rs_stream_drv_v{CORPUS_VERSION}_{h.hexdigest()[:12]}_{_STREAM_DOCS}",
     )
     in_dir = os.path.join(base, "in")
     out_dir = os.path.join(base, "out")
@@ -1944,7 +1938,9 @@ def _q_extract_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.exists(os.path.join(in_dir, "_SUCCESS")):
         docs.write.mode("overwrite").parquet(in_dir)
     q = stream_extract(spark, in_dir, out_dir, ck_dir, chunker="naive")
-    q.awaitTermination(300)
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError(f"extract_stream did not drain {in_dir} within 300 s")
     streamed = spark.read.parquet(out_dir).select(
         "doc_id",
         "chunk_seq",

@@ -93,16 +93,9 @@ def main() -> None:
             # bench corpus is small enough that 2 MiB groups starve cores
             write_corpus(spark, corpus, count=n_native,
                          row_group_bytes=1024 * 1024)
-        # size splits to ~4 tasks/core so local[32] isn't starved at the
-        # bench corpus size (split floor = one parquet row group)
-        cpus = (
-            int(os.environ.get("SPARK_GRAFT_CPUS") or 0)
-            or os.cpu_count()
-            or 8
-        )
-        target_rows = max(200, n_native // (4 * cpus))
+        # plan_splits sizes splits to ~4 tasks per slot of the session
         t0 = time.time()
-        extract_chunks_native(spark, corpus, target_rows=target_rows).count()
+        extract_chunks_native(spark, corpus).count()
         timings["extract_chunks_native"] = round(time.time() - t0, 3)
         extra["native_docs_per_sec"] = round(
             n_native / timings["extract_chunks_native"], 2

@@ -18,6 +18,11 @@ handled explicitly"):
 At 100 TB the dominant costs are the input scan (columnar, pruned to
 doc_id+spans) and the one shuffle into finalize; strip's salting bounds the
 largest task by ``salt_block`` spans rather than by the largest document.
+
+These stages serve only the giant-doc tail (``_giant_tail``) and the
+checkpointed ``plans.pipeline.run_pipeline``. Docs below
+``GIANT_SPAN_THRESHOLD`` run whole, in one Arrow map, through the doc-batch
+runner in ``sources.parquet_spans``.
 """
 
 from __future__ import annotations
@@ -27,12 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ragflow_spark.kernels.extract import (
-    chunk_doc,
-    extract_doc,
-    finalize_doc,
-    strip_rows,
-)
+from ragflow_spark.kernels.extract import chunk_doc, finalize_doc, strip_rows
 from ragflow_spark.schemas import CHUNKS_SCHEMA, OUT_SPANS_SCHEMA
 
 STRIPPED_SCHEMA = (
@@ -168,44 +168,24 @@ def finalize_stage(
     return stripped.groupBy("doc_id").applyInPandas(run, schema=OUT_SPANS_SCHEMA)
 
 
-def whole_doc_stage(docs: DataFrame, html_tables: bool = False) -> DataFrame:
-    """Zero-shuffle extraction for docs whose span array fits one task: the
-    input row already holds the whole document, so strip+finalize run in a
-    single ``mapInPandas`` pass — no explode, no regroup, one Arrow hop.
-    This is the common path; the exploded/salted path below exists for the
-    giant-doc tail."""
-
-    def run(batches):
-        for pdf in batches:
-            ids: list[str] = []
-            out_rows: list[dict] = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                recs = [
-                    {
-                        "kind": s["kind"],
-                        "text": s["text"],
-                        "media_ref": s["media_ref"],
-                        "offset": s["offset"],
-                    }
-                    for s in spans
-                ]
-                for o in extract_doc(recs, html_tables=html_tables):
-                    ids.append(doc_id)
-                    out_rows.append(o)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "seq": [o["seq"] for o in out_rows],
-                    "kind": [o["kind"] for o in out_rows],
-                    "text": [o["text"] for o in out_rows],
-                    "media_ref": [o["media_ref"] for o in out_rows],
-                }
-            )
-
-    return docs.mapInPandas(run, schema=OUT_SPANS_SCHEMA)
-
-
 GIANT_SPAN_THRESHOLD = 2048
+
+
+def _giant_tail(
+    giants: DataFrame,
+    html_tables: bool,
+    chunk_args: dict | None,
+    salt_block: int = 256,
+    repartition: int | None = None,
+) -> DataFrame:
+    """The giant-doc route every extraction entry point shares: explode →
+    salted strip → per-doc finalize regroup (→ chunk over the reduced span
+    stream). ``chunk_args`` None means output spans, not chunks."""
+    spans = finalize_stage(
+        strip_stage(explode_spans(giants, salt_block=salt_block), repartition=repartition),
+        html_tables=html_tables,
+    )
+    return spans if chunk_args is None else chunk_stage(spans, **chunk_args)
 
 
 def extract_spans(
@@ -225,18 +205,11 @@ def extract_spans(
     Both paths run the identical kernels (tests assert equality), so the
     threshold is purely a physical-plan knob. ``giant_threshold=0`` forces
     the exploded path everywhere (used by tests and the skew bench)."""
-    if giant_threshold <= 0:
-        exploded = explode_spans(docs, salt_block=salt_block)
-        stripped = strip_stage(exploded, repartition=repartition)
-        return finalize_stage(stripped, html_tables=html_tables)
-    small = docs.where(F.size("spans") < giant_threshold)
-    giant = docs.where(F.size("spans") >= giant_threshold)
-    small_out = whole_doc_stage(small, html_tables=html_tables)
-    giant_out = finalize_stage(
-        strip_stage(explode_spans(giant, salt_block=salt_block), repartition=repartition),
-        html_tables=html_tables,
+    from ragflow_spark.sources.parquet_spans import _route  # deferred: it imports this module
+
+    return _route(
+        docs.sparkSession, docs, giant_threshold, html_tables, None, salt_block, repartition
     )
-    return small_out.unionByName(giant_out)
 
 
 def extract_chunks_fused(
@@ -251,58 +224,15 @@ def extract_chunks_fused(
     """End-to-end extract+chunk in ONE pass for non-giant docs (zero
     shuffles input→chunks); giant docs fall back to the staged path whose
     chunk step shuffles only the reduced span stream."""
+    from ragflow_spark.sources.parquet_spans import _route  # deferred: it imports this module
 
-    def run(batches):
-        for pdf in batches:
-            ids: list[str] = []
-            rows: list[dict] = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                recs = [
-                    {
-                        "kind": s["kind"],
-                        "text": s["text"],
-                        "media_ref": s["media_ref"],
-                        "offset": s["offset"],
-                    }
-                    for s in spans
-                ]
-                out = extract_doc(recs, html_tables=html_tables)
-                for c in chunk_doc(
-                    out,
-                    chunker=chunker,
-                    chunk_token_num=chunk_token_num,
-                    delimiter=delimiter,
-                    overlapped_percent=overlapped_percent,
-                ):
-                    ids.append(doc_id)
-                    rows.append(c)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "chunker": [c["chunker"] for c in rows],
-                    "chunk_seq": [c["chunk_seq"] for c in rows],
-                    "text": [c["text"] for c in rows],
-                    "token_count": [c["token_count"] for c in rows],
-                    "media_refs": pd.Series(
-                            [c["media_refs"] for c in rows], dtype=object
-                        ),
-                }
-            )
-
-    small = docs.where(F.size("spans") < giant_threshold)
-    giant = docs.where(F.size("spans") >= giant_threshold)
-    small_chunks = small.mapInPandas(run, schema=CHUNKS_SCHEMA)
-    giant_spans = finalize_stage(
-        strip_stage(explode_spans(giant)), html_tables=html_tables
-    )
-    giant_chunks = chunk_stage(
-        giant_spans,
+    chunk_args = dict(
         chunker=chunker,
         chunk_token_num=chunk_token_num,
         delimiter=delimiter,
         overlapped_percent=overlapped_percent,
     )
-    return small_chunks.unionByName(giant_chunks)
+    return _route(docs.sparkSession, docs, giant_threshold, html_tables, chunk_args)
 
 
 def with_chunk_ids(chunks: DataFrame) -> DataFrame:

@@ -68,12 +68,15 @@ def title_vector_blend_bucketed(
     Output is bit-identical to ops/similarity.title_vector_blend."""
     ensure_schema(spark, schema, location)
     tag = "".join(c if c.isalnum() else "_" for c in sf_dir.strip("/").split("/")[-1])
-    chunks_t = f"{schema}.chunk_vecs_{tag}_b{buckets}"
-    titles_t = f"{schema}.title_vecs_{tag}_b{buckets}"
+    # chunks_per_doc decides each vector's doc key: a cache built with
+    # another value holds other tables, never stale ones
+    suffix = f"{tag}_b{buckets}_c{chunks_per_doc}"
+    chunks_t = f"{schema}.chunk_vecs_{suffix}"
+    titles_t = f"{schema}.title_vecs_{suffix}"
     have = {
         r.tableName for r in spark.sql(f"SHOW TABLES IN {schema}").collect()
     }
-    if refresh or chunks_t.split(".")[1] not in have:
+    if refresh or not {chunks_t.split(".")[1], titles_t.split(".")[1]} <= have:
         # bucket metadata lives in the session catalog: a fresh session
         # cannot reuse a previous session's files AS bucketed tables, so
         # clear any stale on-disk leftovers before rewriting

@@ -1,4 +1,5 @@
-"""Python-native parquet source for the interleaved-span table.
+"""Python-native parquet source for the interleaved-span table, and the
+one doc-batch runner every extraction path shares.
 
 Motivation (measured, see BENCH.md): feeding nested ``array<struct>`` rows
 from the JVM scan through Arrow IPC into Python workers costs more CPU than
@@ -13,38 +14,51 @@ each task reads its row groups straight into Arrow and runs the kernels.
 The JVM never materializes the span arrays. This is the same architecture as
 Spark's own Python DataSource API; rebuilt here explicitly so the split
 planning stays under our control (row-group granularity = the salting unit
-for giant files).
+for giant files). ``plan_splits`` sizes splits from the footers alone: about
+four tasks per slot of the active session.
 
-Giant documents (spans ≥ giant_threshold) are skipped by the Python reader
-and handled by the exploded/salted DataFrame path — that filter is pushed
-into the JVM parquet scan via ``F.size(spans)``, which prunes whole row
-groups cheaply.
+Both readers — that in-task pyarrow read for parquet paths, and the JVM
+scan for DataFrame inputs (``operators.extract.extract_spans`` /
+``extract_chunks_fused``, hence streaming ``foreachBatch`` and
+``__spark_entry__.entry``) — feed the same runner, ``_run_docs``: one
+Arrow batch or table of ``(doc_id, spans)`` → ``_iter_docs`` decode →
+``extract_doc`` (→ ``chunk_doc``) per doc → one Arrow table typed from
+``OUT_SPANS_SCHEMA`` / ``CHUNKS_SCHEMA``. The sink commits that table from inside the task;
+every other path yields its batches from a ``mapInArrow`` stage
+(``_route``).
+
+Giant documents (spans ≥ giant_threshold) are skipped by the runner and
+handled by ``operators.extract._giant_tail`` (exploded/salted DataFrame
+path); for parquet paths that filter is pushed into the JVM parquet scan via
+the ``n_spans`` stats column, which prunes whole row groups cheaply.
 """
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ragflow_spark.kernels.extract import chunk_doc, extract_doc
-from ragflow_spark.operators.extract import (
-    GIANT_SPAN_THRESHOLD,
-    chunk_stage,
-    explode_spans,
-    finalize_stage,
-    strip_stage,
-)
+from ragflow_spark.operators.extract import GIANT_SPAN_THRESHOLD, _giant_tail
 from ragflow_spark.schemas import CHUNKS_SCHEMA, OUT_SPANS_SCHEMA
 
 SPLITS_SCHEMA = "path string, rg_start int, rg_end int"
+_SPANS_ARROW = to_arrow_schema(OUT_SPANS_SCHEMA)
+_CHUNKS_ARROW = to_arrow_schema(CHUNKS_SCHEMA)
 
 
 def plan_splits(
-    path: str, target_rows: int = 2000, giant_threshold: int | None = None
+    path: str, giant_threshold: int | None = None
 ) -> tuple[list[tuple[str, int, int]], bool]:
     """Row-group split planning from parquet footers only (no data I/O).
-    Groups consecutive row groups of a file until ~target_rows.
+    Groups consecutive row groups of a file until the running row total
+    reaches ceil(footer rows ÷ (4 × defaultParallelism)) of the active
+    session — about four tasks per slot. A split never spans files and
+    never cuts a row group.
 
     Returns (splits, may_have_giants): when the table carries the
     ``n_spans`` stats column, row-group max statistics prove the absence of
@@ -53,12 +67,14 @@ def plan_splits(
     import pyarrow.dataset as ds
     import pyarrow.parquet as pq
 
-    dataset = ds.dataset(path, format="parquet")
+    files = ds.dataset(path, format="parquet").files
+    metas = [pq.ParquetFile(f).metadata for f in files]
+    spark = SparkSession.getActiveSession()
+    slots = spark.sparkContext.defaultParallelism if spark else 1
+    target_rows = math.ceil(sum(md.num_rows for md in metas) / (4 * slots))
     splits: list[tuple[str, int, int]] = []
     may_have_giants = giant_threshold is None
-    for f in dataset.files:
-        pf = pq.ParquetFile(f)
-        md = pf.metadata
+    for f, md in zip(files, metas):
         ncol = None
         if giant_threshold is not None and md.num_row_groups > 0:
             # leaf-column index of n_spans (nested spans flatten to leaves,
@@ -88,45 +104,55 @@ def plan_splits(
 
 
 def _iter_docs(batch) -> tuple[list, list]:
-    """Arrow RecordBatch/Table → (doc_ids, list-of-span-record-lists) via
-    flat child arrays (no per-span pyarrow .to_pylist() object churn)."""
-    import pyarrow as pa
-
+    """Arrow RecordBatch/Table of (doc_id, spans) → (doc_ids,
+    list-of-span-record-lists). A null ``spans`` decodes as an empty doc."""
     doc_ids = batch.column("doc_id").to_pylist()
-    col = batch.column("spans")
-    chunks = col.chunks if isinstance(col, pa.ChunkedArray) else [col]
-    per_doc: list[list[dict]] = []
-    for ch in chunks:
-        offs = ch.offsets.to_numpy()
-        base = offs[0]
-        st = ch.flatten()
-        kinds = st.field("kind").to_pylist()
-        texts = st.field("text").to_pylist()
-        refs = st.field("media_ref").to_pylist()
-        offsets = st.field("offset").to_pylist()
-        for i in range(len(ch)):
-            a, b = offs[i] - base, offs[i + 1] - base
-            per_doc.append(
-                [
-                    {
-                        "kind": kinds[j],
-                        "text": texts[j],
-                        "media_ref": refs[j],
-                        "offset": offsets[j],
-                    }
-                    for j in range(a, b)
-                ]
-            )
+    per_doc = [
+        []
+        if spans is None
+        else [
+            {
+                "kind": s["kind"],
+                "text": s["text"],
+                "media_ref": s["media_ref"],
+                "offset": s["offset"],
+            }
+            for s in spans
+        ]
+        for spans in batch.column("spans").to_pandas()
+    ]
     return doc_ids, per_doc
 
 
+def _run_docs(batch, giant_threshold: int, html_tables: bool, chunk_args: dict | None):
+    """The doc-batch runner: decode → ``extract_doc`` (→ ``chunk_doc`` with
+    ``chunk_args``; None means output spans, not chunks) per doc → one
+    Arrow table typed from OUT_SPANS_SCHEMA / CHUNKS_SCHEMA. Docs with
+    ≥ giant_threshold spans are skipped: the giant-doc tail handles them.
+    Returns (table, docs kept)."""
+    import pyarrow as pa
+
+    ids: list[str] = []
+    rows: list[dict] = []
+    kept = 0
+    for doc_id, recs in zip(*_iter_docs(batch)):
+        if len(recs) >= giant_threshold:
+            continue
+        kept += 1
+        out = extract_doc(recs, html_tables=html_tables)
+        if chunk_args is not None:
+            out = chunk_doc(out, **chunk_args)
+        ids += [doc_id] * len(out)
+        rows += out
+    schema = _SPANS_ARROW if chunk_args is None else _CHUNKS_ARROW
+    cols = {n: [r[n] for r in rows] for n in schema.names[1:]}
+    return pa.Table.from_pydict({"doc_id": ids, **cols}, schema=schema), kept
+
+
 def _splits_df(
-    spark: SparkSession,
-    path: str,
-    target_rows: int,
-    giant_threshold: int | None = None,
+    spark: SparkSession, path: str, giant_threshold: int | None = None
 ) -> tuple[DataFrame, bool]:
-    splits, may_have_giants = plan_splits(path, target_rows, giant_threshold)
+    splits, may_have_giants = plan_splits(path, giant_threshold)
     # exactly one split per partition, WITHOUT a shuffle: a repartition here
     # would let AQE coalesce the (byte-tiny) split rows into a handful of
     # fat tasks and destroy load balance — parallelize pins the layout
@@ -148,14 +174,55 @@ def _giants_scan(spark: SparkSession, path: str, giant_threshold: int) -> DataFr
     return df.where(pred).select("doc_id", "spans")
 
 
-def _read_split(pdf: pd.DataFrame):
-    import pyarrow.parquet as pq
+def _route(
+    spark: SparkSession,
+    source: DataFrame | str,
+    giant_threshold: int,
+    html_tables: bool,
+    chunk_args: dict | None,
+    salt_block: int = 256,
+    repartition: int | None = None,
+) -> DataFrame:
+    """Every emitting extraction path: a ``mapInArrow`` stage yielding the
+    runner's batches for docs below ``giant_threshold``, unioned with
+    ``_giant_tail`` over the rest. ``source`` picks the reader: a docs
+    DataFrame is fed by its JVM scan; a parquet path is read inside the
+    task, one footer-planned split per task, and its tail is planned away
+    when the footer stats prove there are no giants."""
+    in_task = isinstance(source, str)
 
-    for r in pdf.itertuples():
-        pf = pq.ParquetFile(r.path)
-        yield pf.read_row_groups(
-            list(range(r.rg_start, r.rg_end)), columns=["doc_id", "spans"]
-        )
+    def run(batches):
+        import pyarrow.parquet as pq
+
+        for b in batches:
+            tables = [b]
+            if in_task:
+                d = b.to_pydict()
+                tables = (
+                    pq.ParquetFile(p).read_row_groups(
+                        list(range(a, z)), columns=["doc_id", "spans"]
+                    )
+                    for p, a, z in zip(d["path"], d["rg_start"], d["rg_end"])
+                )
+            for t in tables:
+                tbl, _ = _run_docs(t, giant_threshold, html_tables, chunk_args)
+                yield from tbl.to_batches()
+
+    schema = OUT_SPANS_SCHEMA if chunk_args is None else CHUNKS_SCHEMA
+    if in_task:
+        splits, may_have_giants = _splits_df(spark, source, giant_threshold)
+        small = splits.mapInArrow(run, schema)
+        if not may_have_giants:
+            # row-group max(n_spans) statistics prove no giants exist: the
+            # whole tail pipeline (scan + 3 shuffles) is planned away
+            return small
+        giants = _giants_scan(spark, source, giant_threshold)
+    else:
+        docs = source.select("doc_id", "spans")
+        small = docs.where(F.size("spans") < giant_threshold).mapInArrow(run, schema)
+        giants = docs.where(F.size("spans") >= giant_threshold)
+    tail = _giant_tail(giants, html_tables, chunk_args, salt_block, repartition)
+    return small.unionByName(tail)
 
 
 def extract_chunks_native(
@@ -167,63 +234,16 @@ def extract_chunks_native(
     overlapped_percent: int = 0,
     html_tables: bool = False,
     giant_threshold: int = GIANT_SPAN_THRESHOLD,
-    target_rows: int = 2000,
 ) -> DataFrame:
     """parquet → chunks with the reader inside the Python task (hot path) and
     the exploded/salted DataFrame path for the giant-doc tail."""
-
-    def run(batches):
-        for pdf in batches:
-            for tbl in _read_split(pdf):
-                ids_out: list[str] = []
-                rows: list[dict] = []
-                doc_ids, per_doc = _iter_docs(tbl)
-                for doc_id, recs in zip(doc_ids, per_doc):
-                    if len(recs) >= giant_threshold:
-                        continue  # handled by the salted JVM path below
-                    out = extract_doc(recs, html_tables=html_tables)
-                    for c in chunk_doc(
-                        out,
-                        chunker=chunker,
-                        chunk_token_num=chunk_token_num,
-                        delimiter=delimiter,
-                        overlapped_percent=overlapped_percent,
-                    ):
-                        ids_out.append(doc_id)
-                        rows.append(c)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": ids_out,
-                        "chunker": [c["chunker"] for c in rows],
-                        "chunk_seq": [c["chunk_seq"] for c in rows],
-                        "text": [c["text"] for c in rows],
-                        "token_count": [c["token_count"] for c in rows],
-                        "media_refs": pd.Series(
-                            [c["media_refs"] for c in rows], dtype=object
-                        ),
-                    }
-                )
-
-    splits, may_have_giants = _splits_df(
-        spark, path, target_rows, giant_threshold
-    )
-    small = splits.mapInPandas(run, schema=CHUNKS_SCHEMA)
-    if not may_have_giants:
-        # row-group max(n_spans) statistics prove no giants exist: the whole
-        # tail pipeline (scan + 3 shuffles) is planned away, metadata-only
-        return small
-    giants = _giants_scan(spark, path, giant_threshold)
-    giant_spans = finalize_stage(
-        strip_stage(explode_spans(giants)), html_tables=html_tables
-    )
-    giant_chunks = chunk_stage(
-        giant_spans,
+    chunk_args = dict(
         chunker=chunker,
         chunk_token_num=chunk_token_num,
         delimiter=delimiter,
         overlapped_percent=overlapped_percent,
     )
-    return small.unionByName(giant_chunks)
+    return _route(spark, path, giant_threshold, html_tables, chunk_args)
 
 
 MANIFEST_SCHEMA = (
@@ -297,7 +317,6 @@ def extract_chunks_native_to_parquet(
     overlapped_percent: int = 0,
     html_tables: bool = False,
     giant_threshold: int = GIANT_SPAN_THRESHOLD,
-    target_rows: int = 2000,
     compression: str = "snappy",
     resume: bool = False,
     direct_write: bool | None = None,
@@ -320,11 +339,16 @@ def extract_chunks_native_to_parquet(
     into the same directory."""
     import os
 
+    chunk_args = dict(
+        chunker=chunker,
+        chunk_token_num=chunk_token_num,
+        delimiter=delimiter,
+        overlapped_percent=overlapped_percent,
+    )
     fs0, root0 = _resolve_fs(out_dir)
     fs0.create_dir(root0, recursive=True)
 
     def run(batches):
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
         fs, root = _resolve_fs(out_dir)
@@ -335,73 +359,31 @@ def extract_chunks_native_to_parquet(
                     f"{root.rstrip('/')}/"
                     f"part-{os.path.basename(row.path)}-{row.rg_start}-{row.rg_end}.parquet"
                 )
+                n_docs, n_chunks = -1, None  # n_docs not recounted on resume
                 if resume:
-                    nrows = _committed_rows(fs, fname)
-                    if nrows is not None:
-                        # split already committed; lineage from footer only
-                        yield pd.DataFrame(
-                            {
-                                "split_id": [int(row.Index)],
-                                "n_docs": [-1],  # not recounted on resume
-                                "n_chunks": [nrows],
-                                "out_file": [fname],
-                            }
-                        )
-                        continue
-                tbl = pq.ParquetFile(row.path).read_row_groups(
-                    list(range(row.rg_start, row.rg_end)),
-                    columns=["doc_id", "spans"],
-                    use_threads=False,
-                )
-                ids_out: list[str] = []
-                rows: list[dict] = []
-                n_docs = 0
-                doc_ids, per_doc = _iter_docs(tbl)
-                for doc_id, recs in zip(doc_ids, per_doc):
-                    if len(recs) >= giant_threshold:
-                        continue
-                    n_docs += 1
-                    out = extract_doc(recs, html_tables=html_tables)
-                    for c in chunk_doc(
-                        out,
-                        chunker=chunker,
-                        chunk_token_num=chunk_token_num,
-                        delimiter=delimiter,
-                        overlapped_percent=overlapped_percent,
-                    ):
-                        ids_out.append(doc_id)
-                        rows.append(c)
-                split_id = int(row.Index)
-                out_tbl = pa.table(
-                    {
-                        "doc_id": pa.array(ids_out, pa.string()),
-                        "chunker": pa.array([c["chunker"] for c in rows], pa.string()),
-                        "chunk_seq": pa.array(
-                            [c["chunk_seq"] for c in rows], pa.int32()
-                        ),
-                        "text": pa.array([c["text"] for c in rows], pa.string()),
-                        "token_count": pa.array(
-                            [c["token_count"] for c in rows], pa.int32()
-                        ),
-                        "media_refs": pa.array(
-                            [c["media_refs"] for c in rows],
-                            pa.list_(pa.string()),
-                        ),
-                    }
-                )
-                _commit_table(fs, fname, out_tbl, compression, rename)
+                    # split already committed: lineage from its footer only
+                    n_chunks = _committed_rows(fs, fname)
+                if n_chunks is None:
+                    tbl = pq.ParquetFile(row.path).read_row_groups(
+                        list(range(row.rg_start, row.rg_end)),
+                        columns=["doc_id", "spans"],
+                        use_threads=False,
+                    )
+                    out_tbl, n_docs = _run_docs(
+                        tbl, giant_threshold, html_tables, chunk_args
+                    )
+                    _commit_table(fs, fname, out_tbl, compression, rename)
+                    n_chunks = out_tbl.num_rows
                 yield pd.DataFrame(
                     {
-                        "split_id": [split_id],
+                        "split_id": [int(row.Index)],
                         "n_docs": [n_docs],
-                        "n_chunks": [len(rows)],
+                        "n_chunks": [n_chunks],
                         "out_file": [fname],
                     }
                 )
 
-    splits, may_have_giants = _splits_df(
-        spark, path, target_rows, giant_threshold
-    )
+    splits, may_have_giants = _splits_df(spark, path, giant_threshold)
     manifest = splits.mapInPandas(run, schema=MANIFEST_SCHEMA)
     if may_have_giants:
         giants_dir = out_dir.rstrip("/") + "/giants"
@@ -414,19 +396,11 @@ def extract_chunks_native_to_parquet(
                 # last by the parquet committer) — skip the whole tail
                 return manifest
         giants = _giants_scan(spark, path, giant_threshold)
-        giant_spans = finalize_stage(
-            strip_stage(explode_spans(giants)), html_tables=html_tables
-        )
-        giant_chunks = chunk_stage(
-            giant_spans,
-            chunker=chunker,
-            chunk_token_num=chunk_token_num,
-            delimiter=delimiter,
-            overlapped_percent=overlapped_percent,
-        )
         # overwrite (not append): the giants output is a pure function of the
         # input, so reruns replace it instead of duplicating every giant doc
-        giant_chunks.write.mode("overwrite").parquet(giants_dir)
+        _giant_tail(giants, html_tables, chunk_args).write.mode("overwrite").parquet(
+            giants_dir
+        )
     return manifest
 
 
@@ -435,40 +409,6 @@ def extract_spans_native(
     path: str,
     html_tables: bool = False,
     giant_threshold: int = GIANT_SPAN_THRESHOLD,
-    target_rows: int = 2000,
 ) -> DataFrame:
     """parquet → extracted spans, Python-native reader (same routing)."""
-
-    def run(batches):
-        for pdf in batches:
-            for tbl in _read_split(pdf):
-                ids_out: list[str] = []
-                rows: list[dict] = []
-                doc_ids, per_doc = _iter_docs(tbl)
-                for doc_id, recs in zip(doc_ids, per_doc):
-                    if len(recs) >= giant_threshold:
-                        continue
-                    for o in extract_doc(recs, html_tables=html_tables):
-                        ids_out.append(doc_id)
-                        rows.append(o)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": ids_out,
-                        "seq": [o["seq"] for o in rows],
-                        "kind": [o["kind"] for o in rows],
-                        "text": [o["text"] for o in rows],
-                        "media_ref": [o["media_ref"] for o in rows],
-                    }
-                )
-
-    splits, may_have_giants = _splits_df(
-        spark, path, target_rows, giant_threshold
-    )
-    small = splits.mapInPandas(run, schema=OUT_SPANS_SCHEMA)
-    if not may_have_giants:
-        return small
-    giants = _giants_scan(spark, path, giant_threshold)
-    giant_out = finalize_stage(
-        strip_stage(explode_spans(giants)), html_tables=html_tables
-    )
-    return small.unionByName(giant_out)
+    return _route(spark, path, giant_threshold, html_tables, None)

@@ -22,16 +22,58 @@ def corpus_path(spark, tmp_path_factory):
     return p
 
 
-def test_split_planning(corpus_path):
-    splits, may_have_giants = plan_splits(corpus_path, target_rows=30)
-    assert len(splits) >= 4
-    for path, a, b in splits:
+def _assert_derived_splits(spark, path):
+    """Derived policy: ceil(footer rows / (4 x defaultParallelism)) rows per
+    split; each split closes at the first row group where the running
+    total reaches it (or at the end of its file), and the splits tile
+    every row group of every file exactly once."""
+    import math
+
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    splits, _ = plan_splits(path)
+    metas = {f: pq.ParquetFile(f).metadata for f in ds.dataset(path).files}
+    target = math.ceil(
+        sum(md.num_rows for md in metas.values())
+        / (4 * spark.sparkContext.defaultParallelism)
+    )
+    tiles = {f: [] for f in metas}
+    for f, a, b in splits:
         assert b > a
+        tiles[f].append((a, b))
+        md = metas[f]
+        running = [
+            sum(md.row_group(i).num_rows for i in range(a, j + 1)) for j in range(a, b)
+        ]
+        assert all(r < target for r in running[:-1])
+        assert running[-1] >= target or b == md.num_row_groups
+    for f, md in metas.items():
+        bounds = [x for ab in sorted(tiles[f]) for x in ab]
+        assert bounds[0] == 0 and bounds[-1] == md.num_row_groups
+        assert bounds[1:-1:2] == bounds[2:-1:2]  # contiguous, no gaps
+    return splits
+
+
+def test_split_planning(spark, corpus_path, tmp_path):
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    assert spark.sparkContext.defaultParallelism == 4
+    assert len(_assert_derived_splits(spark, corpus_path)) >= 4
+    # the fixture's files hold one row group each; a one-file copy in
+    # 7-row groups makes the splits close inside a file (target 8 → 2 groups)
+    pq.write_table(
+        ds.dataset(corpus_path).to_table(), str(tmp_path / "one.parquet"),
+        row_group_size=7,
+    )
+    multi = _assert_derived_splits(spark, str(tmp_path))
+    assert [b - a for _, a, b in multi[:-1]] == [2] * (len(multi) - 1)
     # metadata-only giant detection: threshold above every doc → provably none
-    _, g_hi = plan_splits(corpus_path, target_rows=30, giant_threshold=10**6)
+    _, g_hi = plan_splits(corpus_path, giant_threshold=10**6)
     assert g_hi is False
     # threshold below the biggest fixture docs → giants detected
-    _, g_lo = plan_splits(corpus_path, target_rows=30, giant_threshold=120)
+    _, g_lo = plan_splits(corpus_path, giant_threshold=120)
     assert g_lo is True
 
 

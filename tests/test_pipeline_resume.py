@@ -74,6 +74,23 @@ def test_native_pipeline_resume(spark, tmp_path_factory):
     assert r2.chunks.count() == n1
     m = r1.run.metrics()
     assert m.where(F.col("stage") == "chunks").agg(F.sum("span_count")).first()[0] == n1
+    # committed chunks ≡ the single-doc kernels over the same generated docs
+    from ragflow_spark.datagen import gen_doc
+    from ragflow_spark.kernels.extract import chunk_doc, extract_doc
+
+    want = sorted(
+        (d["doc_id"], c["chunker"], c["chunk_seq"], c["text"], c["token_count"],
+         tuple(c["media_refs"]))
+        for d in (gen_doc(8, i) for i in range(30))
+        for c in chunk_doc(extract_doc(d["spans"]), chunker="naive", chunk_token_num=512)
+    )
+    for r in (r1, r2):
+        got = sorted(
+            (x.doc_id, x.chunker, x.chunk_seq, x.text, x.token_count,
+             tuple(x.media_refs or ()))
+            for x in r.chunks.collect()
+        )
+        assert got == want and len(want) > 0
 
 
 def test_failure_capture_lineage(spark, tmp_path_factory):

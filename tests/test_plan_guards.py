@@ -1,9 +1,13 @@
 """Physical-plan regression guards for the round-5 fixes: these pin plan
 SHAPES that silently regressed before (AQE re-coalescing the salted strip
-shuffle; the bounded default query batch reaching the scan)."""
+shuffle; the bounded default query batch reaching the scan), plus the code
+shape of the extraction paths (one doc-batch runner, one giant-doc tail)."""
 
 from __future__ import annotations
 
+import ast
+import glob
+import os
 import re
 
 
@@ -44,3 +48,52 @@ def test_knn_default_batch_predicates_reach_scan(spark):
     )
     assert re.search(r"vec_id#\d+L % 100\) = 0", s), "stride not in scan"
     assert re.search(r"vec_id#\d+L < 1600", s), "cap not in scan"
+
+
+def _calls_by_function(paths):
+    """{called name: {innermost enclosing function names}} over the
+    modules at ``paths``."""
+    calls: dict[str, set[str]] = {}
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name)
+                continue
+            if isinstance(child, ast.Call):
+                f = child.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name:
+                    calls.setdefault(name, set()).add(fn)
+            visit(child, fn)
+
+    for p in paths:
+        with open(p) as fh:
+            visit(ast.parse(fh.read()), "<module>")
+    return calls
+
+
+def test_extraction_paths_share_one_runner_and_tail():
+    """Every extraction path runs the one doc-batch runner and the one
+    giant-doc tail instead of re-implementing them: ``extract_doc`` is
+    called from a single function of ``operators/`` + ``sources/``,
+    ``explode_spans`` only from ``_giant_tail`` and the checkpointed
+    ``run_pipeline``, and split sizing is not a public knob."""
+    import ragflow_spark
+
+    pkg = os.path.dirname(ragflow_spark.__file__)
+    paths = sorted(
+        glob.glob(os.path.join(pkg, "operators", "*.py"))
+        + glob.glob(os.path.join(pkg, "sources", "*.py"))
+    )
+    calls = _calls_by_function(paths)
+    assert len(calls.get("extract_doc", set())) == 1, calls.get("extract_doc")
+    every = _calls_by_function(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True))
+    assert every["explode_spans"] == {"_giant_tail", "run_pipeline"}
+    for p in paths:
+        with open(p) as fh:
+            tree = ast.parse(fh.read())
+        for fn in tree.body:
+            if isinstance(fn, ast.FunctionDef) and not fn.name.startswith("_"):
+                args = fn.args.args + fn.args.kwonlyargs
+                assert "target_rows" not in {a.arg for a in args}, (p, fn.name)
