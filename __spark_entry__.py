@@ -77,7 +77,7 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _docs_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents scan feeding a Python-kernel (mapInPandas) stage.
+    """documents scan feeding a Python-kernel (``_per_doc``) stage.
 
     At test scale the table is ONE parquet file → one split → the whole
     Arrow-batched kernel stage would serialize on a single core. When the
@@ -92,6 +92,48 @@ def _docs_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par)
     return docs
+
+
+def _per_doc(spark: SparkSession, sf_dir: str, ddl_schema: str, rows_of) -> DataFrame:
+    """The one batch loop under the kernel-fixture queries: the
+    documents scan (``_docs_scan``) feeds a ``mapInArrow`` stage that
+    calls ``rows_of(doc_id, text)`` per document (``text`` unchanged, so
+    possibly None) and emits the tuples it yields, typed from
+    ``ddl_schema``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = to_arrow_schema(StructType.fromDDL(ddl_schema))
+
+    def run(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            ids, texts = b.column("doc_id").to_pylist(), b.column("text").to_pylist()
+            rows = [r for d, t in zip(ids, texts) for r in rows_of(d, t)]
+            cols = list(zip(*rows)) or [()] * len(schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
+            )
+
+    return _docs_scan(spark, sf_dir).mapInArrow(run, ddl_schema)
+
+
+def _per_doc_chunks(spark: SparkSession, sf_dir: str, chunks_of) -> DataFrame:
+    """``_per_doc`` for the chunker fixtures: ``chunks_of(doc_id, text)``
+    yields (prefixed doc_id, chunk texts) pairs, each becoming
+    (doc_id, chunk_seq, text, token_count) rows."""
+    from ragflow_spark.functions.tokens import num_tokens
+
+    def rows_of(doc_id, text):
+        for pid, chunks in chunks_of(doc_id, text):
+            for i, ck in enumerate(chunks):
+                yield pid, i, ck, num_tokens(ck)
+
+    return _per_doc(
+        spark, sf_dir, "doc_id string, chunk_seq int, text string, token_count int",
+        rows_of,
+    )
 
 
 def _interleave_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -150,71 +192,29 @@ def _scalarize_media(df: DataFrame) -> DataFrame:
     )
 
 
-def _mk_chunk(chunker: str, budget: int):
-    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ragflow_spark.sources.parquet_spans import extract_chunks_native
-
-        return _scalarize_media(extract_chunks_native(
-            spark, _corpus_path(spark, sf_dir), chunker=chunker,
-            chunk_token_num=budget,
-        ))
-
-    return q
-
-
-def _q_chunk_one(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragflow_spark.sources.parquet_spans import extract_spans_native
-
-    return assembly.one_chunk(
-        extract_spans_native(spark, _corpus_path(spark, sf_dir))
-    )
-
-
 def _q_chunk_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """QA tabular-route kernel (kernels/chunkers.py qa_pairs_tabular,
     rag/app/qa.py txt path) over deterministic tab-delimited Q&A lines
     built from the documents table: two 2-field lines plus one delimiter-
     less continuation line that must append to the first answer. The
-    kernel runs inside mapInPandas (Arrow-batched); the oracle reproduces
+    kernel runs in the per-doc map (Arrow-batched); the oracle reproduces
     the pair algebra analytically in SQL."""
-    import pandas as pd
-
-    from ragflow_spark.functions.tokens import num_tokens
     from ragflow_spark.kernels.chunkers import qa_pairs_tabular
 
-    docs = _docs_scan(spark, sf_dir)
+    def chunks_of(doc_id, text):
+        words = (text or "").replace(",", "").split()
+        j = lambda a, b: " ".join(words[a:b])  # noqa: E731
+        lines = [
+            f"Q1 {j(0, 3)}?\t{j(3, 6)}",
+            f"more {j(6, 8)}",
+            f"Q2 {j(8, 11)}?\t{j(11, 14)}",
+        ]
+        yield f"qa-{doc_id}", [
+            (q + "\n" + a).strip() for q, a in qa_pairs_tabular(lines)
+        ]
 
-    def run(batches):
-        for pdf in batches:
-            ids, seqs, texts, toks = [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                words = (text or "").replace(",", "").split()
-                j = lambda a, b: " ".join(words[a:b])  # noqa: E731
-                lines = [
-                    f"Q1 {j(0, 3)}?\t{j(3, 6)}",
-                    f"more {j(6, 8)}",
-                    f"Q2 {j(8, 11)}?\t{j(11, 14)}",
-                ]
-                for i, (q, a) in enumerate(qa_pairs_tabular(lines)):
-                    t = (q + "\n" + a).strip()
-                    ids.append(f"qa-{doc_id}")
-                    seqs.append(i)
-                    texts.append(t)
-                    toks.append(num_tokens(t))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "chunker": ["qa"] * len(ids),
-                    "chunk_seq": seqs,
-                    "text": texts,
-                    "token_count": toks,
-                }
-            )
-
-    return docs.mapInPandas(
-        run,
-        schema="doc_id string, chunker string, chunk_seq int, text string, "
-        "token_count int",
+    return _per_doc_chunks(spark, sf_dir, chunks_of).select(
+        "doc_id", F.lit("qa").alias("chunker"), "chunk_seq", "text", "token_count"
     )
 
 
@@ -223,40 +223,22 @@ def _q_chunk_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
     txt path) over deterministic tab-delimited content/tag lines built from
     the documents table: a delimiter-less preamble line accumulates into the
     first pair's content, tags comma-split with '.'→'_'."""
-    import pandas as pd
-
     from ragflow_spark.kernels.chunkers import tag_pairs
 
-    docs = _docs_scan(spark, sf_dir)
+    def rows_of(doc_id, text):
+        words = (text or "").replace(",", "").split()
+        j = lambda a, b: " ".join(words[a:b])  # noqa: E731
+        lines = [
+            j(0, 4),
+            f"{j(4, 8)}\t{j(8, 9)}, {j(9, 10)}.x",
+            f"{j(10, 13)}\t{j(13, 14)}",
+        ]
+        for i, (content, tags) in enumerate(tag_pairs(lines)):
+            yield f"tag-{doc_id}", i, content, ",".join(tags)
 
-    def run(batches):
-        for pdf in batches:
-            ids, seqs, contents, tags_out = [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                words = (text or "").replace(",", "").split()
-                j = lambda a, b: " ".join(words[a:b])  # noqa: E731
-                lines = [
-                    j(0, 4),
-                    f"{j(4, 8)}\t{j(8, 9)}, {j(9, 10)}.x",
-                    f"{j(10, 13)}\t{j(13, 14)}",
-                ]
-                for i, (content, tags) in enumerate(tag_pairs(lines)):
-                    ids.append(f"tag-{doc_id}")
-                    seqs.append(i)
-                    contents.append(content)
-                    tags_out.append(",".join(tags))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "chunk_seq": seqs,
-                    "content": contents,
-                    "tag_kwd": tags_out,
-                }
-            )
-
-    return docs.mapInPandas(
-        run,
-        schema="doc_id string, chunk_seq int, content string, tag_kwd string",
+    return _per_doc(
+        spark, sf_dir,
+        "doc_id string, chunk_seq int, content string, tag_kwd string", rows_of,
     )
 
 
@@ -324,43 +306,15 @@ def _q_chunk_naive_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle: documents.text is cut into 5-word sections (each ending '\\n' so
     the token counter is additive across section joins) and folded at budget
     16 — a new chunk starts once the accumulated count strictly exceeds the
-    budget. Exercises the same kernel the six corpus chunker queries use."""
-    import pandas as pd
-
-    from ragflow_spark.functions.tokens import num_tokens
+    budget. Exercises the same kernel the native chunker path uses."""
     from ragflow_spark.kernels.chunkers import naive_merge
 
-    docs = _docs_scan(spark, sf_dir)
+    def chunks_of(doc_id, text):
+        w = (text or "").split()
+        secs = [" ".join(w[i:i + 5]) + "\n" for i in range(0, len(w), 5)]
+        yield f"nv-{doc_id}", naive_merge(secs, chunk_token_num=16, delimiter="\n")
 
-    def run(batches):
-        for pdf in batches:
-            ids, seqs, texts, toks = [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                words = (text or "").split()
-                sections = [
-                    " ".join(words[i:i + 5]) + "\n"
-                    for i in range(0, len(words), 5)
-                ]
-                for i, ck in enumerate(
-                    naive_merge(sections, chunk_token_num=16, delimiter="\n")
-                ):
-                    ids.append(f"nv-{doc_id}")
-                    seqs.append(i)
-                    texts.append(ck)
-                    toks.append(num_tokens(ck))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "chunk_seq": seqs,
-                    "text": texts,
-                    "token_count": toks,
-                }
-            )
-
-    return docs.mapInPandas(
-        run,
-        schema="doc_id string, chunk_seq int, text string, token_count int",
-    )
+    return _per_doc_chunks(spark, sf_dir, chunks_of)
 
 
 _CHUNK_NAIVE_DOCS_SQL = f"""
@@ -409,43 +363,16 @@ def _q_chunk_naive_overlap_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE — the overlap prefix does NOT count toward the budget (the kernel
     accumulates section token counts, not re-counts of the seeded text),
     while the reported token_count is over the final text including it."""
-    import pandas as pd
-
-    from ragflow_spark.functions.tokens import num_tokens
     from ragflow_spark.kernels.chunkers import naive_merge
 
-    docs = _docs_scan(spark, sf_dir)
+    def chunks_of(doc_id, text):
+        w = (text or "").split()
+        secs = [" ".join(w[i:i + 5]) + "\n" for i in range(0, len(w), 5)]
+        yield f"ov-{doc_id}", naive_merge(
+            secs, chunk_token_num=16, delimiter="\n", overlapped_percent=20
+        )
 
-    def run(batches):
-        for pdf in batches:
-            ids, seqs, texts, toks = [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                words = (text or "").split()
-                sections = [
-                    " ".join(words[i:i + 5]) + "\n"
-                    for i in range(0, len(words), 5)
-                ]
-                for i, ck in enumerate(
-                    naive_merge(sections, chunk_token_num=16,
-                                delimiter="\n", overlapped_percent=20)
-                ):
-                    ids.append(f"ov-{doc_id}")
-                    seqs.append(i)
-                    texts.append(ck)
-                    toks.append(num_tokens(ck))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "chunk_seq": seqs,
-                    "text": texts,
-                    "token_count": toks,
-                }
-            )
-
-    return docs.mapInPandas(
-        run,
-        schema="doc_id string, chunk_seq int, text string, token_count int",
-    )
+    return _per_doc_chunks(spark, sf_dir, chunks_of)
 
 
 _CHUNK_NAIVE_OVERLAP_DOCS_SQL = f"""
@@ -501,46 +428,16 @@ def _q_chunk_hier_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     heading as their title chain -> one '[heading\\nbody]' chunk each; the
     heading itself is consumed and never starts a chunk. Chunks render
     exactly like book_chunk/laws_chunk: '\\n'.join."""
-    import pandas as pd
-
-    from ragflow_spark.functions.tokens import num_tokens
     from ragflow_spark.kernels.chunkers import hierarchical_merge
 
-    docs = _docs_scan(spark, sf_dir)
+    def chunks_of(doc_id, text):
+        w = (text or "").split()
+        secs = [(" ".join(w[2 * i:2 * i + 2] * 24), "text") for i in range(4)]
+        secs += [("Chapter 1", "text"), (" ".join(w[8:11]), "text"),
+                 (" ".join(w[11:14]), "text")]
+        yield f"hi-{doc_id}", ["\n".join(ck) for ck in hierarchical_merge(3, secs, 5)]
 
-    def run(batches):
-        for pdf in batches:
-            ids, seqs, texts, toks = [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                words = (text or "").split()
-                secs = [
-                    (" ".join(words[2 * i:2 * i + 2] * 24), "text")
-                    for i in range(4)
-                ]
-                secs.append(("Chapter 1", "text"))
-                secs.append((" ".join(words[8:11]), "text"))
-                secs.append((" ".join(words[11:14]), "text"))
-                chunks = [
-                    "\n".join(ck) for ck in hierarchical_merge(3, secs, 5)
-                ]
-                for i, ck in enumerate(chunks):
-                    ids.append(f"hi-{doc_id}")
-                    seqs.append(i)
-                    texts.append(ck)
-                    toks.append(num_tokens(ck))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "chunk_seq": seqs,
-                    "text": texts,
-                    "token_count": toks,
-                }
-            )
-
-    return docs.mapInPandas(
-        run,
-        schema="doc_id string, chunk_seq int, text string, token_count int",
-    )
+    return _per_doc_chunks(spark, sf_dir, chunks_of)
 
 
 _CHUNK_HIER_DOCS_SQL = f"""
@@ -616,50 +513,20 @@ def _q_chunk_book_laws_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-word sections (no bullet → naive route at the same budget 16). Each
     document emits BOTH chunkers' output, prefixed bk-/lw-; the oracle is
     the parity union of the two existing fold oracles, doubled."""
-    import pandas as pd
-
-    from ragflow_spark.functions.tokens import num_tokens
     from ragflow_spark.kernels.chunkers import book_chunk, laws_chunk
 
-    docs = _docs_scan(spark, sf_dir)
+    def chunks_of(doc_id, text):
+        w = (text or "").split()
+        if doc_id % 2 == 0:
+            secs = [(" ".join(w[2 * i:2 * i + 2] * 24), "text") for i in range(4)]
+            secs += [("Chapter 1", "text"), (" ".join(w[8:11]), "text"),
+                     (" ".join(w[11:14]), "text")]
+        else:
+            secs = [(" ".join(w[i:i + 5]) + "\n", "text") for i in range(0, len(w), 5)]
+        for pre, chunker in (("bk", book_chunk), ("lw", laws_chunk)):
+            yield f"{pre}-{doc_id}", chunker(secs, True, 16, "\n")
 
-    def run(batches):
-        for pdf in batches:
-            ids, seqs, texts, toks = [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w = (text or "").split()
-                if doc_id % 2 == 0:
-                    secs = [
-                        (" ".join(w[2 * i:2 * i + 2] * 24), "text")
-                        for i in range(4)
-                    ]
-                    secs.append(("Chapter 1", "text"))
-                    secs.append((" ".join(w[8:11]), "text"))
-                    secs.append((" ".join(w[11:14]), "text"))
-                else:
-                    secs = [
-                        (" ".join(w[i:i + 5]) + "\n", "text")
-                        for i in range(0, len(w), 5)
-                    ]
-                for pre, chunker in (("bk", book_chunk), ("lw", laws_chunk)):
-                    for i, ck in enumerate(chunker(secs, True, 16, "\n")):
-                        ids.append(f"{pre}-{doc_id}")
-                        seqs.append(i)
-                        texts.append(ck)
-                        toks.append(num_tokens(ck))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "chunk_seq": seqs,
-                    "text": texts,
-                    "token_count": toks,
-                }
-            )
-
-    return docs.mapInPandas(
-        run,
-        schema="doc_id string, chunk_seq int, text string, token_count int",
-    )
+    return _per_doc_chunks(spark, sf_dir, chunks_of)
 
 
 # dispatch oracle = union of the two route oracles, parity-filtered, once
@@ -688,42 +555,14 @@ def _q_chunk_email_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduces to naive_merge at the email default budget 128 — oracled by
     the naive fold CTE with the budget substituted, so the email entry
     point's budget plumbing is what this checks."""
-    import pandas as pd
-
-    from ragflow_spark.functions.tokens import num_tokens
     from ragflow_spark.kernels.chunkers import email_chunk
 
-    docs = _docs_scan(spark, sf_dir)
+    def chunks_of(doc_id, text):
+        w = (text or "").split()
+        secs = [" ".join(w[i:i + 5]) + "\n" for i in range(0, len(w), 5)]
+        yield f"em-{doc_id}", email_chunk(secs, chunk_token_num=128, delimiter="\n")
 
-    def run(batches):
-        for pdf in batches:
-            ids, seqs, texts, toks = [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                words = (text or "").split()
-                sections = [
-                    " ".join(words[i:i + 5]) + "\n"
-                    for i in range(0, len(words), 5)
-                ]
-                for i, ck in enumerate(
-                    email_chunk(sections, chunk_token_num=128, delimiter="\n")
-                ):
-                    ids.append(f"em-{doc_id}")
-                    seqs.append(i)
-                    texts.append(ck)
-                    toks.append(num_tokens(ck))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "chunk_seq": seqs,
-                    "text": texts,
-                    "token_count": toks,
-                }
-            )
-
-    return docs.mapInPandas(
-        run,
-        schema="doc_id string, chunk_seq int, text string, token_count int",
-    )
+    return _per_doc_chunks(spark, sf_dir, chunks_of)
 
 
 _CHUNK_EMAIL_DOCS_SQL = (
@@ -787,47 +626,18 @@ def _q_chunk_manual_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     this fixed structure are the constants [0,0,0,1,1,2,2,2] (title level
     <= most_level advances on level change); the oracle folds the same
     (chunk_seq, acc_tokens, last_sid) state through a recursive CTE."""
-    import pandas as pd
-
-    from ragflow_spark.functions.tokens import num_tokens
     from ragflow_spark.kernels.chunkers import manual_chunk
 
-    docs = _docs_scan(spark, sf_dir)
+    def chunks_of(doc_id, text):
+        w = (text or "").split()
+        j = lambda a, b: " ".join(w[a:b])  # noqa: E731
+        secs = [
+            "Chapter 1", j(0, 40), j(40, 45), "Chapter 2", j(45, 85),
+            "Chapter 3", j(85, 90), j(90, 110),
+        ]
+        yield f"mn-{doc_id}", manual_chunk([(s, "text") for s in secs])
 
-    def run(batches):
-        for pdf in batches:
-            ids, seqs, texts, toks = [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w = (text or "").split()
-                j = lambda a, b: " ".join(w[a:b])  # noqa: E731
-                secs = [
-                    ("Chapter 1", "text"),
-                    (j(0, 40), "text"),
-                    (j(40, 45), "text"),
-                    ("Chapter 2", "text"),
-                    (j(45, 85), "text"),
-                    ("Chapter 3", "text"),
-                    (j(85, 90), "text"),
-                    (j(90, 110), "text"),
-                ]
-                for i, ck in enumerate(manual_chunk(secs)):
-                    ids.append(f"mn-{doc_id}")
-                    seqs.append(i)
-                    texts.append(ck)
-                    toks.append(num_tokens(ck))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "chunk_seq": seqs,
-                    "text": texts,
-                    "token_count": toks,
-                }
-            )
-
-    return docs.mapInPandas(
-        run,
-        schema="doc_id string, chunk_seq int, text string, token_count int",
-    )
+    return _per_doc_chunks(spark, sf_dir, chunks_of)
 
 
 _CHUNK_MANUAL_DOCS_SQL = f"""
@@ -886,47 +696,27 @@ def _q_chunk_presentation_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     m1/m2, and trailing text spans, one of which carries a pure-numeric
     line and a 2-char line that the PDF-path garbage filter must drop.
     media refs project to a first-or-empty scalar for the driver."""
-    import pandas as pd
-
     from ragflow_spark.functions.tokens import num_tokens
     from ragflow_spark.kernels.chunkers import presentation_chunk
 
-    docs = _docs_scan(spark, sf_dir)
+    def rows_of(doc_id, text):
+        w = (text or "").split()
+        j = lambda a, b: " ".join(w[a:b])  # noqa: E731
+        spans = [
+            ("txt", j(0, 2), ""),
+            ("figure", j(2, 6), f"m1-{doc_id}"),
+            ("txt", j(6, 9) + "\n42\nab", ""),
+            ("figure", j(9, 13), f"m2-{doc_id}"),
+            ("txt", j(13, 16), ""),
+        ]
+        for i, (t, r) in enumerate(zip(*presentation_chunk(spans))):
+            yield f"pr-{doc_id}", i, t, r[0] if r else "", num_tokens(t)
 
-    def run(batches):
-        for pdf in batches:
-            ids, seqs, texts, refs, toks = [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w = (text or "").split()
-                j = lambda a, b: " ".join(w[a:b])  # noqa: E731
-                spans = [
-                    ("txt", j(0, 2), ""),
-                    ("figure", j(2, 6), f"m1-{doc_id}"),
-                    ("txt", j(6, 9) + "\n42\nab", ""),
-                    ("figure", j(9, 13), f"m2-{doc_id}"),
-                    ("txt", j(13, 16), ""),
-                ]
-                stexts, srefs = presentation_chunk(spans)
-                for i, (t, r) in enumerate(zip(stexts, srefs)):
-                    ids.append(f"pr-{doc_id}")
-                    seqs.append(i)
-                    texts.append(t)
-                    refs.append(r[0] if r else "")
-                    toks.append(num_tokens(t))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "slide_seq": seqs,
-                    "text": texts,
-                    "media_ref": refs,
-                    "token_count": toks,
-                }
-            )
-
-    return docs.mapInPandas(
-        run,
-        schema="doc_id string, slide_seq int, text string, "
-               "media_ref string, token_count int",
+    return _per_doc(
+        spark, sf_dir,
+        "doc_id string, slide_seq int, text string, media_ref string, "
+        "token_count int",
+        rows_of,
     )
 
 
@@ -984,52 +774,26 @@ def _q_chunk_paper_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     abstract body becomes chunk 0; body sections concatenate between
     pivots (sec_id advances when a level<=most_level section changes
     level — a plain cumsum in the oracle, no recursion)."""
-    import pandas as pd
-
-    from ragflow_spark.functions.tokens import num_tokens
     from ragflow_spark.kernels.chunkers import paper_chunk
 
-    docs = _docs_scan(spark, sf_dir)
+    def chunks_of(doc_id, text):
+        words = (text or "").split()
+        j = lambda a, b: " ".join(words[a:b])  # noqa: E731
+        paper = paper_chunk([
+            ("Research on " + j(0, 3), "title"),
+            (j(3, 5), "text"),
+            ("Abstract", "text"),
+            (" ".join(words * 2), "text"),
+            ("Chapter 1", "text"),
+            (j(5, 8), "text"),
+            (j(8, 10), "text"),
+            ("Chapter 2", "text"),
+            (j(10, 13), "text"),
+        ])
+        abstract = [paper["abstract"]] if paper["abstract"] else []
+        yield f"pp-{doc_id}", abstract + paper["chunks"]
 
-    def run(batches):
-        for pdf in batches:
-            ids, seqs, texts, toks = [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                words = (text or "").split()
-                j = lambda a, b: " ".join(words[a:b])  # noqa: E731
-                secs = [
-                    ("Research on " + j(0, 3), "title"),
-                    (j(3, 5), "text"),
-                    ("Abstract", "text"),
-                    (" ".join(words * 2), "text"),
-                    ("Chapter 1", "text"),
-                    (j(5, 8), "text"),
-                    (j(8, 10), "text"),
-                    ("Chapter 2", "text"),
-                    (j(10, 13), "text"),
-                ]
-                paper = paper_chunk(secs)
-                outs = (
-                    [paper["abstract"]] if paper["abstract"] else []
-                ) + paper["chunks"]
-                for i, ck in enumerate(outs):
-                    ids.append(f"pp-{doc_id}")
-                    seqs.append(i)
-                    texts.append(ck)
-                    toks.append(num_tokens(ck))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "chunk_seq": seqs,
-                    "text": texts,
-                    "token_count": toks,
-                }
-            )
-
-    return docs.mapInPandas(
-        run,
-        schema="doc_id string, chunk_seq int, text string, token_count int",
-    )
+    return _per_doc_chunks(spark, sf_dir, chunks_of)
 
 
 _CHUNK_PAPER_DOCS_SQL = f"""
@@ -1222,42 +986,24 @@ def _q_chunk_picture(spark: SparkSession, sf_dir: str) -> DataFrame:
     route through the deterministic caption stub). The oracle reproduces
     the route branch, the caption append, and both tokenizer passes with
     the shared english-normalizer expression."""
-    import pandas as pd
-
     from ragflow_spark.kernels.media_docs import picture_doc
-
-    docs = _docs_scan(spark, sf_dir)
 
     def stub_describe(fn: str, txt: str) -> str:
         return "photo of " + (txt.split() or ["nothing"])[0]
 
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("doc_id", "route", "title_tks", "text",
-                    "content_ltks", "content_sm_ltks")}
-            for doc_id, txt in zip(pdf["doc_id"], pdf["text"]):
-                words = (txt or "").split()
-                ocr = txt if doc_id % 2 == 0 else " ".join(words[:3])
-                d = picture_doc(
-                    f"img_{doc_id}.jpg", ocr, describe=stub_describe
-                )
-                if d is None:
-                    continue
-                out["doc_id"].append(f"pic-{doc_id}")
-                out["route"].append(
-                    "ocr" if d["content_with_weight"] == ocr else "cv"
-                )
-                out["title_tks"].append(d["title_tks"])
-                out["text"].append(d["content_with_weight"])
-                out["content_ltks"].append(d["content_ltks"])
-                out["content_sm_ltks"].append(d["content_sm_ltks"])
-            yield pd.DataFrame(out)
+    def rows_of(doc_id, txt):
+        ocr = txt if doc_id % 2 == 0 else " ".join((txt or "").split()[:3])
+        d = picture_doc(f"img_{doc_id}.jpg", ocr, describe=stub_describe)
+        if d is not None:
+            cw = d["content_with_weight"]
+            yield (f"pic-{doc_id}", "ocr" if cw == ocr else "cv", d["title_tks"],
+                   cw, d["content_ltks"], d["content_sm_ltks"])
 
-    return docs.mapInPandas(
-        run,
-        schema="doc_id string, route string, title_tks string, "
-               "text string, content_ltks string, content_sm_ltks string",
+    return _per_doc(
+        spark, sf_dir,
+        "doc_id string, route string, title_tks string, text string, "
+        "content_ltks string, content_sm_ltks string",
+        rows_of,
     )
 
 
@@ -1328,34 +1074,21 @@ def _q_chunk_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     .wav/.mp3/.xyz/(none) by doc_id, so half the corpus is rejected by
     the extension gate before any transcription; the document text plays
     the transcription-model output for the accepted half."""
-    import pandas as pd
-
     from ragflow_spark.kernels.media_docs import audio_doc
 
-    docs = _docs_scan(spark, sf_dir)
     exts = [".wav", ".mp3", ".xyz", ""]
+    cols = ("docnm_kwd", "title_tks", "title_sm_tks", "content_ltks")
 
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("doc_id", "docnm_kwd", "title_tks", "title_sm_tks",
-                    "content_ltks")}
-            for doc_id, txt in zip(pdf["doc_id"], pdf["text"]):
-                fn = f"rec_{doc_id}{exts[doc_id % 4]}"
-                d = audio_doc(fn, txt)
-                if d is None:
-                    continue
-                out["doc_id"].append(f"au-{doc_id}")
-                out["docnm_kwd"].append(d["docnm_kwd"])
-                out["title_tks"].append(d["title_tks"])
-                out["title_sm_tks"].append(d["title_sm_tks"])
-                out["content_ltks"].append(d["content_ltks"])
-            yield pd.DataFrame(out)
+    def rows_of(doc_id, txt):
+        d = audio_doc(f"rec_{doc_id}{exts[doc_id % 4]}", txt)
+        if d is not None:
+            yield (f"au-{doc_id}", *(d[c] for c in cols))
 
-    return docs.mapInPandas(
-        run,
-        schema="doc_id string, docnm_kwd string, title_tks string, "
-               "title_sm_tks string, content_ltks string",
+    return _per_doc(
+        spark, sf_dir,
+        "doc_id string, docnm_kwd string, title_tks string, "
+        "title_sm_tks string, content_ltks string",
+        rows_of,
     )
 
 
@@ -1384,59 +1117,39 @@ def _q_chunk_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     CJK literals in the oracle (男/女, 简 历, degree names, the field-map
     labels) are dictionary constants guarded by
     tests/test_media_docs.py::test_oracle_token_constants."""
-    import pandas as pd
-
     from ragflow_spark.kernels.media_docs import resume_doc
 
-    docs = _docs_scan(spark, sf_dir)
     degrees = ["本科", "硕士", "博士", "专科"]
 
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("doc_id", "title_tks", "text", "name_kwd", "age_int",
-                    "work_exp_flt", "email_tks", "first_degree_kwd")}
-            for doc_id, txt in zip(pdf["doc_id"], pdf["text"]):
-                w = (txt or "").split()
-                if doc_id % 10 == 9:
-                    parsed = {
-                        "name_kwd": w[0] if w else "x",
-                        "age_int": 30,
-                        "phone_kwd": "138",
-                    }
-                else:
-                    parsed = {
-                        "name_kwd": w[0] if w else "x",
-                        "gender_kwd": "男" if doc_id % 2 == 0 else "女",
-                        "age_int": 22 + doc_id % 30,
-                        "phone_kwd": "138" + str(doc_id).zfill(8),
-                        "email_tks": (w[3] if len(w) > 3 else "user")
-                        + "@example.com",
-                        "position_name_tks": " ".join(w[1:3]),
-                        "work_exp_flt": doc_id % 20 + 0.5,
-                        "corporation_name_tks": " ".join(w[4:6]),
-                        "first_school_name_tks": w[6] if len(w) > 6
-                        else "school",
-                        "first_degree_kwd": degrees[doc_id % 4],
-                    }
-                d = resume_doc(f"resume_{doc_id}.pdf", parsed)
-                if d is None:
-                    continue
-                out["doc_id"].append(f"re-{doc_id}")
-                out["title_tks"].append(d["title_tks"])
-                out["text"].append(d["content_with_weight"])
-                out["name_kwd"].append(d["name_kwd"])
-                out["age_int"].append(d["age_int"])
-                out["work_exp_flt"].append(d["work_exp_flt"])
-                out["email_tks"].append(d["email_tks"])
-                out["first_degree_kwd"].append(d["first_degree_kwd"])
-            yield pd.DataFrame(out)
+    def rows_of(doc_id, txt):
+        w = (txt or "").split()
+        if doc_id % 10 == 9:
+            parsed = {"name_kwd": w[0] if w else "x", "age_int": 30, "phone_kwd": "138"}
+        else:
+            parsed = {
+                "name_kwd": w[0] if w else "x",
+                "gender_kwd": "男" if doc_id % 2 == 0 else "女",
+                "age_int": 22 + doc_id % 30,
+                "phone_kwd": "138" + str(doc_id).zfill(8),
+                "email_tks": (w[3] if len(w) > 3 else "user") + "@example.com",
+                "position_name_tks": " ".join(w[1:3]),
+                "work_exp_flt": doc_id % 20 + 0.5,
+                "corporation_name_tks": " ".join(w[4:6]),
+                "first_school_name_tks": w[6] if len(w) > 6 else "school",
+                "first_degree_kwd": degrees[doc_id % 4],
+            }
+        d = resume_doc(f"resume_{doc_id}.pdf", parsed)
+        if d is not None:
+            yield (f"re-{doc_id}", d["title_tks"], d["content_with_weight"],
+                   d["name_kwd"], d["age_int"], d["work_exp_flt"], d["email_tks"],
+                   d["first_degree_kwd"])
 
-    return docs.mapInPandas(
-        run,
-        schema="doc_id string, title_tks string, text string, "
-               "name_kwd string, age_int int, work_exp_flt double, "
-               "email_tks string, first_degree_kwd string",
+    return _per_doc(
+        spark, sf_dir,
+        "doc_id string, title_tks string, text string, name_kwd string, "
+        "age_int int, work_exp_flt double, email_tks string, "
+        "first_degree_kwd string",
+        rows_of,
     )
 
 
@@ -2164,14 +1877,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # ---- rows-only corpus queries (no oracle; pytest-bit-checked vs
         # extract_doc) — keep BELOW every oracled entry (50-entry window)
         "extract_spans": _q_extract,
-        "chunk_naive": _mk_chunk("naive", 512),
-        "chunk_book": _mk_chunk("book", 256),
-        "chunk_paper": _mk_chunk("paper", 512),
-        "chunk_laws": _mk_chunk("laws", 512),
-        "chunk_manual": _mk_chunk("manual", 512),
-        "chunk_email": _mk_chunk("email", 128),
-        "chunk_presentation": _mk_chunk("presentation", 512),
-        "chunk_one": _q_chunk_one,
         # corpus-scoring variant of the retrieval-quality harness
         # (rag/benchmark.py:242-276 cutoffs): rows-only — qrels are
         # corpus-derived (dense top-3); the evaluator itself is oracled

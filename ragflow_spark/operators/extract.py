@@ -60,10 +60,9 @@ def explode_spans(docs: DataFrame, salt_block: int = 256) -> DataFrame:
     )
 
 
-def strip_stage(exploded: DataFrame, repartition: int | None = None) -> DataFrame:
+def strip_stage(exploded: DataFrame) -> DataFrame:
     """Format parsing (html/md/txt/json) as an Arrow-batched map. Salted
     repartition spreads giant docs; the map itself is stateless."""
-    df = exploded
     # explicit numPartitions: a bare repartition(cols) is AQE-coalescible,
     # and a giant doc's spans are SMALL by bytes (AQE's only yardstick)
     # while huge by kernel CPU — AQE folded the salted shuffle back into
@@ -72,10 +71,8 @@ def strip_stage(exploded: DataFrame, repartition: int | None = None) -> DataFram
     # before, 5.8x after on 8 cores; the CLAUDE.md tiny-task-list
     # invariant, now on the giant-doc path). User-specified counts are
     # exempt from AQE.
-    if not repartition:
-        par = exploded.sparkSession.sparkContext.defaultParallelism
-        repartition = par * 4
-    df = df.repartition(repartition, "doc_id", "salt")
+    par = exploded.sparkSession.sparkContext.defaultParallelism
+    df = exploded.repartition(par * 4, "doc_id", "salt")
 
     def run(batches):
         for pdf in batches:
@@ -176,13 +173,12 @@ def _giant_tail(
     html_tables: bool,
     chunk_args: dict | None,
     salt_block: int = 256,
-    repartition: int | None = None,
 ) -> DataFrame:
     """The giant-doc route every extraction entry point shares: explode →
     salted strip → per-doc finalize regroup (→ chunk over the reduced span
     stream). ``chunk_args`` None means output spans, not chunks."""
     spans = finalize_stage(
-        strip_stage(explode_spans(giants, salt_block=salt_block), repartition=repartition),
+        strip_stage(explode_spans(giants, salt_block=salt_block)),
         html_tables=html_tables,
     )
     return spans if chunk_args is None else chunk_stage(spans, **chunk_args)
@@ -192,7 +188,6 @@ def extract_spans(
     docs: DataFrame,
     salt_block: int = 256,
     html_tables: bool = False,
-    repartition: int | None = None,
     giant_threshold: int = GIANT_SPAN_THRESHOLD,
 ) -> DataFrame:
     """Full extraction with explicit skew routing:
@@ -208,7 +203,7 @@ def extract_spans(
     from ragflow_spark.sources.parquet_spans import _route  # deferred: it imports this module
 
     return _route(
-        docs.sparkSession, docs, giant_threshold, html_tables, None, salt_block, repartition
+        docs.sparkSession, docs, giant_threshold, html_tables, None, salt_block
     )
 
 

@@ -59,7 +59,6 @@ def run_pipeline(
     run_id: str | None = None,
     chunker: str = "naive",
     chunk_token_num: int = 512,
-    salt_block: int = 256,
     resume: bool = True,
     stop_after: str | None = None,
 ) -> PipelineResult:
@@ -70,7 +69,7 @@ def run_pipeline(
     run = CheckpointedRun(spark, base_dir, run_id=run_id)
     stages: dict[str, StageResult] = {}
 
-    stripped = strip_stage(explode_spans(docs, salt_block=salt_block))
+    stripped = strip_stage(explode_spans(docs))
     stripped, stages["strip"] = run.write_stage("strip", stripped, resume=resume)
     if stop_after == "strip":
         return PipelineResult(chunks=None, spans=None, stages=stages, run=run)

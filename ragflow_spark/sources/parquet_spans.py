@@ -181,7 +181,6 @@ def _route(
     html_tables: bool,
     chunk_args: dict | None,
     salt_block: int = 256,
-    repartition: int | None = None,
 ) -> DataFrame:
     """Every emitting extraction path: a ``mapInArrow`` stage yielding the
     runner's batches for docs below ``giant_threshold``, unioned with
@@ -221,7 +220,7 @@ def _route(
         docs = source.select("doc_id", "spans")
         small = docs.where(F.size("spans") < giant_threshold).mapInArrow(run, schema)
         giants = docs.where(F.size("spans") >= giant_threshold)
-    tail = _giant_tail(giants, html_tables, chunk_args, salt_block, repartition)
+    tail = _giant_tail(giants, html_tables, chunk_args, salt_block)
     return small.unionByName(tail)
 
 
@@ -317,7 +316,6 @@ def extract_chunks_native_to_parquet(
     overlapped_percent: int = 0,
     html_tables: bool = False,
     giant_threshold: int = GIANT_SPAN_THRESHOLD,
-    compression: str = "snappy",
     resume: bool = False,
     direct_write: bool | None = None,
 ) -> DataFrame:
@@ -372,7 +370,7 @@ def extract_chunks_native_to_parquet(
                     out_tbl, n_docs = _run_docs(
                         tbl, giant_threshold, html_tables, chunk_args
                     )
-                    _commit_table(fs, fname, out_tbl, compression, rename)
+                    _commit_table(fs, fname, out_tbl, "snappy", rename)
                     n_chunks = out_tbl.num_rows
                 yield pd.DataFrame(
                     {

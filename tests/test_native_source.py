@@ -5,7 +5,8 @@ from __future__ import annotations
 
 import pytest
 
-from ragflow_spark.datagen import write_corpus
+from ragflow_spark.datagen import gen_docs, write_corpus
+from ragflow_spark.kernels.extract import CHUNKERS, chunk_doc, extract_doc
 from ragflow_spark.operators.extract import extract_chunks_fused, extract_spans
 from ragflow_spark.sources.parquet_spans import (
     extract_chunks_native,
@@ -222,18 +223,20 @@ def test_sink_portable_commit_protocols(spark, corpus_path, tmp_path_factory):
     assert again == a
 
 
-@pytest.mark.parametrize("chunker", ["book", "manual", "qa", "presentation"])
-def test_chunks_native_equals_fused_other_chunkers(spark, corpus_path, chunker):
-    native = {
+@pytest.mark.parametrize("chunker", CHUNKERS)
+def test_chunks_native_equals_chunk_doc_every_chunker(spark, corpus_path, chunker):
+    """The native path with the giant tail forced (giant_threshold=120)
+    equals per-doc ``chunk_doc(extract_doc(spans))`` for every chunker."""
+    native = sorted(
         (r.doc_id, r.chunk_seq, r.text, r.token_count, tuple(r.media_refs or []))
         for r in extract_chunks_native(
             spark, corpus_path, chunker=chunker, giant_threshold=120
         ).collect()
-    }
-    fused = {
-        (r.doc_id, r.chunk_seq, r.text, r.token_count, tuple(r.media_refs or []))
-        for r in extract_chunks_fused(
-            spark.read.parquet(corpus_path), chunker=chunker
-        ).collect()
-    }
-    assert native == fused and len(native) > 0
+    )
+    want = sorted(
+        (d["doc_id"], c["chunk_seq"], c["text"], c["token_count"],
+         tuple(c["media_refs"]))
+        for d in gen_docs(5, 0, 120)
+        for c in chunk_doc(extract_doc(d["spans"]), chunker=chunker)
+    )
+    assert native == want and len(want) > 0

@@ -36,6 +36,14 @@ SUBSET = [
     "chunk_audio",
     "es_docs",
     "title_vector_blend",
+    # every per-doc fixture query is bit-checked here
+    "chunk_qa",
+    "chunk_tag",
+    "chunk_naive_overlap_docs",
+    "chunk_hier_docs",
+    "chunk_email_docs",
+    "chunk_paper_docs",
+    "chunk_picture",
 ]
 
 

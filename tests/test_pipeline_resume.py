@@ -161,25 +161,3 @@ def test_manifest_crash_tolerance_and_metric_dedup(spark, docs, tmp_path_factory
     m2 = run.metrics().where(F.col("stage") == "demo")
     assert m2.agg(F.sum("span_count")).first()[0] == n
 
-
-def test_iceberg_gate_and_fallback(spark, docs):
-    """The Iceberg sink is availability-gated: in this container the
-    runtime is absent, iceberg_available is False, write_snapshot refuses
-    with a pointer to the parquet snapshot protocol (which the resume
-    tests above prove equivalent)."""
-    import pytest as _pytest
-
-    from ragflow_spark.plans import iceberg
-
-    assert iceberg.iceberg_available(spark) is False
-    with _pytest.raises(RuntimeError, match="checkpoint"):
-        iceberg.write_snapshot(spark, docs, "local.db.t")
-    # the read path carries the same gate (and validates its contract
-    # before probing the runtime: time-travel and incremental scans are
-    # mutually exclusive)
-    with _pytest.raises(RuntimeError, match="CheckpointedRun"):
-        iceberg.read_table(spark, "local.db.t")
-    with _pytest.raises(ValueError, match="exclusive"):
-        iceberg.read_table(
-            spark, "local.db.t", snapshot_id=1, incremental_from=2
-        )

@@ -78,7 +78,8 @@ def test_extraction_paths_share_one_runner_and_tail():
     giant-doc tail instead of re-implementing them: ``extract_doc`` is
     called from a single function of ``operators/`` + ``sources/``,
     ``explode_spans`` only from ``_giant_tail`` and the checkpointed
-    ``run_pipeline``, and split sizing is not a public knob."""
+    ``run_pipeline``, and neither split sizing nor the strip shuffle's
+    partition count is a public knob."""
     import ragflow_spark
 
     pkg = os.path.dirname(ragflow_spark.__file__)
@@ -96,4 +97,16 @@ def test_extraction_paths_share_one_runner_and_tail():
         for fn in tree.body:
             if isinstance(fn, ast.FunctionDef) and not fn.name.startswith("_"):
                 args = fn.args.args + fn.args.kwonlyargs
-                assert "target_rows" not in {a.arg for a in args}, (p, fn.name)
+                assert not {"target_rows", "repartition"} & {a.arg for a in args}, (
+                    p, fn.name)
+
+
+def test_fixture_queries_share_one_per_doc_map():
+    """The kernel-fixture queries go through one per-doc helper:
+    exactly one function of ``__spark_entry__.py`` starts a Python map
+    stage (``mapInPandas``/``mapInArrow``)."""
+    import __spark_entry__ as entrymod
+
+    calls = _calls_by_function([entrymod.__file__])
+    mappers = calls.get("mapInPandas", set()) | calls.get("mapInArrow", set())
+    assert mappers == {"_per_doc"}, mappers
