@@ -290,3 +290,17 @@ def chunk_doc(
         }
         for i, (t, refs) in enumerate(chunks)
     ]
+
+
+ERROR_MARK = "__error__"
+
+
+def error_row(e: Exception, chunked: bool) -> dict:
+    """The one row a document whose ``extract_doc``/``finalize_doc``/
+    ``chunk_doc`` raised emits in place of its output, so a bad document
+    never fails its task. The marker sits in ``kind`` (span rows) or
+    ``chunker`` (chunk rows); ``text`` carries the exception repr."""
+    if chunked:
+        return {"chunker": ERROR_MARK, "chunk_seq": 0, "text": repr(e),
+                "token_count": 0, "media_refs": []}
+    return {"seq": 0, "kind": ERROR_MARK, "text": repr(e), "media_ref": ""}

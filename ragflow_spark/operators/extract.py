@@ -8,21 +8,21 @@ handled explicitly"):
   spread across the cluster instead of pinning a single task. The stage runs
   as ``mapInPandas`` (Arrow batches; the kernel is pure Python over batch
   rows, no Spark-level per-row UDF).
-- **finalize** (layout + assembly + emit) is doc-level and order-dependent →
-  ``applyInPandas`` over ``groupBy(doc_id)``. Inside, the kernel is
-  numpy-vectorized per document; across documents, vectorization comes from
-  Arrow batching. AQE skew-split handles residual partition imbalance.
-- **chunk** is doc-level again but consumes the already-reduced span stream
-  (orders of magnitude smaller than the input), so its shuffle is cheap.
+- **finalize** (layout + assembly + emit, then chunking) is doc-level and
+  order-dependent → ``applyInPandas`` over ``doc_id``, one regroup that
+  runs ``finalize_doc`` and ``chunk_doc`` per document. Inside, the kernel
+  is numpy-vectorized per document; across documents, vectorization comes
+  from Arrow batching.
 
 At 100 TB the dominant costs are the input scan (columnar, pruned to
 doc_id+spans) and the one shuffle into finalize; strip's salting bounds the
 largest task by ``salt_block`` spans rather than by the largest document.
 
-These stages serve only the giant-doc tail (``_giant_tail``) and the
-checkpointed ``plans.pipeline.run_pipeline``. Docs below
+These stages serve only the giant-doc tail (``_giant_tail``). Docs below
 ``GIANT_SPAN_THRESHOLD`` run whole, in one Arrow map, through the doc-batch
-runner in ``sources.parquet_spans``.
+runner in ``sources.parquet_spans``. Both per-doc loops share one error
+contract: a document whose kernels raise becomes one
+``kernels.extract.error_row`` marker row and never fails its task.
 """
 
 from __future__ import annotations
@@ -32,7 +32,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ragflow_spark.kernels.extract import chunk_doc, finalize_doc, strip_rows
+from ragflow_spark.kernels.extract import (
+    CHUNKERS,
+    chunk_doc,
+    error_row,
+    finalize_doc,
+    strip_rows,
+)
 from ragflow_spark.schemas import CHUNKS_SCHEMA, OUT_SPANS_SCHEMA
 
 STRIPPED_SCHEMA = (
@@ -119,50 +125,43 @@ def _finalize_plain_vectorized(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def finalize_stage(
-    stripped: DataFrame, html_tables: bool = False, capture_errors: bool = False
+    stripped: DataFrame, html_tables: bool = False, chunk_args: dict | None = None
 ) -> DataFrame:
-    """Doc-level layout/assembly/emit: one shuffle on doc_id, then the
-    numpy kernel per document. Docs with NO geometry rows (the common
-    shape on the giant-doc tail: huge plain-span documents) take a
-    vectorized pandas fast path instead of the per-row python kernel —
-    same output by construction and by test.
-
-    capture_errors: a doc whose kernel raises emits a single
-    ``kind='__error__'`` marker row (text = exception repr) instead of
-    failing the task — the pipeline layer turns these into
-    ``failure_count`` lineage metrics and drops them from the output."""
+    """Doc-level layout/assembly/emit (→ ``chunk_doc`` with ``chunk_args``;
+    None means output spans, not chunks) in ONE regroup: a shuffle on
+    doc_id pinned to an explicit partition count (AQE would coalesce a
+    bare one, as it did the salted strip shuffle), then the kernels per
+    document. Docs with NO geometry rows (the common shape on the
+    giant-doc tail: huge plain-span documents) take a vectorized pandas
+    fast path instead of the per-row python kernel — same output by
+    construction and by test. A doc whose kernels raise emits one
+    ``error_row`` instead of failing the task."""
+    schema = OUT_SPANS_SCHEMA if chunk_args is None else CHUNKS_SCHEMA
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         doc_id = pdf["doc_id"].iloc[0]
         try:
             mr = pdf["media_ref"].fillna("")
-            has_geom = (
-                mr.str.startswith("geom://")
-                | mr.str.contains("#geom=", regex=False)
-            ).any()
-            if not has_geom:
-                out_pdf = _finalize_plain_vectorized(pdf)
-                out_pdf.insert(0, "doc_id", doc_id)
-                return out_pdf
-            rows = pdf[["kind", "text", "media_ref", "offset", "sub"]].to_dict(
-                "records"
-            )
-            out = finalize_doc(rows, html_tables=html_tables)
+            geom = mr.str.startswith("geom://") | mr.str.contains("#geom=", regex=False)
+            if geom.any():
+                cols = ["kind", "text", "media_ref", "offset", "sub"]
+                out = finalize_doc(pdf[cols].to_dict("records"), html_tables=html_tables)
+            elif chunk_args is None:
+                return _finalize_plain_vectorized(pdf).assign(doc_id=doc_id)
+            else:
+                out = _finalize_plain_vectorized(pdf).to_dict("records")
+            if chunk_args is not None:
+                out = chunk_doc(out, **chunk_args)
         except Exception as e:  # noqa: BLE001 — per-doc isolation
-            if not capture_errors:
-                raise
-            out = [{"seq": 0, "kind": "__error__", "text": repr(e), "media_ref": ""}]
-        return pd.DataFrame(
-            {
-                "doc_id": [doc_id] * len(out),
-                "seq": [o["seq"] for o in out],
-                "kind": [o["kind"] for o in out],
-                "text": [o["text"] for o in out],
-                "media_ref": [o["media_ref"] for o in out],
-            }
-        )
+            out = [error_row(e, chunk_args is not None)]
+        return pd.DataFrame(out, columns=schema.names[1:]).assign(doc_id=doc_id)
 
-    return stripped.groupBy("doc_id").applyInPandas(run, schema=OUT_SPANS_SCHEMA)
+    par = stripped.sparkSession.sparkContext.defaultParallelism
+    return (
+        stripped.repartition(par * 4, "doc_id")
+        .groupBy("doc_id")
+        .applyInPandas(run, schema=schema)
+    )
 
 
 GIANT_SPAN_THRESHOLD = 2048
@@ -175,13 +174,26 @@ def _giant_tail(
     salt_block: int = 256,
 ) -> DataFrame:
     """The giant-doc route every extraction entry point shares: explode →
-    salted strip → per-doc finalize regroup (→ chunk over the reduced span
-    stream). ``chunk_args`` None means output spans, not chunks."""
-    spans = finalize_stage(
-        strip_stage(explode_spans(giants, salt_block=salt_block)),
-        html_tables=html_tables,
+    salted strip → one per-doc regroup that finalizes (and chunks, given
+    ``chunk_args``; None means output spans, not chunks)."""
+    stripped = strip_stage(explode_spans(giants, salt_block=salt_block))
+    return finalize_stage(stripped, html_tables, chunk_args)
+
+
+def _chunk_args(
+    chunker: str, chunk_token_num: int, delimiter: str, overlapped_percent: int
+) -> dict:
+    """``chunk_doc``'s keywords for every chunking entry point, checked on
+    the driver: per-doc error capture would otherwise turn a chunker typo
+    into one marker row per document."""
+    if chunker not in CHUNKERS:
+        raise ValueError(f"unknown chunker {chunker!r}; expected one of {CHUNKERS}")
+    return dict(
+        chunker=chunker,
+        chunk_token_num=chunk_token_num,
+        delimiter=delimiter,
+        overlapped_percent=overlapped_percent,
     )
-    return spans if chunk_args is None else chunk_stage(spans, **chunk_args)
 
 
 def extract_spans(
@@ -217,16 +229,11 @@ def extract_chunks_fused(
     giant_threshold: int = GIANT_SPAN_THRESHOLD,
 ) -> DataFrame:
     """End-to-end extract+chunk in ONE pass for non-giant docs (zero
-    shuffles input→chunks); giant docs fall back to the staged path whose
-    chunk step shuffles only the reduced span stream."""
+    shuffles input→chunks); giant docs take the giant-doc tail, whose one
+    regroup finalizes and chunks each document."""
     from ragflow_spark.sources.parquet_spans import _route  # deferred: it imports this module
 
-    chunk_args = dict(
-        chunker=chunker,
-        chunk_token_num=chunk_token_num,
-        delimiter=delimiter,
-        overlapped_percent=overlapped_percent,
-    )
+    chunk_args = _chunk_args(chunker, chunk_token_num, delimiter, overlapped_percent)
     return _route(docs.sparkSession, docs, giant_threshold, html_tables, chunk_args)
 
 
@@ -236,43 +243,6 @@ def with_chunk_ids(chunks: DataFrame) -> DataFrame:
     ``F.xxhash64``, no UDF. Idempotent re-runs produce identical ids, which
     is what makes sink upserts and digest-based reuse possible."""
     return chunks.withColumn("chunk_id", F.xxhash64("text", "doc_id"))
-
-
-def chunk_stage(
-    out_spans: DataFrame,
-    chunker: str = "naive",
-    chunk_token_num: int = 512,
-    delimiter: str = "\n!?。；！？",
-    overlapped_percent: int = 0,
-) -> DataFrame:
-    """Template chunking per document over the extracted span stream."""
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        doc_id = pdf["doc_id"].iloc[0]
-        spans = pdf[["seq", "kind", "text", "media_ref"]].to_dict("records")
-        chunks = chunk_doc(
-            spans,
-            chunker=chunker,
-            chunk_token_num=chunk_token_num,
-            delimiter=delimiter,
-            overlapped_percent=overlapped_percent,
-        )
-        return pd.DataFrame(
-            {
-                "doc_id": [doc_id] * len(chunks),
-                "chunker": [c["chunker"] for c in chunks],
-                "chunk_seq": [c["chunk_seq"] for c in chunks],
-                "text": [c["text"] for c in chunks],
-                "token_count": [c["token_count"] for c in chunks],
-                # explicit object dtype: an empty batch would otherwise
-                # infer float64, which Arrow can't cast to array<string>
-                "media_refs": pd.Series(
-                    [c["media_refs"] for c in chunks], dtype=object
-                ),
-            }
-        )
-
-    return out_spans.groupBy("doc_id").applyInPandas(run, schema=CHUNKS_SCHEMA)
 
 
 # single shared tag-strip contract (rag/nlp/__init__.py:261)
@@ -372,7 +342,7 @@ def assemble_es_docs(chunks: DataFrame, docnm_col: str = "docnm") -> DataFrame:
             pdf["title_tks"] = tt.map(lambda t: t[0])
             pdf["title_sm_tks"] = tt.map(lambda t: t[1])
             # explicit object dtype: Arrow can't convert numpy-inferred
-            # nested-list arrays (same pitfall as chunk_stage media_refs)
+            # nested-list arrays
             seq = pdf["chunk_seq"].astype(int).tolist()
             pdf["page_num_int"] = pd.Series(
                 [[i + 1] for i in seq], dtype=object, index=pdf.index

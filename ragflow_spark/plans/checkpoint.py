@@ -28,6 +28,13 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ragflow_spark.kernels.extract import ERROR_MARK
+
+DOC_COL = "doc_id"
+# the column a stage's rows carry the per-doc error marker in (span rows,
+# chunk rows); a stage with neither has no failures to count
+_MARK_COLS = ("kind", "chunker")
+
 
 @dataclass
 class StageResult:
@@ -79,8 +86,6 @@ class CheckpointedRun:
         self,
         stage: str,
         df: DataFrame,
-        doc_col: str = "doc_id",
-        error_kind: str = "__error__",
         resume: bool = True,
     ) -> tuple[DataFrame, StageResult]:
         """Commit ``df`` as the stage's snapshot (or reuse a committed one).
@@ -88,17 +93,18 @@ class CheckpointedRun:
         Returns (stage output DataFrame read back from the checkpoint —
         so downstream stages never recompute upstream lineage — and the
         StageResult). The stored data carries ``partition_id`` so lineage
-        is reconstructible from the files alone."""
+        is reconstructible from the files alone. Error-marker rows
+        (``kernels.extract.error_row``) are committed, counted as
+        ``failure_count``, and left out of the returned DataFrame."""
         sdir = self.stage_dir(stage)
         if resume and is_committed(sdir):
             man = read_manifest(sdir)
             # heal the crash window between commit and metrics append: if the
             # committed snapshot has no metrics rows yet, write them now
             if not self._has_metrics(man["snapshot_id"], stage):
-                self._append_metrics(sdir, man["snapshot_id"], stage,
-                                     doc_col, error_kind, man["run_id"])
+                self._append_metrics(sdir, man["snapshot_id"], stage, man["run_id"])
             out = self.spark.read.parquet(sdir)
-            return self._strip_errors(out, error_kind), StageResult(
+            return self._strip_errors(out), StageResult(
                 stage, man["snapshot_id"], sdir, resumed=True
             )
 
@@ -127,35 +133,22 @@ class CheckpointedRun:
                 f,
             )
         os.replace(mp + ".tmp", mp)  # manifest itself commits atomically
-        self._append_metrics(sdir, snapshot_id, stage, doc_col, error_kind,
-                             self.run_id)
+        self._append_metrics(sdir, snapshot_id, stage, self.run_id)
         out = self.spark.read.parquet(sdir)
-        return self._strip_errors(out, error_kind), StageResult(
+        return self._strip_errors(out), StageResult(
             stage, snapshot_id, sdir, resumed=False
         )
 
     def _append_metrics(
-        self,
-        sdir: str,
-        snapshot_id: int,
-        stage: str,
-        doc_col: str,
-        error_kind: str,
-        run_id: str,
+        self, sdir: str, snapshot_id: int, stage: str, run_id: str
     ) -> None:
         """Lineage rows from the *committed* files (exactly what a resume
         reads), keyed by (snapshot_id, stage) for dedup."""
         written = self.spark.read.parquet(sdir)
-        kind_col = "kind" if "kind" in written.columns else None
-        fail_expr = (
-            F.sum((F.col(kind_col) == error_kind).cast("long"))
-            if kind_col
-            else F.lit(0).cast("long")
-        )
         metrics = written.groupBy("partition_id").agg(
-            F.countDistinct(doc_col).alias("doc_count"),
+            F.countDistinct(DOC_COL).alias("doc_count"),
             F.count("*").alias("span_count"),
-            fail_expr.alias("failure_count"),
+            F.sum(_is_error(written).cast("long")).alias("failure_count"),
         ).select(
             F.lit(run_id).alias("run_id"),
             F.lit(snapshot_id).alias("snapshot_id"),
@@ -184,10 +177,8 @@ class CheckpointedRun:
         )
 
     @staticmethod
-    def _strip_errors(df: DataFrame, error_kind: str) -> DataFrame:
-        if "kind" in df.columns:
-            df = df.where(F.col("kind") != error_kind)
-        return df.drop("partition_id")
+    def _strip_errors(df: DataFrame) -> DataFrame:
+        return df.where(~_is_error(df)).drop("partition_id")
 
     def metrics(self) -> DataFrame:
         """Lineage rows, deduped by (snapshot_id, stage, partition_id) —
@@ -196,3 +187,9 @@ class CheckpointedRun:
         return self.spark.read.parquet(self.metrics_dir()).dropDuplicates(
             ["snapshot_id", "stage", "partition_id"]
         )
+
+
+def _is_error(df: DataFrame):
+    """True on the error-marker rows of a stage's output."""
+    col = next((c for c in _MARK_COLS if c in df.columns), None)
+    return F.lit(False) if col is None else F.col(col).eqNullSafe(ERROR_MARK)

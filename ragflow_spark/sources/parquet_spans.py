@@ -42,8 +42,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from ragflow_spark.kernels.extract import chunk_doc, extract_doc
-from ragflow_spark.operators.extract import GIANT_SPAN_THRESHOLD, _giant_tail
+from ragflow_spark.kernels.extract import chunk_doc, error_row, extract_doc
+from ragflow_spark.operators.extract import (
+    GIANT_SPAN_THRESHOLD,
+    _chunk_args,
+    _giant_tail,
+)
 from ragflow_spark.schemas import CHUNKS_SCHEMA, OUT_SPANS_SCHEMA
 
 SPLITS_SCHEMA = "path string, rg_start int, rg_end int"
@@ -129,7 +133,8 @@ def _run_docs(batch, giant_threshold: int, html_tables: bool, chunk_args: dict |
     ``chunk_args``; None means output spans, not chunks) per doc → one
     Arrow table typed from OUT_SPANS_SCHEMA / CHUNKS_SCHEMA. Docs with
     ≥ giant_threshold spans are skipped: the giant-doc tail handles them.
-    Returns (table, docs kept)."""
+    A doc whose kernels raise emits one ``error_row`` instead of failing
+    the task. Returns (table, docs kept)."""
     import pyarrow as pa
 
     ids: list[str] = []
@@ -139,9 +144,12 @@ def _run_docs(batch, giant_threshold: int, html_tables: bool, chunk_args: dict |
         if len(recs) >= giant_threshold:
             continue
         kept += 1
-        out = extract_doc(recs, html_tables=html_tables)
-        if chunk_args is not None:
-            out = chunk_doc(out, **chunk_args)
+        try:
+            out = extract_doc(recs, html_tables=html_tables)
+            if chunk_args is not None:
+                out = chunk_doc(out, **chunk_args)
+        except Exception as e:  # noqa: BLE001 — per-doc isolation
+            out = [error_row(e, chunk_args is not None)]
         ids += [doc_id] * len(out)
         rows += out
     schema = _SPANS_ARROW if chunk_args is None else _CHUNKS_ARROW
@@ -213,7 +221,7 @@ def _route(
         small = splits.mapInArrow(run, schema)
         if not may_have_giants:
             # row-group max(n_spans) statistics prove no giants exist: the
-            # whole tail pipeline (scan + 3 shuffles) is planned away
+            # whole tail pipeline (scan + 2 shuffles) is planned away
             return small
         giants = _giants_scan(spark, source, giant_threshold)
     else:
@@ -236,12 +244,7 @@ def extract_chunks_native(
 ) -> DataFrame:
     """parquet → chunks with the reader inside the Python task (hot path) and
     the exploded/salted DataFrame path for the giant-doc tail."""
-    chunk_args = dict(
-        chunker=chunker,
-        chunk_token_num=chunk_token_num,
-        delimiter=delimiter,
-        overlapped_percent=overlapped_percent,
-    )
+    chunk_args = _chunk_args(chunker, chunk_token_num, delimiter, overlapped_percent)
     return _route(spark, path, giant_threshold, html_tables, chunk_args)
 
 
@@ -337,12 +340,7 @@ def extract_chunks_native_to_parquet(
     into the same directory."""
     import os
 
-    chunk_args = dict(
-        chunker=chunker,
-        chunk_token_num=chunk_token_num,
-        delimiter=delimiter,
-        overlapped_percent=overlapped_percent,
-    )
+    chunk_args = _chunk_args(chunker, chunk_token_num, delimiter, overlapped_percent)
     fs0, root0 = _resolve_fs(out_dir)
     fs0.create_dir(root0, recursive=True)
 

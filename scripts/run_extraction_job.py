@@ -13,8 +13,8 @@ The script itself imports ragflow_spark from the --py-files zip (no
 sys.path surgery), which is exactly the multi-executor cluster contract:
 driver and executors resolve the engine from the shipped artifact.
 
-With --checkpoint, stages commit snapshots + lineage metrics and a rerun
-resumes from the last committed stage (plans/pipeline.py).
+With --checkpoint, the python-native extract+chunk stage commits a snapshot
++ lineage metrics and a rerun reuses it (plans/pipeline.py).
 """
 
 from __future__ import annotations
@@ -67,17 +67,15 @@ def main() -> None:
         return
 
     if args.checkpoint:
-        from ragflow_spark.plans.pipeline import run_pipeline
+        from ragflow_spark.plans.pipeline import run_pipeline_native
 
-        docs = spark.read.parquet(args.input)
-        res = run_pipeline(
+        chunks = run_pipeline_native(
             spark,
-            docs,
+            args.input,
             args.checkpoint,
             chunker=args.chunker,
             chunk_token_num=args.chunk_tokens,
-        )
-        chunks = res.chunks
+        ).chunks
     elif args.native_reader:
         from ragflow_spark.sources.parquet_spans import extract_chunks_native
 

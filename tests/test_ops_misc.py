@@ -5,7 +5,7 @@ from __future__ import annotations
 from ragflow_spark.datagen import corpus_df
 from ragflow_spark.functions.encoding import decode_blob, find_codec
 from ragflow_spark.operators.extract import (
-    chunk_stage,
+    extract_chunks_fused,
     extract_spans,
     with_chunk_ids,
 )
@@ -43,11 +43,11 @@ def test_one_chunk_preserves_order(spark):
 
 def test_chunk_ids_stable_and_unique_per_doc(spark):
     docs = corpus_df(spark, seed=21, count=30).cache()
-    chunks = with_chunk_ids(chunk_stage(extract_spans(docs))).cache()
+    chunks = with_chunk_ids(extract_chunks_fused(docs)).cache()
     a = {(r.doc_id, r.chunk_seq): r.chunk_id for r in chunks.collect()}
     b = {
         (r.doc_id, r.chunk_seq): r.chunk_id
-        for r in with_chunk_ids(chunk_stage(extract_spans(docs))).collect()
+        for r in with_chunk_ids(extract_chunks_fused(docs)).collect()
     }
     assert a == b  # content-addressed: identical across runs
     assert all(isinstance(v, int) for v in a.values())

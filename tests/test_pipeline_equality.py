@@ -7,7 +7,7 @@ import pytest
 
 from ragflow_spark.datagen import corpus_df, gen_docs
 from ragflow_spark.kernels.extract import chunk_doc, extract_doc
-from ragflow_spark.operators.extract import chunk_stage, extract_spans
+from ragflow_spark.operators.extract import extract_chunks_fused, extract_spans
 
 N_DOCS = 120
 SEED = 42
@@ -64,37 +64,45 @@ def test_exploded_path_equals_whole_doc_path(spark, docs, oracle_spans):
     assert routed == oracle_spans
 
 
-def test_fused_chunks_equal_staged(spark, docs):
-    from ragflow_spark.operators.extract import extract_chunks_fused
-
-    staged = {
-        (r.doc_id, r.chunk_seq, r.text, r.token_count, tuple(r.media_refs or []))
-        for r in chunk_stage(extract_spans(docs), chunker="naive").collect()
-    }
-    fused = {
-        (r.doc_id, r.chunk_seq, r.text, r.token_count, tuple(r.media_refs or []))
-        for r in extract_chunks_fused(docs, chunker="naive").collect()
-    }
-    assert fused == staged
-
-
-def test_chunk_stage_equals_oracle(spark, docs, oracle_spans):
-    spans_df = extract_spans(docs).cache()
-    got = {}
-    for r in chunk_stage(spans_df, chunker="naive", chunk_token_num=128).collect():
-        got.setdefault(r.doc_id, []).append((r.chunk_seq, r.text, r.token_count, tuple(r.media_refs or [])))
-    for v in got.values():
+def collect_chunks(df):
+    out = {}
+    for r in df.collect():
+        out.setdefault(r.doc_id, []).append(
+            (r.chunk_seq, r.text, r.token_count, tuple(r.media_refs or []))
+        )
+    for v in out.values():
         v.sort()
-    for doc_id, spans in oracle_spans.items():
-        spans_dicts = [
-            {"seq": s, "kind": k, "text": t, "media_ref": m} for s, k, t, m in spans
-        ]
-        expected = [
-            (c["chunk_seq"], c["text"], c["token_count"], tuple(c["media_refs"]))
-            for c in chunk_doc(spans_dicts, "naive", 128)
-        ]
-        assert got.get(doc_id, []) == expected, f"chunk mismatch in {doc_id}"
-    spans_df.unpersist()
+    return out
+
+
+def oracle_chunks(**chunk_args):
+    """{doc_id: chunk rows} from the single-doc kernels; docs without
+    chunks are absent, as they are from the Spark output."""
+    out = {}
+    for d in gen_docs(SEED, 0, N_DOCS, giant_factor=60):
+        chunks = chunk_doc(extract_doc(d["spans"]), **chunk_args)
+        if chunks:
+            out[d["doc_id"]] = [
+                (c["chunk_seq"], c["text"], c["token_count"], tuple(c["media_refs"]))
+                for c in chunks
+            ]
+    return out
+
+
+def test_fused_chunks_equal_oracle(spark, docs):
+    """Default routing: every doc of this corpus is below
+    GIANT_SPAN_THRESHOLD, so all run whole through the doc-batch runner."""
+    got = collect_chunks(extract_chunks_fused(docs, chunker="naive"))
+    assert got == oracle_chunks(chunker="naive")
+
+
+def test_giant_tail_chunks_equal_oracle(spark, docs):
+    """giant_threshold=0: every doc through explode → salted strip → the
+    one regroup that finalizes and chunks."""
+    got = collect_chunks(
+        extract_chunks_fused(docs, chunk_token_num=128, giant_threshold=0)
+    )
+    assert got == oracle_chunks(chunker="naive", chunk_token_num=128)
 
 
 def test_all_profiles_nonempty(spark, docs):

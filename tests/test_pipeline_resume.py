@@ -7,8 +7,19 @@ import pyspark.sql.functions as F
 import pytest
 
 from ragflow_spark.datagen import corpus_df
-from ragflow_spark.operators.extract import extract_spans
-from ragflow_spark.plans.pipeline import run_pipeline
+from ragflow_spark.kernels.extract import chunk_doc, extract_doc
+
+# one doc whose geometry ref is unparseable (finalize raises) next to a
+# healthy one
+BAD_PAIR = [
+    ("doc-bad", [("text", "x", "geom://1,a,b,c,d", 0)]),
+    ("doc-ok", [("txt", "hello world", "", 0)]),
+]
+OK_SPANS = [{"kind": "txt", "text": "hello world", "media_ref": "", "offset": 0}]
+DOCS_DDL = (
+    "doc_id string, spans array<struct<kind:string,text:string,"
+    "media_ref:string,offset:int>>"
+)
 
 
 @pytest.fixture(scope="module")
@@ -16,51 +27,20 @@ def docs(spark):
     return corpus_df(spark, seed=11, count=40).cache()
 
 
-def test_kill_resume_and_equality(spark, docs, tmp_path_factory):
-    base = str(tmp_path_factory.mktemp("ckpt"))
-
-    # phase 1: "killed" after the extract stage committed
-    r1 = run_pipeline(spark, docs, base, run_id="r1", stop_after="extract")
-    assert not r1.stages["strip"].resumed
-    assert not r1.stages["extract"].resumed
-    snap_strip = r1.stages["strip"].snapshot_id
-    snap_extract = r1.stages["extract"].snapshot_id
-
-    # phase 2: resume — strip/extract must NOT be recomputed
-    r2 = run_pipeline(spark, docs, base, run_id="r2")
-    assert r2.stages["strip"].resumed
-    assert r2.stages["extract"].resumed
-    assert r2.stages["strip"].snapshot_id == snap_strip
-    assert r2.stages["extract"].snapshot_id == snap_extract
-    assert not r2.stages["chunk"].resumed
-
-    # resumed output ≡ direct (non-checkpointed) computation
-    direct = extract_spans(docs)
-    got = {tuple(r) for r in r2.spans.collect()}
-    want = {tuple(r) for r in direct.collect()}
-    assert got == want
-
-    # lineage metrics cover every stage; span counts match the outputs
-    m = r2.run.metrics()
-    by_stage = {
-        r["stage"]: r
-        for r in m.groupBy("stage")
-        .agg(
-            F.sum("span_count").alias("spans"),
-            F.sum("doc_count").alias("docs"),
-            F.sum("failure_count").alias("failures"),
-        )
-        .collect()
-    }
-    assert set(by_stage) == {"strip", "extract", "chunk"}
-    assert by_stage["extract"]["spans"] == len(want)
-    assert by_stage["extract"]["failures"] == 0
-    assert by_stage["chunk"]["spans"] == r2.chunks.count()
+@pytest.fixture(scope="module")
+def bad_pair(spark, tmp_path_factory):
+    """The pair as a DataFrame and as a parquet copy (no ``n_spans``
+    column, so the parquet paths must plan the giant-doc tail)."""
+    df = spark.createDataFrame(BAD_PAIR, DOCS_DDL)
+    path = str(tmp_path_factory.mktemp("bad_pair") / "in")
+    df.write.parquet(path)
+    return df, path
 
 
 def test_native_pipeline_resume(spark, tmp_path_factory):
-    from ragflow_spark.datagen import write_corpus
+    from ragflow_spark.datagen import gen_doc, write_corpus
     from ragflow_spark.plans.pipeline import run_pipeline_native
+    from ragflow_spark.sources.parquet_spans import extract_chunks_native
 
     base = tmp_path_factory.mktemp("ckpt_native")
     inp = str(base / "in")
@@ -72,48 +52,119 @@ def test_native_pipeline_resume(spark, tmp_path_factory):
     assert r2.stages["chunks"].resumed
     assert r2.stages["chunks"].snapshot_id == r1.stages["chunks"].snapshot_id
     assert r2.chunks.count() == n1
-    m = r1.run.metrics()
-    assert m.where(F.col("stage") == "chunks").agg(F.sum("span_count")).first()[0] == n1
     # committed chunks ≡ the single-doc kernels over the same generated docs
-    from ragflow_spark.datagen import gen_doc
-    from ragflow_spark.kernels.extract import chunk_doc, extract_doc
-
     want = sorted(
         (d["doc_id"], c["chunker"], c["chunk_seq"], c["text"], c["token_count"],
          tuple(c["media_refs"]))
         for d in (gen_doc(8, i) for i in range(30))
         for c in chunk_doc(extract_doc(d["spans"]), chunker="naive", chunk_token_num=512)
     )
-    for r in (r1, r2):
-        got = sorted(
+
+    def rows(df):
+        return sorted(
             (x.doc_id, x.chunker, x.chunk_seq, x.text, x.token_count,
              tuple(x.media_refs or ()))
-            for x in r.chunks.collect()
+            for x in df.collect()
         )
-        assert got == want and len(want) > 0
+
+    for r in (r1, r2):
+        assert rows(r.chunks) == want and len(want) > 0
+    # resumed output ≡ the direct (non-checkpointed) computation
+    assert rows(extract_chunks_native(spark, inp)) == want
+    # lineage: chunk and doc counts match the output, no failures
+    m = (
+        r2.run.metrics()
+        .where(F.col("stage") == "chunks")
+        .agg(
+            F.sum("span_count").alias("rows"),
+            F.sum("doc_count").alias("docs"),
+            F.sum("failure_count").alias("failures"),
+        )
+        .first()
+    )
+    assert m["rows"] == n1
+    assert m["docs"] == len({w[0] for w in want})
+    assert m["failures"] == 0
 
 
-def test_failure_capture_lineage(spark, tmp_path_factory):
+def test_failure_capture_lineage(spark, bad_pair, tmp_path_factory):
     """A malformed doc (unparseable geom ref → kernel raises) becomes a
     failure_count lineage row, not a task failure; healthy docs survive."""
+    from ragflow_spark.plans.pipeline import run_pipeline_native
+
     base = str(tmp_path_factory.mktemp("ckpt_fail"))
-    bad = spark.createDataFrame(
-        [
-            ("doc-bad", [{"kind": "text", "text": "x", "media_ref": "geom://1,a,b,c,d", "offset": 0}]),
-            ("doc-ok", [{"kind": "txt", "text": "hello world", "media_ref": "", "offset": 0}]),
-        ],
-        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
-    )
-    r = run_pipeline(spark, bad, base, run_id="rf")
-    out = r.spans.collect()
-    assert {x["doc_id"] for x in out} == {"doc-ok"}
+    r = run_pipeline_native(spark, bad_pair[1], base, run_id="rf")
+    assert {x["doc_id"] for x in r.chunks.collect()} == {"doc-ok"}
     failures = (
         r.run.metrics()
-        .where(F.col("stage") == "extract")
+        .where(F.col("stage") == "chunks")
         .agg(F.sum("failure_count"))
         .first()[0]
     )
     assert failures == 1
+
+
+def _sink_rows(spark, df, path, out):
+    from ragflow_spark.sources.parquet_spans import extract_chunks_native_to_parquet
+
+    extract_chunks_native_to_parquet(spark, path, out).collect()
+    return spark.read.parquet(f"{out}/part-*.parquet").collect()
+
+
+def _checkpoint_rows(spark, df, path, out):
+    """The committed stage files, error markers included; the lineage
+    must count the bad doc as the stage's one failure."""
+    from ragflow_spark.plans.pipeline import run_pipeline_native
+
+    r = run_pipeline_native(spark, path, out)
+    m = r.run.metrics().agg(F.sum("failure_count")).first()[0]
+    assert m == 1
+    assert {x.doc_id for x in r.chunks.collect()} == {"doc-ok"}
+    return spark.read.parquet(r.stages["chunks"].path).collect()
+
+
+def _paths():
+    from ragflow_spark.operators.extract import extract_spans
+    from ragflow_spark.sources.parquet_spans import extract_chunks_native
+
+    return {
+        "runner": lambda spark, df, path, out: extract_spans(df).collect(),
+        "tail": lambda spark, df, path, out: extract_spans(
+            df, giant_threshold=0).collect(),
+        "native_tail": lambda spark, df, path, out: extract_chunks_native(
+            spark, path, giant_threshold=1).collect(),
+        "sink": _sink_rows,
+        "checkpoint": _checkpoint_rows,
+    }
+
+
+@pytest.mark.parametrize("path_name", list(_paths()))
+def test_bad_doc_never_fails_a_path(spark, bad_pair, tmp_path_factory, path_name):
+    """Per-doc fault isolation on every extraction path: the doc whose
+    kernels raise becomes exactly one ``__error__`` marker row (``kind``
+    on span rows, ``chunker`` on chunk rows), the healthy doc still equals
+    the single-doc kernels, and the job does not fail."""
+    df, path = bad_pair
+    out = str(tmp_path_factory.mktemp(f"bad_{path_name}") / "out")
+    rows = [r.asDict() for r in _paths()[path_name](spark, df, path, out)]
+    chunked = "chunker" in rows[0]
+    mark = "chunker" if chunked else "kind"
+    errors = [r for r in rows if r[mark] == "__error__"]
+    assert len(errors) == 1, errors
+    err = errors[0]
+    assert err["doc_id"] == "doc-bad" and err["text"]
+    assert err["chunk_seq" if chunked else "seq"] == 0
+    if chunked:
+        assert err["token_count"] == 0 and not err["media_refs"]
+    want = extract_doc(OK_SPANS)
+    if chunked:
+        want = chunk_doc(want)
+    keys = list(want[0])
+    got = sorted(
+        (r for r in rows if r["doc_id"] == "doc-ok"),
+        key=lambda r: r["chunk_seq" if chunked else "seq"],
+    )
+    assert [{k: r[k] for k in keys} for r in got] == want
 
 
 def test_manifest_crash_tolerance_and_metric_dedup(spark, docs, tmp_path_factory):
@@ -157,7 +208,7 @@ def test_manifest_crash_tolerance_and_metric_dedup(spark, docs, tmp_path_factory
     assert m.agg(F.sum("span_count")).first()[0] == n
 
     # 3. a double append of the same snapshot's rows does not double-count
-    run._append_metrics(sdir, res.snapshot_id, "demo", "doc_id", "__error__", "c1")
+    run._append_metrics(sdir, res.snapshot_id, "demo", "c1")
     m2 = run.metrics().where(F.col("stage") == "demo")
     assert m2.agg(F.sum("span_count")).first()[0] == n
 

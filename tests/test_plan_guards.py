@@ -10,6 +10,16 @@ import glob
 import os
 import re
 
+import pytest
+
+
+def _one_doc(spark):
+    return spark.createDataFrame(
+        [("d0", [("txt", "hello world", "", 0)])],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    )
+
 
 def test_strip_stage_salted_repartition_has_explicit_count(spark):
     """The salted exploded-path shuffle must be RepartitionByExpression
@@ -17,15 +27,14 @@ def test_strip_stage_salted_repartition_has_explicit_count(spark):
     AQE-coalescible and got folded to ONE partition for byte-small/
     CPU-huge giant-doc span sets (r5 skew bench, straggler cut 5.8x
     after pinning)."""
-    from ragflow_spark.operators.extract import explode_spans, strip_stage
-
-    docs = spark.createDataFrame(
-        [("d0", [("txt", "hello world", "", 0)])],
-        "doc_id string, spans array<struct<kind:string,text:string,"
-        "media_ref:string,offset:int>>",
+    from ragflow_spark.operators.extract import (
+        explode_spans,
+        finalize_stage,
+        strip_stage,
     )
+
     plan = (
-        strip_stage(explode_spans(docs))
+        finalize_stage(strip_stage(explode_spans(_one_doc(spark))))
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()
@@ -33,6 +42,27 @@ def test_strip_stage_salted_repartition_has_explicit_count(spark):
     m = re.search(r"RepartitionByExpression \[[^\]]*salt[^\]]*\], (\d+)", plan)
     assert m, plan
     assert int(m.group(1)) > 0
+    # the doc_id regroup feeding finalize is pinned the same way
+    m = re.search(r"RepartitionByExpression \[doc_id#\d+\], (\d+)", plan)
+    assert m, plan
+    assert int(m.group(1)) > 0
+
+
+def test_giant_chunk_path_runs_one_grouped_stage(spark):
+    """The giant-doc chunk path regroups by doc_id ONCE: its executed plan
+    has one ``FlatMapGroupsInPandas`` (finalize and chunk together) and
+    two Exchanges (the salted strip shuffle and the doc_id regroup), both
+    with an explicit partition count AQE cannot coalesce."""
+    from ragflow_spark.operators.extract import extract_chunks_fused
+
+    df = extract_chunks_fused(_one_doc(spark), giant_threshold=0)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("FlatMapGroupsInPandas") == 1, final
+    exchanges = re.findall(r"Exchange hashpartitioning\(.*", final)
+    assert len(exchanges) == 2, final
+    assert all("REPARTITION_BY_NUM" in e for e in exchanges), exchanges
 
 
 def test_knn_default_batch_predicates_reach_scan(spark):
@@ -75,11 +105,13 @@ def _calls_by_function(paths):
 
 def test_extraction_paths_share_one_runner_and_tail():
     """Every extraction path runs the one doc-batch runner and the one
-    giant-doc tail instead of re-implementing them: ``extract_doc`` is
-    called from a single function of ``operators/`` + ``sources/``,
-    ``explode_spans`` only from ``_giant_tail`` and the checkpointed
-    ``run_pipeline``, and neither split sizing nor the strip shuffle's
-    partition count is a public knob."""
+    giant-doc tail instead of re-implementing them: ``extract_doc`` and
+    ``applyInPandas`` are each called from a single function of
+    ``operators/`` + ``sources/``, ``explode_spans`` only from
+    ``_giant_tail``; neither split sizing nor the strip shuffle's
+    partition count is a public knob, and no public function of
+    ``operators/``, ``sources/`` or ``plans/`` takes an error-capture or
+    stop-early switch (per-doc error capture is unconditional)."""
     import ragflow_spark
 
     pkg = os.path.dirname(ragflow_spark.__file__)
@@ -89,16 +121,60 @@ def test_extraction_paths_share_one_runner_and_tail():
     )
     calls = _calls_by_function(paths)
     assert len(calls.get("extract_doc", set())) == 1, calls.get("extract_doc")
+    assert calls.get("applyInPandas") == {"finalize_stage"}, calls.get("applyInPandas")
     every = _calls_by_function(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True))
-    assert every["explode_spans"] == {"_giant_tail", "run_pipeline"}
-    for p in paths:
+    assert every["explode_spans"] == {"_giant_tail"}
+    banned = {"target_rows", "repartition", "capture_errors", "stop_after"}
+    for p in paths + sorted(glob.glob(os.path.join(pkg, "plans", "*.py"))):
         with open(p) as fh:
             tree = ast.parse(fh.read())
-        for fn in tree.body:
+        tops = tree.body + [
+            m for c in tree.body if isinstance(c, ast.ClassDef) for m in c.body
+        ]
+        for fn in tops:
             if isinstance(fn, ast.FunctionDef) and not fn.name.startswith("_"):
                 args = fn.args.args + fn.args.kwonlyargs
-                assert not {"target_rows", "repartition"} & {a.arg for a in args}, (
-                    p, fn.name)
+                assert not banned & {a.arg for a in args}, (p, fn.name)
+
+
+def test_chunk_args_validated_on_driver(tmp_path):
+    """An unknown chunker raises ValueError at the call, before any input
+    is read or output written (per-doc error capture would otherwise turn
+    the typo into one marker row per doc), and the spark-submit script's
+    hand-kept ``--chunker`` choices equal ``CHUNKERS``."""
+    from ragflow_spark.kernels.extract import CHUNKERS
+    from ragflow_spark.operators.extract import extract_chunks_fused
+    from ragflow_spark.sources.parquet_spans import (
+        extract_chunks_native,
+        extract_chunks_native_to_parquet,
+    )
+
+    missing = str(tmp_path / "no-such-input")
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match="unknown chunker"):
+        extract_chunks_fused(None, chunker="nave")
+    with pytest.raises(ValueError, match="unknown chunker"):
+        extract_chunks_native(None, missing, chunker="nave")
+    with pytest.raises(ValueError, match="unknown chunker"):
+        extract_chunks_native_to_parquet(None, missing, str(out), chunker="nave")
+    assert not out.exists()
+
+    script = os.path.join(
+        os.path.dirname(__file__), "..", "scripts", "run_extraction_job.py"
+    )
+    with open(script) as fh:
+        tree = ast.parse(fh.read())
+    choices = [
+        ast.literal_eval(kw.value)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and node.args
+        and isinstance(node.args[0], ast.Constant)
+        and node.args[0].value == "--chunker"
+        for kw in node.keywords
+        if kw.arg == "choices"
+    ]
+    assert choices == [list(CHUNKERS)]
 
 
 def test_fixture_queries_share_one_per_doc_map():
