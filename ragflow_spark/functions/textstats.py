@@ -9,9 +9,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-
-_ENG_CHAR = re.compile(r"[`a-zA-Z0-9\s.,':;/\"?<>!\(\)\-]")
 # whole-string variant: one fullmatch instead of a per-character match loop
 _FULL_ENG = re.compile(r"[`a-zA-Z0-9\s.,':;/\"?<>!\(\)\-]*")
 _CJK = re.compile(r"[一-鿿]")
@@ -50,10 +47,3 @@ def doc_is_english(texts: list[str], sample: int = 200) -> bool:
     texts = [t for t in texts if t and t.strip()][:sample]
     return is_english(texts)
 
-
-def english_ratio_series(s: pd.Series) -> pd.Series:
-    """Vectorized fraction of english-charset characters per string."""
-    s = s.fillna("")
-    n = s.str.len().clip(lower=1)
-    eng = s.str.count(r"[`a-zA-Z0-9\s.,':;/\"?<>!\(\)\-]")
-    return eng / n

@@ -26,10 +26,6 @@ _WORD = r"[A-Za-z0-9]{1,4}"
 _CJK = r"[一-鿿]"
 _OTHER = r"[^\sA-Za-z0-9一-鿿]{1,3}"
 
-_WORD_RE = re.compile(_WORD)
-_CJK_RE = re.compile(_CJK)
-_OTHER_RE = re.compile(_OTHER)
-
 # the same counter as a SQL expression template (DuckDB + Spark SQL both
 # support regexp-extract-all / regexp_count style functions)
 SPARK_SQL_EXPR = (

@@ -3,7 +3,7 @@
 Physical layout (SURVEY.md §4.3, north-rule "partitioning / shuffle / skew
 handled explicitly"):
 
-- **strip** is span-local → ``posexplode`` the span arrays, then *salted
+- **strip** is span-local → ``explode`` the span arrays, then *salted
   repartition* on ``(doc_id, offset-block)`` so one giant document's spans
   spread across the cluster instead of pinning a single task. The stage runs
   as ``mapInPandas`` (Arrow batches; the kernel is pure Python over batch
@@ -16,11 +16,12 @@ handled explicitly"):
 
 At 100 TB the dominant costs are the input scan (columnar, pruned to
 doc_id+spans) and the one shuffle into finalize; strip's salting bounds the
-largest task by ``salt_block`` spans rather than by the largest document.
+largest task by ``SALT_BLOCK`` spans rather than by the largest document.
 
 These stages serve only the giant-doc tail (``_giant_tail``). Docs below
 ``GIANT_SPAN_THRESHOLD`` run whole, in one Arrow map, through the doc-batch
-runner in ``sources.parquet_spans``. Both per-doc loops share one error
+runner in ``sources.parquet_spans``; the readers route the giants here, so
+that runner never sees one. Both per-doc loops share one error
 contract: a document whose kernels raise becomes one
 ``kernels.extract.error_row`` marker row and never fails its task.
 """
@@ -45,16 +46,17 @@ STRIPPED_SCHEMA = (
     "doc_id string, kind string, text string, media_ref string, "
     "offset int, sub int"
 )
+SALT_BLOCK = 256  # spans of one giant doc per strip-shuffle key
 
 
-def explode_spans(docs: DataFrame, salt_block: int = 256) -> DataFrame:
+def explode_spans(docs: DataFrame) -> DataFrame:
     """(doc_id, spans[]) → one row per span, salted.
 
-    ``salt`` buckets ``offset`` into blocks of ``salt_block`` so a 10^6-span
+    ``salt`` buckets ``offset`` into blocks of ``SALT_BLOCK`` so a 10^6-span
     document becomes ~4k independent tasks' worth of rows instead of one hot
     key. The strip stage never needs whole-doc context, so this is safe."""
     return (
-        docs.select("doc_id", F.posexplode("spans").alias("idx", "span"))
+        docs.select("doc_id", F.explode("spans").alias("span"))
         .select(
             "doc_id",
             F.col("span.kind").alias("kind"),
@@ -62,7 +64,7 @@ def explode_spans(docs: DataFrame, salt_block: int = 256) -> DataFrame:
             F.col("span.media_ref").alias("media_ref"),
             F.col("span.offset").alias("offset"),
         )
-        .withColumn("salt", (F.col("offset") / F.lit(salt_block)).cast("int"))
+        .withColumn("salt", (F.col("offset") / F.lit(SALT_BLOCK)).cast("int"))
     )
 
 
@@ -167,16 +169,11 @@ def finalize_stage(
 GIANT_SPAN_THRESHOLD = 2048
 
 
-def _giant_tail(
-    giants: DataFrame,
-    html_tables: bool,
-    chunk_args: dict | None,
-    salt_block: int = 256,
-) -> DataFrame:
+def _giant_tail(giants: DataFrame, html_tables: bool, chunk_args: dict | None) -> DataFrame:
     """The giant-doc route every extraction entry point shares: explode →
     salted strip → one per-doc regroup that finalizes (and chunks, given
     ``chunk_args``; None means output spans, not chunks)."""
-    stripped = strip_stage(explode_spans(giants, salt_block=salt_block))
+    stripped = strip_stage(explode_spans(giants))
     return finalize_stage(stripped, html_tables, chunk_args)
 
 
@@ -198,7 +195,6 @@ def _chunk_args(
 
 def extract_spans(
     docs: DataFrame,
-    salt_block: int = 256,
     html_tables: bool = False,
     giant_threshold: int = GIANT_SPAN_THRESHOLD,
 ) -> DataFrame:
@@ -214,9 +210,7 @@ def extract_spans(
     the exploded path everywhere (used by tests and the skew bench)."""
     from ragflow_spark.sources.parquet_spans import _route  # deferred: it imports this module
 
-    return _route(
-        docs.sparkSession, docs, giant_threshold, html_tables, None, salt_block
-    )
+    return _route(docs.sparkSession, docs, giant_threshold, html_tables, None)
 
 
 def extract_chunks_fused(
@@ -225,7 +219,6 @@ def extract_chunks_fused(
     chunk_token_num: int = 512,
     delimiter: str = "\n!?。；！？",
     overlapped_percent: int = 0,
-    html_tables: bool = False,
     giant_threshold: int = GIANT_SPAN_THRESHOLD,
 ) -> DataFrame:
     """End-to-end extract+chunk in ONE pass for non-giant docs (zero
@@ -234,7 +227,7 @@ def extract_chunks_fused(
     from ragflow_spark.sources.parquet_spans import _route  # deferred: it imports this module
 
     chunk_args = _chunk_args(chunker, chunk_token_num, delimiter, overlapped_percent)
-    return _route(docs.sparkSession, docs, giant_threshold, html_tables, chunk_args)
+    return _route(docs.sparkSession, docs, giant_threshold, False, chunk_args)
 
 
 def with_chunk_ids(chunks: DataFrame) -> DataFrame:
@@ -264,8 +257,6 @@ def with_ltks(chunks: DataFrame) -> DataFrame:
     )
 
     def run(batches):
-        import re as _re
-
         from ragflow_spark.functions.trie_tokenizer import (
             fine_grained_tokenize,
             tokenize,

@@ -70,51 +70,6 @@ FROM documents
 """
 
 
-# ---------------------------------------------------------------- language id
-def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heuristic language ID: CJK char density, then per-language stopword
-    marker hits with deterministic tie-break order en>de>fr>es."""
-    docs = load(spark, sf_dir, "documents")
-    low = F.lower(F.col("text"))
-    cjk = F.regexp_count(F.col("text"), F.lit(CJK_CLASS))
-    hits = {k: F.regexp_count(low, F.lit(p)) for k, p in LANG_MARKERS.items()}
-    en, de, fr, es = hits["en"], hits["de"], hits["fr"], hits["es"]
-    pred = (
-        F.when(cjk * 20 >= F.length("text"), F.lit("zh"))
-        .when((en >= de) & (en >= fr) & (en >= es), F.lit("en"))
-        .when((de >= fr) & (de >= es), F.lit("de"))
-        .when(fr >= es, F.lit("fr"))
-        .otherwise(F.lit("es"))
-    )
-    return docs.select(
-        "doc_id",
-        pred.alias("lang_pred"),
-        cjk.cast("int").alias("cjk_chars"),
-        en.cast("int").alias("en_hits"),
-    )
-
-
-LANG_ID_SQL = f"""
-WITH f AS (
-  SELECT doc_id, text,
-         length(regexp_extract_all(text, '{CJK_CLASS}')) AS cjk,
-         length(regexp_extract_all(lower(text), '{LANG_MARKERS["en"]}')) AS en,
-         length(regexp_extract_all(lower(text), '{LANG_MARKERS["de"]}')) AS de,
-         length(regexp_extract_all(lower(text), '{LANG_MARKERS["fr"]}')) AS fr,
-         length(regexp_extract_all(lower(text), '{LANG_MARKERS["es"]}')) AS es
-  FROM documents)
-SELECT doc_id,
-       CASE WHEN cjk * 20 >= length(text) THEN 'zh'
-            WHEN en >= de AND en >= fr AND en >= es THEN 'en'
-            WHEN de >= fr AND de >= es THEN 'de'
-            WHEN fr >= es THEN 'fr'
-            ELSE 'es' END AS lang_pred,
-       CAST(cjk AS INTEGER) AS cjk_chars,
-       CAST(en AS INTEGER) AS en_hits
-FROM f
-"""
-
-
 # ---------------------------------------------------------------- quality
 def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality features + blended score. All ratios are single
@@ -161,21 +116,6 @@ SELECT doc_id,
              + least(stop / greatest(words, 1) * 5.0, 1.0) * 0.3
              + least(punct / greatest(words, 1) * 10.0, 1.0) * 0.2, 4) AS quality
 FROM f
-"""
-
-
-# ---------------------------------------------------------------- fingerprint
-def fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whitespace/case-normalized md5 fingerprint + per-source distinct-
-    fingerprint counts (dedup bookkeeping at corpus level)."""
-    docs = load(spark, sf_dir, "documents")
-    fp = F.md5(F.expr(SPARK_NORM.format(c="text")))
-    return docs.select("doc_id", "source", fp.alias("fp"))
-
-
-FINGERPRINT_SQL = f"""
-SELECT doc_id, source, md5({DUCK_NORM.format(c="text")}) AS fp
-FROM documents
 """
 
 

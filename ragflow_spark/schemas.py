@@ -46,17 +46,6 @@ DOCS_SCHEMA = T.StructType(
     ]
 )
 
-# exploded working schema (strip/layout stages)
-EXPLODED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("media_ref", T.StringType(), True),
-        T.StructField("offset", T.IntegerType(), False),
-    ]
-)
-
 # final extracted spans (FIXTURES.md §2 expected_spans)
 OUT_SPANS_SCHEMA = T.StructType(
     [
@@ -81,20 +70,6 @@ CHUNKS_SCHEMA = T.StructType(
         T.StructField("media_refs", T.ArrayType(T.StringType()), True),
     ]
 )
-
-# lineage metrics (FIXTURES.md §4 run_metrics)
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("snapshot_id", T.LongType(), False),
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("doc_count", T.LongType(), False),
-        T.StructField("span_count", T.LongType(), False),
-        T.StructField("failure_count", T.LongType(), False),
-    ]
-)
-
 
 @dataclass
 class Geom:

@@ -27,19 +27,23 @@ Arrow batch or table of ``(doc_id, spans)`` → ``_iter_docs`` decode →
 every other path yields its batches from a ``mapInArrow`` stage
 (``_route``).
 
-Giant documents (spans ≥ giant_threshold) are skipped by the runner and
-handled by ``operators.extract._giant_tail`` (exploded/salted DataFrame
-path); for parquet paths that filter is pushed into the JVM parquet scan via
-the ``n_spans`` stats column, which prunes whole row groups cheaply.
+Giant documents (spans ≥ giant_threshold) are routed by the readers, once,
+and the runner never sees one: the JVM scan filters on ``size(spans)``; the
+in-task read, ``_read_split``, drops them on the Arrow list length before
+any decode. ``operators.extract._giant_tail`` (exploded/salted DataFrame
+path) handles them. ``_plan`` is the one planner of both in-task paths
+(emit and sink): the numbered split rows, and the giants' JVM scan, which
+the ``n_spans`` stats column prunes to whole row groups — or none at all,
+when the footer stats prove there are no giants.
 """
 
 from __future__ import annotations
 
 import math
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ragflow_spark.kernels.extract import chunk_doc, error_row, extract_doc
@@ -50,13 +54,13 @@ from ragflow_spark.operators.extract import (
 )
 from ragflow_spark.schemas import CHUNKS_SCHEMA, OUT_SPANS_SCHEMA
 
-SPLITS_SCHEMA = "path string, rg_start int, rg_end int"
+SPLITS_SCHEMA = "split_id int, path string, rg_start int, rg_end int"
 _SPANS_ARROW = to_arrow_schema(OUT_SPANS_SCHEMA)
 _CHUNKS_ARROW = to_arrow_schema(CHUNKS_SCHEMA)
 
 
 def plan_splits(
-    path: str, giant_threshold: int | None = None
+    path: str, giant_threshold: int
 ) -> tuple[list[tuple[str, int, int]], bool]:
     """Row-group split planning from parquet footers only (no data I/O).
     Groups consecutive row groups of a file until the running row total
@@ -77,10 +81,10 @@ def plan_splits(
     slots = spark.sparkContext.defaultParallelism if spark else 1
     target_rows = math.ceil(sum(md.num_rows for md in metas) / (4 * slots))
     splits: list[tuple[str, int, int]] = []
-    may_have_giants = giant_threshold is None
+    may_have_giants = False
     for f, md in zip(files, metas):
         ncol = None
-        if giant_threshold is not None and md.num_row_groups > 0:
+        if md.num_row_groups > 0:
             # leaf-column index of n_spans (nested spans flatten to leaves,
             # so the arrow field index does NOT match the parquet one)
             rg0 = md.row_group(0)
@@ -88,7 +92,7 @@ def plan_splits(
                 if rg0.column(j).path_in_schema == "n_spans":
                     ncol = j
                     break
-        if giant_threshold is not None and ncol is None:
+        if ncol is None:
             may_have_giants = True  # no stats column → must assume giants
         n_rg = md.num_row_groups
         start, acc = 0, 0
@@ -105,6 +109,21 @@ def plan_splits(
                 splits.append((f, start, i + 1))
                 start, acc = i + 1, 0
     return splits, may_have_giants
+
+
+def _read_split(path: str, rg_start: int, rg_end: int, giant_threshold: int):
+    """The one in-task read: row groups [rg_start, rg_end) of ``path`` as an
+    Arrow table of (doc_id, spans), minus every doc with giant_threshold or
+    more spans (the giant-doc tail's), dropped on the list length before
+    any decode. A null ``spans`` counts as 0 spans."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    tbl = pq.ParquetFile(path).read_row_groups(
+        list(range(rg_start, rg_end)), columns=["doc_id", "spans"], use_threads=False
+    )
+    n_spans = pc.fill_null(pc.list_value_length(tbl.column("spans")), 0)
+    return tbl.filter(pc.less(n_spans, giant_threshold))
 
 
 def _iter_docs(batch) -> tuple[list, list]:
@@ -128,22 +147,18 @@ def _iter_docs(batch) -> tuple[list, list]:
     return doc_ids, per_doc
 
 
-def _run_docs(batch, giant_threshold: int, html_tables: bool, chunk_args: dict | None):
+def _run_docs(batch, html_tables: bool, chunk_args: dict | None):
     """The doc-batch runner: decode → ``extract_doc`` (→ ``chunk_doc`` with
     ``chunk_args``; None means output spans, not chunks) per doc → one
-    Arrow table typed from OUT_SPANS_SCHEMA / CHUNKS_SCHEMA. Docs with
-    ≥ giant_threshold spans are skipped: the giant-doc tail handles them.
+    Arrow table typed from OUT_SPANS_SCHEMA / CHUNKS_SCHEMA. Its input
+    holds no giant doc: the readers route those to the giant-doc tail.
     A doc whose kernels raise emits one ``error_row`` instead of failing
-    the task. Returns (table, docs kept)."""
+    the task."""
     import pyarrow as pa
 
     ids: list[str] = []
     rows: list[dict] = []
-    kept = 0
     for doc_id, recs in zip(*_iter_docs(batch)):
-        if len(recs) >= giant_threshold:
-            continue
-        kept += 1
         try:
             out = extract_doc(recs, html_tables=html_tables)
             if chunk_args is not None:
@@ -154,32 +169,32 @@ def _run_docs(batch, giant_threshold: int, html_tables: bool, chunk_args: dict |
         rows += out
     schema = _SPANS_ARROW if chunk_args is None else _CHUNKS_ARROW
     cols = {n: [r[n] for r in rows] for n in schema.names[1:]}
-    return pa.Table.from_pydict({"doc_id": ids, **cols}, schema=schema), kept
+    return pa.Table.from_pydict({"doc_id": ids, **cols}, schema=schema)
 
 
-def _splits_df(
-    spark: SparkSession, path: str, giant_threshold: int | None = None
-) -> tuple[DataFrame, bool]:
+def _plan(
+    spark: SparkSession, path: str, giant_threshold: int
+) -> tuple[DataFrame, DataFrame | None]:
+    """The one planner of the in-task paths: (split rows numbered
+    ``split_id`` in ``plan_splits`` order, one per task; the JVM scan of
+    the giant docs, or None when the footer stats prove there are none).
+    With the ``n_spans`` stats column the giant predicate is pushed into
+    the parquet reader and prunes row groups via min/max — the JVM never
+    decodes the span arrays of non-giant row groups. Without it, fall back
+    to ``size(spans)`` (full decode — only correct, not fast; production
+    tables must carry n_spans)."""
     splits, may_have_giants = plan_splits(path, giant_threshold)
+    rows = [(i, *split) for i, split in enumerate(splits)]
     # exactly one split per partition, WITHOUT a shuffle: a repartition here
     # would let AQE coalesce the (byte-tiny) split rows into a handful of
     # fat tasks and destroy load balance — parallelize pins the layout
-    rdd = spark.sparkContext.parallelize(splits, max(len(splits), 1))
-    return spark.createDataFrame(rdd, SPLITS_SCHEMA), may_have_giants
-
-
-def _giants_scan(spark: SparkSession, path: str, giant_threshold: int) -> DataFrame:
-    """Giant-doc tail scan. With the ``n_spans`` stats column the predicate
-    is pushed into the parquet reader and prunes row groups via min/max —
-    the JVM never decodes the span arrays of non-giant row groups. Without
-    it, fall back to ``size(spans)`` (full decode — only correct, not fast;
-    production tables must carry n_spans)."""
+    rdd = spark.sparkContext.parallelize(rows, max(len(rows), 1))
+    splits_df = spark.createDataFrame(rdd, SPLITS_SCHEMA)
+    if not may_have_giants:
+        return splits_df, None
     df = spark.read.parquet(path)
-    if "n_spans" in df.columns:
-        pred = F.col("n_spans") >= giant_threshold
-    else:
-        pred = F.size("spans") >= giant_threshold
-    return df.where(pred).select("doc_id", "spans")
+    n_spans = F.col("n_spans") if "n_spans" in df.columns else F.size("spans")
+    return splits_df, df.where(n_spans >= giant_threshold).select("doc_id", "spans")
 
 
 def _route(
@@ -188,48 +203,40 @@ def _route(
     giant_threshold: int,
     html_tables: bool,
     chunk_args: dict | None,
-    salt_block: int = 256,
 ) -> DataFrame:
     """Every emitting extraction path: a ``mapInArrow`` stage yielding the
     runner's batches for docs below ``giant_threshold``, unioned with
     ``_giant_tail`` over the rest. ``source`` picks the reader: a docs
     DataFrame is fed by its JVM scan; a parquet path is read inside the
-    task, one footer-planned split per task, and its tail is planned away
-    when the footer stats prove there are no giants."""
+    task by ``_read_split``, one ``_plan`` split per task, and its tail is
+    planned away when the footer stats prove there are no giants."""
     in_task = isinstance(source, str)
 
     def run(batches):
-        import pyarrow.parquet as pq
-
         for b in batches:
             tables = [b]
             if in_task:
                 d = b.to_pydict()
                 tables = (
-                    pq.ParquetFile(p).read_row_groups(
-                        list(range(a, z)), columns=["doc_id", "spans"]
-                    )
+                    _read_split(p, a, z, giant_threshold)
                     for p, a, z in zip(d["path"], d["rg_start"], d["rg_end"])
                 )
             for t in tables:
-                tbl, _ = _run_docs(t, giant_threshold, html_tables, chunk_args)
-                yield from tbl.to_batches()
+                yield from _run_docs(t, html_tables, chunk_args).to_batches()
 
     schema = OUT_SPANS_SCHEMA if chunk_args is None else CHUNKS_SCHEMA
     if in_task:
-        splits, may_have_giants = _splits_df(spark, source, giant_threshold)
+        splits, giants = _plan(spark, source, giant_threshold)
         small = splits.mapInArrow(run, schema)
-        if not may_have_giants:
+        if giants is None:
             # row-group max(n_spans) statistics prove no giants exist: the
             # whole tail pipeline (scan + 2 shuffles) is planned away
             return small
-        giants = _giants_scan(spark, source, giant_threshold)
     else:
         docs = source.select("doc_id", "spans")
         small = docs.where(F.size("spans") < giant_threshold).mapInArrow(run, schema)
         giants = docs.where(F.size("spans") >= giant_threshold)
-    tail = _giant_tail(giants, html_tables, chunk_args, salt_block)
-    return small.unionByName(tail)
+    return small.unionByName(_giant_tail(giants, html_tables, chunk_args))
 
 
 def extract_chunks_native(
@@ -239,18 +246,23 @@ def extract_chunks_native(
     chunk_token_num: int = 512,
     delimiter: str = "\n!?。；！？",
     overlapped_percent: int = 0,
-    html_tables: bool = False,
     giant_threshold: int = GIANT_SPAN_THRESHOLD,
 ) -> DataFrame:
     """parquet → chunks with the reader inside the Python task (hot path) and
     the exploded/salted DataFrame path for the giant-doc tail."""
     chunk_args = _chunk_args(chunker, chunk_token_num, delimiter, overlapped_percent)
-    return _route(spark, path, giant_threshold, html_tables, chunk_args)
+    return _route(spark, path, giant_threshold, False, chunk_args)
 
 
-MANIFEST_SCHEMA = (
-    "split_id int, n_docs long, n_chunks long, out_file string"
+MANIFEST_SCHEMA = T.StructType(
+    [
+        T.StructField("split_id", T.IntegerType()),
+        T.StructField("n_docs", T.LongType()),
+        T.StructField("n_chunks", T.LongType()),
+        T.StructField("out_file", T.StringType()),
+    ]
 )
+_MANIFEST_ARROW = to_arrow_schema(MANIFEST_SCHEMA)
 
 
 def _resolve_fs(path: str):
@@ -317,7 +329,6 @@ def extract_chunks_native_to_parquet(
     chunk_token_num: int = 512,
     delimiter: str = "\n!?。；！？",
     overlapped_percent: int = 0,
-    html_tables: bool = False,
     giant_threshold: int = GIANT_SPAN_THRESHOLD,
     resume: bool = False,
     direct_write: bool | None = None,
@@ -345,66 +356,54 @@ def extract_chunks_native_to_parquet(
     fs0.create_dir(root0, recursive=True)
 
     def run(batches):
-        import pyarrow.parquet as pq
+        import pyarrow as pa
 
         fs, root = _resolve_fs(out_dir)
         rename = _use_rename_protocol(fs, direct_write)
-        for pdf in batches:
-            for row in pdf.itertuples():
-                fname = (
-                    f"{root.rstrip('/')}/"
-                    f"part-{os.path.basename(row.path)}-{row.rg_start}-{row.rg_end}.parquet"
-                )
+        for b in batches:
+            d = b.to_pydict()
+            rows = []
+            for sid, p, a, z in zip(d["split_id"], d["path"], d["rg_start"], d["rg_end"]):
+                fname = f"{root.rstrip('/')}/part-{os.path.basename(p)}-{a}-{z}.parquet"
                 n_docs, n_chunks = -1, None  # n_docs not recounted on resume
                 if resume:
                     # split already committed: lineage from its footer only
                     n_chunks = _committed_rows(fs, fname)
                 if n_chunks is None:
-                    tbl = pq.ParquetFile(row.path).read_row_groups(
-                        list(range(row.rg_start, row.rg_end)),
-                        columns=["doc_id", "spans"],
-                        use_threads=False,
-                    )
-                    out_tbl, n_docs = _run_docs(
-                        tbl, giant_threshold, html_tables, chunk_args
-                    )
+                    tbl = _read_split(p, a, z, giant_threshold)
+                    out_tbl = _run_docs(tbl, False, chunk_args)
                     _commit_table(fs, fname, out_tbl, "snappy", rename)
-                    n_chunks = out_tbl.num_rows
-                yield pd.DataFrame(
-                    {
-                        "split_id": [int(row.Index)],
-                        "n_docs": [n_docs],
-                        "n_chunks": [n_chunks],
-                        "out_file": [fname],
-                    }
+                    n_docs, n_chunks = tbl.num_rows, out_tbl.num_rows
+                rows.append(
+                    {"split_id": sid, "n_docs": n_docs, "n_chunks": n_chunks,
+                     "out_file": fname}
                 )
+            yield pa.RecordBatch.from_pylist(rows, schema=_MANIFEST_ARROW)
 
-    splits, may_have_giants = _splits_df(spark, path, giant_threshold)
-    manifest = splits.mapInPandas(run, schema=MANIFEST_SCHEMA)
-    if may_have_giants:
-        giants_dir = out_dir.rstrip("/") + "/giants"
-        if resume:
-            from pyarrow import fs as pafs
+    splits, giants = _plan(spark, path, giant_threshold)
+    manifest = splits.mapInArrow(run, MANIFEST_SCHEMA)
+    if giants is None:
+        return manifest
+    if resume:
+        from pyarrow import fs as pafs
 
-            info = fs0.get_file_info(f"{root0.rstrip('/')}/giants/_SUCCESS")
-            if info.type == pafs.FileType.File:
-                # giants already committed (the _SUCCESS marker is written
-                # last by the parquet committer) — skip the whole tail
-                return manifest
-        giants = _giants_scan(spark, path, giant_threshold)
-        # overwrite (not append): the giants output is a pure function of the
-        # input, so reruns replace it instead of duplicating every giant doc
-        _giant_tail(giants, html_tables, chunk_args).write.mode("overwrite").parquet(
-            giants_dir
-        )
+        info = fs0.get_file_info(f"{root0.rstrip('/')}/giants/_SUCCESS")
+        if info.type == pafs.FileType.File:
+            # giants already committed (the _SUCCESS marker is written last
+            # by the parquet committer) — skip the whole tail
+            return manifest
+    # overwrite (not append): the giants output is a pure function of the
+    # input, so reruns replace it instead of duplicating every giant doc
+    _giant_tail(giants, False, chunk_args).write.mode("overwrite").parquet(
+        out_dir.rstrip("/") + "/giants"
+    )
     return manifest
 
 
 def extract_spans_native(
     spark: SparkSession,
     path: str,
-    html_tables: bool = False,
     giant_threshold: int = GIANT_SPAN_THRESHOLD,
 ) -> DataFrame:
     """parquet → extracted spans, Python-native reader (same routing)."""
-    return _route(spark, path, giant_threshold, html_tables, None)
+    return _route(spark, path, giant_threshold, False, None)

@@ -13,8 +13,10 @@ The script itself imports ragflow_spark from the --py-files zip (no
 sys.path surgery), which is exactly the multi-executor cluster contract:
 driver and executors resolve the engine from the shipped artifact.
 
-With --checkpoint, the python-native extract+chunk stage commits a snapshot
-+ lineage metrics and a rerun reuses it (plans/pipeline.py).
+The input is read inside the Python tasks, one row-group split per task
+(sources/parquet_spans.extract_chunks_native). With --checkpoint, that
+extract+chunk stage commits a snapshot + lineage metrics and a rerun
+reuses it (plans/pipeline.py).
 """
 
 from __future__ import annotations
@@ -33,8 +35,6 @@ def main() -> None:
                     choices=["naive", "book", "paper", "laws", "qa",
                              "manual", "email", "presentation"])
     ap.add_argument("--chunk-tokens", type=int, default=512)
-    ap.add_argument("--native-reader", action="store_true",
-                    help="python-native parquet source (fast path)")
     ap.add_argument("--native-sink", action="store_true",
                     help="sink-in-task: tasks write their own parquet parts; "
                          "only the per-split lineage manifest reaches the driver")
@@ -76,19 +76,11 @@ def main() -> None:
             chunker=args.chunker,
             chunk_token_num=args.chunk_tokens,
         ).chunks
-    elif args.native_reader:
+    else:
         from ragflow_spark.sources.parquet_spans import extract_chunks_native
 
         chunks = extract_chunks_native(
             spark, args.input, chunker=args.chunker, chunk_token_num=args.chunk_tokens
-        )
-    else:
-        from ragflow_spark.operators.extract import extract_chunks_fused
-
-        chunks = extract_chunks_fused(
-            spark.read.parquet(args.input),
-            chunker=args.chunker,
-            chunk_token_num=args.chunk_tokens,
         )
 
     if args.ltks:

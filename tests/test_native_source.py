@@ -7,7 +7,11 @@ import pytest
 
 from ragflow_spark.datagen import gen_docs, write_corpus
 from ragflow_spark.kernels.extract import CHUNKERS, chunk_doc, extract_doc
-from ragflow_spark.operators.extract import extract_chunks_fused, extract_spans
+from ragflow_spark.operators.extract import (
+    GIANT_SPAN_THRESHOLD,
+    extract_chunks_fused,
+    extract_spans,
+)
 from ragflow_spark.sources.parquet_spans import (
     extract_chunks_native,
     extract_spans_native,
@@ -33,7 +37,7 @@ def _assert_derived_splits(spark, path):
     import pyarrow.dataset as ds
     import pyarrow.parquet as pq
 
-    splits, _ = plan_splits(path)
+    splits, _ = plan_splits(path, GIANT_SPAN_THRESHOLD)
     metas = {f: pq.ParquetFile(f).metadata for f in ds.dataset(path).files}
     target = math.ceil(
         sum(md.num_rows for md in metas.values())
@@ -145,6 +149,28 @@ def test_sink_in_task_equals_fused(spark, corpus_path, tmp_path_factory):
         .collect()
     }
     assert resumed == b
+
+
+def test_sink_manifest_numbers_splits(spark, corpus_path, tmp_path):
+    """The sink manifest is per-split lineage: ``split_id`` is the split's
+    index in ``plan_splits`` order, each id names its own part file, and
+    ``n_docs`` counts every doc once."""
+    import os
+
+    from ragflow_spark.sources.parquet_spans import (
+        extract_chunks_native_to_parquet,
+    )
+
+    splits, _ = plan_splits(corpus_path, GIANT_SPAN_THRESHOLD)
+    m = extract_chunks_native_to_parquet(
+        spark, corpus_path, str(tmp_path / "out")
+    ).toPandas()
+    assert sorted(m["split_id"]) == list(range(len(splits)))
+    for sid, out_file in zip(m["split_id"], m["out_file"]):
+        p, a, z = splits[sid]
+        want = f"part-{os.path.basename(p)}-{a}-{z}.parquet"
+        assert os.path.basename(out_file) == want
+    assert int(m["n_docs"].sum()) == 120
 
 
 def test_chunks_native_equals_fused_with_giant_routing(spark, corpus_path):

@@ -48,10 +48,22 @@ def test_spark_equals_oracle(spark, docs, oracle_spans):
         assert got[doc_id] == oracle_spans[doc_id], f"span mismatch in {doc_id}"
 
 
-def test_partition_invariance(spark, docs, oracle_spans):
+def test_partition_invariance(spark, docs, oracle_spans, monkeypatch):
     """Same result at a different parallelism / salt layout — the engine's
-    stand-in for the local[2]-vs-local[8] determinism property."""
-    got = collect_spans(extract_spans(docs.repartition(17), salt_block=7))
+    stand-in for the local[2]-vs-local[8] determinism property. Every doc
+    takes the giant-doc tail in 7-span salt blocks, so a doc of more than
+    7 spans reaches the doc_id regroup from several strip tasks (up to 21)
+    and must come back in (offset, sub) order."""
+    import ragflow_spark.operators.extract as ox
+
+    monkeypatch.setattr(ox, "SALT_BLOCK", 7)
+    salts = [
+        len({s["offset"] // 7 for s in d["spans"]})
+        for d in gen_docs(SEED, 0, N_DOCS, giant_factor=60)
+    ]
+    # the 45 one- and three-span docs fit one block; the other 75 spread
+    assert sum(n > 1 for n in salts) == 75 and max(salts) == 21
+    got = collect_spans(extract_spans(docs.repartition(17), giant_threshold=0))
     assert got == oracle_spans
 
 

@@ -109,9 +109,10 @@ def test_extraction_paths_share_one_runner_and_tail():
     ``applyInPandas`` are each called from a single function of
     ``operators/`` + ``sources/``, ``explode_spans`` only from
     ``_giant_tail``; neither split sizing nor the strip shuffle's
-    partition count is a public knob, and no public function of
-    ``operators/``, ``sources/`` or ``plans/`` takes an error-capture or
-    stop-early switch (per-doc error capture is unconditional)."""
+    partition count nor the salt block is a public knob, and no public
+    function of ``operators/``, ``sources/`` or ``plans/`` takes an
+    error-capture or stop-early switch (per-doc error capture is
+    unconditional)."""
     import ragflow_spark
 
     pkg = os.path.dirname(ragflow_spark.__file__)
@@ -124,7 +125,7 @@ def test_extraction_paths_share_one_runner_and_tail():
     assert calls.get("applyInPandas") == {"finalize_stage"}, calls.get("applyInPandas")
     every = _calls_by_function(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True))
     assert every["explode_spans"] == {"_giant_tail"}
-    banned = {"target_rows", "repartition", "capture_errors", "stop_after"}
+    banned = {"target_rows", "repartition", "capture_errors", "stop_after", "salt_block"}
     for p in paths + sorted(glob.glob(os.path.join(pkg, "plans", "*.py"))):
         with open(p) as fh:
             tree = ast.parse(fh.read())
@@ -135,6 +136,32 @@ def test_extraction_paths_share_one_runner_and_tail():
             if isinstance(fn, ast.FunctionDef) and not fn.name.startswith("_"):
                 args = fn.args.args + fn.args.kwonlyargs
                 assert not banned & {a.arg for a in args}, (p, fn.name)
+
+
+def test_readers_route_giants_once():
+    """Giant routing is a reader decision: ``read_row_groups`` is called
+    from one function of ``sources/`` (``_read_split``, which drops the
+    giants before any decode), the runner takes no threshold, and of the
+    public extraction entry points only ``extract_spans`` (the
+    ``table_docs_html`` render) takes ``html_tables``."""
+    import inspect
+
+    import ragflow_spark
+    from ragflow_spark.operators import extract as ox
+    from ragflow_spark.sources import parquet_spans as ps
+
+    pkg = os.path.dirname(ragflow_spark.__file__)
+    calls = _calls_by_function(glob.glob(os.path.join(pkg, "sources", "*.py")))
+    assert calls.get("read_row_groups") == {"_read_split"}, calls.get("read_row_groups")
+    assert "giant_threshold" not in inspect.signature(ps._run_docs).parameters
+    takes_html = {
+        name
+        for mod in (ox, ps)
+        for name, fn in inspect.getmembers(mod, inspect.isfunction)
+        if name.startswith("extract_") and fn.__module__ == mod.__name__
+        and "html_tables" in inspect.signature(fn).parameters
+    }
+    assert takes_html == {"extract_spans"}, takes_html
 
 
 def test_chunk_args_validated_on_driver(tmp_path):

@@ -48,7 +48,6 @@ def test_spark_submit_py_files(spark, tmp_path_factory):
             "/root/repo/scripts/run_extraction_job.py",
             "--input", inp,
             "--output", out,
-            "--native-reader",
         ],
         capture_output=True,
         text=True,
