@@ -98,34 +98,6 @@ def strip_stage(exploded: DataFrame) -> DataFrame:
     return df.mapInPandas(run, schema=STRIPPED_SCHEMA)
 
 
-def _finalize_plain_vectorized(pdf: pd.DataFrame) -> pd.DataFrame:
-    """finalize_doc's plain branch (no geometry rows anywhere in the doc)
-    as vectorized pandas — bit-equal to the kernel (tests assert it; the
-    CLAUDE invariant for new physical paths). This is the giant-doc salted
-    path's serial floor: the per-doc finalize is one task by contract, so
-    a 10^5-span doc paid a python dict-loop sort here (~7 s at 150k rows,
-    scripts/skew_bench.py) where a column sort + masks cost ~0.1 s."""
-    pdf = pdf.sort_values(["offset", "sub"], kind="stable")
-    kind = pdf["kind"].fillna("")
-    text = pdf["text"].fillna("")
-    mr = pdf["media_ref"].fillna("")
-    keep = ~kind.isin(("header", "footer", "reference"))
-    keep &= (text.str.strip() != "") | (mr != "")
-    kind = kind[keep]
-    out_kind = kind.where(
-        kind.isin(("title", "figure")),
-        kind.map(lambda k: "table" if k in ("table", "table header") else "text"),
-    )
-    return pd.DataFrame(
-        {
-            "seq": range(int(keep.sum())),
-            "kind": out_kind.to_numpy(),
-            "text": text[keep].to_numpy(),
-            "media_ref": mr[keep].to_numpy(),
-        }
-    )
-
-
 def finalize_stage(
     stripped: DataFrame, html_tables: bool = False, chunk_args: dict | None = None
 ) -> DataFrame:
@@ -133,25 +105,15 @@ def finalize_stage(
     None means output spans, not chunks) in ONE regroup: a shuffle on
     doc_id pinned to an explicit partition count (AQE would coalesce a
     bare one, as it did the salted strip shuffle), then the kernels per
-    document. Docs with NO geometry rows (the common shape on the
-    giant-doc tail: huge plain-span documents) take a vectorized pandas
-    fast path instead of the per-row python kernel — same output by
-    construction and by test. A doc whose kernels raise emits one
-    ``error_row`` instead of failing the task."""
+    document. A doc whose kernels raise emits one ``error_row`` instead of
+    failing the task."""
     schema = OUT_SPANS_SCHEMA if chunk_args is None else CHUNKS_SCHEMA
+    cols = ["kind", "text", "media_ref", "offset", "sub"]
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         doc_id = pdf["doc_id"].iloc[0]
         try:
-            mr = pdf["media_ref"].fillna("")
-            geom = mr.str.startswith("geom://") | mr.str.contains("#geom=", regex=False)
-            if geom.any():
-                cols = ["kind", "text", "media_ref", "offset", "sub"]
-                out = finalize_doc(pdf[cols].to_dict("records"), html_tables=html_tables)
-            elif chunk_args is None:
-                return _finalize_plain_vectorized(pdf).assign(doc_id=doc_id)
-            else:
-                out = _finalize_plain_vectorized(pdf).to_dict("records")
+            out = finalize_doc(pdf[cols].to_dict("records"), html_tables=html_tables)
             if chunk_args is not None:
                 out = chunk_doc(out, **chunk_args)
         except Exception as e:  # noqa: BLE001 — per-doc isolation

@@ -8,13 +8,20 @@ and noted inline:
 
 - stage output dir + ``_manifest.json``  ↔  Iceberg table + snapshot entry
   (``writeTo(t).append()`` producing ``snapshot_id``)
-- write-to-temp + atomic rename         ↔  Iceberg's atomic snapshot commit
+- manifest write                         ↔  snapshot commit: whatever files
+  a stage dir holds, it is committed only once its manifest is readable
+- lineage from the writing tasks         ↔  snapshot summary: each writer
+  counts the rows it committed (a sink split task on its Arrow table, a
+  Spark write through ``DataFrame.observe``); nothing re-reads the output
 - resume = skip stages with a committed manifest  ↔  reading the metrics
   table and anti-joining completed partitions (task digest reuse in the
   reference: api/db/services/task_service.py:371-398)
 
-Lineage rows are computed from the *written* data (one cheap aggregate over
-the checkpoint), so they describe exactly what a resume would read.
+One lineage definition serves every writer: ``doc_count`` counts the rows
+numbered 0 (``chunk_seq`` on chunk rows, ``seq`` on span rows), which is
+the distinct doc count because every doc numbers its rows from 0 and an
+error marker is row 0 — and unlike DISTINCT it is an observable aggregate;
+``span_count`` counts rows and ``failure_count`` error-marker rows.
 """
 
 from __future__ import annotations
@@ -24,16 +31,55 @@ import os
 import time
 import uuid
 from dataclasses import dataclass
+from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ragflow_spark.kernels.extract import ERROR_MARK
 
-DOC_COL = "doc_id"
-# the column a stage's rows carry the per-doc error marker in (span rows,
-# chunk rows); a stage with neither has no failures to count
-_MARK_COLS = ("kind", "chunker")
+# row-number column → error-marker column, of chunk rows and of span rows
+_SEQ_MARK = {"chunk_seq": "chunker", "seq": "kind"}
+LINEAGE = ("partition_id", "doc_count", "span_count", "failure_count")
+SPARK_WRITE_ID = -1  # partition_id of the one row observed on a Spark write
+_METRICS = pa.schema(
+    [("run_id", pa.string()), ("snapshot_id", pa.int64()), ("stage", pa.string()),
+     ("partition_id", pa.int32()), ("doc_count", pa.int64()),
+     ("span_count", pa.int64()), ("failure_count", pa.int64())]
+)
+
+
+def _cols(names) -> tuple[str, str]:
+    seq = next(c for c in _SEQ_MARK if c in names)
+    return seq, _SEQ_MARK[seq]
+
+
+def table_lineage(tbl) -> tuple[int, int, int]:
+    """(doc_count, span_count, failure_count) of an Arrow table of rows."""
+    seq, mark = _cols(tbl.column_names)
+
+    def count(mask) -> int:
+        return pc.sum(mask, min_count=0).as_py()
+
+    return count(pc.equal(tbl[seq], 0)), tbl.num_rows, count(pc.equal(tbl[mark], ERROR_MARK))
+
+
+def write_observed(df: DataFrame, path: str) -> tuple[int, int, int, int]:
+    """Write ``df`` as parquet at ``path`` (overwrite) and return its one
+    lineage row, observed on that write — no second scan."""
+    seq, mark = _cols(df.columns)
+    obs = Observation()
+    df.observe(
+        obs,
+        F.count_if(F.col(seq) == 0).alias("d"),
+        F.count(F.lit(1)).alias("n"),
+        F.count_if(F.col(mark) == ERROR_MARK).alias("f"),
+    ).write.mode("overwrite").parquet(path)
+    m = obs.get
+    return SPARK_WRITE_ID, m["d"], m["n"], m["f"]
 
 
 @dataclass
@@ -46,6 +92,14 @@ class StageResult:
 
 def _manifest_path(stage_dir: str) -> str:
     return os.path.join(stage_dir, "_manifest.json")
+
+
+def _replace(path: str, write) -> None:
+    """``write(tmp)``, then rename over ``path``: readers see the old file or
+    the new one, never a partial one (the dot name hides tmp from them)."""
+    tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
+    write(tmp)
+    os.replace(tmp, path)
 
 
 def is_committed(stage_dir: str) -> bool:
@@ -68,7 +122,7 @@ def read_manifest(stage_dir: str) -> dict:
 
 class CheckpointedRun:
     """One pipeline run rooted at ``base_dir``; each stage commits a
-    snapshot and appends lineage rows to ``{base_dir}/metrics``."""
+    snapshot and one lineage file under ``{base_dir}/metrics``."""
 
     def __init__(self, spark: SparkSession, base_dir: str, run_id: str | None = None):
         self.spark = spark
@@ -82,114 +136,59 @@ class CheckpointedRun:
     def metrics_dir(self) -> str:
         return os.path.join(self.base_dir, "metrics")
 
-    def write_stage(
-        self,
-        stage: str,
-        df: DataFrame,
-        resume: bool = True,
+    def commit_stage(
+        self, stage: str, write, resume: bool = True
     ) -> tuple[DataFrame, StageResult]:
-        """Commit ``df`` as the stage's snapshot (or reuse a committed one).
+        """Commit a stage's snapshot, or reuse a committed one (``resume``).
 
-        Returns (stage output DataFrame read back from the checkpoint —
-        so downstream stages never recompute upstream lineage — and the
-        StageResult). The stored data carries ``partition_id`` so lineage
-        is reconstructible from the files alone. Error-marker rows
-        (``kernels.extract.error_row``) are committed, counted as
-        ``failure_count``, and left out of the returned DataFrame."""
+        ``write(stage_dir)`` writes the stage's rows and returns their
+        lineage rows (``LINEAGE`` tuples), counted by the writing tasks.
+        The manifest write that follows, carrying those rows, is the commit;
+        then one metrics file per ``(stage, snapshot_id)``, which a resume
+        rewrites from the manifest, with no Spark job, when it is missing.
+        Returns the committed rows read back (so downstream stages never
+        recompute upstream lineage) minus the error markers
+        (``kernels.extract.error_row``, counted as ``failure_count``), and
+        the StageResult."""
         sdir = self.stage_dir(stage)
-        if resume and is_committed(sdir):
-            man = read_manifest(sdir)
-            # heal the crash window between commit and metrics append: if the
-            # committed snapshot has no metrics rows yet, write them now
-            if not self._has_metrics(man["snapshot_id"], stage):
-                self._append_metrics(sdir, man["snapshot_id"], stage, man["run_id"])
-            out = self.spark.read.parquet(sdir)
-            return self._strip_errors(out), StageResult(
-                stage, man["snapshot_id"], sdir, resumed=True
-            )
-
-        snapshot_id = int(time.time() * 1000)
-        tmp = f"{sdir}.tmp-{snapshot_id}"
-        staged = df.withColumn("partition_id", F.spark_partition_id())
-        staged.write.mode("overwrite").parquet(tmp)
-        # atomic commit: rename + manifest (↔ Iceberg snapshot commit).
-        # Metrics are appended only AFTER the commit (keyed by snapshot_id and
-        # deduped in metrics()) so a crash mid-stage never leaves orphan
-        # metrics for data a resume will recompute.
-        if os.path.exists(sdir):
-            import shutil
-
-            shutil.rmtree(sdir)
-        os.rename(tmp, sdir)
         mp = _manifest_path(sdir)
-        with open(mp + ".tmp", "w") as f:
-            json.dump(
-                {
-                    "committed": True,
-                    "stage": stage,
-                    "snapshot_id": snapshot_id,
-                    "run_id": self.run_id,
-                },
-                f,
-            )
-        os.replace(mp + ".tmp", mp)  # manifest itself commits atomically
-        self._append_metrics(sdir, snapshot_id, stage, self.run_id)
-        out = self.spark.read.parquet(sdir)
-        return self._strip_errors(out), StageResult(
-            stage, snapshot_id, sdir, resumed=False
+        resumed = resume and is_committed(sdir)
+        if resumed:
+            man = read_manifest(sdir)
+        else:
+            if os.path.exists(mp):
+                os.remove(mp)  # uncommit before the stage's files change
+            lineage = [list(r) for r in write(sdir)]
+            man = {"committed": True, "stage": stage, "run_id": self.run_id,
+                   "snapshot_id": int(time.time() * 1000), "lineage": lineage}
+            _replace(mp, lambda p: Path(p).write_text(json.dumps(man)))
+        if not (resumed and os.path.exists(self._metrics_file(man))):
+            self._write_metrics(man)
+        out = self.spark.read.option("recursiveFileLookup", "true").parquet(sdir)
+        mark = F.col(_cols(out.columns)[1])
+        return out.where(~mark.eqNullSafe(ERROR_MARK)), StageResult(
+            stage, man["snapshot_id"], sdir, resumed
         )
 
-    def _append_metrics(
-        self, sdir: str, snapshot_id: int, stage: str, run_id: str
-    ) -> None:
-        """Lineage rows from the *committed* files (exactly what a resume
-        reads), keyed by (snapshot_id, stage) for dedup."""
-        written = self.spark.read.parquet(sdir)
-        metrics = written.groupBy("partition_id").agg(
-            F.countDistinct(DOC_COL).alias("doc_count"),
-            F.count("*").alias("span_count"),
-            F.sum(_is_error(written).cast("long")).alias("failure_count"),
-        ).select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(snapshot_id).alias("snapshot_id"),
-            F.lit(stage).alias("stage"),
-            F.col("partition_id").cast("int"),
-            "doc_count",
-            "span_count",
-            "failure_count",
-        )
-        metrics.write.mode("append").parquet(self.metrics_dir())
+    def write_stage(
+        self, stage: str, df: DataFrame, resume: bool = True
+    ) -> tuple[DataFrame, StageResult]:
+        """``commit_stage`` of one Spark write of ``df``, whose observed
+        lineage is the stage's one lineage row."""
+        return self.commit_stage(stage, lambda sdir: [write_observed(df, sdir)], resume)
 
-    def _has_metrics(self, snapshot_id: int, stage: str) -> bool:
-        mdir = self.metrics_dir()
-        if not os.path.exists(mdir):
-            return False
-        try:
-            m = self.spark.read.parquet(mdir)
-        except Exception:
-            return False
-        return (
-            m.where(
-                (F.col("snapshot_id") == snapshot_id)
-                & (F.col("stage") == stage)
-            ).limit(1).count()
-            > 0
-        )
+    def _metrics_file(self, man: dict) -> str:
+        return os.path.join(self.metrics_dir(), f"{man['stage']}-{man['snapshot_id']}.parquet")
 
-    @staticmethod
-    def _strip_errors(df: DataFrame) -> DataFrame:
-        return df.where(~_is_error(df)).drop("partition_id")
+    def _write_metrics(self, man: dict) -> None:
+        """The snapshot's lineage rows as its one metrics file; a replay
+        replaces the file, so it never double-counts."""
+        keys = {k: man[k] for k in ("run_id", "snapshot_id", "stage")}
+        rows = [{**keys, **dict(zip(LINEAGE, r))} for r in man["lineage"]]
+        os.makedirs(self.metrics_dir(), exist_ok=True)
+        tbl = pa.Table.from_pylist(rows, schema=_METRICS)
+        _replace(self._metrics_file(man), lambda p: pq.write_table(tbl, p))
 
     def metrics(self) -> DataFrame:
-        """Lineage rows, deduped by (snapshot_id, stage, partition_id) —
-        a crash/replay can append the same snapshot's rows twice; the key
-        makes the duplicates idempotent instead of double-counting."""
-        return self.spark.read.parquet(self.metrics_dir()).dropDuplicates(
-            ["snapshot_id", "stage", "partition_id"]
-        )
-
-
-def _is_error(df: DataFrame):
-    """True on the error-marker rows of a stage's output."""
-    col = next((c for c in _MARK_COLS if c in df.columns), None)
-    return F.lit(False) if col is None else F.col(col).eqNullSafe(ERROR_MARK)
+        """Lineage rows of every committed snapshot."""
+        return self.spark.read.parquet(self.metrics_dir())

@@ -40,6 +40,7 @@ when the footer stats prove there are no giants.
 from __future__ import annotations
 
 import math
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,6 +53,7 @@ from ragflow_spark.operators.extract import (
     _chunk_args,
     _giant_tail,
 )
+from ragflow_spark.plans.checkpoint import table_lineage, write_observed
 from ragflow_spark.schemas import CHUNKS_SCHEMA, OUT_SPANS_SCHEMA
 
 SPLITS_SCHEMA = "split_id int, path string, rg_start int, rg_end int"
@@ -174,10 +176,11 @@ def _run_docs(batch, html_tables: bool, chunk_args: dict | None):
 
 def _plan(
     spark: SparkSession, path: str, giant_threshold: int
-) -> tuple[DataFrame, DataFrame | None]:
-    """The one planner of the in-task paths: (split rows numbered
-    ``split_id`` in ``plan_splits`` order, one per task; the JVM scan of
-    the giant docs, or None when the footer stats prove there are none).
+) -> tuple[list, DataFrame, DataFrame | None]:
+    """The one planner of the in-task paths: (the ``plan_splits`` splits;
+    their rows numbered ``split_id`` in that order, one per task; the JVM
+    scan of the giant docs, or None when the footer stats prove there are
+    none).
     With the ``n_spans`` stats column the giant predicate is pushed into
     the parquet reader and prunes row groups via min/max — the JVM never
     decodes the span arrays of non-giant row groups. Without it, fall back
@@ -191,10 +194,10 @@ def _plan(
     rdd = spark.sparkContext.parallelize(rows, max(len(rows), 1))
     splits_df = spark.createDataFrame(rdd, SPLITS_SCHEMA)
     if not may_have_giants:
-        return splits_df, None
+        return splits, splits_df, None
     df = spark.read.parquet(path)
     n_spans = F.col("n_spans") if "n_spans" in df.columns else F.size("spans")
-    return splits_df, df.where(n_spans >= giant_threshold).select("doc_id", "spans")
+    return splits, splits_df, df.where(n_spans >= giant_threshold).select("doc_id", "spans")
 
 
 def _route(
@@ -226,7 +229,7 @@ def _route(
 
     schema = OUT_SPANS_SCHEMA if chunk_args is None else CHUNKS_SCHEMA
     if in_task:
-        splits, giants = _plan(spark, source, giant_threshold)
+        _, splits, giants = _plan(spark, source, giant_threshold)
         small = splits.mapInArrow(run, schema)
         if giants is None:
             # row-group max(n_spans) statistics prove no giants exist: the
@@ -259,6 +262,7 @@ MANIFEST_SCHEMA = T.StructType(
         T.StructField("split_id", T.IntegerType()),
         T.StructField("n_docs", T.LongType()),
         T.StructField("n_chunks", T.LongType()),
+        T.StructField("n_failures", T.LongType()),
         T.StructField("out_file", T.StringType()),
     ]
 )
@@ -302,23 +306,22 @@ def _commit_table(fs, path: str, tbl, compression: str, rename: bool) -> None:
             pq.write_table(tbl, f, compression=compression)
 
 
-def _committed_rows(fs, path: str) -> int | None:
-    """Row count of a committed split file, None if absent/unreadable.
+def _read_committed(fs, path: str, columns: list | None = None):
+    """``columns`` of a committed file, None if absent or unreadable.
     Footer validation (rather than bare existence) is the commit check —
     a truncated object can only exist on filesystems without atomic
-    visibility, and it must read as not-committed."""
-    from pyarrow import fs as pafs
+    visibility, and it must read as not committed."""
+    import pyarrow.parquet as pq
 
     try:
-        info = fs.get_file_info(path)
-        if info.type != pafs.FileType.File:
-            return None
-        import pyarrow.parquet as pq
-
         with fs.open_input_file(path) as f:
-            return pq.ParquetFile(f).metadata.num_rows
-    except Exception:
+            return pq.read_table(f, columns=columns)
+    except Exception:  # noqa: BLE001 — any unreadable file is uncommitted
         return None
+
+
+def _part_name(path: str, rg_start: int, rg_end: int) -> str:
+    return f"part-{os.path.basename(path)}-{rg_start}-{rg_end}.parquet"
 
 
 def extract_chunks_native_to_parquet(
@@ -334,11 +337,22 @@ def extract_chunks_native_to_parquet(
     direct_write: bool | None = None,
 ) -> DataFrame:
     """Full python-native pipeline INCLUDING the sink: each task reads its
-    row-group split, extracts+chunks, and writes its own parquet part —
+    row-group split, extracts+chunks, and commits its own parquet part —
     the chunk rows never cross the JVM boundary. Returns the manifest
-    DataFrame (split_id, n_docs, n_chunks, out_file): one row per split =
-    per-partition lineage for free, and file-per-split makes reruns
-    idempotent (same split → same file name, committed atomically).
+    DataFrame (split_id, n_docs, n_chunks, n_failures, out_file): one row
+    per split, counted (``plans.checkpoint.table_lineage``) by its task on
+    the table it committed, and file-per-split makes reruns idempotent
+    (same split → same file name, committed atomically). Giant docs go
+    through the salted DataFrame path into ``giants/``; that Spark write's
+    observed lineage is one more row, ``split_id`` -1, kept in
+    ``giants/_lineage``.
+
+    The directory holds only this plan's parts: part names encode
+    row-group ranges, which ``plan_splits`` sizes from the session's
+    parallelism, so a run first deletes every ``part-*`` file its plan
+    does not rewrite. With ``resume``, a split whose part reads back is
+    skipped (its row recounted from the file), and so is a giant tail whose
+    ``giants/_lineage`` reads back.
 
     ``out_dir`` may be a plain path or an s3://, hdfs://, gs://, file://
     URI — the commit protocol adapts (temp+rename on rename-capable
@@ -347,57 +361,55 @@ def extract_chunks_native_to_parquet(
 
     At cluster scale this is the shape that keeps the write path scaling
     with executors instead of funneling Arrow batches back through the
-    scheduler side; giant docs still go through the salted DataFrame path
-    into the same directory."""
-    import os
+    scheduler side."""
+    import pyarrow as pa
+    from pyarrow import fs as pafs
 
     chunk_args = _chunk_args(chunker, chunk_token_num, delimiter, overlapped_percent)
     fs0, root0 = _resolve_fs(out_dir)
     fs0.create_dir(root0, recursive=True)
+    plan, splits, giants = _plan(spark, path, giant_threshold)
+    keep = {_part_name(*s) for s in plan} if resume else set()
+    for info in fs0.get_file_info(pafs.FileSelector(root0)):
+        if info.base_name.startswith("part-") and info.base_name not in keep:
+            fs0.delete_file(info.path)
 
     def run(batches):
-        import pyarrow as pa
-
         fs, root = _resolve_fs(out_dir)
         rename = _use_rename_protocol(fs, direct_write)
         for b in batches:
             d = b.to_pydict()
             rows = []
             for sid, p, a, z in zip(d["split_id"], d["path"], d["rg_start"], d["rg_end"]):
-                fname = f"{root.rstrip('/')}/part-{os.path.basename(p)}-{a}-{z}.parquet"
-                n_docs, n_chunks = -1, None  # n_docs not recounted on resume
-                if resume:
-                    # split already committed: lineage from its footer only
-                    n_chunks = _committed_rows(fs, fname)
-                if n_chunks is None:
-                    tbl = _read_split(p, a, z, giant_threshold)
-                    out_tbl = _run_docs(tbl, False, chunk_args)
-                    _commit_table(fs, fname, out_tbl, "snappy", rename)
-                    n_docs, n_chunks = tbl.num_rows, out_tbl.num_rows
-                rows.append(
-                    {"split_id": sid, "n_docs": n_docs, "n_chunks": n_chunks,
-                     "out_file": fname}
-                )
-            yield pa.RecordBatch.from_pylist(rows, schema=_MANIFEST_ARROW)
+                fname = f"{root.rstrip('/')}/{_part_name(p, a, z)}"
+                tbl = _read_committed(fs, fname, ["chunk_seq", "chunker"]) if resume else None
+                if tbl is None:
+                    tbl = _run_docs(_read_split(p, a, z, giant_threshold), False, chunk_args)
+                    _commit_table(fs, fname, tbl, "snappy", rename)
+                rows.append((sid, *table_lineage(tbl), fname))
+            yield pa.RecordBatch.from_pylist(
+                [dict(zip(MANIFEST_SCHEMA.names, r)) for r in rows], schema=_MANIFEST_ARROW
+            )
 
-    splits, giants = _plan(spark, path, giant_threshold)
     manifest = splits.mapInArrow(run, MANIFEST_SCHEMA)
     if giants is None:
         return manifest
-    if resume:
-        from pyarrow import fs as pafs
-
-        info = fs0.get_file_info(f"{root0.rstrip('/')}/giants/_SUCCESS")
-        if info.type == pafs.FileType.File:
-            # giants already committed (the _SUCCESS marker is written last
-            # by the parquet committer) — skip the whole tail
-            return manifest
-    # overwrite (not append): the giants output is a pure function of the
-    # input, so reruns replace it instead of duplicating every giant doc
-    _giant_tail(giants, False, chunk_args).write.mode("overwrite").parquet(
-        out_dir.rstrip("/") + "/giants"
-    )
-    return manifest
+    gdir = f"{root0.rstrip('/')}/giants"
+    tail = _read_committed(fs0, f"{gdir}/_lineage") if resume else None
+    if tail is None:
+        # overwrite (not append): the giants output is a pure function of the
+        # input, so reruns replace it instead of duplicating every giant doc
+        row = write_observed(
+            _giant_tail(giants, False, chunk_args), out_dir.rstrip("/") + "/giants"
+        )
+        tail = pa.Table.from_pylist(
+            [dict(zip(MANIFEST_SCHEMA.names, (*row, gdir)))], schema=_MANIFEST_ARROW
+        )
+        rename = _use_rename_protocol(fs0, direct_write)
+        _commit_table(fs0, f"{gdir}/_lineage", tail, "snappy", rename)
+    # one partition: a local relation would add a task per slot to the job
+    tail_df = spark.sparkContext.parallelize(tail.to_pylist(), 1)
+    return manifest.unionByName(spark.createDataFrame(tail_df, MANIFEST_SCHEMA))
 
 
 def extract_spans_native(

@@ -27,6 +27,18 @@ def corpus_path(spark, tmp_path_factory):
     return p
 
 
+def _lineage(manifest):
+    """A sink manifest's lineage rows, without the output paths."""
+    cols = ["split_id", "n_docs", "n_chunks", "n_failures"]
+    return sorted(map(tuple, manifest[cols].to_numpy().tolist()))
+
+
+def _mtimes(root, names):
+    import os
+
+    return {n: os.stat(os.path.join(root, n)).st_mtime_ns for n in names}
+
+
 def _assert_derived_splits(spark, path):
     """Derived policy: ceil(footer rows / (4 x defaultParallelism)) rows per
     split; each split closes at the first row group where the running
@@ -130,18 +142,19 @@ def test_sink_in_task_equals_fused(spark, corpus_path, tmp_path_factory):
         .groupBy("doc_id", "chunk_seq").count()
     )
     assert dup_check.where("count > 1").count() == 0
-    # resume: a kill/rerun skips committed splits (n_docs=-1 marker) and the
-    # committed giants dir, and still reports full lineage
+    # resume: a kill/rerun skips committed splits and the committed giant
+    # tail, recounting their lineage from the committed files
     import os
 
-    one_part = sorted(
-        f for f in os.listdir(out) if f.endswith(".parquet")
-    )[0]
-    os.remove(os.path.join(out, one_part))  # simulate a split lost mid-run
+    parts = sorted(f for f in os.listdir(out) if f.endswith(".parquet"))
+    os.remove(os.path.join(out, parts[0]))  # simulate a split lost mid-run
+    before = _mtimes(out, parts[1:] + ["giants/_lineage"])
     m2 = extract_chunks_native_to_parquet(
         spark, corpus_path, out, giant_threshold=120, resume=True
     ).toPandas()
-    assert (m2["n_docs"] == -1).sum() == len(m2) - 1  # all but one skipped
+    assert _lineage(m2) == _lineage(manifest)
+    assert (m2["split_id"] == -1).sum() == 1  # the giant tail's row
+    assert _mtimes(out, parts[1:] + ["giants/_lineage"]) == before
     resumed = {
         (r.doc_id, r.chunk_seq, r.text, r.token_count, tuple(r.media_refs or []))
         for r in spark.read.option("recursiveFileLookup", "true")
@@ -171,6 +184,31 @@ def test_sink_manifest_numbers_splits(spark, corpus_path, tmp_path):
         want = f"part-{os.path.basename(p)}-{a}-{z}.parquet"
         assert os.path.basename(out_file) == want
     assert int(m["n_docs"].sum()) == 120
+
+
+def test_sink_deletes_parts_its_plan_does_not_name(spark, corpus_path, tmp_path):
+    """Part names encode row-group ranges that ``plan_splits`` sizes from
+    the session's parallelism, so a rerun under another plan would commit
+    differently named parts next to the old ones. With or without
+    ``resume``, the sink deletes every ``part-*`` file its plan does not
+    name: no ``(doc_id, chunk_seq)`` is committed twice."""
+    import os
+    import shutil
+
+    from ragflow_spark.sources.parquet_spans import (
+        extract_chunks_native_to_parquet,
+    )
+
+    out = str(tmp_path / "out")
+    extract_chunks_native_to_parquet(spark, corpus_path, out).collect()
+    parts = sorted(os.listdir(out))
+    for resume in (False, True):
+        # a part of another plan: same rows as a real one, another name
+        shutil.copy(os.path.join(out, parts[0]), os.path.join(out, "part-x-0-9.parquet"))
+        extract_chunks_native_to_parquet(spark, corpus_path, out, resume=resume).collect()
+        dup = spark.read.parquet(out).groupBy("doc_id", "chunk_seq").count()
+        assert dup.where("count > 1").count() == 0, resume
+        assert sorted(os.listdir(out)) == parts
 
 
 def test_chunks_native_equals_fused_with_giant_routing(spark, corpus_path):
@@ -237,11 +275,13 @@ def test_sink_portable_commit_protocols(spark, corpus_path, tmp_path_factory):
     victim = os.path.join(ddir, parts[0])
     with open(victim, "r+b") as f:
         f.truncate(10)
+    before = _mtimes(ddir, parts[1:])
     m3 = extract_chunks_native_to_parquet(
         spark, corpus_path, out_direct, giant_threshold=10**6,
         direct_write=True, resume=True,
     ).toPandas()
-    assert (m3["n_docs"] == -1).sum() == len(m3) - 1
+    assert _lineage(m3) == _lineage(m2)
+    assert _mtimes(ddir, parts[1:]) == before
     again = {
         (r.doc_id, r.chunk_seq, r.text)
         for r in spark.read.parquet(out_direct).collect()

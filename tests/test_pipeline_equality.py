@@ -168,10 +168,10 @@ def test_md_embedded_html_table_fixture(spark):
 
 
 def test_vectorized_plain_finalize_equals_kernel(spark):
-    """The no-geometry vectorized finalize fast path (r5,
-    operators/extract._finalize_plain_vectorized) must equal finalize_doc
-    on its edge rows: garbage kinds, empty/None texts, plain blob refs,
-    table-header kind mapping, out-of-order offsets."""
+    """The giant-doc tail's finalize regroup must equal extract_doc on a
+    doc with no geometry rows and these edge rows: garbage kinds,
+    empty/None texts, plain blob refs, table-header kind mapping,
+    out-of-order offsets."""
     spans = [
         {"kind": "text", "text": "last", "media_ref": "", "offset": 5},
         {"kind": "header", "text": "running head", "media_ref": "", "offset": 0},
@@ -189,8 +189,7 @@ def test_vectorized_plain_finalize_equals_kernel(spark):
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>",
     )
-    # giant_threshold=0 forces explode → strip → finalize_stage (the stage
-    # holding the vectorized path; this doc has no geometry rows)
+    # giant_threshold=0 forces explode → strip → finalize_stage
     got = collect_spans(extract_spans(docs, giant_threshold=0))["d0"]
     exp = [
         (o["seq"], o["kind"], o["text"], o["media_ref"])

@@ -168,10 +168,11 @@ def test_bad_doc_never_fails_a_path(spark, bad_pair, tmp_path_factory, path_name
 
 
 def test_manifest_crash_tolerance_and_metric_dedup(spark, docs, tmp_path_factory):
-    """Truncated manifest reads as not-committed; a committed snapshot with
-    missing metrics is healed on resume; duplicate metric appends dedup."""
-    import json
+    """Truncated manifest reads as not-committed; a committed snapshot whose
+    metrics file is lost is healed from its manifest on resume; a replayed
+    commit does not double-count."""
     import os
+    import shutil
 
     from ragflow_spark.plans.checkpoint import (
         CheckpointedRun,
@@ -181,12 +182,20 @@ def test_manifest_crash_tolerance_and_metric_dedup(spark, docs, tmp_path_factory
 
     base = str(tmp_path_factory.mktemp("ckpt_crash"))
     run = CheckpointedRun(spark, base, run_id="c1")
-    df = docs.select(
-        "doc_id", F.explode("spans").alias("s")
-    ).select("doc_id", F.col("s.kind").alias("kind"), F.col("s.text").alias("text"))
+    # span rows: each doc's spans numbered from seq 0
+    df = docs.select("doc_id", F.posexplode("spans").alias("seq", "s")).select(
+        "doc_id", "seq", F.col("s.kind").alias("kind"), F.col("s.text").alias("text")
+    )
     out, res = run.write_stage("demo", df)
-    n = out.count()
+    want = (df.select("doc_id").distinct().count(), out.count(), 0, 1)
     sdir = run.stage_dir("demo")
+
+    def lineage():
+        m = run.metrics().where(F.col("stage") == "demo")
+        return tuple(m.agg(F.sum("doc_count"), F.sum("span_count"),
+                           F.sum("failure_count"), F.count("*")).first())
+
+    assert lineage() == want
 
     # 1. truncated manifest => not committed (resume recomputes, not crashes)
     mp = os.path.join(sdir, "_manifest.json")
@@ -198,17 +207,79 @@ def test_manifest_crash_tolerance_and_metric_dedup(spark, docs, tmp_path_factory
         f.write(good)
     assert is_committed(sdir) is True
 
-    # 2. crash window: metrics lost after commit -> healed on resume
-    import shutil
-
+    # 2. crash window: metrics lost after commit -> healed from the manifest
     shutil.rmtree(run.metrics_dir())
     out2, res2 = run.write_stage("demo", df)
-    assert res2.resumed
-    m = run.metrics().where(F.col("stage") == "demo")
-    assert m.agg(F.sum("span_count")).first()[0] == n
+    assert res2.resumed and res2.snapshot_id == res.snapshot_id
+    assert lineage() == want
 
-    # 3. a double append of the same snapshot's rows does not double-count
-    run._append_metrics(sdir, res.snapshot_id, "demo", "c1")
-    m2 = run.metrics().where(F.col("stage") == "demo")
-    assert m2.agg(F.sum("span_count")).first()[0] == n
+    # 3. a replayed commit rewrites the snapshot's metrics file, not a copy
+    run._write_metrics(read_manifest(sdir))
+    assert lineage() == want
 
+
+def test_checkpoint_with_giants_resumes_one_split(spark, tmp_path_factory):
+    """The checkpointed run over a corpus with giant docs: every doc's
+    committed rows equal the single-doc kernels; the lineage sums equal the
+    committed rows, giants included; and after losing one split's part and
+    the stage manifest, a rerun rewrites only that split."""
+    import os
+
+    from ragflow_spark.datagen import gen_doc, write_corpus
+    from ragflow_spark.operators.extract import GIANT_SPAN_THRESHOLD
+    from ragflow_spark.plans.pipeline import run_pipeline_native
+
+    base = tmp_path_factory.mktemp("ckpt_giants")
+    inp, ck = str(base / "in"), str(base / "ck")
+    write_corpus(spark, inp, count=100, seed=4, giant_factor=3200, partitions=4)
+    gen = [gen_doc(4, i, 3200) for i in range(100)]
+    assert max(len(d["spans"]) for d in gen) >= GIANT_SPAN_THRESHOLD
+    want = {
+        d["doc_id"]: [
+            (c["chunker"], c["chunk_seq"], c["text"], c["token_count"],
+             list(c["media_refs"]))
+            for c in chunk_doc(extract_doc(d["spans"]))
+        ]
+        for d in gen
+    }
+
+    def committed(r):
+        got: dict = {}
+        rows = spark.read.option("recursiveFileLookup", "true").parquet(
+            r.stages["chunks"].path
+        ).collect()
+        for x in sorted(rows, key=lambda x: x.chunk_seq):
+            got.setdefault(x.doc_id, []).append(
+                (x.chunker, x.chunk_seq, x.text, x.token_count, list(x.media_refs or []))
+            )
+        return got
+
+    def lineage(r):
+        m = r.run.metrics().where(F.col("snapshot_id") == r.stages["chunks"].snapshot_id)
+        return sorted(tuple(x) for x in m.select(
+            "partition_id", "doc_count", "span_count", "failure_count").collect())
+
+    r1 = run_pipeline_native(spark, inp, ck, run_id="g1")
+    got = committed(r1)
+    assert got == {d: rows for d, rows in want.items() if rows}
+    sums = [sum(x[i] for x in lineage(r1)) for i in (1, 2, 3)]
+    assert sums == [len(got), sum(map(len, got.values())), 0]
+    tail = [x for x in lineage(r1) if x[0] == -1]
+    assert len(tail) == 1 and tail[0][2] > 0  # the giant tail's own row
+
+    sdir = r1.stages["chunks"].path
+    parts = sorted(f for f in os.listdir(sdir) if f.startswith("part-"))
+    kept = parts[1:] + [f"giants/{f}" for f in os.listdir(f"{sdir}/giants")]
+
+    def mtimes():
+        return {f: os.stat(os.path.join(sdir, f)).st_mtime_ns for f in kept}
+
+    before = mtimes()
+    os.remove(os.path.join(sdir, parts[0]))
+    os.remove(os.path.join(sdir, "_manifest.json"))
+    r2 = run_pipeline_native(spark, inp, ck, run_id="g2")
+    assert not r2.stages["chunks"].resumed
+    assert os.path.exists(os.path.join(sdir, parts[0]))
+    assert mtimes() == before
+    assert committed(r2) == got
+    assert lineage(r2) == lineage(r1)

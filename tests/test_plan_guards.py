@@ -213,3 +213,28 @@ def test_fixture_queries_share_one_per_doc_map():
     calls = _calls_by_function([entrymod.__file__])
     mappers = calls.get("mapInPandas", set()) | calls.get("mapInArrow", set())
     assert mappers == {"_per_doc"}, mappers
+
+
+def test_one_commit_protocol():
+    """Extraction output commits one way: ``run_pipeline_native`` commits
+    through the sink, whose in-task writes all go through ``_commit_table``
+    (the only writer of ``sources/``), and the checkpoint takes lineage from
+    the writes — it never renames or deletes stage directories and never
+    re-aggregates its output."""
+    import ragflow_spark
+
+    pkg = os.path.dirname(ragflow_spark.__file__)
+    with open(os.path.join(pkg, "plans", "checkpoint.py")) as fh:
+        src = fh.read()
+    for banned in ("os.rename", "shutil", "groupBy", "spark_partition_id"):
+        assert banned not in src, banned
+    with open(os.path.join(pkg, "plans", "pipeline.py")) as fh:
+        tree = ast.parse(fh.read())
+    fn = next(n for n in ast.walk(tree)
+              if isinstance(n, ast.FunctionDef) and n.name == "run_pipeline_native")
+    called = {getattr(c.func, "id", getattr(c.func, "attr", None))
+              for c in ast.walk(fn) if isinstance(c, ast.Call)}
+    assert "extract_chunks_native_to_parquet" in called, called
+    calls = _calls_by_function(glob.glob(os.path.join(pkg, "sources", "*.py")))
+    writers = calls.get("write_table", set()) | calls.get("open_output_stream", set())
+    assert writers == {"_commit_table"}, writers
