@@ -183,16 +183,15 @@ def chunk_doc(
     chunk_token_num: int = 512,
     delimiter: str = "\n!?。；！？",
     overlapped_percent: int = 0,
-    attach_media: bool = True,
 ) -> list[dict]:
     """Chunk one document's extracted spans. Tables become standalone chunks
     (the reference routes them through tokenize_table,
-    rag/nlp/__init__.py:302-329). Figures: with ``attach_media`` (default,
-    the reference's naive_merge_with_images/concat_img semantics,
-    __init__.py:566-656) a figure's caption text joins the text stream and
-    its media_ref rides on whichever chunk the caption lands in; with
-    ``attach_media=False`` figures stay standalone chunks (legacy fixture
-    behavior). Every chunk row carries a ``media_refs`` list."""
+    rag/nlp/__init__.py:302-329). Figures: the naive chunker joins a
+    figure's caption text to the text stream and its media_ref rides on
+    whichever chunk the caption lands in (the reference's
+    naive_merge_with_images/concat_img semantics, __init__.py:566-656);
+    every other chunker keeps figures as standalone chunks. Every chunk row
+    carries a ``media_refs`` list."""
     out_spans = sorted(out_spans, key=lambda s: s["seq"])
     if chunker == "presentation":
         # every slide (delimited by its media span) is one chunk; tables
@@ -213,8 +212,7 @@ def chunk_doc(
             }
             for i, (t, refs) in enumerate(zip(texts, media_refs))
         ]
-    attach = attach_media and chunker == "naive"
-    media_kinds = ("table",) if attach else ("table", "figure")
+    media_kinds = ("table",) if chunker == "naive" else ("table", "figure")
     media_chunks = [
         (s["text"], [s["media_ref"]] if s.get("media_ref") else [])
         for s in out_spans
@@ -225,20 +223,15 @@ def chunk_doc(
     ]
     media_refs: list[list[str]] | None = None
     if chunker == "naive":
-        if attach:
-            stream = [
-                (s["text"] or "", s.get("media_ref") or "")
-                for s in out_spans
-                if s["kind"] in ("text", "title", "figure")
-                and ((s["text"] or "").strip() or s.get("media_ref"))
-            ]
-            texts, media_refs = chunkers.naive_merge_with_media(
-                stream, chunk_token_num, delimiter, overlapped_percent
-            )
-        else:
-            texts = chunkers.naive_merge(
-                [t for t, _ in sections], chunk_token_num, delimiter, overlapped_percent
-            )
+        stream = [
+            (s["text"] or "", s.get("media_ref") or "")
+            for s in out_spans
+            if s["kind"] in ("text", "title", "figure")
+            and ((s["text"] or "").strip() or s.get("media_ref"))
+        ]
+        texts, media_refs = chunkers.naive_merge_with_media(
+            stream, chunk_token_num, delimiter, overlapped_percent
+        )
     elif chunker == "book":
         eng = doc_is_english([t for t, _ in sections])
         texts = chunkers.book_chunk(sections, eng, chunk_token_num=256, delimiter=delimiter)

@@ -24,11 +24,21 @@ from ragflow_spark.functions.trie_tokenizer import (
 )
 
 # reference tokenize() strips these before building ltks
-# (rag/nlp/__init__.py:261); the single shared copy of the tag-strip
-# contract — operators/extract imports it too
+# (rag/nlp/__init__.py:261)
 TABLE_TAG_RE = re.compile(r"</?(table|td|caption|tr|th)( [^<>]{0,12})?>")
 
 _EXT_RE = re.compile(r"\.[a-zA-Z]+$")
+
+
+def tks_pair(text: str, title: bool = False) -> tuple[str, str]:
+    """(tks, sm_tks): the reference's tokenized field pair — ``text``
+    loses its table tags (a ``title`` its file extension instead), the trie
+    tokenizer builds ``tks`` and ``sm_tks`` is its fine-grained re-split.
+    The one copy of this contract: every content/title field pair of the
+    doc assemblies here and in operators/extract goes through it."""
+    text = _EXT_RE.sub("", text) if title else TABLE_TAG_RE.sub(" ", text)
+    tks = tokenize(text)
+    return tks, fine_grained_tokenize(tks)
 
 
 def rm_space(txt: str) -> str:
@@ -50,9 +60,7 @@ def doc_text_fields(doc: dict, text: str) -> dict:
     tokenizer builds ``content_ltks``; ``content_sm_ltks`` is the
     fine-grained re-split."""
     doc["content_with_weight"] = text
-    stripped = TABLE_TAG_RE.sub(" ", text)
-    doc["content_ltks"] = tokenize(stripped)
-    doc["content_sm_ltks"] = fine_grained_tokenize(doc["content_ltks"])
+    doc["content_ltks"], doc["content_sm_ltks"] = tks_pair(text)
     return doc
 
 
@@ -70,7 +78,7 @@ def picture_doc(
     path — because no CV model exists in this container."""
     doc = {
         "docnm_kwd": filename,
-        "title_tks": tokenize(_EXT_RE.sub("", filename)),
+        "title_tks": tks_pair(filename, title=True)[0],
         "doc_type_kwd": "image",
     }
     txt = ocr_text or ""
@@ -111,12 +119,8 @@ def audio_doc(
         return None
     if transcription is None:
         return None
-    title_tks = tokenize(_EXT_RE.sub("", filename))
-    doc = {
-        "docnm_kwd": filename,
-        "title_tks": title_tks,
-        "title_sm_tks": fine_grained_tokenize(title_tks),
-    }
+    title_tks, title_sm_tks = tks_pair(filename, title=True)
+    doc = {"docnm_kwd": filename, "title_tks": title_tks, "title_sm_tks": title_sm_tks}
     return doc_text_fields(doc, transcription)
 
 

@@ -40,6 +40,7 @@ from ragflow_spark.kernels.extract import (
     finalize_doc,
     strip_rows,
 )
+from ragflow_spark.kernels.media_docs import tks_pair
 from ragflow_spark.schemas import CHUNKS_SCHEMA, OUT_SPANS_SCHEMA
 
 STRIPPED_SCHEMA = (
@@ -155,24 +156,21 @@ def _chunk_args(
     )
 
 
-def extract_spans(
-    docs: DataFrame,
-    html_tables: bool = False,
-    giant_threshold: int = GIANT_SPAN_THRESHOLD,
-) -> DataFrame:
+def extract_spans(docs: DataFrame, html_tables: bool = False) -> DataFrame:
     """Full extraction with explicit skew routing:
 
-    - spans < giant_threshold (≈all docs): whole-doc single-pass map,
-      ZERO shuffles — input scan → Arrow batch → output.
-    - spans ≥ giant_threshold (heavy tail): explode → salted strip (spreads
-      one document's spans across the cluster) → per-doc finalize regroup.
+    - docs below ``GIANT_SPAN_THRESHOLD`` spans (≈all docs): whole-doc
+      single-pass map, ZERO shuffles — input scan → Arrow batch → output.
+    - giant docs (the heavy tail): explode → salted strip (spreads one
+      document's spans across the cluster) → per-doc finalize regroup.
 
-    Both paths run the identical kernels (tests assert equality), so the
-    threshold is purely a physical-plan knob. ``giant_threshold=0`` forces
-    the exploded path everywhere (used by tests and the skew bench)."""
+    Both paths run the identical kernels (tests assert equality). The
+    readers own the routing decision (``sources.parquet_spans._routing``):
+    it takes no caller option; tests and the skew bench monkeypatch
+    ``GIANT_SPAN_THRESHOLD`` (0 sends every doc through the tail)."""
     from ragflow_spark.sources.parquet_spans import _route  # deferred: it imports this module
 
-    return _route(docs.sparkSession, docs, giant_threshold, html_tables, None)
+    return _route(docs.sparkSession, docs, html_tables, None)
 
 
 def extract_chunks_fused(
@@ -181,7 +179,6 @@ def extract_chunks_fused(
     chunk_token_num: int = 512,
     delimiter: str = "\n!?。；！？",
     overlapped_percent: int = 0,
-    giant_threshold: int = GIANT_SPAN_THRESHOLD,
 ) -> DataFrame:
     """End-to-end extract+chunk in ONE pass for non-giant docs (zero
     shuffles input→chunks); giant docs take the giant-doc tail, whose one
@@ -189,7 +186,7 @@ def extract_chunks_fused(
     from ragflow_spark.sources.parquet_spans import _route  # deferred: it imports this module
 
     chunk_args = _chunk_args(chunker, chunk_token_num, delimiter, overlapped_percent)
-    return _route(docs.sparkSession, docs, giant_threshold, False, chunk_args)
+    return _route(docs.sparkSession, docs, False, chunk_args)
 
 
 def with_chunk_ids(chunks: DataFrame) -> DataFrame:
@@ -200,16 +197,13 @@ def with_chunk_ids(chunks: DataFrame) -> DataFrame:
     return chunks.withColumn("chunk_id", F.xxhash64("text", "doc_id"))
 
 
-# single shared tag-strip contract (rag/nlp/__init__.py:261)
-from ragflow_spark.kernels.media_docs import TABLE_TAG_RE as _TABLE_TAG
-
-
 def with_ltks(chunks: DataFrame) -> DataFrame:
     """Doc-field assembly (reference tokenize, rag/nlp/__init__.py:258-263):
-    strip table HTML tags, then add ``content_ltks`` (trie-tokenized text)
-    and ``content_sm_ltks`` (fine-grained re-split) columns. Arrow-batched
-    mapInPandas; the trie builds once per worker (module-level lazy
-    singleton), so the per-row cost is the tokenization itself."""
+    add ``content_ltks`` (table tags stripped, trie-tokenized text) and
+    ``content_sm_ltks`` (fine-grained re-split) columns through the one
+    ``kernels.media_docs.tks_pair`` helper. Arrow-batched mapInPandas; the
+    trie builds once per worker (module-level lazy singleton), so the
+    per-row cost is the tokenization itself."""
     schema = T.StructType(
         chunks.schema.fields
         + [
@@ -219,25 +213,18 @@ def with_ltks(chunks: DataFrame) -> DataFrame:
     )
 
     def run(batches):
-        from ragflow_spark.functions.trie_tokenizer import (
-            fine_grained_tokenize,
-            tokenize,
-        )
-
         for pdf in batches:
-            stripped = (
-                pdf["text"]
-                .fillna("")
-                .map(lambda t: _TABLE_TAG.sub(" ", t))
-            )
-            pdf = pdf.copy()
-            pdf["content_ltks"] = stripped.map(tokenize)
-            pdf["content_sm_ltks"] = pdf["content_ltks"].map(
-                fine_grained_tokenize
-            )
-            yield pdf
+            yield _add_content_tks(pdf.copy())
 
     return chunks.mapInPandas(run, schema=schema)
+
+
+def _add_content_tks(pdf: pd.DataFrame) -> pd.DataFrame:
+    """``content_ltks`` / ``content_sm_ltks`` of ``pdf["text"]``, in place."""
+    pairs = pdf["text"].fillna("").map(tks_pair)
+    pdf["content_ltks"] = pairs.map(lambda p: p[0])
+    pdf["content_sm_ltks"] = pairs.map(lambda p: p[1])
+    return pdf
 
 
 def assemble_es_docs(chunks: DataFrame, docnm_col: str = "docnm") -> DataFrame:
@@ -251,8 +238,6 @@ def assemble_es_docs(chunks: DataFrame, docnm_col: str = "docnm") -> DataFrame:
     geometry rides as structs upstream (schemas.Geom). One Arrow pass, no
     shuffle — the per-doc title tokenization is cached per batch because
     consecutive chunks share their document."""
-    import re as _re
-
     schema = T.StructType(
         chunks.schema.fields
         + [
@@ -270,21 +255,13 @@ def assemble_es_docs(chunks: DataFrame, docnm_col: str = "docnm") -> DataFrame:
             T.StructField("content_sm_ltks", T.StringType(), True),
         ]
     )
-    ext_re = _re.compile(r"\.[a-zA-Z]+$")
-    table_re = _TABLE_TAG
 
     def run(batches):
-        from ragflow_spark.functions.trie_tokenizer import (
-            fine_grained_tokenize,
-            tokenize,
-        )
-
         title_cache: dict[str, tuple[str, str]] = {}
 
         def titles(nm: str) -> tuple[str, str]:
             if nm not in title_cache:
-                tks = tokenize(ext_re.sub("", nm))
-                title_cache[nm] = (tks, fine_grained_tokenize(tks))
+                title_cache[nm] = tks_pair(nm, title=True)
             return title_cache[nm]
 
         for pdf in batches:
@@ -308,13 +285,6 @@ def assemble_es_docs(chunks: DataFrame, docnm_col: str = "docnm") -> DataFrame:
             pdf["top_int"] = pd.Series(
                 [[i] for i in seq], dtype=object, index=pdf.index
             )
-            stripped = pdf["text"].fillna("").map(
-                lambda t: table_re.sub(" ", t)
-            )
-            pdf["content_ltks"] = stripped.map(tokenize)
-            pdf["content_sm_ltks"] = pdf["content_ltks"].map(
-                fine_grained_tokenize
-            )
-            yield pdf
+            yield _add_content_tks(pdf)
 
     return chunks.mapInPandas(run, schema=schema)

@@ -27,32 +27,39 @@ Arrow batch or table of ``(doc_id, spans)`` → ``_iter_docs`` decode →
 every other path yields its batches from a ``mapInArrow`` stage
 (``_route``).
 
-Giant documents (spans ≥ giant_threshold) are routed by the readers, once,
-and the runner never sees one: the JVM scan filters on ``size(spans)``; the
-in-task read, ``_read_split``, drops them on the Arrow list length before
-any decode. ``operators.extract._giant_tail`` (exploded/salted DataFrame
-path) handles them. ``_plan`` is the one planner of both in-task paths
-(emit and sink): the numbered split rows, and the giants' JVM scan, which
-the ``n_spans`` stats column prunes to whole row groups — or none at all,
-when the footer stats prove there are no giants.
+Giant documents are routed by the readers, once, and the runner never sees
+one. A doc is a giant when its routing count is at least
+``operators.extract.GIANT_SPAN_THRESHOLD``; the routing count is the
+``n_spans`` column when the table's schema has one, else the span-list
+length, and a null count is never a giant. ``_routing`` builds that
+predicate as Spark Columns for both JVM sites (the DataFrame branch of
+``_route`` and ``_plan``'s giants scan) and ``_small_arrow`` is its Arrow
+twin for the in-task read, ``_read_split``, which drops the giants before
+any decode; the small side is the exact complement of the giant side, so
+every doc is routed exactly once, even when ``n_spans`` is wrong.
+``operators.extract._giant_tail`` (exploded/salted DataFrame path) handles
+the giants. ``_plan`` is the one planner of both in-task paths (emit and
+sink): the numbered split rows, the split reader bound to its routing
+decision, and the giants' JVM scan, which the ``n_spans`` stats column
+prunes to whole row groups — or none at all, when the footer stats prove
+there are no giants.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 import os
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ragflow_spark.kernels.extract import chunk_doc, error_row, extract_doc
-from ragflow_spark.operators.extract import (
-    GIANT_SPAN_THRESHOLD,
-    _chunk_args,
-    _giant_tail,
-)
+from ragflow_spark.operators import extract as ox
+from ragflow_spark.operators.extract import _chunk_args, _giant_tail
 from ragflow_spark.plans.checkpoint import table_lineage, write_observed
 from ragflow_spark.schemas import CHUNKS_SCHEMA, OUT_SPANS_SCHEMA
 
@@ -113,19 +120,34 @@ def plan_splits(
     return splits, may_have_giants
 
 
-def _read_split(path: str, rg_start: int, rg_end: int, giant_threshold: int):
-    """The one in-task read: row groups [rg_start, rg_end) of ``path`` as an
-    Arrow table of (doc_id, spans), minus every doc with giant_threshold or
-    more spans (the giant-doc tail's), dropped on the list length before
-    any decode. A null ``spans`` counts as 0 spans."""
+def _routing(by_n_spans: bool, threshold: int) -> tuple[Column, Column]:
+    """The routing predicate as (small, giant) Spark Columns: a doc is a
+    giant when its routing count — ``n_spans`` if ``by_n_spans``, else the
+    span-list length — is at least ``threshold``. A null count is never a
+    giant, so small is the exact complement of giant, nulls included."""
+    count = F.col("n_spans") if by_n_spans else F.size("spans")
+    return F.coalesce(count < threshold, F.lit(True)), count >= threshold
+
+
+def _small_arrow(tbl, by_n_spans: bool, threshold: int):
+    """``_routing``'s small side over an Arrow table of the docs."""
     import pyarrow.compute as pc
+
+    count = tbl.column("n_spans") if by_n_spans else pc.list_value_length(tbl.column("spans"))
+    return pc.fill_null(pc.less(count, threshold), True)
+
+
+def _read_split(path: str, rg_start: int, rg_end: int, by_n_spans: bool, threshold: int):
+    """The one in-task read: row groups [rg_start, rg_end) of ``path`` as an
+    Arrow table of (doc_id, spans), minus the giant docs (the giant-doc
+    tail's), dropped by ``_small_arrow`` before any decode."""
     import pyarrow.parquet as pq
 
+    cols = ["doc_id", "spans"] + (["n_spans"] if by_n_spans else [])
     tbl = pq.ParquetFile(path).read_row_groups(
-        list(range(rg_start, rg_end)), columns=["doc_id", "spans"], use_threads=False
+        list(range(rg_start, rg_end)), columns=cols, use_threads=False
     )
-    n_spans = pc.fill_null(pc.list_value_length(tbl.column("spans")), 0)
-    return tbl.filter(pc.less(n_spans, giant_threshold))
+    return tbl.filter(_small_arrow(tbl, by_n_spans, threshold))
 
 
 def _iter_docs(batch) -> tuple[list, list]:
@@ -175,18 +197,25 @@ def _run_docs(batch, html_tables: bool, chunk_args: dict | None):
 
 
 def _plan(
-    spark: SparkSession, path: str, giant_threshold: int
-) -> tuple[list, DataFrame, DataFrame | None]:
+    spark: SparkSession, path: str
+) -> tuple[list, DataFrame, DataFrame | None, Callable]:
     """The one planner of the in-task paths: (the ``plan_splits`` splits;
     their rows numbered ``split_id`` in that order, one per task; the JVM
     scan of the giant docs, or None when the footer stats prove there are
-    none).
-    With the ``n_spans`` stats column the giant predicate is pushed into
-    the parquet reader and prunes row groups via min/max — the JVM never
-    decodes the span arrays of non-giant row groups. Without it, fall back
-    to ``size(spans)`` (full decode — only correct, not fast; production
-    tables must carry n_spans)."""
-    splits, may_have_giants = plan_splits(path, giant_threshold)
+    none; the split reader, ``_read_split`` bound to the same routing
+    decision, so the runner keeps exactly the docs the scan leaves out).
+    The threshold is read here, once per call, and so is the routing
+    count: ``n_spans`` when the table's schema has it — the giant predicate
+    is then pushed into the parquet reader and prunes row groups via
+    min/max, so the JVM never decodes the span arrays of non-giant row
+    groups — else ``size(spans)`` (full decode: only correct, not fast;
+    production tables must carry n_spans)."""
+    import pyarrow.dataset as ds
+
+    threshold = ox.GIANT_SPAN_THRESHOLD
+    by_n_spans = "n_spans" in ds.dataset(path, format="parquet").schema.names
+    read = functools.partial(_read_split, by_n_spans=by_n_spans, threshold=threshold)
+    splits, may_have_giants = plan_splits(path, threshold)
     rows = [(i, *split) for i, split in enumerate(splits)]
     # exactly one split per partition, WITHOUT a shuffle: a repartition here
     # would let AQE coalesce the (byte-tiny) split rows into a handful of
@@ -194,51 +223,46 @@ def _plan(
     rdd = spark.sparkContext.parallelize(rows, max(len(rows), 1))
     splits_df = spark.createDataFrame(rdd, SPLITS_SCHEMA)
     if not may_have_giants:
-        return splits, splits_df, None
-    df = spark.read.parquet(path)
-    n_spans = F.col("n_spans") if "n_spans" in df.columns else F.size("spans")
-    return splits, splits_df, df.where(n_spans >= giant_threshold).select("doc_id", "spans")
+        return splits, splits_df, None, read
+    giants = spark.read.parquet(path).where(_routing(by_n_spans, threshold)[1])
+    return splits, splits_df, giants.select("doc_id", "spans"), read
 
 
 def _route(
     spark: SparkSession,
     source: DataFrame | str,
-    giant_threshold: int,
     html_tables: bool,
     chunk_args: dict | None,
 ) -> DataFrame:
     """Every emitting extraction path: a ``mapInArrow`` stage yielding the
-    runner's batches for docs below ``giant_threshold``, unioned with
+    runner's batches for the docs below the giant threshold, unioned with
     ``_giant_tail`` over the rest. ``source`` picks the reader: a docs
-    DataFrame is fed by its JVM scan; a parquet path is read inside the
-    task by ``_read_split``, one ``_plan`` split per task, and its tail is
-    planned away when the footer stats prove there are no giants."""
+    DataFrame is fed by its JVM scan, split by ``_routing``; a parquet path
+    is read inside the task by ``_plan``'s split reader, one split per
+    task, and its tail is planned away when the footer stats prove there
+    are no giants."""
     in_task = isinstance(source, str)
+    if in_task:
+        _, feed, giants, read = _plan(spark, source)
+    else:
+        is_small, is_giant = _routing("n_spans" in source.columns, ox.GIANT_SPAN_THRESHOLD)
+        feed = source.where(is_small).select("doc_id", "spans")
+        giants = source.where(is_giant).select("doc_id", "spans")
 
     def run(batches):
         for b in batches:
             tables = [b]
             if in_task:
                 d = b.to_pydict()
-                tables = (
-                    _read_split(p, a, z, giant_threshold)
-                    for p, a, z in zip(d["path"], d["rg_start"], d["rg_end"])
-                )
+                tables = (read(p, a, z) for p, a, z in zip(d["path"], d["rg_start"], d["rg_end"]))
             for t in tables:
                 yield from _run_docs(t, html_tables, chunk_args).to_batches()
 
-    schema = OUT_SPANS_SCHEMA if chunk_args is None else CHUNKS_SCHEMA
-    if in_task:
-        _, splits, giants = _plan(spark, source, giant_threshold)
-        small = splits.mapInArrow(run, schema)
-        if giants is None:
-            # row-group max(n_spans) statistics prove no giants exist: the
-            # whole tail pipeline (scan + 2 shuffles) is planned away
-            return small
-    else:
-        docs = source.select("doc_id", "spans")
-        small = docs.where(F.size("spans") < giant_threshold).mapInArrow(run, schema)
-        giants = docs.where(F.size("spans") >= giant_threshold)
+    small = feed.mapInArrow(run, OUT_SPANS_SCHEMA if chunk_args is None else CHUNKS_SCHEMA)
+    if giants is None:
+        # row-group max(n_spans) statistics prove no giants exist: the
+        # whole tail pipeline (scan + 2 shuffles) is planned away
+        return small
     return small.unionByName(_giant_tail(giants, html_tables, chunk_args))
 
 
@@ -249,12 +273,11 @@ def extract_chunks_native(
     chunk_token_num: int = 512,
     delimiter: str = "\n!?。；！？",
     overlapped_percent: int = 0,
-    giant_threshold: int = GIANT_SPAN_THRESHOLD,
 ) -> DataFrame:
     """parquet → chunks with the reader inside the Python task (hot path) and
     the exploded/salted DataFrame path for the giant-doc tail."""
     chunk_args = _chunk_args(chunker, chunk_token_num, delimiter, overlapped_percent)
-    return _route(spark, path, giant_threshold, False, chunk_args)
+    return _route(spark, path, False, chunk_args)
 
 
 MANIFEST_SCHEMA = T.StructType(
@@ -332,7 +355,6 @@ def extract_chunks_native_to_parquet(
     chunk_token_num: int = 512,
     delimiter: str = "\n!?。；！？",
     overlapped_percent: int = 0,
-    giant_threshold: int = GIANT_SPAN_THRESHOLD,
     resume: bool = False,
     direct_write: bool | None = None,
 ) -> DataFrame:
@@ -368,7 +390,7 @@ def extract_chunks_native_to_parquet(
     chunk_args = _chunk_args(chunker, chunk_token_num, delimiter, overlapped_percent)
     fs0, root0 = _resolve_fs(out_dir)
     fs0.create_dir(root0, recursive=True)
-    plan, splits, giants = _plan(spark, path, giant_threshold)
+    plan, splits, giants, read = _plan(spark, path)
     keep = {_part_name(*s) for s in plan} if resume else set()
     for info in fs0.get_file_info(pafs.FileSelector(root0)):
         if info.base_name.startswith("part-") and info.base_name not in keep:
@@ -384,7 +406,7 @@ def extract_chunks_native_to_parquet(
                 fname = f"{root.rstrip('/')}/{_part_name(p, a, z)}"
                 tbl = _read_committed(fs, fname, ["chunk_seq", "chunker"]) if resume else None
                 if tbl is None:
-                    tbl = _run_docs(_read_split(p, a, z, giant_threshold), False, chunk_args)
+                    tbl = _run_docs(read(p, a, z), False, chunk_args)
                     _commit_table(fs, fname, tbl, "snappy", rename)
                 rows.append((sid, *table_lineage(tbl), fname))
             yield pa.RecordBatch.from_pylist(
@@ -412,10 +434,6 @@ def extract_chunks_native_to_parquet(
     return manifest.unionByName(spark.createDataFrame(tail_df, MANIFEST_SCHEMA))
 
 
-def extract_spans_native(
-    spark: SparkSession,
-    path: str,
-    giant_threshold: int = GIANT_SPAN_THRESHOLD,
-) -> DataFrame:
+def extract_spans_native(spark: SparkSession, path: str) -> DataFrame:
     """parquet → extracted spans, Python-native reader (same routing)."""
-    return _route(spark, path, giant_threshold, False, None)
+    return _route(spark, path, False, None)

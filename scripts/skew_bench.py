@@ -8,9 +8,10 @@ giant doc of GIANT_SPANS spans (all deterministic). Three measurements on
 the same session/cores:
 
   normal-only        — baseline wall for the well-behaved corpus
-  whole-doc routing  — giant_threshold above GIANT_SPANS: the giant rides
-                       one mapInPandas task; wall ≈ baseline + full giant
-                       on a single core (the straggler)
+  whole-doc routing  — GIANT_SPAN_THRESHOLD set above the giant's span
+                       count: the giant rides one mapInArrow task; wall ≈
+                       baseline + full giant on a single core (the
+                       straggler)
   salted routing     — default threshold: the giant explodes into
                        offset-block salted strip tasks + one doc-level
                        finalize; the strip work spreads across the cluster
@@ -73,6 +74,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from ragflow_spark.session import get_spark
+    from ragflow_spark.operators import extract as ox
     from ragflow_spark.operators.extract import extract_spans
 
     spark = get_spark(cores=args.cores, app_name="skew_bench")
@@ -94,12 +96,15 @@ def main() -> None:
         return b
 
     t_norm = best("normal-only (default routing)", lambda: extract_spans(normal))
+    default = ox.GIANT_SPAN_THRESHOLD
+    ox.GIANT_SPAN_THRESHOLD = args.giant * 2  # read when each plan is built
     t_whole = best(
         f"mixed, WHOLE-DOC routing (threshold {args.giant * 2})",
-        lambda: extract_spans(mixed, giant_threshold=args.giant * 2),
+        lambda: extract_spans(mixed),
     )
+    ox.GIANT_SPAN_THRESHOLD = default
     t_salt = best(
-        "mixed, SALTED routing (default threshold 2048)",
+        f"mixed, SALTED routing (default threshold {default})",
         lambda: extract_spans(mixed),
     )
     added_whole = t_whole - t_norm

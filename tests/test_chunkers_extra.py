@@ -105,10 +105,6 @@ def test_chunk_doc_media_attachment():
     assert len(tbl) == 1 and tbl[0]["media_refs"] == []
     txt = [c for c in out if "Figure 1: pic" in c["text"] and c is not tbl[0]]
     assert len(txt) == 1 and txt[0]["media_refs"] == ["blob://d/0"]
-    # legacy behavior: figure is standalone and carries its ref
-    legacy = chunk_doc(spans, chunker="naive", chunk_token_num=512, attach_media=False)
-    fig = [c for c in legacy if c["text"] == "Figure 1: pic"]
-    assert len(fig) == 1 and fig[0]["media_refs"] == ["blob://d/0"]
 
 
 def test_index_int_converters():

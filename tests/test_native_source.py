@@ -4,9 +4,11 @@ routing split)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from ragflow_spark.datagen import gen_docs, write_corpus
 from ragflow_spark.kernels.extract import CHUNKERS, chunk_doc, extract_doc
+from ragflow_spark.operators import extract as ox
 from ragflow_spark.operators.extract import (
     GIANT_SPAN_THRESHOLD,
     extract_chunks_fused,
@@ -94,11 +96,13 @@ def test_split_planning(spark, corpus_path, tmp_path):
     assert g_lo is True
 
 
-def test_spans_native_equals_dataframe_path(spark, corpus_path):
+def test_spans_native_equals_dataframe_path(spark, corpus_path, monkeypatch):
+    monkeypatch.setattr(ox, "GIANT_SPAN_THRESHOLD", 120)
     native = {
         (r.doc_id, r.seq, r.kind, r.text, r.media_ref)
-        for r in extract_spans_native(spark, corpus_path, giant_threshold=120).collect()
+        for r in extract_spans_native(spark, corpus_path).collect()
     }
+    monkeypatch.undo()
     df_path = {
         (r.doc_id, r.seq, r.kind, r.text, r.media_ref)
         for r in extract_spans(spark.read.parquet(corpus_path)).collect()
@@ -106,30 +110,27 @@ def test_spans_native_equals_dataframe_path(spark, corpus_path):
     assert native == df_path
 
 
-def test_sink_in_task_equals_fused(spark, corpus_path, tmp_path_factory):
+def test_sink_in_task_equals_fused(spark, corpus_path, tmp_path_factory, monkeypatch):
     from ragflow_spark.sources.parquet_spans import (
         extract_chunks_native_to_parquet,
     )
 
     out = str(tmp_path_factory.mktemp("sink") / "chunks")
-    manifest = extract_chunks_native_to_parquet(
-        spark, corpus_path, out, giant_threshold=120
-    ).toPandas()
+    b = {
+        (r.doc_id, r.chunk_seq, r.text, r.token_count, tuple(r.media_refs or []))
+        for r in extract_chunks_fused(spark.read.parquet(corpus_path)).collect()
+    }
+    monkeypatch.setattr(ox, "GIANT_SPAN_THRESHOLD", 120)
+    manifest = extract_chunks_native_to_parquet(spark, corpus_path, out).toPandas()
     assert (manifest["n_chunks"] >= 0).all() and len(manifest) >= 2
     written = spark.read.option("recursiveFileLookup", "true").parquet(out)
     a = {
         (r.doc_id, r.chunk_seq, r.text, r.token_count, tuple(r.media_refs or [])) for r in written.collect()
     }
-    b = {
-        (r.doc_id, r.chunk_seq, r.text, r.token_count, tuple(r.media_refs or []))
-        for r in extract_chunks_fused(spark.read.parquet(corpus_path)).collect()
-    }
     assert a == b
     # rerun is idempotent WITH real giants: the giants subdir is overwritten,
     # not appended, so giant-doc chunks don't duplicate
-    extract_chunks_native_to_parquet(
-        spark, corpus_path, out, giant_threshold=120
-    ).count()
+    extract_chunks_native_to_parquet(spark, corpus_path, out).count()
     again = {
         (r.doc_id, r.chunk_seq, r.text, r.token_count, tuple(r.media_refs or []))
         for r in spark.read.option("recursiveFileLookup", "true")
@@ -149,9 +150,7 @@ def test_sink_in_task_equals_fused(spark, corpus_path, tmp_path_factory):
     parts = sorted(f for f in os.listdir(out) if f.endswith(".parquet"))
     os.remove(os.path.join(out, parts[0]))  # simulate a split lost mid-run
     before = _mtimes(out, parts[1:] + ["giants/_lineage"])
-    m2 = extract_chunks_native_to_parquet(
-        spark, corpus_path, out, giant_threshold=120, resume=True
-    ).toPandas()
+    m2 = extract_chunks_native_to_parquet(spark, corpus_path, out, resume=True).toPandas()
     assert _lineage(m2) == _lineage(manifest)
     assert (m2["split_id"] == -1).sum() == 1  # the giant tail's row
     assert _mtimes(out, parts[1:] + ["giants/_lineage"]) == before
@@ -211,14 +210,14 @@ def test_sink_deletes_parts_its_plan_does_not_name(spark, corpus_path, tmp_path)
         assert sorted(os.listdir(out)) == parts
 
 
-def test_chunks_native_equals_fused_with_giant_routing(spark, corpus_path):
-    # giant_threshold=120 forces a real split: some fixture docs exceed it
+def test_chunks_native_equals_fused_with_giant_routing(spark, corpus_path, monkeypatch):
+    # threshold 120 forces a real split: some fixture docs exceed it
+    monkeypatch.setattr(ox, "GIANT_SPAN_THRESHOLD", 120)
     native = {
         (r.doc_id, r.chunk_seq, r.text, r.token_count, tuple(r.media_refs or []))
-        for r in extract_chunks_native(
-            spark, corpus_path, giant_threshold=120
-        ).collect()
+        for r in extract_chunks_native(spark, corpus_path).collect()
     }
+    monkeypatch.undo()
     fused = {
         (r.doc_id, r.chunk_seq, r.text, r.token_count, tuple(r.media_refs or []))
         for r in extract_chunks_fused(spark.read.parquet(corpus_path)).collect()
@@ -234,7 +233,7 @@ def test_chunks_native_equals_fused_with_giant_routing(spark, corpus_path):
     assert any(n < 120 for n in n_spans)
 
 
-def test_sink_portable_commit_protocols(spark, corpus_path, tmp_path_factory):
+def test_sink_portable_commit_protocols(spark, corpus_path, tmp_path_factory, monkeypatch):
     """The sink's object-store protocol (direct all-or-nothing write, footer
     validity = commit marker) and URI resolution produce the same output as
     the local rename protocol, including rerun idempotence and resume."""
@@ -246,13 +245,12 @@ def test_sink_portable_commit_protocols(spark, corpus_path, tmp_path_factory):
     out_rename = str(base / "rename")
     out_direct = f"file://{base}/direct"  # URI resolution path
 
-    m1 = extract_chunks_native_to_parquet(
-        spark, corpus_path, out_rename, giant_threshold=10**6
-    ).toPandas()
+    # no giants: the footer stats plan the tail away
+    monkeypatch.setattr(ox, "GIANT_SPAN_THRESHOLD", 10**6)
+    m1 = extract_chunks_native_to_parquet(spark, corpus_path, out_rename).toPandas()
     # direct_write=True exercises the object-store commit branch
     m2 = extract_chunks_native_to_parquet(
-        spark, corpus_path, out_direct, giant_threshold=10**6,
-        direct_write=True,
+        spark, corpus_path, out_direct, direct_write=True
     ).toPandas()
     a = {
         (r.doc_id, r.chunk_seq, r.text)
@@ -277,8 +275,7 @@ def test_sink_portable_commit_protocols(spark, corpus_path, tmp_path_factory):
         f.truncate(10)
     before = _mtimes(ddir, parts[1:])
     m3 = extract_chunks_native_to_parquet(
-        spark, corpus_path, out_direct, giant_threshold=10**6,
-        direct_write=True, resume=True,
+        spark, corpus_path, out_direct, direct_write=True, resume=True
     ).toPandas()
     assert _lineage(m3) == _lineage(m2)
     assert _mtimes(ddir, parts[1:]) == before
@@ -290,14 +287,15 @@ def test_sink_portable_commit_protocols(spark, corpus_path, tmp_path_factory):
 
 
 @pytest.mark.parametrize("chunker", CHUNKERS)
-def test_chunks_native_equals_chunk_doc_every_chunker(spark, corpus_path, chunker):
-    """The native path with the giant tail forced (giant_threshold=120)
-    equals per-doc ``chunk_doc(extract_doc(spans))`` for every chunker."""
+def test_chunks_native_equals_chunk_doc_every_chunker(
+    spark, corpus_path, chunker, monkeypatch
+):
+    """The native path with the giant tail forced (threshold 120) equals
+    per-doc ``chunk_doc(extract_doc(spans))`` for every chunker."""
+    monkeypatch.setattr(ox, "GIANT_SPAN_THRESHOLD", 120)
     native = sorted(
         (r.doc_id, r.chunk_seq, r.text, r.token_count, tuple(r.media_refs or []))
-        for r in extract_chunks_native(
-            spark, corpus_path, chunker=chunker, giant_threshold=120
-        ).collect()
+        for r in extract_chunks_native(spark, corpus_path, chunker=chunker).collect()
     )
     want = sorted(
         (d["doc_id"], c["chunk_seq"], c["text"], c["token_count"],
@@ -306,3 +304,72 @@ def test_chunks_native_equals_chunk_doc_every_chunker(spark, corpus_path, chunke
         for c in chunk_doc(extract_doc(d["spans"]), chunker=chunker)
     )
     assert native == want and len(want) > 0
+
+
+def test_every_doc_routed_exactly_once(spark, tmp_path):
+    """Routing trusts one quantity — the ``n_spans`` column when the table
+    has one — and a null count is never a giant, so the readers split the
+    docs into exact complements even when ``n_spans`` is wrong. Docs whose
+    ``n_spans`` understates, is null, overstates or is right each come out
+    of the emit path, the sink and the checkpointed pipeline as
+    ``chunk_doc(extract_doc(spans))``, exactly once, with lineage sums equal
+    to the committed rows. The docs are sized from the real threshold: the
+    routing has no caller option to lower it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ragflow_spark.plans.pipeline import run_pipeline_native
+    from ragflow_spark.sources.parquet_spans import extract_chunks_native_to_parquet
+
+    t = ox.GIANT_SPAN_THRESHOLD
+
+    def spans(doc, n):
+        return [{"kind": "txt", "text": f"{doc} sentence {i}.", "media_ref": "",
+                 "offset": i} for i in range(n)]
+
+    docs = {  # doc_id: (n_spans, spans)
+        "under": (2, spans("under", t + 10)),
+        "null": (None, spans("null", t + 10)),
+        "over": (t + 50, spans("over", 3)),
+        "right": (5, spans("right", 5)),
+    }
+    span_type = pa.struct([("kind", pa.string()), ("text", pa.string()),
+                           ("media_ref", pa.string()), ("offset", pa.int32())])
+    tbl = pa.table(
+        {"doc_id": list(docs), "spans": [s for _, s in docs.values()],
+         "n_spans": [n for n, _ in docs.values()]},
+        schema=pa.schema([("doc_id", pa.string()), ("spans", pa.list_(span_type)),
+                          ("n_spans", pa.int32())]),
+    )
+    path = tmp_path / "in"
+    path.mkdir()
+    pq.write_table(tbl, str(path / "docs.parquet"))
+    path = str(path)
+    want = sorted(
+        (d, c["chunk_seq"], c["text"], c["token_count"], tuple(c["media_refs"]))
+        for d, (_, s) in docs.items()
+        for c in chunk_doc(extract_doc(s))
+    )
+    assert {w[0] for w in want} == set(docs)
+
+    def rows(df):
+        return sorted((r.doc_id, r.chunk_seq, r.text, r.token_count,
+                       tuple(r.media_refs or ())) for r in df.collect())
+
+    def committed(d):
+        return spark.read.option("recursiveFileLookup", "true").parquet(d)
+
+    assert rows(extract_chunks_native(spark, path)) == want
+
+    out = str(tmp_path / "sink")
+    m = extract_chunks_native_to_parquet(spark, path, out).toPandas()
+    assert rows(committed(out)) == want
+    assert [m[c].sum() for c in ("n_docs", "n_chunks", "n_failures")] == [4, len(want), 0]
+    # the tail took exactly the doc whose n_spans reaches the threshold
+    assert {r.doc_id for r in committed(f"{out}/giants").collect()} == {"over"}
+
+    r = run_pipeline_native(spark, path, str(tmp_path / "ck"))
+    assert rows(committed(r.stages["chunks"].path)) == want
+    sums = r.run.metrics().agg(F.sum("doc_count"), F.sum("span_count"),
+                               F.sum("failure_count")).first()
+    assert list(sums) == [4, len(want), 0]

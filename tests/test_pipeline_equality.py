@@ -7,6 +7,7 @@ import pytest
 
 from ragflow_spark.datagen import corpus_df, gen_docs
 from ragflow_spark.kernels.extract import chunk_doc, extract_doc
+from ragflow_spark.operators import extract as ox
 from ragflow_spark.operators.extract import extract_chunks_fused, extract_spans
 
 N_DOCS = 120
@@ -54,25 +55,26 @@ def test_partition_invariance(spark, docs, oracle_spans, monkeypatch):
     takes the giant-doc tail in 7-span salt blocks, so a doc of more than
     7 spans reaches the doc_id regroup from several strip tasks (up to 21)
     and must come back in (offset, sub) order."""
-    import ragflow_spark.operators.extract as ox
-
     monkeypatch.setattr(ox, "SALT_BLOCK", 7)
+    monkeypatch.setattr(ox, "GIANT_SPAN_THRESHOLD", 0)
     salts = [
         len({s["offset"] // 7 for s in d["spans"]})
         for d in gen_docs(SEED, 0, N_DOCS, giant_factor=60)
     ]
     # the 45 one- and three-span docs fit one block; the other 75 spread
     assert sum(n > 1 for n in salts) == 75 and max(salts) == 21
-    got = collect_spans(extract_spans(docs.repartition(17), giant_threshold=0))
+    got = collect_spans(extract_spans(docs.repartition(17)))
     assert got == oracle_spans
 
 
-def test_exploded_path_equals_whole_doc_path(spark, docs, oracle_spans):
+def test_exploded_path_equals_whole_doc_path(spark, docs, oracle_spans, monkeypatch):
     """The zero-shuffle whole-doc path and the explode→salt→regroup giant
     path are interchangeable physical plans for identical semantics."""
-    exploded = collect_spans(extract_spans(docs, giant_threshold=0))
+    monkeypatch.setattr(ox, "GIANT_SPAN_THRESHOLD", 0)
+    exploded = collect_spans(extract_spans(docs))
     assert exploded == oracle_spans
-    routed = collect_spans(extract_spans(docs, giant_threshold=50))
+    monkeypatch.setattr(ox, "GIANT_SPAN_THRESHOLD", 50)
+    routed = collect_spans(extract_spans(docs))
     assert routed == oracle_spans
 
 
@@ -108,12 +110,11 @@ def test_fused_chunks_equal_oracle(spark, docs):
     assert got == oracle_chunks(chunker="naive")
 
 
-def test_giant_tail_chunks_equal_oracle(spark, docs):
-    """giant_threshold=0: every doc through explode → salted strip → the
-    one regroup that finalizes and chunks."""
-    got = collect_chunks(
-        extract_chunks_fused(docs, chunk_token_num=128, giant_threshold=0)
-    )
+def test_giant_tail_chunks_equal_oracle(spark, docs, monkeypatch):
+    """GIANT_SPAN_THRESHOLD 0: every doc through explode → salted strip →
+    the one regroup that finalizes and chunks."""
+    monkeypatch.setattr(ox, "GIANT_SPAN_THRESHOLD", 0)
+    got = collect_chunks(extract_chunks_fused(docs, chunk_token_num=128))
     assert got == oracle_chunks(chunker="naive", chunk_token_num=128)
 
 
@@ -167,7 +168,7 @@ def test_md_embedded_html_table_fixture(spark):
     )
 
 
-def test_vectorized_plain_finalize_equals_kernel(spark):
+def test_vectorized_plain_finalize_equals_kernel(spark, monkeypatch):
     """The giant-doc tail's finalize regroup must equal extract_doc on a
     doc with no geometry rows and these edge rows: garbage kinds,
     empty/None texts, plain blob refs, table-header kind mapping,
@@ -189,8 +190,9 @@ def test_vectorized_plain_finalize_equals_kernel(spark):
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>",
     )
-    # giant_threshold=0 forces explode → strip → finalize_stage
-    got = collect_spans(extract_spans(docs, giant_threshold=0))["d0"]
+    # threshold 0 forces explode → strip → finalize_stage
+    monkeypatch.setattr(ox, "GIANT_SPAN_THRESHOLD", 0)
+    got = collect_spans(extract_spans(docs))["d0"]
     exp = [
         (o["seq"], o["kind"], o["text"], o["media_ref"])
         for o in extract_doc(spans)

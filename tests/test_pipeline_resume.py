@@ -129,21 +129,27 @@ def _paths():
 
     return {
         "runner": lambda spark, df, path, out: extract_spans(df).collect(),
-        "tail": lambda spark, df, path, out: extract_spans(
-            df, giant_threshold=0).collect(),
+        "tail": lambda spark, df, path, out: extract_spans(df).collect(),
         "native_tail": lambda spark, df, path, out: extract_chunks_native(
-            spark, path, giant_threshold=1).collect(),
+            spark, path).collect(),
         "sink": _sink_rows,
         "checkpoint": _checkpoint_rows,
     }
 
 
 @pytest.mark.parametrize("path_name", list(_paths()))
-def test_bad_doc_never_fails_a_path(spark, bad_pair, tmp_path_factory, path_name):
+def test_bad_doc_never_fails_a_path(
+    spark, bad_pair, tmp_path_factory, monkeypatch, path_name
+):
     """Per-doc fault isolation on every extraction path: the doc whose
     kernels raise becomes exactly one ``__error__`` marker row (``kind``
     on span rows, ``chunker`` on chunk rows), the healthy doc still equals
-    the single-doc kernels, and the job does not fail."""
+    the single-doc kernels, and the job does not fail. The ``*tail`` paths
+    send every doc through the giant-doc tail (threshold 0)."""
+    from ragflow_spark.operators import extract as ox
+
+    if path_name.endswith("tail"):
+        monkeypatch.setattr(ox, "GIANT_SPAN_THRESHOLD", 0)
     df, path = bad_pair
     out = str(tmp_path_factory.mktemp(f"bad_{path_name}") / "out")
     rows = [r.asDict() for r in _paths()[path_name](spark, df, path, out)]

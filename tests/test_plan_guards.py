@@ -48,14 +48,15 @@ def test_strip_stage_salted_repartition_has_explicit_count(spark):
     assert int(m.group(1)) > 0
 
 
-def test_giant_chunk_path_runs_one_grouped_stage(spark):
+def test_giant_chunk_path_runs_one_grouped_stage(spark, monkeypatch):
     """The giant-doc chunk path regroups by doc_id ONCE: its executed plan
     has one ``FlatMapGroupsInPandas`` (finalize and chunk together) and
     two Exchanges (the salted strip shuffle and the doc_id regroup), both
     with an explicit partition count AQE cannot coalesce."""
-    from ragflow_spark.operators.extract import extract_chunks_fused
+    from ragflow_spark.operators import extract as ox
 
-    df = extract_chunks_fused(_one_doc(spark), giant_threshold=0)
+    monkeypatch.setattr(ox, "GIANT_SPAN_THRESHOLD", 0)
+    df = ox.extract_chunks_fused(_one_doc(spark))
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
@@ -109,10 +110,10 @@ def test_extraction_paths_share_one_runner_and_tail():
     ``applyInPandas`` are each called from a single function of
     ``operators/`` + ``sources/``, ``explode_spans`` only from
     ``_giant_tail``; neither split sizing nor the strip shuffle's
-    partition count nor the salt block is a public knob, and no public
-    function of ``operators/``, ``sources/`` or ``plans/`` takes an
-    error-capture or stop-early switch (per-doc error capture is
-    unconditional)."""
+    partition count nor the salt block nor the giant threshold is a public
+    knob, and no public function of ``operators/``, ``sources/`` or
+    ``plans/`` takes an error-capture or stop-early switch (per-doc error
+    capture is unconditional)."""
     import ragflow_spark
 
     pkg = os.path.dirname(ragflow_spark.__file__)
@@ -125,7 +126,13 @@ def test_extraction_paths_share_one_runner_and_tail():
     assert calls.get("applyInPandas") == {"finalize_stage"}, calls.get("applyInPandas")
     every = _calls_by_function(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True))
     assert every["explode_spans"] == {"_giant_tail"}
-    banned = {"target_rows", "repartition", "capture_errors", "stop_after", "salt_block"}
+    banned = {
+        "target_rows", "repartition", "capture_errors", "stop_after", "salt_block",
+        "giant_threshold",
+    }
+    # plan_splits keeps its threshold parameter: the extraction benchmark
+    # (perfbench/run.py) calls it with that keyword
+    exempt = {"plan_splits"}
     for p in paths + sorted(glob.glob(os.path.join(pkg, "plans", "*.py"))):
         with open(p) as fh:
             tree = ast.parse(fh.read())
@@ -133,7 +140,8 @@ def test_extraction_paths_share_one_runner_and_tail():
             m for c in tree.body if isinstance(c, ast.ClassDef) for m in c.body
         ]
         for fn in tops:
-            if isinstance(fn, ast.FunctionDef) and not fn.name.startswith("_"):
+            if (isinstance(fn, ast.FunctionDef) and not fn.name.startswith("_")
+                    and fn.name not in exempt):
                 args = fn.args.args + fn.args.kwonlyargs
                 assert not banned & {a.arg for a in args}, (p, fn.name)
 
@@ -143,7 +151,11 @@ def test_readers_route_giants_once():
     from one function of ``sources/`` (``_read_split``, which drops the
     giants before any decode), the runner takes no threshold, and of the
     public extraction entry points only ``extract_spans`` (the
-    ``table_docs_html`` render) takes ``html_tables``."""
+    ``table_docs_html`` render) takes ``html_tables``. The routing
+    predicate is built once: the ``n_spans`` / ``size(spans)`` Columns
+    appear only in ``_routing`` (both JVM sites, ``_plan`` and ``_route``,
+    call it) and the Arrow span-list length only in its twin
+    ``_small_arrow``, which only ``_read_split`` calls."""
     import inspect
 
     import ragflow_spark
@@ -153,6 +165,24 @@ def test_readers_route_giants_once():
     pkg = os.path.dirname(ragflow_spark.__file__)
     calls = _calls_by_function(glob.glob(os.path.join(pkg, "sources", "*.py")))
     assert calls.get("read_row_groups") == {"_read_split"}, calls.get("read_row_groups")
+    ext = glob.glob(os.path.join(pkg, "operators", "*.py")) + glob.glob(
+        os.path.join(pkg, "sources", "*.py")
+    )
+    every = _calls_by_function(ext)
+    assert every.get("size") == {"_routing"}, every.get("size")
+    assert every.get("list_value_length") == {"_small_arrow"}, every.get("list_value_length")
+    assert every.get("_routing") == {"_plan", "_route"}, every.get("_routing")
+    assert every.get("_small_arrow") == {"_read_split"}, every.get("_small_arrow")
+    n_spans_cols = set()
+    for p in ext:
+        with open(p) as fh:
+            for fn in ast.parse(fh.read()).body:
+                for node in ast.walk(fn):
+                    if (isinstance(node, ast.Call)
+                            and getattr(node.func, "attr", None) == "col"
+                            and [getattr(x, "value", None) for x in node.args] == ["n_spans"]):
+                        n_spans_cols.add(fn.name)
+    assert n_spans_cols == {"_routing"}, n_spans_cols
     assert "giant_threshold" not in inspect.signature(ps._run_docs).parameters
     takes_html = {
         name
