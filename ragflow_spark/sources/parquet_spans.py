@@ -365,9 +365,10 @@ def extract_chunks_native_to_parquet(
     per split, counted (``plans.checkpoint.table_lineage``) by its task on
     the table it committed, and file-per-split makes reruns idempotent
     (same split → same file name, committed atomically). Giant docs go
-    through the salted DataFrame path into ``giants/``; that Spark write's
-    observed lineage is one more row, ``split_id`` -1, kept in
-    ``giants/_lineage``.
+    through the salted DataFrame path into ``giants/``, written before the
+    manifest job; that Spark write's observed lineage is one more row,
+    ``split_id`` -1, kept in ``giants/_lineage`` and emitted by split 0's
+    task, so the manifest job runs exactly one task per split.
 
     The directory holds only this plan's parts: part names encode
     row-group ranges, which ``plan_splits`` sizes from the session's
@@ -396,6 +397,23 @@ def extract_chunks_native_to_parquet(
         if info.base_name.startswith("part-") and info.base_name not in keep:
             fs0.delete_file(info.path)
 
+    tail = []  # the giant tail's lineage row, carried by split 0's task
+    if giants is not None:
+        gdir = f"{root0.rstrip('/')}/giants"
+        lineage = _read_committed(fs0, f"{gdir}/_lineage") if resume else None
+        if lineage is None:
+            # overwrite (not append): the giants output is a pure function of
+            # the input, so reruns replace it instead of duplicating every giant
+            row = write_observed(
+                _giant_tail(giants, False, chunk_args), out_dir.rstrip("/") + "/giants"
+            )
+            lineage = pa.Table.from_pylist(
+                [dict(zip(MANIFEST_SCHEMA.names, (*row, gdir)))], schema=_MANIFEST_ARROW
+            )
+            rename = _use_rename_protocol(fs0, direct_write)
+            _commit_table(fs0, f"{gdir}/_lineage", lineage, "snappy", rename)
+        tail = lineage.to_pylist()
+
     def run(batches):
         fs, root = _resolve_fs(out_dir)
         rename = _use_rename_protocol(fs, direct_write)
@@ -408,30 +426,12 @@ def extract_chunks_native_to_parquet(
                 if tbl is None:
                     tbl = _run_docs(read(p, a, z), False, chunk_args)
                     _commit_table(fs, fname, tbl, "snappy", rename)
-                rows.append((sid, *table_lineage(tbl), fname))
-            yield pa.RecordBatch.from_pylist(
-                [dict(zip(MANIFEST_SCHEMA.names, r)) for r in rows], schema=_MANIFEST_ARROW
-            )
+                rows.append(dict(zip(MANIFEST_SCHEMA.names, (sid, *table_lineage(tbl), fname))))
+                if sid == 0:
+                    rows += tail
+            yield pa.RecordBatch.from_pylist(rows, schema=_MANIFEST_ARROW)
 
-    manifest = splits.mapInArrow(run, MANIFEST_SCHEMA)
-    if giants is None:
-        return manifest
-    gdir = f"{root0.rstrip('/')}/giants"
-    tail = _read_committed(fs0, f"{gdir}/_lineage") if resume else None
-    if tail is None:
-        # overwrite (not append): the giants output is a pure function of the
-        # input, so reruns replace it instead of duplicating every giant doc
-        row = write_observed(
-            _giant_tail(giants, False, chunk_args), out_dir.rstrip("/") + "/giants"
-        )
-        tail = pa.Table.from_pylist(
-            [dict(zip(MANIFEST_SCHEMA.names, (*row, gdir)))], schema=_MANIFEST_ARROW
-        )
-        rename = _use_rename_protocol(fs0, direct_write)
-        _commit_table(fs0, f"{gdir}/_lineage", tail, "snappy", rename)
-    # one partition: a local relation would add a task per slot to the job
-    tail_df = spark.sparkContext.parallelize(tail.to_pylist(), 1)
-    return manifest.unionByName(spark.createDataFrame(tail_df, MANIFEST_SCHEMA))
+    return splits.mapInArrow(run, MANIFEST_SCHEMA)
 
 
 def extract_spans_native(spark: SparkSession, path: str) -> DataFrame:

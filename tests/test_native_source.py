@@ -121,8 +121,13 @@ def test_sink_in_task_equals_fused(spark, corpus_path, tmp_path_factory, monkeyp
         for r in extract_chunks_fused(spark.read.parquet(corpus_path)).collect()
     }
     monkeypatch.setattr(ox, "GIANT_SPAN_THRESHOLD", 120)
-    manifest = extract_chunks_native_to_parquet(spark, corpus_path, out).toPandas()
+    manifest = extract_chunks_native_to_parquet(spark, corpus_path, out)
+    # one task per split: split 0's task also emits the giant tail's row
+    n_splits = len(plan_splits(corpus_path, 120)[0])
+    assert manifest.rdd.getNumPartitions() == n_splits
+    manifest = manifest.toPandas()
     assert (manifest["n_chunks"] >= 0).all() and len(manifest) >= 2
+    assert (manifest["split_id"] == -1).sum() == 1  # the giant tail's row
     written = spark.read.option("recursiveFileLookup", "true").parquet(out)
     a = {
         (r.doc_id, r.chunk_seq, r.text, r.token_count, tuple(r.media_refs or [])) for r in written.collect()
@@ -150,7 +155,9 @@ def test_sink_in_task_equals_fused(spark, corpus_path, tmp_path_factory, monkeyp
     parts = sorted(f for f in os.listdir(out) if f.endswith(".parquet"))
     os.remove(os.path.join(out, parts[0]))  # simulate a split lost mid-run
     before = _mtimes(out, parts[1:] + ["giants/_lineage"])
-    m2 = extract_chunks_native_to_parquet(spark, corpus_path, out, resume=True).toPandas()
+    m2 = extract_chunks_native_to_parquet(spark, corpus_path, out, resume=True)
+    assert m2.rdd.getNumPartitions() == n_splits
+    m2 = m2.toPandas()
     assert _lineage(m2) == _lineage(manifest)
     assert (m2["split_id"] == -1).sum() == 1  # the giant tail's row
     assert _mtimes(out, parts[1:] + ["giants/_lineage"]) == before

@@ -268,3 +268,27 @@ def test_one_commit_protocol():
     calls = _calls_by_function(glob.glob(os.path.join(pkg, "sources", "*.py")))
     writers = calls.get("write_table", set()) | calls.get("open_output_stream", set())
     assert writers == {"_commit_table"}, writers
+
+
+def test_one_import_system_hook():
+    """The zip-directory cache is the one import-system hook: no module of
+    the engine, the scripts or the driver entry but ``ragflow_spark/__init__.py``
+    references ``zipimport``."""
+    import ragflow_spark
+
+    pkg = os.path.dirname(ragflow_spark.__file__)
+    repo = os.path.dirname(pkg)
+    paths = (glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)
+             + glob.glob(os.path.join(repo, "scripts", "*.py"))
+             + glob.glob(os.path.join(repo, "*.py")))
+    refs = set()
+    for p in paths:
+        with open(p) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            names = {getattr(node, "id", None), getattr(node, "attr", None)}
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                names |= {getattr(node, "module", None)} | {a.name for a in node.names}
+            if names & {"zipimport", "zipimporter"}:
+                refs.add(os.path.relpath(p, repo))
+    assert refs == {os.path.join("ragflow_spark", "__init__.py")}, refs
