@@ -200,28 +200,37 @@ def _plan(
     spark: SparkSession, path: str
 ) -> tuple[list, DataFrame, DataFrame | None, Callable]:
     """The one planner of the in-task paths: (the ``plan_splits`` splits;
-    their rows numbered ``split_id`` in that order, one per task; the JVM
-    scan of the giant docs, or None when the footer stats prove there are
-    none; the split reader, ``_read_split`` bound to the same routing
-    decision, so the runner keeps exactly the docs the scan leaves out).
-    The threshold is read here, once per call, and so is the routing
-    count: ``n_spans`` when the table's schema has it — the giant predicate
-    is then pushed into the parquet reader and prunes row groups via
-    min/max, so the JVM never decodes the span arrays of non-giant row
-    groups — else ``size(spans)`` (full decode: only correct, not fast;
-    production tables must carry n_spans)."""
+    their rows numbered ``split_id`` in that order, one per partition of a
+    JVM ``Range`` — no Python task feeds them; the JVM scan of the giant
+    docs, or None when the footer stats prove there are none; the split
+    reader, ``_read_split`` bound to the same routing decision, so the
+    runner keeps exactly the docs the scan leaves out). The threshold is
+    read here, once per call, and so is the routing count: ``n_spans``
+    when the table's schema has it — the giant predicate is then pushed
+    into the parquet reader and prunes row groups via min/max, so the JVM
+    never decodes the span arrays of non-giant row groups — else
+    ``size(spans)`` (full decode: only correct, not fast; production
+    tables must carry n_spans)."""
     import pyarrow.dataset as ds
 
     threshold = ox.GIANT_SPAN_THRESHOLD
     by_n_spans = "n_spans" in ds.dataset(path, format="parquet").schema.names
     read = functools.partial(_read_split, by_n_spans=by_n_spans, threshold=threshold)
     splits, may_have_giants = plan_splits(path, threshold)
-    rows = [(i, *split) for i, split in enumerate(splits)]
-    # exactly one split per partition, WITHOUT a shuffle: a repartition here
-    # would let AQE coalesce the (byte-tiny) split rows into a handful of
-    # fat tasks and destroy load balance — parallelize pins the layout
-    rdd = spark.sparkContext.parallelize(rows, max(len(rows), 1))
-    splits_df = spark.createDataFrame(rdd, SPLITS_SCHEMA)
+    # exactly one split per partition, WITHOUT a shuffle (a repartition here
+    # would let AQE coalesce the byte-tiny split rows into a handful of fat
+    # tasks) and without a Python source: createDataFrame over a parallelized
+    # RDD runs its own Python task per split ahead of the split task. The
+    # JVM generates split i as row i of a Range and looks its columns up in
+    # literal arrays, O(splits) in the broadcast task binary.
+    i = F.col("id").cast("int")
+    fields = T.StructType.fromDDL(SPLITS_SCHEMA).fields
+    columns = [list(c) for c in zip(*splits)] or [[]] * (len(fields) - 1)
+    splits_df = spark.range(0, len(splits), 1, max(len(splits), 1)).select(
+        i.alias(fields[0].name),
+        *(F.lit(c).cast(T.ArrayType(f.dataType))[i].alias(f.name)
+          for f, c in zip(fields[1:], columns)),
+    )
     if not may_have_giants:
         return splits, splits_df, None, read
     giants = spark.read.parquet(path).where(_routing(by_n_spans, threshold)[1])

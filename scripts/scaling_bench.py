@@ -104,8 +104,9 @@ def write_bench_md(state: dict, pairs: list[dict], docs: int) -> None:
         "1. Reader inside the Python task (sources/parquet_spans.py): the",
         "   JVM scan of nested array<struct> rows + Arrow IPC re-encode cost",
         "   more CPU than the extraction kernels and throttled workers.",
-        "2. Split planning pinned via parallelize — AQE was coalescing the",
-        "   byte-tiny split rows into a handful of fat tasks (straggler tail).",
+        "2. Split planning pinned one split per task, with no shuffle — AQE",
+        "   was coalescing the byte-tiny split rows into a handful of fat",
+        "   tasks (straggler tail).",
         "3. Small parquet row groups (2 MiB) → fine-grained balanced splits.",
         "4. n_spans stats column → giant-doc tail filter prunes row groups",
         "   without decoding span arrays (metadata-only skip when provably",

@@ -8,6 +8,12 @@ unpickled) on a ``get_spark`` session, and print one JSON line:
                         ``importlib.invalidate_caches()`` time — what PySpark's
                         worker pays before each task (worker_util.setup_spark_files)
   zipimporters          {archive file name: importers} on one worker's path
+  source_wall_s         {source: wall} of a round of one-row tasks through an
+                        identity ``mapInArrow`` fed by each source (the
+                        second round; the first starts the map's workers):
+                        ``createDataFrame(sc.parallelize(rows, n))`` (a
+                        Python-RDD source: one more Python task per row,
+                        ahead of the map task) and ``spark.range(0, n, 1, n)``
 
 Usage: python scripts/task_overhead.py [--tasks 64] [--rounds 3] [--cores 4]
 """
@@ -40,6 +46,14 @@ def task(_):
     yield dt, dict(archives)
 
 
+def identity(batches):
+    """The map body of an engine task, minus the work: import the engine,
+    pass the batches through."""
+    import ragflow_spark  # noqa: F401
+
+    return batches
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--tasks", type=int, default=64)
@@ -59,6 +73,18 @@ def main() -> None:
         walls.append(time.perf_counter() - t0)
         if r:
             later += [dt for dt, _ in out]
+    n = args.tasks
+    sources = {
+        "parallelize": lambda: spark.createDataFrame(
+            sc.parallelize([(i,) for i in range(n)], n), "id long"),
+        "range": lambda: spark.range(0, n, 1, n),
+    }
+    source_wall = {}
+    for _ in range(2):  # the first round of each pays the first map stage's start-up
+        for name, source in sources.items():
+            t0 = time.perf_counter()
+            source().mapInArrow(identity, "id long").collect()
+            source_wall[name] = round(time.perf_counter() - t0, 3)
     spark.stop()
     print(json.dumps({
         "tasks": args.tasks,
@@ -67,6 +93,7 @@ def main() -> None:
         "round_walls_s": [round(w, 3) for w in walls],
         "invalidate_ms_median": round(1000 * statistics.median(later), 3),
         "zipimporters": out[-1][1],
+        "source_wall_s": source_wall,
     }))
 
 

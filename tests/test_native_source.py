@@ -96,6 +96,34 @@ def test_split_planning(spark, corpus_path, tmp_path):
     assert g_lo is True
 
 
+def test_split_rows_come_from_a_jvm_range(spark, corpus_path, tmp_path):
+    """``_plan``'s split rows are generated in the JVM: the executed plan's
+    one leaf is a ``Range`` (no RDD scan and no Python stage ahead of the
+    split tasks), with one partition per split, each holding exactly that
+    split's row in plan order — on a many-split and a one-split corpus."""
+    import re
+
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    from ragflow_spark.sources.parquet_spans import _plan
+
+    tbl = ds.dataset(corpus_path).to_table()
+    for name, rows in (("many", tbl), ("one", tbl.slice(0, 3))):
+        (tmp_path / name).mkdir()
+        pq.write_table(rows, str(tmp_path / name / "c.parquet"), row_group_size=7)
+    for name in ("many", "one"):
+        splits, frame, _, _ = _plan(spark, str(tmp_path / name))
+        assert len(splits) >= 8 if name == "many" else len(splits) == 1
+        plan = frame._jdf.queryExecution().executedPlan()
+        leaves = plan.collectLeaves()
+        assert [leaves.apply(k).nodeName() for k in range(leaves.size())] == ["Range"]
+        assert not re.search(r"ExistingRDD|Python|Arrow|Scan", plan.toString()), plan.toString()
+        assert frame.rdd.getNumPartitions() == len(splits)
+        parts = frame.rdd.glom().map(lambda rows: [tuple(r) for r in rows]).collect()
+        assert parts == [[(k, *s)] for k, s in enumerate(splits)]
+
+
 def test_spans_native_equals_dataframe_path(spark, corpus_path, monkeypatch):
     monkeypatch.setattr(ox, "GIANT_SPAN_THRESHOLD", 120)
     native = {

@@ -194,6 +194,18 @@ def test_readers_route_giants_once():
     assert takes_html == {"extract_spans"}, takes_html
 
 
+def test_split_rows_need_no_python_source():
+    """The in-task paths' split rows come from a JVM ``Range``: no module
+    of ``sources/`` calls ``parallelize`` or ``createDataFrame``, whose
+    Python-RDD source would run one more Python task per split ahead of
+    every split task."""
+    import ragflow_spark
+
+    pkg = os.path.dirname(ragflow_spark.__file__)
+    calls = _calls_by_function(glob.glob(os.path.join(pkg, "sources", "*.py")))
+    assert not {"parallelize", "createDataFrame"} & calls.keys(), calls.keys()
+
+
 def test_chunk_args_validated_on_driver(tmp_path):
     """An unknown chunker raises ValueError at the call, before any input
     is read or output written (per-doc error capture would otherwise turn
