@@ -1,2 +1,2 @@
-from ragflow_spark.functions.tokens import num_tokens, num_tokens_series  # noqa: F401
+from ragflow_spark.functions.tokens import num_tokens  # noqa: F401
 from ragflow_spark.functions.delimiters import get_delimiters  # noqa: F401

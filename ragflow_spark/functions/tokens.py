@@ -20,8 +20,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-
 _WORD = r"[A-Za-z0-9]{1,4}"
 _CJK = r"[一-鿿]"
 _OTHER = r"[^\sA-Za-z0-9一-鿿]{1,3}"
@@ -51,14 +49,6 @@ def num_tokens(s: str | None) -> int:
     if not s:
         return 0
     return len(_ALL_RE.findall(s))
-
-
-def num_tokens_series(s: pd.Series) -> pd.Series:
-    """Vectorized token count over a pandas Series (Arrow batch path)."""
-    s = s.fillna("")
-    return (
-        s.str.count(_WORD) + s.str.count(_CJK) + s.str.count(_OTHER)
-    ).astype("int64")
 
 
 def truncate(s: str, max_tokens: int) -> str:

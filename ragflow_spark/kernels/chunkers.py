@@ -2,7 +2,7 @@
 
 From-scratch implementations of the reference's chunking semantics:
 
-- naive_merge            rag/nlp/__init__.py:521-563
+- naive_merge            rag/nlp/__init__.py:521-656 (one loop: naive_merge_with_media)
 - bullets_category       rag/nlp/__init__.py:168-225
 - title_frequency        rag/nlp/__init__.py:401-428
 - hierarchical_merge     rag/nlp/__init__.py:431-518 (incl. 218-token coalesce)
@@ -181,40 +181,11 @@ def naive_merge(
     delimiter: str = "\n。；！？",
     overlapped_percent: int = 0,
 ) -> list[str]:
-    """Greedy token-budget accumulation (rag/nlp/__init__.py:521-563): a new
-    chunk starts once the current one has *exceeded* budget*(100-ov)/100;
-    overlap carries the character tail of the previous chunk; sections larger
-    than the budget are pre-split on the delimiter set."""
-    if not sections:
-        return []
-    cks = [""]
-    tk_nums = [0]
-    keep = (100 - overlapped_percent) / 100.0
-
-    def add(t: str) -> None:
-        tnum = num_tokens(t)
-        if cks[-1] == "" or tk_nums[-1] > chunk_token_num * keep:
-            if overlapped_percent and cks[-1]:
-                prev = cks[-1]
-                t = prev[int(len(prev) * keep):] + t
-            cks.append(t)
-            tk_nums.append(tnum)
-        else:
-            cks[-1] += t
-            tk_nums[-1] += tnum
-
-    dels = get_delimiters(delimiter)
-    dels_re = re.compile(f"^(?:{dels})$") if dels else None
-    for sec in sections:
-        if num_tokens(sec) < chunk_token_num:
-            add(sec)
-            continue
-        for sub in re.split(f"({dels})", sec, flags=re.DOTALL) if dels else [sec]:
-            if not sub or (dels_re and dels_re.match(sub)):
-                continue
-            add(sub)
-
-    return [c for c in cks if c.strip()]
+    """Greedy token-budget accumulation (rag/nlp/__init__.py:521-563): the
+    text-only view of ``naive_merge_with_media``, the one merge loop."""
+    return naive_merge_with_media(
+        [(s, "") for s in sections], chunk_token_num, delimiter, overlapped_percent
+    )[0]
 
 
 def naive_merge_with_media(
@@ -223,13 +194,18 @@ def naive_merge_with_media(
     delimiter: str = "\n。；！？",
     overlapped_percent: int = 0,
 ) -> tuple[list[str], list[list[str]]]:
-    """naive_merge that carries media along (rag/nlp/__init__.py:566-656
-    naive_merge_with_images + concat_img): each section is (text, media_ref);
-    a chunk collects the refs of every section merged into it. The
-    concat_img analog for reference-valued media is ref-list concatenation
-    with identical-neighbor dedup (concat_img returns one image when both
-    sides are pixel-identical). A ref with empty text still attaches to the
-    chunk being accumulated."""
+    """The greedy token-budget merge (rag/nlp/__init__.py:521-563
+    naive_merge, carrying media as in :566-656 naive_merge_with_images +
+    concat_img): a new chunk starts once the current one has *exceeded*
+    budget*(100-ov)/100; overlap carries the character tail of the previous
+    chunk; sections larger than the budget are pre-split on the delimiter
+    set. Each section is (text, media_ref); a chunk collects the refs of
+    every section merged into it. The concat_img analog for
+    reference-valued media is ref-list concatenation with
+    identical-neighbor dedup (concat_img returns one image when both sides
+    are pixel-identical). A ref with blank text still attaches to the chunk
+    being accumulated. Each section or sub-section is token-counted once:
+    the budget check's count is the one ``add`` accumulates."""
     if not sections:
         return [], []
     cks = [""]
@@ -241,8 +217,7 @@ def naive_merge_with_media(
         if ref and (not refs[-1] or refs[-1][-1] != ref):
             refs[-1].append(ref)
 
-    def add(t: str, ref: str) -> None:
-        tnum = num_tokens(t)
+    def add(t: str, ref: str, tnum: int) -> None:
         if cks[-1] == "" or tk_nums[-1] > chunk_token_num * keep:
             if overlapped_percent and cks[-1]:
                 prev = cks[-1]
@@ -258,17 +233,18 @@ def naive_merge_with_media(
     dels = get_delimiters(delimiter)
     dels_re = re.compile(f"^(?:{dels})$") if dels else None
     for sec, ref in sections:
-        if not sec.strip():
+        if ref and not sec.strip():
             attach(ref)  # caption-less figure: ride with the current chunk
             continue
-        if num_tokens(sec) < chunk_token_num:
-            add(sec, ref)
+        tnum = num_tokens(sec)
+        if tnum < chunk_token_num:
+            add(sec, ref, tnum)
             continue
         first = True
         for sub in re.split(f"({dels})", sec, flags=re.DOTALL) if dels else [sec]:
             if not sub or (dels_re and dels_re.match(sub)):
                 continue
-            add(sub, ref if first else "")
+            add(sub, ref if first else "", num_tokens(sub))
             first = False
 
     out_c, out_r = [], []

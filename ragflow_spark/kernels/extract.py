@@ -193,26 +193,7 @@ def chunk_doc(
     every other chunker keeps figures as standalone chunks. Every chunk row
     carries a ``media_refs`` list."""
     out_spans = sorted(out_spans, key=lambda s: s["seq"])
-    if chunker == "presentation":
-        # every slide (delimited by its media span) is one chunk; tables
-        # and figures are slide boundaries, not standalone chunks
-        texts, media_refs = chunkers.presentation_chunk(
-            [
-                (s["kind"], s["text"] or "", s.get("media_ref") or "")
-                for s in out_spans
-            ]
-        )
-        return [
-            {
-                "chunker": chunker,
-                "chunk_seq": i,
-                "text": t,
-                "token_count": num_tokens(t),
-                "media_refs": refs,
-            }
-            for i, (t, refs) in enumerate(zip(texts, media_refs))
-        ]
-    media_kinds = ("table",) if chunker == "naive" else ("table", "figure")
+    media_kinds = {"naive": ("table",), "presentation": ()}.get(chunker, ("table", "figure"))
     media_chunks = [
         (s["text"], [s["media_ref"]] if s.get("media_ref") else [])
         for s in out_spans
@@ -222,7 +203,13 @@ def chunk_doc(
         (s["text"], s["kind"]) for s in out_spans if s["kind"] in ("text", "title") and (s["text"] or "").strip()
     ]
     media_refs: list[list[str]] | None = None
-    if chunker == "naive":
+    if chunker == "presentation":
+        # every slide (delimited by its media span) is one chunk; tables
+        # and figures are slide boundaries, not standalone chunks
+        texts, media_refs = chunkers.presentation_chunk(
+            [(s["kind"], s["text"] or "", s.get("media_ref") or "") for s in out_spans]
+        )
+    elif chunker == "naive":
         stream = [
             (s["text"] or "", s.get("media_ref") or "")
             for s in out_spans
@@ -267,12 +254,8 @@ def chunk_doc(
         raise ValueError(f"unknown chunker {chunker!r}")
 
     if media_refs is None:
-        text_chunks = [(t, []) for t in texts if t.strip()]
-    else:
-        text_chunks = [
-            (t, r) for t, r in zip(texts, media_refs) if t.strip() or r
-        ]
-    chunks = media_chunks + text_chunks
+        media_refs = [[] for _ in texts]
+    chunks = media_chunks + [(t, r) for t, r in zip(texts, media_refs) if t.strip() or r]
     return [
         {
             "chunker": chunker,
@@ -297,3 +280,18 @@ def error_row(e: Exception, chunked: bool) -> dict:
         return {"chunker": ERROR_MARK, "chunk_seq": 0, "text": repr(e),
                 "token_count": 0, "media_refs": []}
     return {"seq": 0, "kind": ERROR_MARK, "text": repr(e), "media_ref": ""}
+
+
+def guarded_doc(
+    kernel, records: list[dict], html_tables: bool, chunk_args: dict | None
+) -> list[dict]:
+    """One document through ``kernel`` (``extract_doc`` on its spans, or
+    ``finalize_doc`` on its stripped rows), then ``chunk_doc`` with
+    ``chunk_args`` (None means output spans, not chunks). The per-doc guard
+    both per-doc loops share: a document whose kernels raise emits one
+    ``error_row`` in place of its output and never fails its task."""
+    try:
+        out = kernel(records, html_tables=html_tables)
+        return out if chunk_args is None else chunk_doc(out, **chunk_args)
+    except Exception as e:  # noqa: BLE001 — per-doc isolation
+        return [error_row(e, chunk_args is not None)]

@@ -21,9 +21,9 @@ largest task by ``SALT_BLOCK`` spans rather than by the largest document.
 These stages serve only the giant-doc tail (``_giant_tail``). Docs below
 ``GIANT_SPAN_THRESHOLD`` run whole, in one Arrow map, through the doc-batch
 runner in ``sources.parquet_spans``; the readers route the giants here, so
-that runner never sees one. Both per-doc loops share one error
-contract: a document whose kernels raise becomes one
-``kernels.extract.error_row`` marker row and never fails its task.
+that runner never sees one. Both per-doc loops call one guarded per-doc
+kernel, ``kernels.extract.guarded_doc``: a document whose kernels raise
+becomes one ``error_row`` marker row and never fails its task.
 """
 
 from __future__ import annotations
@@ -35,9 +35,8 @@ from pyspark.sql import types as T
 
 from ragflow_spark.kernels.extract import (
     CHUNKERS,
-    chunk_doc,
-    error_row,
     finalize_doc,
+    guarded_doc,
     strip_rows,
 )
 from ragflow_spark.kernels.media_docs import tks_pair
@@ -113,12 +112,8 @@ def finalize_stage(
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         doc_id = pdf["doc_id"].iloc[0]
-        try:
-            out = finalize_doc(pdf[cols].to_dict("records"), html_tables=html_tables)
-            if chunk_args is not None:
-                out = chunk_doc(out, **chunk_args)
-        except Exception as e:  # noqa: BLE001 — per-doc isolation
-            out = [error_row(e, chunk_args is not None)]
+        recs = pdf[cols].to_dict("records")
+        out = guarded_doc(finalize_doc, recs, html_tables, chunk_args)
         return pd.DataFrame(out, columns=schema.names[1:]).assign(doc_id=doc_id)
 
     par = stripped.sparkSession.sparkContext.defaultParallelism

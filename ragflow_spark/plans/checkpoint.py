@@ -38,6 +38,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ragflow_spark.kernels.extract import ERROR_MARK
 
@@ -137,7 +138,7 @@ class CheckpointedRun:
         return os.path.join(self.base_dir, "metrics")
 
     def commit_stage(
-        self, stage: str, write, resume: bool = True
+        self, stage: str, schema: StructType, write, resume: bool = True
     ) -> tuple[DataFrame, StageResult]:
         """Commit a stage's snapshot, or reuse a committed one (``resume``).
 
@@ -146,8 +147,9 @@ class CheckpointedRun:
         The manifest write that follows, carrying those rows, is the commit;
         then one metrics file per ``(stage, snapshot_id)``, which a resume
         rewrites from the manifest, with no Spark job, when it is missing.
-        Returns the committed rows read back (so downstream stages never
-        recompute upstream lineage) minus the error markers
+        Returns the committed rows read back with the writer's ``schema``
+        (so downstream stages never recompute upstream lineage, and the
+        read-back runs no schema-inference job) minus the error markers
         (``kernels.extract.error_row``, counted as ``failure_count``), and
         the StageResult."""
         sdir = self.stage_dir(stage)
@@ -164,7 +166,7 @@ class CheckpointedRun:
             _replace(mp, lambda p: Path(p).write_text(json.dumps(man)))
         if not (resumed and os.path.exists(self._metrics_file(man))):
             self._write_metrics(man)
-        out = self.spark.read.option("recursiveFileLookup", "true").parquet(sdir)
+        out = self.spark.read.schema(schema).option("recursiveFileLookup", "true").parquet(sdir)
         mark = F.col(_cols(out.columns)[1])
         return out.where(~mark.eqNullSafe(ERROR_MARK)), StageResult(
             stage, man["snapshot_id"], sdir, resumed
@@ -175,7 +177,9 @@ class CheckpointedRun:
     ) -> tuple[DataFrame, StageResult]:
         """``commit_stage`` of one Spark write of ``df``, whose observed
         lineage is the stage's one lineage row."""
-        return self.commit_stage(stage, lambda sdir: [write_observed(df, sdir)], resume)
+        return self.commit_stage(
+            stage, df.schema, lambda sdir: [write_observed(df, sdir)], resume
+        )
 
     def _metrics_file(self, man: dict) -> str:
         return os.path.join(self.metrics_dir(), f"{man['stage']}-{man['snapshot_id']}.parquet")

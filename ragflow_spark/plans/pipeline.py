@@ -15,6 +15,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from ragflow_spark.plans.checkpoint import CheckpointedRun, StageResult
+from ragflow_spark.schemas import CHUNKS_SCHEMA
 
 
 @dataclass
@@ -51,5 +52,5 @@ def run_pipeline_native(
         return [r[:4] for r in manifest.collect()]
 
     run = CheckpointedRun(spark, base_dir, run_id=run_id)
-    chunks, res = run.commit_stage("chunks", write, resume)
+    chunks, res = run.commit_stage("chunks", CHUNKS_SCHEMA, write, resume)
     return PipelineResult(chunks=chunks, stages={"chunks": res}, run=run)

@@ -57,7 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from ragflow_spark.kernels.extract import chunk_doc, error_row, extract_doc
+from ragflow_spark.kernels.extract import extract_doc, guarded_doc
 from ragflow_spark.operators import extract as ox
 from ragflow_spark.operators.extract import _chunk_args, _giant_tail
 from ragflow_spark.plans.checkpoint import table_lineage, write_observed
@@ -177,18 +177,13 @@ def _run_docs(batch, html_tables: bool, chunk_args: dict | None):
     Arrow table typed from OUT_SPANS_SCHEMA / CHUNKS_SCHEMA. Its input
     holds no giant doc: the readers route those to the giant-doc tail.
     A doc whose kernels raise emits one ``error_row`` instead of failing
-    the task."""
+    the task (``guarded_doc``)."""
     import pyarrow as pa
 
     ids: list[str] = []
     rows: list[dict] = []
     for doc_id, recs in zip(*_iter_docs(batch)):
-        try:
-            out = extract_doc(recs, html_tables=html_tables)
-            if chunk_args is not None:
-                out = chunk_doc(out, **chunk_args)
-        except Exception as e:  # noqa: BLE001 — per-doc isolation
-            out = [error_row(e, chunk_args is not None)]
+        out = guarded_doc(extract_doc, recs, html_tables, chunk_args)
         ids += [doc_id] * len(out)
         rows += out
     schema = _SPANS_ARROW if chunk_args is None else _CHUNKS_ARROW

@@ -1,3 +1,6 @@
+import hashlib
+import json
+
 from ragflow_spark.functions.tokens import num_tokens
 from ragflow_spark.kernels import chunkers as C
 
@@ -34,6 +37,51 @@ def test_naive_merge_overlap():
     assert len(cks) >= 2
     # the second chunk starts with the tail of the first
     assert cks[1].startswith(cks[0][int(len(cks[0]) * 0.8):][:10])
+
+
+def test_naive_merge_counts_each_section_once(monkeypatch):
+    """The one merge loop token-counts every section once: the budget
+    check's count is the one the chunk accumulates. Counted through the
+    module global, the name the loop calls."""
+    calls = []
+
+    def counting(s):
+        calls.append(s)
+        return num_tokens(s)
+
+    monkeypatch.setattr(C, "num_tokens", counting)
+    secs = [f"section {i} " + "word " * (i % 7) for i in range(40)]
+    C.naive_merge(secs, chunk_token_num=16)
+    assert calls == secs
+    # an over-budget section: one count for the budget check, then one per
+    # delimiter-split piece
+    calls.clear()
+    C.naive_merge(["one two three four\nfive six seven eight"], chunk_token_num=4,
+                  delimiter="\n")
+    assert calls == ["one two three four\nfive six seven eight",
+                     "one two three four", "five six seven eight"]
+
+
+def test_naive_chunk_rows_golden_digest():
+    """sha256 of ``chunk_doc(extract_doc(doc), chunker="naive")`` rows over
+    datagen seed 1, docs 0-299, taken before the naive merge loops were
+    folded into one. The hot path's merge has no independent oracle, so
+    this digest pins its output. Corpus: datagen ``CORPUS_VERSION`` 7; a
+    version bump regenerates the docs and needs a new digest."""
+    from ragflow_spark.datagen import CORPUS_VERSION, gen_docs
+    from ragflow_spark.kernels.extract import chunk_doc, extract_doc
+
+    assert CORPUS_VERSION == 7
+    h = hashlib.sha256()
+    n = 0
+    for d in gen_docs(1, 0, 300):
+        for row in chunk_doc(extract_doc(d["spans"]), chunker="naive"):
+            h.update(json.dumps([d["doc_id"], row], sort_keys=True).encode())
+            n += 1
+    assert n == 664
+    assert h.hexdigest() == (
+        "e86311938ef6c302b3b64fcf204e6d6bc5f3d762961dcb99c738fd02363debb7"
+    )
 
 
 def test_make_colon_as_title():

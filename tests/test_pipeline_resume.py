@@ -87,6 +87,33 @@ def test_native_pipeline_resume(spark, tmp_path_factory):
     assert m["failures"] == 0
 
 
+def test_committed_stage_reruns_without_a_job(spark, tmp_path_factory):
+    """A rerun of a committed stage runs no Spark job: the stage is read
+    back with the writer's schema (``CHUNKS_SCHEMA``), not one inferred
+    from its files, so nothing runs until the caller reads the rows."""
+    from ragflow_spark.datagen import write_corpus
+    from ragflow_spark.plans.pipeline import run_pipeline_native
+    from ragflow_spark.schemas import CHUNKS_SCHEMA
+
+    base = tmp_path_factory.mktemp("ckpt_rerun")
+    inp, ck = str(base / "in"), str(base / "ck")
+    write_corpus(spark, inp, count=10, seed=8, partitions=1)
+    n = run_pipeline_native(spark, inp, ck, run_id="j1").chunks.count()
+    sc = spark.sparkContext
+    group = "committed-stage-rerun"
+    sc.setJobGroup(group, "rerun of a committed stage")
+    try:
+        r = run_pipeline_native(spark, inp, ck, run_id="j2")
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    assert r.stages["chunks"].resumed
+    assert jobs == [], jobs
+    assert r.chunks.schema.names == CHUNKS_SCHEMA.names
+    assert r.chunks.count() == n > 0
+
+
 def test_failure_capture_lineage(spark, bad_pair, tmp_path_factory):
     """A malformed doc (unparseable geom ref → kernel raises) becomes a
     failure_count lineage row, not a task failure; healthy docs survive."""

@@ -81,34 +81,40 @@ def test_knn_default_batch_predicates_reach_scan(spark):
     assert re.search(r"vec_id#\d+L < 1600", s), "cap not in scan"
 
 
-def _calls_by_function(paths):
+def _calls_by_function(paths, qualified=False):
     """{called name: {innermost enclosing function names}} over the
-    modules at ``paths``."""
+    modules at ``paths``; ``qualified`` names a caller
+    ``module.py:outer.inner`` instead."""
     calls: dict[str, set[str]] = {}
 
-    def visit(node, fn):
+    def visit(node, fn, qual):
         for child in ast.iter_child_nodes(node):
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                visit(child, child.name)
+                visit(child, child.name, f"{qual}.{child.name}" if fn else f"{qual}{child.name}")
                 continue
             if isinstance(child, ast.Call):
                 f = child.func
                 name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
                 if name:
-                    calls.setdefault(name, set()).add(fn)
-            visit(child, fn)
+                    caller = (qual if qualified else fn) if fn else "<module>"
+                    calls.setdefault(name, set()).add(caller)
+            visit(child, fn, qual)
 
     for p in paths:
         with open(p) as fh:
-            visit(ast.parse(fh.read()), "<module>")
+            visit(ast.parse(fh.read()), None, f"{os.path.basename(p)}:")
     return calls
 
 
 def test_extraction_paths_share_one_runner_and_tail():
     """Every extraction path runs the one doc-batch runner and the one
-    giant-doc tail instead of re-implementing them: ``extract_doc`` and
-    ``applyInPandas`` are each called from a single function of
-    ``operators/`` + ``sources/``, ``explode_spans`` only from
+    giant-doc tail instead of re-implementing them: ``applyInPandas`` is
+    called from a single function of ``operators/`` + ``sources/``, which
+    call no per-doc kernel (``extract_doc``, ``finalize_doc``,
+    ``chunk_doc``, ``error_row``) themselves: the one guarded per-doc call
+    ``kernels.extract.guarded_doc`` runs them, called from exactly the two
+    per-doc loops (``_run_docs`` and ``finalize_stage``'s regroup) in the
+    whole package; ``explode_spans`` only from
     ``_giant_tail``; neither split sizing nor the strip shuffle's
     partition count nor the salt block nor the giant threshold is a public
     knob, and no public function of ``operators/``, ``sources/`` or
@@ -122,7 +128,14 @@ def test_extraction_paths_share_one_runner_and_tail():
         + glob.glob(os.path.join(pkg, "sources", "*.py"))
     )
     calls = _calls_by_function(paths)
-    assert len(calls.get("extract_doc", set())) == 1, calls.get("extract_doc")
+    for kernel in ("extract_doc", "finalize_doc", "chunk_doc", "error_row"):
+        assert kernel not in calls, (kernel, calls[kernel])
+    qualified = _calls_by_function(
+        glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True), qualified=True
+    )
+    assert qualified.get("guarded_doc") == {
+        "parquet_spans.py:_run_docs", "extract.py:finalize_stage.run"
+    }, qualified.get("guarded_doc")
     assert calls.get("applyInPandas") == {"finalize_stage"}, calls.get("applyInPandas")
     every = _calls_by_function(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True))
     assert every["explode_spans"] == {"_giant_tail"}

@@ -1,7 +1,5 @@
-import pandas as pd
-
 from ragflow_spark.functions.delimiters import get_delimiters
-from ragflow_spark.functions.tokens import num_tokens, num_tokens_series, truncate
+from ragflow_spark.functions.tokens import num_tokens, truncate
 
 
 def test_empty():
@@ -25,13 +23,6 @@ def test_punct_runs():
     assert num_tokens("hello, world!") == 6  # hell+o , worl+d ! -> 2+1+2+1
     assert num_tokens("...") == 1
     assert num_tokens("......") == 2
-
-
-def test_series_matches_scalar():
-    texts = ["", "data", "partition table", "数据分析 with text", "a,b;c", None]
-    s = num_tokens_series(pd.Series(texts))
-    for t, n in zip(texts, s):
-        assert num_tokens(t) == n
 
 
 def test_truncate():
