@@ -175,21 +175,36 @@ def block_type(text: str) -> str:
     return "Ot"
 
 
+def _mean(xs: list[float]) -> float:
+    """``np.mean(xs)`` of a non-empty list of floats. numpy's pairwise sum
+    adds fewer than 8 values in order, starting from 0.0, so a short list
+    (a table's row or column: nearly every list here) is summed the same way
+    in Python, without numpy's per-call overhead."""
+    if len(xs) >= 8:
+        return float(np.mean(xs))
+    total = 0.0
+    for x in xs:
+        total += x
+    return total / len(xs)
+
+
 def _cluster_1d(vals: np.ndarray, thr: float) -> np.ndarray:
     """Gap clustering: sorted values start a new cluster when the gap to the
     previous exceeds ``thr`` (closed form of the R/C sort-and-scan tagging,
     table_structure_recognizer.py:160-197)."""
-    order = np.argsort(vals, kind="stable")
-    ids = np.zeros(len(vals), dtype=np.int64)
+    order = np.argsort(vals, kind="stable").tolist()
+    # the scan runs over Python floats and ints, not numpy scalars
+    v_list = vals.tolist()
+    ids = [0] * len(v_list)
     cur = 0
     prev = None
     for idx in order:
-        v = vals[idx]
+        v = v_list[idx]
         if prev is not None and v - prev > thr:
             cur += 1
         ids[idx] = cur
         prev = v
-    return ids
+    return np.array(ids, dtype=np.int64)
 
 
 def _build_grid(cells: list[dict]) -> list[list[list[int]]]:
@@ -352,30 +367,27 @@ def _apply_spans(
         [cells[a] for row in grid for a in row[j]] for j in range(n_cols)
     ]
     row_cells = [[cells[a] for col in grid[i] for a in col] for i in range(n_rows)]
-    clft = [np.mean([c["x0"] for c in cc]) if cc else 0.0 for cc in col_cells]
-    crgt = [np.mean([c["x1"] for c in cc]) if cc else 0.0 for cc in col_cells]
+    clft = [_mean([c["x0"] for c in cc]) if cc else 0.0 for cc in col_cells]
+    crgt = [_mean([c["x1"] for c in cc]) if cc else 0.0 for cc in col_cells]
     rtop = [
-        np.mean([c["pn"] * PAGE_H + c["top"] for c in rc]) if rc else 0.0
+        _mean([c["pn"] * PAGE_H + c["top"] for c in rc]) if rc else 0.0
         for rc in row_cells
     ]
     rbtm = [
-        np.mean([c["pn"] * PAGE_H + c["bottom"] for c in rc]) if rc else 0.0
+        _mean([c["pn"] * PAGE_H + c["bottom"] for c in rc]) if rc else 0.0
         for rc in row_cells
     ]
+    # cluster centers as Python floats: the per-cell scans below compare
+    # floats, not numpy scalars
+    ccent = [float((clft[j] + crgt[j]) / 2) for j in range(n_cols)]
+    rcent = [float((rtop[i] + rbtm[i]) / 2) for i in range(n_rows)]
     for c in cells:
-        ccols = [
-            j
-            for j in range(n_cols)
-            if c["x0"] <= (clft[j] + crgt[j]) / 2 <= c["x1"]
-        ]
+        x0, x1 = c["x0"], c["x1"]
+        ccols = [j for j, m in enumerate(ccent) if x0 <= m <= x1]
         # row coverage: row center inside the cell's y-range
-        crows = [
-            i
-            for i in range(n_rows)
-            if c["pn"] * PAGE_H + c["top"]
-            <= (rtop[i] + rbtm[i]) / 2
-            <= c["pn"] * PAGE_H + c["bottom"]
-        ]
+        top = c["pn"] * PAGE_H + c["top"]
+        bottom = c["pn"] * PAGE_H + c["bottom"]
+        crows = [i for i, m in enumerate(rcent) if top <= m <= bottom]
         # clamp to current grid bounds (relocation may have shrunk it)
         c["cspan"] = sorted(
             x for x in (set(ccols) | {c["cn"]}) if 0 <= x < n_cols

@@ -199,7 +199,9 @@ def chunk_doc(
         for s in out_spans
         if s["kind"] in media_kinds and ((s["text"] or "").strip() or s.get("media_ref"))
     ]
-    sections = [
+    # the (text, kind) section stream of every chunker but naive and
+    # presentation, which read the spans themselves
+    sections = [] if chunker in ("naive", "presentation") else [
         (s["text"], s["kind"]) for s in out_spans if s["kind"] in ("text", "title") and (s["text"] or "").strip()
     ]
     media_refs: list[list[str]] | None = None

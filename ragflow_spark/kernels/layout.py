@@ -24,6 +24,7 @@ defined by exactly these functions (executed by the pandas oracle).
 
 from __future__ import annotations
 
+import math
 import re
 from collections import Counter
 
@@ -39,15 +40,20 @@ _JUNK_RE = re.compile(
     r"|^http://[^ ]{12,}|\(cid *: *[0-9]+ *\)"
 )
 
+# every anchored branch of _JUNK_RE starts with one of these characters; the
+# one unanchored branch needs "(cid"
+_JUNK_HEADS = "•0123456789h"
+
 _PAGE_DROPPINGS = re.compile(r"[0-9  •一—-]+$")
 _CREDIT = re.compile(r"(数据|资料|图表)*来源[:： ]")
 _TOC_HEAD = re.compile(r"(contents|目录|目次|tableofcontents|致谢|acknowledge)$", re.I)
-_SPACES = re.compile(r"( | |　)+")
-_DOT_LEADER = re.compile(r"(\.{4,}|·{2,}|…{2,})")
 _ENG_PREFIX = re.compile(r"[0-9a-zA-Z :'.-]{5,}")
 
 
 def is_junk(text: str) -> bool:
+    # the substring tests skip the regex for the ~all boxes that cannot match
+    if text[:1] not in _JUNK_HEADS and "(cid" not in text:
+        return False
     return bool(_JUNK_RE.search(text))
 
 
@@ -82,10 +88,23 @@ def drop_garbage(boxes: list[dict]) -> list[dict]:
     return kept
 
 
+def _median(xs: list[float]) -> float:
+    """``float(np.median(xs))`` for a non-empty list of floats, in pure
+    Python: the lists are one doc's boxes, where numpy's per-call overhead
+    dominates the arithmetic. As in numpy, a NaN anywhere makes the median
+    NaN, and the middle value(s) are summed from +0.0 (so -0.0 reads 0.0)."""
+    s = sorted(xs)
+    if any(x != x for x in s):
+        return math.nan
+    n = len(s)
+    m = n // 2
+    return 0.0 + s[m] if n % 2 else (0.0 + s[m - 1] + s[m]) / 2
+
+
 def median_height(boxes: list[dict]) -> float:
     if not boxes:
         return 10.0
-    return float(np.median([b["bottom"] - b["top"] for b in boxes])) or 10.0
+    return _median([b["bottom"] - b["top"] for b in boxes]) or 10.0
 
 
 def page_mean_height(boxes: list[dict]) -> dict[int, float]:
@@ -176,7 +195,7 @@ def detect_column_width(boxes: list[dict]) -> float:
     """median box width (rag/app/paper.py:58)."""
     if not boxes:
         return PAGE_W
-    return float(np.median([b["x1"] - b["x0"] for b in boxes]))
+    return _median([b["x1"] - b["x0"] for b in boxes])
 
 
 def assign_columns(boxes: list[dict], threshold: float) -> np.ndarray:
@@ -220,6 +239,9 @@ def _same_line(b: dict, b_: dict, mh: float) -> bool:
     return abs(yc) < mh / 3
 
 
+_CELLISH = ("table", "table header", "figure")
+
+
 def horizontal_merge(boxes: list[dict], col_threshold: float | None = None) -> list[dict]:
     """Merge adjacent boxes on the same visual line within the same region
     (pdf_parser.py:388-404: same layoutno, not table/figure, |Δy|<mean_h/3).
@@ -227,12 +249,8 @@ def horizontal_merge(boxes: list[dict], col_threshold: float | None = None) -> l
     if not boxes:
         return boxes
     mh = page_mean_height(boxes)
-    out: list[dict] = []
-    for b in boxes:
-        b = dict(b)
-        if not out:
-            out.append(b)
-            continue
+    out: list[dict] = [dict(boxes[0])]
+    for b in boxes[1:]:
         p = out[-1]
         # region proxy without an explicit layoutno: same page + same kind.
         # Cross-column pairs are never adjacent here because reading_order
@@ -242,20 +260,20 @@ def horizontal_merge(boxes: list[dict], col_threshold: float | None = None) -> l
             if (p["lo"] >= 0 or b["lo"] >= 0)
             else (p["pn"] == b["pn"] and p["kind"] == b["kind"])
         )
-        _cellish = ("table", "table header", "figure")
-        mergeable_kind = b["kind"] not in _cellish and p["kind"] not in _cellish
         if (
             same_region
-            and mergeable_kind
+            and b["kind"] not in _CELLISH
+            and p["kind"] not in _CELLISH
             and _same_line(p, b, mh.get(b["pn"], 10.0))
             and p["x1"] <= b["x0"] + 2.0
         ):
+            # b is absorbed into p (already a copy): b itself is not copied
             p["text"] = (p["text"] or "") + _joiner(p["text"], b["text"]) + (b["text"] or "")
             p["x1"] = b["x1"]
             p["top"] = (p["top"] + b["top"]) / 2
             p["bottom"] = (p["bottom"] + b["bottom"]) / 2
             continue
-        out.append(b)
+        out.append(dict(b))
     return out
 
 
@@ -291,54 +309,68 @@ def vertical_merge(boxes: list[dict], is_english: bool) -> list[dict]:
     mh = page_mean_height(boxes)
     mw = page_mean_width(boxes)
     out: list[dict] = []
-    i = 0
-    bxs = [dict(b) for b in boxes]
-    while i < len(bxs):
-        b = bxs[i]
-        nxt = bxs[i + 1] if i + 1 < len(bxs) else None
+    n = len(boxes)
+    # b is the (copied, growing) current box and boxes[k] the one below it;
+    # a box is copied when it becomes current, so no list is ever popped
+    b = dict(boxes[0])
+    k = 1
+    while True:
+        nxt = boxes[k] if k < n else None
         t = (b["text"] or "").strip()
-        if nxt is not None and b["pn"] < nxt["pn"] and _PAGE_DROPPINGS.fullmatch(t):
-            bxs.pop(i)
-            continue
-        if not t:
-            bxs.pop(i)
+        if not t or (
+            nxt is not None and b["pn"] < nxt["pn"] and _PAGE_DROPPINGS.fullmatch(t)
+        ):
+            if nxt is None:
+                break
+            b = dict(nxt)
+            k += 1
             continue
         if nxt is None:
             out.append(b)
             break
-        t_ = (nxt["text"] or "").strip()
-        concatting = (
+        k += 1
+        pn, npn = b["pn"], nxt["pn"]
+        if b["x1"] < nxt["x0"] or b["x0"] > nxt["x1"]:
+            merge = False  # horizontally detached
+        elif (
             t[-1] in _CONCAT_TAIL
             or (len(t) > 1 and t[-2] in _CONCAT_TAIL2)
-            or (t_ and t_[0] in _CONCAT_HEAD)
-        )
-        region_change = (
-            (b["lo"], b["pn"]) != (nxt["lo"], nxt["pn"])
-            if (b["lo"] >= 0 or nxt["lo"] >= 0)
-            else b["kind"] != nxt["kind"]
-        )
-        nofeats = [
-            region_change,
-            t[-1] in _SENT_END_CN,
-            is_english and t[-1] in _SENT_END_EN,
-            b["pn"] == nxt["pn"]
-            and nxt["top"] - b["bottom"] > mh.get(b["pn"], 10.0) * 1.5,
-            b["pn"] < nxt["pn"]
-            and abs(b["x0"] - nxt["x0"]) > mw.get(b["pn"], 100.0) * 4,
-        ]
-        detached = b["x1"] < nxt["x0"] or b["x0"] > nxt["x1"]
-        if (any(nofeats) and not concatting) or detached:
+            or ((t_ := (nxt["text"] or "").strip()) and t_[0] in _CONCAT_HEAD)
+        ):
+            merge = True  # a dangling-punctuation concat feature overrides
+        else:
+            merge = not (
+                (
+                    (b["lo"], pn) != (nxt["lo"], npn)
+                    if (b["lo"] >= 0 or nxt["lo"] >= 0)
+                    else b["kind"] != nxt["kind"]
+                )
+                or t[-1] in _SENT_END_CN
+                or (is_english and t[-1] in _SENT_END_EN)
+                or (pn == npn and nxt["top"] - b["bottom"] > mh.get(pn, 10.0) * 1.5)
+                or (pn < npn and abs(b["x0"] - nxt["x0"]) > mw.get(pn, 100.0) * 4)
+            )
+        if not merge:
             out.append(b)
-            i += 1
+            b = dict(nxt)
             continue
         # merge down
         b["text"] = (b["text"] or "") + _joiner(b["text"], nxt["text"]) + (nxt["text"] or "")
-        b["bottom"] = nxt["bottom"] + (nxt["pn"] - b["pn"]) * PAGE_H
+        b["bottom"] = nxt["bottom"] + (npn - pn) * PAGE_H
         b["x0"] = min(b["x0"], nxt["x0"])
         b["x1"] = max(b["x1"], nxt["x1"])
-        bxs[i] = b
-        bxs.pop(i + 1)
     return out
+
+
+def _is_toc_head(text: str) -> bool:
+    """A contents heading, once ASCII spaces and U+3000 (ideographic
+    space) are dropped; NBSP is kept."""
+    return bool(_TOC_HEAD.match(text.lower().replace(" ", "").replace("\u3000", "")))
+
+
+def _has_dot_leader(text: str) -> bool:
+    """Four dots, two middle dots or two ellipses in a row."""
+    return "...." in text or "··" in text or "……" in text
 
 
 def filter_toc(boxes: list[dict]) -> list[dict]:
@@ -349,8 +381,7 @@ def filter_toc(boxes: list[dict]) -> list[dict]:
     findit = False
     i = 0
     while i < len(bxs):
-        head = _SPACES.sub("", (bxs[i]["text"] or "").lower())
-        if not _TOC_HEAD.match(head):
+        if not _is_toc_head(bxs[i]["text"] or ""):
             i += 1
             continue
         findit = True
@@ -373,7 +404,7 @@ def filter_toc(boxes: list[dict]) -> list[dict]:
         if i >= len(bxs) or not prefix:
             break
         for j in range(i, min(i + 128, len(bxs))):
-            if not re.match(re.escape(prefix), bxs[j]["text"] or ""):
+            if not (bxs[j]["text"] or "").startswith(prefix):
                 continue
             del bxs[i:j]
             break
@@ -382,7 +413,7 @@ def filter_toc(boxes: list[dict]) -> list[dict]:
 
     dirty: Counter = Counter()
     for b in bxs:
-        if _DOT_LEADER.search(b["text"] or ""):
+        if _has_dot_leader(b["text"] or ""):
             dirty[b["pn"]] += 1
     dirty_pages = {pn for pn, c in dirty.items() if c > 3}
     if not dirty_pages:
@@ -533,23 +564,28 @@ def layouts_cleanup(boxes: list[dict], far: int = 2, thr: float = 0.7) -> list[d
 
 # numbering/outline patterns that mark a line as a "projection" (heading /
 # enumerated item) — pdf_parser.py:881-903 proj_match; the semantics are the
-# patterns themselves
-_PROJ_PURE_NUM = re.compile(r"[0-9 ().,%+/-]+$")
-_PROJ_PATTERNS = [
-    (re.compile(r"第[零一二三四五六七八九十百]+章"), 1),
-    (re.compile(r"第[零一二三四五六七八九十百]+[条节]"), 2),
-    (re.compile(r"[零一二三四五六七八九十百]+[、 　]"), 3),
-    (re.compile(r"[\(（][零一二三四五六七八九十百]+[）\)]"), 4),
-    (re.compile(r"[0-9]+(、|\.[　 ]|\.[^0-9])"), 5),
-    (re.compile(r"[0-9]+\.[0-9]+(、|[. 　]|[^0-9])"), 6),
-    (re.compile(r"[0-9]+\.[0-9]+\.[0-9]+(、|[ 　]|[^0-9])"), 7),
-    (re.compile(r"[0-9]+\.[0-9]+\.[0-9]+\.[0-9]+(、|[ 　]|[^0-9])"), 8),
-    (re.compile(r".{,48}[：:?？]$"), 9),
-    (re.compile(r"[0-9]+）"), 10),
-    (re.compile(r"[\(（][0-9]+[）\)]"), 11),
-    (re.compile(r"[零一二三四五六七八九十百]+是"), 12),
-    (re.compile(r"[⚫•➢✓]"), 12),
-]
+# patterns themselves. In rank order, a pure-numeric line first (rank False).
+_PROJ_PATTERNS = (
+    (r"[0-9 ().,%+/-]+$", False),
+    (r"第[零一二三四五六七八九十百]+章", 1),
+    (r"第[零一二三四五六七八九十百]+[条节]", 2),
+    (r"[零一二三四五六七八九十百]+[、 　]", 3),
+    (r"[\(（][零一二三四五六七八九十百]+[）\)]", 4),
+    (r"[0-9]+(?:、|\.[　 ]|\.[^0-9])", 5),
+    (r"[0-9]+\.[0-9]+(?:、|[. 　]|[^0-9])", 6),
+    (r"[0-9]+\.[0-9]+\.[0-9]+(?:、|[ 　]|[^0-9])", 7),
+    (r"[0-9]+\.[0-9]+\.[0-9]+\.[0-9]+(?:、|[ 　]|[^0-9])", 8),
+    (r".{,48}[：:?？]$", 9),
+    (r"[0-9]+）", 10),
+    (r"[\(（][0-9]+[）\)]", 11),
+    (r"[零一二三四五六七八九十百]+是", 12),
+    (r"[⚫•➢✓]", 12),
+)
+# one ordered alternation, one capturing group per pattern: under match()
+# the first alternative that matches wins, as a loop over the patterns would,
+# and m.lastindex names it
+_PROJ_RE = re.compile("|".join(f"({p})" for p, _ in _PROJ_PATTERNS))
+_PROJ_RANK = (None,) + tuple(rank for _, rank in _PROJ_PATTERNS)
 
 
 def proj_match(line: str) -> int | bool | None:
@@ -557,12 +593,8 @@ def proj_match(line: str) -> int | bool | None:
     too-short lines, False for pure-numeric lines, else the pattern rank."""
     if len(line) <= 2:
         return None
-    if _PROJ_PURE_NUM.match(line):
-        return False
-    for pat, rank in _PROJ_PATTERNS:
-        if pat.match(line):
-            return rank
-    return None
+    m = _PROJ_RE.match(line)
+    return _PROJ_RANK[m.lastindex] if m else None
 
 
 def _scrap_usefull(b: dict, pw: float, mh: float) -> bool:
@@ -590,50 +622,44 @@ def filter_scraps(boxes: list[dict], page_w: float = PAGE_W) -> list[dict]:
         return boxes
     mh = page_mean_height(boxes)
     order = {id(b): i for i, b in enumerate(boxes)}
-    bxs = list(boxes)
+    # the stream reversed, so taking its head (or a box near it) pops from
+    # the end of the list: the stream's i-th box, counting from 1, is rev[-i]
+    rev = boxes[::-1]
+    x_near = page_w / 10
     kept: list[dict] = []
-    while bxs:
-        first = bxs[0]
+    while rev:
+        first = rev.pop()
         mhp = mh.get(first["pn"], 10.0)
+        if not _scrap_usefull(first, page_w, mhp):
+            continue  # waste: narrow, short, untagged
         mj = bool(proj_match((first["text"] or "").strip())) or first["kind"] == "title"
-        lines: list[dict] = []
-        if _scrap_usefull(first, page_w, mhp):
-            cur = bxs.pop(0)
-            lines.append(cur)
-            while True:
-                mmj = (
-                    bool(proj_match((cur["text"] or "").strip()))
-                    or cur["kind"] == "title"
-                )
-                cur_h = cur["bottom"] - cur["top"]
-                nxt = None
-                for i in range(min(19, len(bxs))):
-                    b = bxs[i]
-                    if b["pn"] > cur["pn"]:
-                        break
-                    y_dis = abs(
-                        (cur["pn"] * PAGE_H + (cur["top"] + cur["bottom"]) / 2)
-                        - (b["pn"] * PAGE_H + (b["top"] + b["bottom"]) / 2)
-                    )
-                    if not mmj and y_dis >= 3 * mhp and cur_h < 1.5 * mhp:
-                        break
-                    if not _scrap_usefull(b, page_w, mhp):
-                        continue
-                    x_overlap = not (cur["x1"] < b["x0"] or cur["x0"] > b["x1"])
-                    x_dis = 0.0 if x_overlap else min(
-                        abs(cur["x1"] - b["x0"]), abs(cur["x0"] - b["x1"])
-                    )
-                    if mmj or x_dis < page_w / 10:
-                        nxt = i
-                        break
-                if nxt is None:
+        cur, mmj = first, mj
+        lines = [first]
+        while True:
+            cur_h = cur["bottom"] - cur["top"]
+            cur_y = cur["pn"] * PAGE_H + (cur["top"] + cur["bottom"]) / 2
+            nxt = None
+            for i in range(1, min(19, len(rev)) + 1):
+                b = rev[-i]
+                if b["pn"] > cur["pn"]:
                     break
-                cur = bxs.pop(nxt)
-                lines.append(cur)
-        else:
-            bxs.pop(0)  # waste: narrow, short, untagged
-        if not lines:
-            continue
+                y_dis = abs(cur_y - (b["pn"] * PAGE_H + (b["top"] + b["bottom"]) / 2))
+                if not mmj and y_dis >= 3 * mhp and cur_h < 1.5 * mhp:
+                    break
+                if not _scrap_usefull(b, page_w, mhp):
+                    continue
+                x_overlap = not (cur["x1"] < b["x0"] or cur["x0"] > b["x1"])
+                x_dis = 0.0 if x_overlap else min(
+                    abs(cur["x1"] - b["x0"]), abs(cur["x0"] - b["x1"])
+                )
+                if mmj or x_dis < x_near:
+                    nxt = i
+                    break
+            if nxt is None:
+                break
+            cur = rev.pop(-nxt)
+            lines.append(cur)
+            mmj = bool(proj_match((cur["text"] or "").strip())) or cur["kind"] == "title"
         mw = sum(b["x1"] - b["x0"] for b in lines) / len(lines)
         if mj or mw / page_w >= 0.35 or mw > 200:
             kept.extend(lines)

@@ -84,6 +84,33 @@ def test_naive_chunk_rows_golden_digest():
     )
 
 
+def test_all_chunker_rows_golden_digest():
+    """sha256 of each doc's ``extract_doc`` spans and of its
+    ``chunk_doc`` rows under every chunker in ``CHUNKERS`` over datagen
+    seed 1, docs 0-299, taken before the layout passes' per-box string
+    scans were cut. It pins the layout and assembly kernels bit for bit on
+    every chunker's path. Corpus: datagen ``CORPUS_VERSION`` 7; a version
+    bump regenerates the docs and needs a new digest."""
+    from ragflow_spark.datagen import CORPUS_VERSION, gen_docs
+    from ragflow_spark.kernels.extract import CHUNKERS, chunk_doc, extract_doc
+
+    assert CORPUS_VERSION == 7
+    assert len(CHUNKERS) == 8
+    h = hashlib.sha256()
+    n = 0
+    for d in gen_docs(1, 0, 300):
+        out = extract_doc(d["spans"])
+        h.update(json.dumps([d["doc_id"], out], sort_keys=True).encode())
+        for chunker in CHUNKERS:
+            for row in chunk_doc(out, chunker=chunker):
+                h.update(json.dumps([d["doc_id"], row], sort_keys=True).encode())
+                n += 1
+    assert n == 8222
+    assert h.hexdigest() == (
+        "59ac48dd8790dc8f72919f6e8bdd461ce552e3d4e88e2c3a9da8c14fe3350fba"
+    )
+
+
 def test_make_colon_as_title():
     body = "x" * 40 + "。" + "key terms follow:"
     secs = [(body, ""), ("item one, item two", "")]
