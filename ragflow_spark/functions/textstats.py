@@ -1,36 +1,19 @@
 """Language/character-class text statistics.
 
-Reference analogs: is_english / is_chinese (rag/nlp/__init__.py:228-257),
-language detect sampling (deepdoc/parser/pdf_parser.py:1059-1066 — made
-deterministic: first-N prefix instead of random sample, per SURVEY.md §4.3).
+Reference analogs: is_english (doc_is_english) / is_chinese
+(rag/nlp/__init__.py:228-257), language detect sampling
+(deepdoc/parser/pdf_parser.py:1059-1066 — made deterministic: first-N
+prefix instead of random sample, per SURVEY.md §4.3).
 """
 
 from __future__ import annotations
 
 import re
+from itertools import islice
 
 # whole-string variant: one fullmatch instead of a per-character match loop
 _FULL_ENG = re.compile(r"[`a-zA-Z0-9\s.,':;/\"?<>!\(\)\-]*")
 _CJK = re.compile(r"[一-鿿]")
-
-
-def is_english(texts) -> bool:
-    """>80% of sampled strings are fully english-charset
-    (rag/nlp/__init__.py:228-245)."""
-    if not texts:
-        return False
-    if isinstance(texts, str):
-        texts = list(texts)
-    texts = [t for t in texts if isinstance(t, str) and t.strip()]
-    if not texts:
-        return False
-    eng = sum(1 for t in texts if _full_eng(t))
-    return (eng / len(texts)) > 0.8
-
-
-def _full_eng(t: str) -> bool:
-    t = t.strip()
-    return bool(t) and _FULL_ENG.fullmatch(t) is not None
 
 
 def is_chinese(text: str) -> bool:
@@ -41,9 +24,13 @@ def is_chinese(text: str) -> bool:
 
 
 def doc_is_english(texts: list[str], sample: int = 200) -> bool:
-    """Deterministic doc-level language flag: first `sample` non-empty lines
-    (replaces the reference's random_choices sampling,
-    rag/nlp/__init__.py:196-198 / book.py:132-133)."""
-    texts = [t for t in texts if t and t.strip()][:sample]
-    return is_english(texts)
-
+    """>80% of the doc's first ``sample`` non-empty texts are fully
+    english-charset once stripped (rag/nlp/__init__.py:228-245 is_english;
+    the first-N prefix replaces the reference's random_choices sampling,
+    rag/nlp/__init__.py:196-198 / book.py:132-133). Each text is stripped
+    once, and only until the sample is full."""
+    stripped = list(islice(filter(None, (t.strip() for t in texts if t)), sample))
+    if not stripped:
+        return False
+    eng = sum(1 for t in stripped if _FULL_ENG.fullmatch(t))
+    return (eng / len(stripped)) > 0.8

@@ -24,10 +24,11 @@ from collections import Counter
 
 from ragflow_spark.functions.delimiters import get_delimiters
 from ragflow_spark.functions.tokens import num_tokens
+from ragflow_spark.kernels.layout import _is_toc_head, toc_kept
 
 BULLET_DIALECTS: list[list[str]] = [
     [  # CN legal
-        r"第[零一二三四五六七八九十百0-9]+(分?编|部分)",
+        r"第[零一二三四五六七八九十百0-9]+(?:分?编|部分)",
         r"第[零一二三四五六七八九十百0-9]+章",
         r"第[零一二三四五六七八九十百0-9]+节",
         r"第[零一二三四五六七八九十百0-9]+条",
@@ -49,14 +50,20 @@ BULLET_DIALECTS: list[list[str]] = [
         r"[\(（][0-9]{,2}[\)）]",
     ],
     [  # EN Part/Chapter/Section/Article
-        r"PART (ONE|TWO|THREE|FOUR|FIVE|SIX|SEVEN|EIGHT|NINE|TEN)",
-        r"Chapter (I+V?|VI*|XI|IX|X)",
+        r"PART (?:ONE|TWO|THREE|FOUR|FIVE|SIX|SEVEN|EIGHT|NINE|TEN)",
+        r"Chapter (?:I+V?|VI*|XI|IX|X)",
         r"Section [0-9]+",
         r"Article [0-9]+",
         # engine extension: plain english "Chapter 3" numbering (fixtures use it)
         r"Chapter [0-9]+",
     ],
 ]
+
+# each dialect as one ordered alternation, one capturing group per pattern
+# (the patterns' own groups are non-capturing): under match() the first
+# pattern that matches wins, as a loop over the patterns would, and
+# m.lastindex - 1 is its rank
+_DIALECT_RES = [re.compile("|".join(f"({p})" for p in d)) for d in BULLET_DIALECTS]
 
 _NOT_BULLET = [re.compile(p) for p in (r"0", r"[0-9]+ +[0-9~个只-]", r"[0-9]+\.{2,}")]
 
@@ -65,16 +72,29 @@ def not_bullet(line: str) -> bool:
     return any(p.match(line) for p in _NOT_BULLET)
 
 
+def outline_rank(bull: int, txt: str, layout: str | None = "", strict: bool = False) -> int:
+    """Outline level of one section under dialect ``bull``: the rank of the
+    first dialect pattern matching the stripped text; else ``len(dialect)``
+    for a ``(title|head)`` layout whose text reads as a title, else
+    ``len(dialect) + 1`` (body). ``strict`` denies a pattern rank to a text
+    ``not_bullet`` rejects: the reference's title_frequency tests it and its
+    hierarchical_merge does not, a difference kept here."""
+    m = _DIALECT_RES[bull].match(txt.strip())
+    if m and not (strict and not_bullet(txt)):
+        return m.lastindex - 1
+    size = len(BULLET_DIALECTS[bull])
+    if layout and ("title" in layout or "head" in layout) and not not_title(txt):
+        return size
+    return size + 1
+
+
 def bullets_category(sections: list[str]) -> int:
     """Pick the bullet dialect with the most distinct matching sections; -1
     when nothing matches (rag/nlp/__init__.py:208-225)."""
+    stripped = [sec.strip() for sec in sections]
     best, best_hits = -1, 0
     for i, dialect in enumerate(BULLET_DIALECTS):
-        hits = 0
-        for sec in sections:
-            s = sec.strip()
-            if any(re.match(p, s) and not not_bullet(s) for p in dialect):
-                hits += 1
+        hits = sum(outline_rank(i, s, strict=True) < len(dialect) for s in stripped)
         if hits > best_hits:
             best, best_hits = i, hits
     return best
@@ -90,31 +110,31 @@ def not_title(txt: str) -> bool:
 
 
 def title_frequency(bull: int, sections: list[tuple[str, str]]) -> tuple[int, list[int]]:
-    """Per-section outline level + the most frequent real level
-    (rag/nlp/__init__.py:401-420). Level = index of the first matching bullet
-    pattern; layout-title hint gets level ``len(dialect)``; body text gets
-    ``len(dialect)+1``."""
+    """Per-section outline level (``outline_rank``, strict) + the most
+    frequent real level (rag/nlp/__init__.py:401-420)."""
     if bull < 0 or not sections:
         size = 0 if bull < 0 else len(BULLET_DIALECTS[bull])
         return size + 1, [size + 1] * len(sections)
     size = len(BULLET_DIALECTS[bull])
-    levels = []
-    for txt, layout in sections:
-        lvl = size + 1
-        for j, p in enumerate(BULLET_DIALECTS[bull]):
-            if re.match(p, txt.strip()) and not not_bullet(txt):
-                lvl = j
-                break
-        else:
-            if re.search(r"(title|head)", layout or "") and not not_title(txt):
-                lvl = size
-        levels.append(lvl)
+    levels = [outline_rank(bull, txt, layout, strict=True) for txt, layout in sections]
     most = size + 1
     for level, _cnt in sorted(Counter(levels).items(), key=lambda kv: -kv[1]):
         if level <= size:
             most = level
             break
     return most, levels
+
+
+def _section_ids(levels: list[int], most_level: int) -> list[int]:
+    """Section id per section: it advances at every section of a title
+    level (<= ``most_level``) whose level differs from the one before
+    (the paper and manual templates' pivot rule)."""
+    ids, sid = [], 0
+    for k, lvl in enumerate(levels):
+        if lvl <= most_level and k > 0 and lvl != levels[k - 1]:
+            sid += 1
+        ids.append(sid)
+    return ids
 
 
 def make_colon_as_title(sections: list[tuple[str, str]]) -> list[tuple[str, str]]:
@@ -138,41 +158,11 @@ def make_colon_as_title(sections: list[tuple[str, str]]) -> list[tuple[str, str]
 
 
 def remove_contents_table(sections: list[tuple[str, str]], eng: bool) -> list[tuple[str, str]]:
-    """Drop a table-of-contents block: the heading, then every following
-    section until the first whose prefix matches a later real section
-    (rag/nlp/__init__.py:347-376)."""
-    secs = list(sections)
-    i = 0
-    while i < len(secs):
-        head = re.sub(r"( | |　)+", "", secs[i][0].strip(), flags=re.IGNORECASE)
-        if not re.match(
-            r"(contents|目录|目次|tableofcontents|致谢|acknowledge)$", head, re.IGNORECASE
-        ):
-            i += 1
-            continue
-        secs.pop(i)
-        if i >= len(secs):
-            break
-
-        def prefix_of(j: int) -> str:
-            t = secs[j][0].strip()
-            return " ".join(t.split()[:2]) if eng else t[:3]
-
-        prefix = prefix_of(i)
-        while not prefix:
-            secs.pop(i)
-            if i >= len(secs):
-                return secs
-            prefix = prefix_of(i)
-        secs.pop(i)
-        if i >= len(secs) or not prefix:
-            break
-        for j in range(i, min(i + 128, len(secs))):
-            if not re.match(re.escape(prefix), secs[j][0]):
-                continue
-            del secs[i:j]
-            break
-    return secs
+    """Drop every table-of-contents block (rag/nlp/__init__.py:347-376):
+    ``layout.toc_kept`` with a contents heading read from the stripped text
+    and the doc's language flag for every block."""
+    keep = toc_kept([t for t, _ in sections], lambda t: _is_toc_head(t.strip()), lambda _: eng)
+    return [sections[k] for k in keep]
 
 
 def naive_merge(
@@ -273,20 +263,11 @@ def hierarchical_merge(
         return []
     import numpy as np
 
-    size = len(BULLET_DIALECTS[bull])
-    n_levels = size + 2  # pattern ranks 0..size-1, layout-title, body
+    n_levels = len(BULLET_DIALECTS[bull]) + 2  # pattern ranks, layout-title, body
     texts = [t for t, _ in secs]
 
     # 1. level vector: one pass classifying every section
-    def level_of(txt: str, layout: str) -> int:
-        for rank, pat in enumerate(BULLET_DIALECTS[bull]):
-            if re.match(pat, txt.strip()):
-                return rank
-        if re.search(r"(title|head)", layout or "") and not not_title(txt):
-            return size
-        return size + 1
-
-    lvl = np.array([level_of(t, o) for t, o in secs])
+    lvl = np.array([outline_rank(bull, t, o) for t, o in secs])
     # position index per level for O(log n) most-recent-ancestor lookups
     pos = {L: np.flatnonzero(lvl == L) for L in range(n_levels)}
 
@@ -391,12 +372,7 @@ def paper_chunk(sections: list[tuple[str, str]]) -> dict:
     body = boxes[i:]
     bull = bullets_category([t for t, _ in body])
     most_level, levels = title_frequency(bull, body)
-    sec_ids = []
-    sid = 0
-    for k, lvl in enumerate(levels):
-        if lvl <= most_level and k > 0 and lvl != levels[k - 1]:
-            sid += 1
-        sec_ids.append(sid)
+    sec_ids = _section_ids(levels, most_level)
     chunks: list[str] = []
     last_sid = -2
     for (txt, _), sec_id in zip(body, sec_ids):
@@ -422,12 +398,8 @@ def book_chunk(
     """Book dispatch (rag/app/book.py:131-143): colon titles, ToC removal,
     bullet-dialect detection on the first 100 sections (deterministic stand-in
     for random_choices), hierarchical merge depth 5, else naive merge 256."""
-    secs = remove_contents_table(sections, eng)
-    secs = make_colon_as_title(secs)
-    bull = bullets_category([t for t, _ in secs[:100]])
-    if bull >= 0:
-        return ["\n".join(ck) for ck in hierarchical_merge(bull, secs, 5)]
-    return naive_merge([t for t, _ in secs], chunk_token_num, delimiter)
+    secs = make_colon_as_title(remove_contents_table(sections, eng))
+    return _outline_or_naive(secs, chunk_token_num, delimiter)
 
 
 def laws_chunk(
@@ -441,6 +413,15 @@ def laws_chunk(
     dialect → hierarchical merge depth 5 (laws.py:206); no dialect → the
     naive budget fallback."""
     secs = [(t, o) for t, o in sections if t and t.strip()]
+    return _outline_or_naive(secs, chunk_token_num, delimiter)
+
+
+def _outline_or_naive(
+    secs: list[tuple[str, str]], chunk_token_num: int, delimiter: str
+) -> list[str]:
+    """The book and laws tail: a bullet dialect among the first 100
+    sections → hierarchical merge depth 5, each chunk newline-joined; no
+    dialect → the naive budget merge."""
     bull = bullets_category([t for t, _ in secs[:100]])
     if bull >= 0:
         return ["\n".join(ck) for ck in hierarchical_merge(bull, secs, 5)]
@@ -751,12 +732,7 @@ def manual_chunk(sections: list[tuple[str, str]], is_english: bool = True) -> li
         return []
     bull = bullets_category([t for t, _ in sections])
     most_level, levels = title_frequency(bull, sections)
-    sec_ids = []
-    sid = 0
-    for i, lvl in enumerate(levels):
-        if lvl <= most_level and i > 0 and lvl != levels[i - 1]:
-            sid += 1
-        sec_ids.append(sid)
+    sec_ids = _section_ids(levels, most_level)
     chunks: list[str] = []
     last_sid = -2
     tk_cnt = 0

@@ -221,18 +221,17 @@ def chunk_doc(
         texts, media_refs = chunkers.naive_merge_with_media(
             stream, chunk_token_num, delimiter, overlapped_percent
         )
-    elif chunker == "book":
+    elif chunker in ("book", "laws", "manual"):
         eng = doc_is_english([t for t, _ in sections])
-        texts = chunkers.book_chunk(sections, eng, chunk_token_num=256, delimiter=delimiter)
+        if chunker == "book":
+            texts = chunkers.book_chunk(sections, eng, chunk_token_num=256, delimiter=delimiter)
+        elif chunker == "laws":
+            texts = chunkers.laws_chunk(sections, eng, chunk_token_num, delimiter)
+        else:
+            texts = chunkers.manual_chunk(sections, eng)
     elif chunker == "paper":
         paper = chunkers.paper_chunk(sections)
         texts = ([paper["abstract"]] if paper["abstract"] else []) + paper["chunks"]
-    elif chunker == "laws":
-        eng = doc_is_english([t for t, _ in sections])
-        texts = chunkers.laws_chunk(sections, eng, chunk_token_num, delimiter)
-    elif chunker == "manual":
-        eng = doc_is_english([t for t, _ in sections])
-        texts = chunkers.manual_chunk(sections, eng)
     elif chunker == "email":
         texts = chunkers.email_chunk([t for t, _ in sections], chunk_token_num, delimiter)
     elif chunker == "qa":

@@ -373,52 +373,62 @@ def _has_dot_leader(text: str) -> bool:
     return "...." in text or "··" in text or "……" in text
 
 
-def filter_toc(boxes: list[dict]) -> list[dict]:
-    """ToC removal (pdf_parser.py:593-642): find a contents heading, pop the
-    following entries until a line whose prefix re-appears as a real section
-    (<=128 lookahead); if no heading, drop pages having >3 dot-leader lines."""
-    bxs = list(boxes)
-    findit = False
-    i = 0
-    while i < len(bxs):
-        if not _is_toc_head(bxs[i]["text"] or ""):
+def _eng_heading(text: str) -> bool:
+    return bool(_ENG_PREFIX.match(text.strip()))
+
+
+def _toc_prefix(text: str, eng: bool) -> str:
+    t = text.strip()
+    return " ".join(t.split()[:2]) if eng else t[:3]
+
+
+def toc_kept(texts: list[str], is_head, eng_of) -> list[int]:
+    """Indices of the ``texts`` left once every table-of-contents block is
+    dropped (pdf_parser.py:593-642, rag/nlp/__init__.py:347-376). A block
+    is a heading (``is_head(text)``), the texts after it with an empty
+    prefix, the first text with a prefix (of the stripped text: its first
+    two words when ``eng_of(heading)``, else its first three characters),
+    then every text up to the first of the next 128 that starts with that
+    prefix, which is kept. No such text: the block ends after the prefix
+    text. No text with a prefix: the block runs to the end."""
+    keep: list[int] = []
+    i, n = 0, len(texts)
+    while i < n:
+        if not is_head(texts[i]):
+            keep.append(i)
             i += 1
             continue
-        findit = True
-        eng = bool(_ENG_PREFIX.match((bxs[i]["text"] or "").strip()))
-        bxs.pop(i)
-        if i >= len(bxs):
+        eng = eng_of(texts[i])
+        p = i + 1
+        while p < n and not _toc_prefix(texts[p], eng):
+            p += 1
+        if p == n:
             break
+        prefix = _toc_prefix(texts[p], eng)
+        i = p + 1
+        for q in range(p + 1, min(p + 129, n)):
+            if texts[q].startswith(prefix):
+                i = q
+                break
+    return keep
 
-        def get_prefix(j: int) -> str:
-            t = (bxs[j]["text"] or "").strip()
-            return " ".join(t.split()[:2]) if eng else t[:3]
 
-        prefix = get_prefix(i)
-        while not prefix:
-            bxs.pop(i)
-            if i >= len(bxs):
-                return bxs
-            prefix = get_prefix(i)
-        bxs.pop(i)
-        if i >= len(bxs) or not prefix:
-            break
-        for j in range(i, min(i + 128, len(bxs))):
-            if not (bxs[j]["text"] or "").startswith(prefix):
-                continue
-            del bxs[i:j]
-            break
-    if findit:
-        return bxs
+def filter_toc(boxes: list[dict]) -> list[dict]:
+    """ToC removal (pdf_parser.py:593-642): with a contents heading,
+    ``toc_kept`` (English prefixes when the heading reads as English);
+    with none, drop pages having >3 dot-leader lines."""
+    if any(_is_toc_head(b["text"] or "") for b in boxes):
+        texts = [b["text"] or "" for b in boxes]
+        return [boxes[k] for k in toc_kept(texts, _is_toc_head, _eng_heading)]
 
     dirty: Counter = Counter()
-    for b in bxs:
+    for b in boxes:
         if _has_dot_leader(b["text"] or ""):
             dirty[b["pn"]] += 1
     dirty_pages = {pn for pn, c in dirty.items() if c > 3}
     if not dirty_pages:
-        return bxs
-    return [b for b in bxs if b["pn"] not in dirty_pages]
+        return list(boxes)
+    return [b for b in boxes if b["pn"] not in dirty_pages]
 
 
 _LATIN = set("qwertyuiopasdfghjklzxcvbnm")
@@ -573,8 +583,7 @@ _PROJ_PATTERNS = (
     (r"[\(（][零一二三四五六七八九十百]+[）\)]", 4),
     (r"[0-9]+(?:、|\.[　 ]|\.[^0-9])", 5),
     (r"[0-9]+\.[0-9]+(?:、|[. 　]|[^0-9])", 6),
-    (r"[0-9]+\.[0-9]+\.[0-9]+(?:、|[ 　]|[^0-9])", 7),
-    (r"[0-9]+\.[0-9]+\.[0-9]+\.[0-9]+(?:、|[ 　]|[^0-9])", 8),
+    # no ranks 7 (d.d.d) and 8 (d.d.d.d): rank 6 matches every line they match
     (r".{,48}[：:?？]$", 9),
     (r"[0-9]+）", 10),
     (r"[\(（][0-9]+[）\)]", 11),

@@ -1,6 +1,7 @@
 """Serial kernel throughput and seconds per layout pass, in one process.
 
     python3 scripts/kernel_profile.py --seed 1 --docs 3000 --reps 5
+    python3 scripts/kernel_profile.py --reps 5 --chunker all
 
 Generates a datagen corpus in memory (``gen_doc(seed, i, giant_factor)``
 for ``i`` in ``0..docs-1``; the defaults are perfbench's mixed corpus) and
@@ -17,6 +18,10 @@ arguments: naive, 512 tokens). Prints one JSON line:
   wrapped as module attributes of ``ragflow_spark.kernels.extract``, the
   names the kernels look up at call time, so the engine carries no timing
   hook. The wrappers add a few per cent to the timed run only.
+- ``chunk_s`` (with ``--chunker NAME ...`` or ``--chunker all``): per
+  chunker, the median over ``--reps`` runs of the serial seconds
+  ``chunk_doc(spans, chunker=NAME)`` takes over the whole corpus, each
+  doc's spans finalized once beforehand.
 """
 
 from __future__ import annotations
@@ -75,26 +80,46 @@ def timed_passes(docs: list[list[dict]]) -> dict[str, float]:
     return {k: round(v, 4) for k, v in acc.items()}
 
 
+def chunk_seconds(docs: list[list[dict]], chunkers: list[str], reps: int) -> dict[str, float]:
+    """Median serial seconds of ``chunk_doc`` over the finalized corpus,
+    per chunker; the chunkers alternate within each rep."""
+    finalized = [kx.finalize_doc(kx.strip_rows(spans)) for spans in docs]
+    runs: dict[str, list[float]] = {c: [] for c in chunkers}
+    for _ in range(reps):
+        for c in chunkers:
+            t0 = time.perf_counter()
+            for out in finalized:
+                kx.chunk_doc(out, chunker=c)
+            runs[c].append(time.perf_counter() - t0)
+    return {c: round(statistics.median(r), 4) for c, r in runs.items()}
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--docs", type=int, default=3000)
     ap.add_argument("--giant-factor", type=int, default=100)
     ap.add_argument("--reps", type=int, default=5)
+    ap.add_argument("--chunker", nargs="+", choices=(*kx.CHUNKERS, "all"), default=[],
+                    help="also report serial chunk_doc seconds for these chunkers")
     args = ap.parse_args()
+    chunkers = list(kx.CHUNKERS) if "all" in args.chunker else args.chunker
 
     docs = [gen_doc(args.seed, i, args.giant_factor)["spans"]
             for i in range(args.docs)]
     run_corpus(docs[:100])  # warm imports and caches
     runs = [args.docs / run_corpus(docs) for _ in range(args.reps)]
-    print(json.dumps({
+    report = {
         "seed": args.seed,
         "docs": args.docs,
         "giant_factor": args.giant_factor,
         "docs_per_s": round(statistics.median(runs), 1),
         "docs_per_s_runs": [round(r, 1) for r in runs],
         "pass_s": timed_passes(docs),
-    }))
+    }
+    if chunkers:
+        report["chunk_s"] = chunk_seconds(docs, chunkers, args.reps)
+    print(json.dumps(report))
 
 
 if __name__ == "__main__":

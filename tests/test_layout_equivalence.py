@@ -1,13 +1,17 @@
-"""The layout kernels' rewritten predicates and pass loops equal the forms
-they replaced. The replaced forms are kept here as the reference: the
-``_SPACES.sub`` ToC-heading key, ``_DOT_LEADER.search``,
+"""The layout and outline kernels' rewritten predicates and pass loops
+equal the forms they replaced. The replaced forms are kept here as the
+reference: the ``_SPACES.sub`` ToC-heading key, ``_DOT_LEADER.search``,
 ``_JUNK_RE.search``, the sequential ``_PROJ_PATTERNS`` loop,
 ``re.match(re.escape(prefix), t)``, ``np.median``, ``np.mean``, and the
-``horizontal_merge``, ``vertical_merge`` and ``filter_scraps`` loops. Each
+``horizontal_merge``, ``vertical_merge`` and ``filter_scraps`` loops; for
+the chunkers, the ``re.match``-per-bullet-pattern loops with and without
+``not_bullet``, ``remove_contents_table``'s ``re.sub``/``re.escape`` form,
+``filter_toc``'s pop loop and ``doc_is_english``'s three strips. Each
 predicate is compared on every box text of the seed-1 mixed corpus
 (perfbench's 3,000 docs, raw and stripped, plus the texts they extract to)
 and on a hostile set; each pass on the boxes it gets for every corpus doc
-and on seeded random boxes."""
+and on seeded random boxes; the outline forms on every corpus doc's
+sections and on hostile and seeded random section lists."""
 
 import math
 import random
@@ -17,6 +21,8 @@ import numpy as np
 import pytest
 
 from ragflow_spark.datagen import gen_docs
+from ragflow_spark.functions.textstats import doc_is_english
+from ragflow_spark.kernels import chunkers as C
 from ragflow_spark.kernels import layout as L
 from ragflow_spark.kernels.assemble import _mean
 from ragflow_spark.kernels.extract import finalize_doc, strip_rows
@@ -451,3 +457,303 @@ def test_passes_equal_their_reference_loops_on_the_corpus(corpus, monkeypatch):
     for rows, _ in corpus:
         finalize_doc(rows)
     assert min(calls.values()) > 1000
+
+
+# ------------------------------------------- the replaced outline forms
+# the chunkers' bullet dialects as they were matched, one re.match per
+# pattern string (the inner groups still capturing)
+_BULLET_DIALECTS_REF = [
+    [r"第[零一二三四五六七八九十百0-9]+(分?编|部分)", r"第[零一二三四五六七八九十百0-9]+章",
+     r"第[零一二三四五六七八九十百0-9]+节", r"第[零一二三四五六七八九十百0-9]+条",
+     r"[\(（][零一二三四五六七八九十百]+[\)）]"],
+    [r"第[0-9]+章", r"第[0-9]+节", r"[0-9]{,2}[\. 、]", r"[0-9]{,2}\.[0-9]{,2}[^a-zA-Z/%~-]",
+     r"[0-9]{,2}\.[0-9]{,2}\.[0-9]{,2}", r"[0-9]{,2}\.[0-9]{,2}\.[0-9]{,2}\.[0-9]{,2}"],
+    [r"第[零一二三四五六七八九十百0-9]+章", r"第[零一二三四五六七八九十百0-9]+节",
+     r"[零一二三四五六七八九十百]+[ 、]", r"[\(（][零一二三四五六七八九十百]+[\)）]",
+     r"[\(（][0-9]{,2}[\)）]"],
+    [r"PART (ONE|TWO|THREE|FOUR|FIVE|SIX|SEVEN|EIGHT|NINE|TEN)", r"Chapter (I+V?|VI*|XI|IX|X)",
+     r"Section [0-9]+", r"Article [0-9]+", r"Chapter [0-9]+"],
+]
+
+
+def bullet_hit_ref(bull: int, s: str) -> bool:
+    """bullets_category's per-section test (``s`` already stripped)."""
+    return any(re.match(p, s) and not C.not_bullet(s) for p in _BULLET_DIALECTS_REF[bull])
+
+
+def bullets_category_ref(sections):
+    best, best_hits = -1, 0
+    for i in range(len(_BULLET_DIALECTS_REF)):
+        hits = sum(1 for sec in sections if bullet_hit_ref(i, sec.strip()))
+        if hits > best_hits:
+            best, best_hits = i, hits
+    return best
+
+
+def title_level_ref(bull: int, txt: str, layout) -> int:
+    """title_frequency's loop: with not_bullet (on the unstripped text)."""
+    size = len(_BULLET_DIALECTS_REF[bull])
+    lvl = size + 1
+    for j, p in enumerate(_BULLET_DIALECTS_REF[bull]):
+        if re.match(p, txt.strip()) and not C.not_bullet(txt):
+            lvl = j
+            break
+    else:
+        if re.search(r"(title|head)", layout or "") and not C.not_title(txt):
+            lvl = size
+    return lvl
+
+
+def merge_level_ref(bull: int, txt: str, layout) -> int:
+    """hierarchical_merge's level_of: without not_bullet."""
+    size = len(_BULLET_DIALECTS_REF[bull])
+    for rank, pat in enumerate(_BULLET_DIALECTS_REF[bull]):
+        if re.match(pat, txt.strip()):
+            return rank
+    if re.search(r"(title|head)", layout or "") and not C.not_title(txt):
+        return size
+    return size + 1
+
+
+def remove_contents_table_ref(sections, eng):
+    secs = list(sections)
+    i = 0
+    while i < len(secs):
+        head = re.sub(r"( | |　)+", "", secs[i][0].strip(), flags=re.IGNORECASE)
+        if not re.match(
+            r"(contents|目录|目次|tableofcontents|致谢|acknowledge)$", head, re.IGNORECASE
+        ):
+            i += 1
+            continue
+        secs.pop(i)
+        if i >= len(secs):
+            break
+
+        def prefix_of(j: int) -> str:
+            t = secs[j][0].strip()
+            return " ".join(t.split()[:2]) if eng else t[:3]
+
+        prefix = prefix_of(i)
+        while not prefix:
+            secs.pop(i)
+            if i >= len(secs):
+                return secs
+            prefix = prefix_of(i)
+        secs.pop(i)
+        if i >= len(secs) or not prefix:
+            break
+        for j in range(i, min(i + 128, len(secs))):
+            if not re.match(re.escape(prefix), secs[j][0]):
+                continue
+            del secs[i:j]
+            break
+    return secs
+
+
+def filter_toc_ref(boxes):
+    """filter_toc's pop loop, as it was before it ran ``toc_kept``."""
+    bxs = list(boxes)
+    findit = False
+    i = 0
+    while i < len(bxs):
+        if not L._is_toc_head(bxs[i]["text"] or ""):
+            i += 1
+            continue
+        findit = True
+        eng = bool(L._ENG_PREFIX.match((bxs[i]["text"] or "").strip()))
+        bxs.pop(i)
+        if i >= len(bxs):
+            break
+
+        def get_prefix(j: int) -> str:
+            t = (bxs[j]["text"] or "").strip()
+            return " ".join(t.split()[:2]) if eng else t[:3]
+
+        prefix = get_prefix(i)
+        while not prefix:
+            bxs.pop(i)
+            if i >= len(bxs):
+                return bxs
+            prefix = get_prefix(i)
+        bxs.pop(i)
+        if i >= len(bxs) or not prefix:
+            break
+        for j in range(i, min(i + 128, len(bxs))):
+            if not (bxs[j]["text"] or "").startswith(prefix):
+                continue
+            del bxs[i:j]
+            break
+    if findit:
+        return bxs
+    dirty = {}
+    for b in bxs:
+        if L._has_dot_leader(b["text"] or ""):
+            dirty[b["pn"]] = dirty.get(b["pn"], 0) + 1
+    dirty_pages = {pn for pn, c in dirty.items() if c > 3}
+    if not dirty_pages:
+        return bxs
+    return [b for b in bxs if b["pn"] not in dirty_pages]
+
+
+def doc_is_english_ref(texts, sample=200):
+    """The three-strip form: the sample, then is_english, then _full_eng."""
+    texts = [t for t in texts if t and t.strip()][:sample]
+    texts = [t for t in texts if isinstance(t, str) and t.strip()]
+    if not texts:
+        return False
+    eng = sum(1 for t in texts if t.strip() and re.fullmatch(
+        r"[`a-zA-Z0-9\s.,':;/\"?<>!\(\)\-]*", t.strip()))
+    return (eng / len(texts)) > 0.8
+
+
+OUTLINE_HOSTILE = [
+    "", " ", "\t", "　", " ", "\t　 ",
+    # EN dialect
+    "PART ONE", "PART ONE: Beginnings", "PART ELEVEN", "PART TEN", "part one", "PART  ONE",
+    "PART ONE", " PART ONE", "Chapter IV", "Chapter IV The Storm", "Chapter VIII",
+    "Chapter XI", "Chapter IX", "Chapter X", "Chapter 3", "Chapter 3 Intro", "Chapter",
+    "Section 2", "Section 2.1 Scope", "Section", "Article 7", "Article",
+    "\tChapter IV", "Chapter IV\t", "　Chapter IV　",
+    # CN legal and enumerations
+    "第三编", "第三分编 总则", "第二部分", "第二部 分", "第一章 总则", "第1章", "第12节", "第一节",
+    "第十条", "第100条 附则", "第 三章", "　第三章", "第三章　", "\t第二部分\t",
+    "（三）", "(三)", "（三", "(12)", "（1）", "()", "（）", "三、", "三 x", "十二、内容", "一是",
+    # numeric dotted
+    "1.2.3", "1.2.3 x", "1.2.3.4", "1.2.3.4 x", "123.4", "12.34", "1.2", "1.2a", "1.2/",
+    "1.2%", "1.2-", "1.2 x", " 1.2 x", "1.", "1、", "1 ", "12 items", "123 x", ".5", ". x",
+    "、", "100.", "1.2.", "12.3.45.6",
+    # not_bullet rejects these once stripped
+    "0", "0. intro", "01. x", " 12 个", "12 个", "12 3", "12~5", "3-4", "12..", "1...... 5",
+    " 0", "\t0", "0\t", "　0.1", "\t 12 个", "12  只",
+    # title and body fallbacks (not_title)
+    "Short title", "A title, with comma", "x" * 40, " ".join(["w"] * 13), "第三条 a, b",
+    "Heading。", "Heading!",
+]
+
+# the layouts chunk_doc hands the chunkers, and the fallback's other cases
+OUTLINE_LAYOUTS = (None, "", "text", "title", "head", "section header", "table")
+
+
+@pytest.fixture(scope="module")
+def doc_sections(corpus):
+    """Per doc, the (text, kind) sections chunk_doc hands its chunkers."""
+    return [
+        [(o["text"], o["kind"]) for o in finalize_doc(rows)
+         if o["kind"] in ("text", "title") and (o["text"] or "").strip()]
+        for rows, _ in corpus
+    ]
+
+
+def test_outline_hostile_set_reaches_every_rank():
+    for bull, dialect in enumerate(_BULLET_DIALECTS_REF):
+        size = len(dialect)
+        ranks = {merge_level_ref(bull, t, o) for t in OUTLINE_HOSTILE for o in OUTLINE_LAYOUTS}
+        # the numeric dialect's ranks 3-5 are unreachable: rank 2,
+        # [0-9]{,2}[. 、], matches every text they match
+        assert ranks == set(range(size + 2)) - ({3, 4, 5} if bull == 1 else set()), bull
+    # not_bullet only rejects texts that start with a digit, so only the
+    # numeric dialect has texts that take a pattern rank without its test
+    assert any(merge_level_ref(1, t, "text") < 6 <= title_level_ref(1, t, "text")
+               for t in OUTLINE_HOSTILE)
+    # leading whitespace hides a not_bullet text from title_frequency's test
+    assert title_level_ref(1, " 12 个", "text") == 2
+    assert not bullet_hit_ref(1, " 12 个".strip())
+
+
+def test_outline_rank_equals_the_pattern_loops(texts, doc_sections):
+    section_texts = {t for secs in doc_sections for t, _ in secs}
+    assert len(section_texts) > 10000
+    hostile = set(OUTLINE_HOSTILE) | set(HOSTILE)
+    for t in sorted(section_texts | hostile | {t.strip() for t in hostile}):
+        layouts = OUTLINE_LAYOUTS if t in hostile else ("text", "title")
+        for bull in range(len(_BULLET_DIALECTS_REF)):
+            size = len(_BULLET_DIALECTS_REF[bull])
+            s = t.strip()
+            assert (C.outline_rank(bull, s, strict=True) < size) == bullet_hit_ref(bull, s), t
+            for o in layouts:
+                assert C.outline_rank(bull, t, o) == merge_level_ref(bull, t, o), (bull, t, o)
+                assert C.outline_rank(bull, t, o, strict=True) == title_level_ref(bull, t, o), (
+                    bull, t, o)
+
+
+def test_bullets_category_equals_the_pattern_loop(doc_sections):
+    r = random.Random(13)
+    lists = [[t for t, _ in secs] for secs in doc_sections]
+    lists += [r.choices(OUTLINE_HOSTILE, k=r.choice([0, 1, 3, 10, 40])) for _ in range(3000)]
+    assert {bullets_category_ref(x) for x in lists} == {-1, 0, 1, 2, 3}
+    for x in lists:
+        assert C.bullets_category(x) == bullets_category_ref(x), x
+
+
+TOC_VOCAB = [
+    "Contents", "contents", "CONTENTS ", "目录", "目 录", " contents", "con tents",
+    "con　tents", "Table of Contents", "致谢", "Acknowledge", "", " ", "\t", "　",
+    "Chapter 1 Alpha ..... 2", "Chapter 1 Alpha", "Chapter 2 Beta", "Chapter 2 Beta ..... 5",
+    " Chapter 1 Alpha", "Chapter  1 Alpha", "Chapter", "第一章 总则", "第一章", "第一", "1.2 Scope",
+    "1.2", "Intro", "In", "x", "body text here", "结束。", "Chapter 1 Alpha.", "Ch",
+]
+
+
+def _toc_lists(r):
+    """Seeded random text lists over TOC_VOCAB, and lists whose prefix
+    reappears on either side of the 128-text lookahead's edge."""
+    for _ in range(4000):
+        yield r.choices(TOC_VOCAB, k=r.choice([0, 1, 2, 3, 5, 10, 40, 150, 300]))
+    for gap in range(125, 132):
+        for head in ("Contents", "目录"):
+            yield [head, "", "Chapter 9 Zeta", *["body"] * gap, "Chapter 9 Zeta", "tail"]
+
+
+def test_remove_contents_table_equals_the_regex_form(doc_sections):
+    r = random.Random(17)
+    lists = [secs for secs in doc_sections]
+    lists += [[(t, "text") for t in texts] for texts in _toc_lists(r)]
+    changed = 0
+    for secs in lists:
+        for eng in (True, False):
+            got = C.remove_contents_table(secs, eng)
+            assert got == remove_contents_table_ref(secs, eng), (eng, secs)
+            changed += got != secs
+    assert changed > 1000
+
+
+def test_filter_toc_equals_the_pop_loop():
+    r = random.Random(19)
+    changed = 0
+    for texts in _toc_lists(r):
+        boxes = [{"text": t if r.random() > 0.05 else None, "pn": r.randrange(3)}
+                 for t in texts]
+        before = [dict(b) for b in boxes]
+        got = L.filter_toc(boxes)
+        assert boxes == before
+        assert got == filter_toc_ref(boxes), texts
+        changed += got != boxes
+    assert changed > 1000
+
+
+def test_filter_toc_equals_the_pop_loop_on_the_corpus(corpus, monkeypatch):
+    from ragflow_spark.kernels import extract as kx
+
+    calls = []
+
+    def checked(boxes):
+        got = L.filter_toc(boxes)
+        assert got == filter_toc_ref(boxes), boxes
+        calls.append(1)
+        return got
+
+    monkeypatch.setattr(kx, "filter_toc", checked)
+    for rows, _ in corpus:
+        finalize_doc(rows)
+    assert len(calls) > 1000
+
+
+def test_doc_is_english_equals_the_three_strip_form(texts, doc_sections):
+    r = random.Random(23)
+    pool = texts + [None, "", " ", "　", " ", "abc", "中文", " abc\t"]
+    lists = [[t for t, _ in secs] for secs in doc_sections]
+    lists += [r.choices(pool, k=r.choice([0, 1, 2, 5, 199, 200, 201, 400])) for _ in range(2000)]
+    lists += [["abc"] * 160 + ["中文"] * 40, ["abc"] * 161 + ["中文"] * 39 + ["中文"] * 50]
+    assert {doc_is_english_ref(x) for x in lists} == {True, False}
+    for x in lists:
+        assert doc_is_english(x) == doc_is_english_ref(x), x
