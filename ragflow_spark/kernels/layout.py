@@ -400,11 +400,10 @@ def toc_kept(texts: list[str], is_head, eng_of) -> list[int]:
             continue
         eng = eng_of(texts[i])
         p = i + 1
-        while p < n and not _toc_prefix(texts[p], eng):
+        while p < n and not (prefix := _toc_prefix(texts[p], eng)):
             p += 1
         if p == n:
             break
-        prefix = _toc_prefix(texts[p], eng)
         i = p + 1
         for q in range(p + 1, min(p + 129, n)):
             if texts[q].startswith(prefix):
