@@ -523,8 +523,8 @@ def _q_chunk_book_laws_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                      (" ".join(w[11:14]), "text")]
         else:
             secs = [(" ".join(w[i:i + 5]) + "\n", "text") for i in range(0, len(w), 5)]
-        for pre, chunker in (("bk", book_chunk), ("lw", laws_chunk)):
-            yield f"{pre}-{doc_id}", chunker(secs, True, 16, "\n")
+        yield f"bk-{doc_id}", book_chunk(secs, True, 16, "\n")
+        yield f"lw-{doc_id}", laws_chunk(secs, 16, "\n")
 
     return _per_doc_chunks(spark, sf_dir, chunks_of)
 

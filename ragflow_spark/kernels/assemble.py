@@ -42,7 +42,7 @@ from collections import Counter
 
 import numpy as np
 
-from ragflow_spark.kernels.layout import drop_credits, page_mean_height
+from ragflow_spark.kernels.layout import drop_credits, gap_clusters, page_mean
 from ragflow_spark.schemas import PAGE_H
 
 TABLE_KINDS = ("table", "table header")
@@ -188,23 +188,13 @@ def _mean(xs: list[float]) -> float:
     return total / len(xs)
 
 
-def _cluster_1d(vals: np.ndarray, thr: float) -> np.ndarray:
-    """Gap clustering: sorted values start a new cluster when the gap to the
-    previous exceeds ``thr`` (closed form of the R/C sort-and-scan tagging,
-    table_structure_recognizer.py:160-197)."""
-    order = np.argsort(vals, kind="stable").tolist()
-    # the scan runs over Python floats and ints, not numpy scalars
-    v_list = vals.tolist()
-    ids = [0] * len(v_list)
-    cur = 0
-    prev = None
-    for idx in order:
-        v = v_list[idx]
-        if prev is not None and v - prev > thr:
-            cur += 1
-        ids[idx] = cur
-        prev = v
-    return np.array(ids, dtype=np.int64)
+def _axis_ids(cells: list[dict], tag: str, pos: list[float], size: list[float]) -> list[int]:
+    """One grid axis: the dense rank of the cells' ``tag`` values when every
+    cell carries one, else gap clusters of ``pos`` at half the mean
+    ``size`` (at least 1)."""
+    if all(tag in c for c in cells):
+        return np.unique(np.array([c[tag] for c in cells]), return_inverse=True)[1].tolist()
+    return gap_clusters(pos, max(_mean(size) / 2, 1.0))
 
 
 def _build_grid(cells: list[dict]) -> list[list[list[int]]]:
@@ -219,112 +209,66 @@ def _build_grid(cells: list[dict]) -> list[list[list[int]]]:
     the whole axis (the reference's tightest-fit fallback assigns single
     boxes, but a half-tagged axis has no consistent id space to merge
     into)."""
-    tops = np.array([c["pn"] * PAGE_H + c["top"] for c in cells])
-    x0s = np.array([c["x0"] for c in cells])
-    hts = np.array([c["bottom"] - c["top"] for c in cells])
-    wds = np.array([c["x1"] - c["x0"] for c in cells])
-    row_thr = max(float(np.mean(hts)) / 2, 1.0)
-    col_thr = max(float(np.mean(wds)) / 2, 1.0)
-    if all("R" in c for c in cells):
-        rn = np.unique(
-            np.array([c["R"] for c in cells]), return_inverse=True
-        )[1]
-    else:
-        rn = _cluster_1d(tops, row_thr)
-    if all("C" in c for c in cells):
-        cn = np.unique(
-            np.array([c["C"] for c in cells]), return_inverse=True
-        )[1]
-    else:
-        cn = _cluster_1d(x0s, col_thr)
-    n_rows, n_cols = int(rn.max()) + 1, int(cn.max()) + 1
+    rn = _axis_ids(cells, "R", [c["pn"] * PAGE_H + c["top"] for c in cells],
+                   [c["bottom"] - c["top"] for c in cells])
+    cn = _axis_ids(cells, "C", [c["x0"] for c in cells],
+                   [c["x1"] - c["x0"] for c in cells])
+    n_rows, n_cols = max(rn) + 1, max(cn) + 1
     grid: list[list[list[int]]] = [
         [[] for _ in range(n_cols)] for _ in range(n_rows)
     ]
     for i, (r_, c_) in enumerate(zip(rn, cn)):
-        cells[i]["rn"], cells[i]["cn"] = int(r_), int(c_)
+        cells[i]["rn"], cells[i]["cn"] = r_, c_
         grid[r_][c_].append(i)
     return grid
 
 
-def _relocate_singleton_cols(grid: list[list[list[int]]], cells: list[dict]) -> None:
-    """A column occupied by exactly one cell whose row has an empty neighbor
-    is a mis-split: merge it toward the nearer side and drop the column
-    (table_structure_recognizer.py:203-264; applied when rows >= 4)."""
-    if len(grid) < 4:
-        return
-    j = 0
-    while grid and j < len(grid[0]):
-        occ = [i for i in range(len(grid)) if grid[i][j]]
-        if len(occ) != 1:
-            j += 1
+def _relocate_singletons(
+    grid: list[list[list[int]]], cells: list[dict]
+) -> list[list[list[int]]]:
+    """A row occupied by exactly one cell whose column has an empty
+    neighbor is a mis-split: merge it toward the nearer side and drop the
+    row (table_structure_recognizer.py:266-324; when cols >= 4). Columns go
+    first, as the rows of the transposed grid, with gaps from x0/x1 and the
+    cn retag (:203-264; when rows >= 4); then rows, with top/bottom and rn.
+    Returns the relocated grid."""
+    for lo, hi, key in (("x0", "x1", "cn"), ("top", "bottom", "rn")):
+        grid = [list(line) for line in zip(*grid)]
+        if not grid or len(grid[0]) < 4:
             continue
-        ii = occ[0]
-        n_cols = len(grid[0])
-        left_filled = j == 0 or bool(grid[ii][j - 1])
-        right_filled = j + 1 >= n_cols or bool(grid[ii][j + 1])
-        if left_filled and right_filled:
-            j += 1
-            continue
-        bx = cells[grid[ii][j][0]]
-        left_gap = right_gap = float("inf")
-        if j > 0 and not left_filled:
-            for i in range(len(grid)):
-                for a in grid[i][j - 1]:
-                    left_gap = min(left_gap, bx["x0"] - cells[a]["x1"])
-        if j + 1 < n_cols and not right_filled:
-            for i in range(len(grid)):
-                for a in grid[i][j + 1]:
-                    right_gap = min(right_gap, cells[a]["x0"] - bx["x1"])
-        tgt = j - 1 if left_gap < right_gap else j + 1
-        for a in grid[ii][j]:
-            cells[a]["cn"] = tgt  # retag before the drop shifts indices
-        grid[ii][tgt].extend(grid[ii][j])
-        for row in grid:
-            row.pop(j)
-        for row in grid:
-            for col in row:
-                for a in col:
-                    if cells[a]["cn"] > j:
-                        cells[a]["cn"] -= 1
-
-
-def _relocate_singleton_rows(grid: list[list[list[int]]], cells: list[dict]) -> None:
-    """Row analog (table_structure_recognizer.py:266-324; when cols >= 4)."""
-    if not grid or len(grid[0]) < 4:
-        return
-    i = 0
-    while i < len(grid):
-        occ = [j for j in range(len(grid[i])) if grid[i][j]]
-        if len(occ) != 1:
-            i += 1
-            continue
-        jj = occ[0]
-        up_filled = i == 0 or bool(grid[i - 1][jj])
-        down_filled = i + 1 >= len(grid) or bool(grid[i + 1][jj])
-        if up_filled and down_filled:
-            i += 1
-            continue
-        bx = cells[grid[i][jj][0]]
-        up_gap = down_gap = float("inf")
-        if i > 0 and not up_filled:
-            for j in range(len(grid[i - 1])):
-                for a in grid[i - 1][j]:
-                    up_gap = min(up_gap, bx["top"] - cells[a]["bottom"])
-        if i + 1 < len(grid) and not down_filled:
-            for j in range(len(grid[i + 1])):
-                for a in grid[i + 1][j]:
-                    down_gap = min(down_gap, cells[a]["top"] - bx["bottom"])
-        tgt = i - 1 if up_gap < down_gap else i + 1
-        for a in grid[i][jj]:
-            cells[a]["rn"] = tgt  # retag before the drop shifts indices
-        grid[tgt][jj].extend(grid[i][jj])
-        grid.pop(i)
-        for row in grid:
-            for col in row:
-                for a in col:
-                    if cells[a]["rn"] > i:
-                        cells[a]["rn"] -= 1
+        i = 0
+        while i < len(grid):
+            occ = [j for j in range(len(grid[i])) if grid[i][j]]
+            if len(occ) != 1:
+                i += 1
+                continue
+            jj = occ[0]
+            up_filled = i == 0 or bool(grid[i - 1][jj])
+            down_filled = i + 1 >= len(grid) or bool(grid[i + 1][jj])
+            if up_filled and down_filled:
+                i += 1
+                continue
+            bx = cells[grid[i][jj][0]]
+            up_gap = down_gap = float("inf")
+            if i > 0 and not up_filled:
+                for j in range(len(grid[i - 1])):
+                    for a in grid[i - 1][j]:
+                        up_gap = min(up_gap, bx[lo] - cells[a][hi])
+            if i + 1 < len(grid) and not down_filled:
+                for j in range(len(grid[i + 1])):
+                    for a in grid[i + 1][j]:
+                        down_gap = min(down_gap, cells[a][lo] - bx[hi])
+            tgt = i - 1 if up_gap < down_gap else i + 1
+            for a in grid[i][jj]:
+                cells[a][key] = tgt  # retag before the drop shifts indices
+            grid[tgt][jj].extend(grid[i][jj])
+            grid.pop(i)
+            for row in grid:
+                for col in row:
+                    for a in col:
+                        if cells[a][key] > i:
+                            cells[a][key] -= 1
+    return grid
 
 
 def _header_rows(
@@ -351,6 +295,28 @@ def _header_rows(
     return hdset
 
 
+def _axis_spans(
+    lines: list[list[int]], lo: list[float], hi: list[float], own: list[int]
+) -> list[list[int]]:
+    """One grid axis of span resolution. A line's center is the mean of its
+    cells' ``lo`` plus the mean of their ``hi``, halved (0.0 for an empty
+    line); cell ``a`` covers the lines whose center lies in
+    [lo[a], hi[a]] and its own line ``own[a]``, clamped to the grid
+    (relocation may have shrunk it)."""
+    n = len(lines)
+    cent = [
+        (_mean([lo[a] for a in line]) + _mean([hi[a] for a in line])) / 2 if line else 0.0
+        for line in lines
+    ]
+    spans = []
+    for a, k in enumerate(own):
+        start, end = lo[a], hi[a]
+        cover = {j for j, m in enumerate(cent) if start <= m <= end}
+        cover.add(k)
+        spans.append(sorted(x for x in cover if 0 <= x < n) or [min(k, n - 1)])
+    return spans
+
+
 def _apply_spans(
     grid: list[list[list[int]]], cells: list[dict], html: bool
 ) -> list[list[list[int] | None]]:
@@ -363,39 +329,18 @@ def _apply_spans(
     if not grid:
         return grid
     n_rows, n_cols = len(grid), len(grid[0])
-    col_cells = [
-        [cells[a] for row in grid for a in row[j]] for j in range(n_cols)
-    ]
-    row_cells = [[cells[a] for col in grid[i] for a in col] for i in range(n_rows)]
-    clft = [_mean([c["x0"] for c in cc]) if cc else 0.0 for cc in col_cells]
-    crgt = [_mean([c["x1"] for c in cc]) if cc else 0.0 for cc in col_cells]
-    rtop = [
-        _mean([c["pn"] * PAGE_H + c["top"] for c in rc]) if rc else 0.0
-        for rc in row_cells
-    ]
-    rbtm = [
-        _mean([c["pn"] * PAGE_H + c["bottom"] for c in rc]) if rc else 0.0
-        for rc in row_cells
-    ]
-    # cluster centers as Python floats: the per-cell scans below compare
-    # floats, not numpy scalars
-    ccent = [float((clft[j] + crgt[j]) / 2) for j in range(n_cols)]
-    rcent = [float((rtop[i] + rbtm[i]) / 2) for i in range(n_rows)]
-    for c in cells:
-        x0, x1 = c["x0"], c["x1"]
-        ccols = [j for j, m in enumerate(ccent) if x0 <= m <= x1]
-        # row coverage: row center inside the cell's y-range
-        top = c["pn"] * PAGE_H + c["top"]
-        bottom = c["pn"] * PAGE_H + c["bottom"]
-        crows = [i for i, m in enumerate(rcent) if top <= m <= bottom]
-        # clamp to current grid bounds (relocation may have shrunk it)
-        c["cspan"] = sorted(
-            x for x in (set(ccols) | {c["cn"]}) if 0 <= x < n_cols
-        ) or [min(c["cn"], n_cols - 1)]
-        c["rspan"] = sorted(
-            x for x in (set(crows) | {c["rn"]}) if 0 <= x < n_rows
-        ) or [min(c["rn"], n_rows - 1)]
-
+    rspan = _axis_spans(
+        [[a for col in row for a in col] for row in grid],
+        [c["pn"] * PAGE_H + c["top"] for c in cells],
+        [c["pn"] * PAGE_H + c["bottom"] for c in cells],
+        [c["rn"] for c in cells],
+    )
+    cspan = _axis_spans(
+        [[a for row in grid for a in row[j]] for j in range(n_cols)],
+        [c["x0"] for c in cells],
+        [c["x1"] for c in cells],
+        [c["cn"] for c in cells],
+    )
     out: list[list[list[int] | None]] = [list(row) for row in grid]
     for i in range(n_rows):
         for j in range(n_cols):
@@ -405,8 +350,8 @@ def _apply_spans(
             rset: set[int] = set()
             cset: set[int] = set()
             for a in arr:
-                rset.update(cells[a]["rspan"])
-                cset.update(cells[a]["cspan"])
+                rset.update(rspan[a])
+                cset.update(cspan[a])
             if len(rset) < 2 and len(cset) < 2:
                 for a in arr:
                     cells[a]["rowspan_n"] = cells[a]["colspan_n"] = 0
@@ -571,23 +516,17 @@ def _desc_render(
     return "\n".join(row_txt)
 
 
-def construct_table(
-    cells: list[dict],
-    cap: str = "",
-    html: bool = False,
-    is_english: bool | None = None,
-) -> str:
+def construct_table(cells: list[dict], cap: str = "", html: bool = False) -> str:
     """Full grid reconstruction (table_structure_recognizer.py:135-587):
     block typing → row/col clustering → singleton relocation → header-row
     detection → span resolution → HTML or description render."""
     cells = [dict(c) for c in cells if (c["text"] or "").strip()]
     if not cells:
         return ""
-    if is_english is None:
-        joined = " ".join(c["text"] or "" for c in cells)
-        ascii_n = sum(ch.isascii() and ch.isalpha() for ch in joined)
-        cjk_n = sum("一" <= ch <= "鿿" for ch in joined)
-        is_english = ascii_n >= cjk_n
+    joined = " ".join(c["text"] or "" for c in cells)
+    ascii_n = sum(ch.isascii() and ch.isalpha() for ch in joined)
+    cjk_n = sum("一" <= ch <= "鿿" for ch in joined)
+    is_english = ascii_n >= cjk_n
     for c in cells:
         c["btype"] = block_type(c["text"])
         # explicit TSR header tag wins over the fixture layout kind
@@ -598,9 +537,7 @@ def construct_table(
     counts = Counter(c["btype"] for c in cells)
     max_type = max(counts.items(), key=lambda kv: kv[1])[0]
 
-    grid = _build_grid(cells)
-    _relocate_singleton_cols(grid, cells)
-    _relocate_singleton_rows(grid, cells)
+    grid = _relocate_singletons(_build_grid(cells), cells)
     hdset = _header_rows(grid, cells, max_type)
     tbl = _apply_spans(grid, cells, html)
     if html:
@@ -608,12 +545,29 @@ def construct_table(
     return _desc_render(tbl, cells, hdset, cap, is_english)
 
 
+def _media_span(kind: str, text: str, media_ref: str, bxs: list[dict]) -> dict:
+    """A figure or table span at its group's origin (the first box in
+    reading order), spanning the group's right and bottom edges."""
+    first = min(bxs, key=lambda b: (b["pn"] * PAGE_H + b["top"], b["x0"]))
+    return {
+        "kind": kind,
+        "text": text,
+        "media_ref": media_ref,
+        "pn": first["pn"],
+        "x0": first["x0"],
+        "x1": max(b["x1"] for b in bxs),
+        "top": first["top"],
+        "bottom": max(b["pn"] * PAGE_H + b["bottom"] for b in bxs) - first["pn"] * PAGE_H,
+        "lo": -1,
+    }
+
+
 def assemble(boxes: list[dict], html_tables: bool = False) -> tuple[list[dict], list[dict]]:
     """Full assembly pass. Returns (remaining_boxes, media_spans) where each
     media span is a dict {kind, text, media_ref, pn, x0, x1, top, bottom, lo}
     positioned at its group origin for interleaved re-insertion."""
     boxes = drop_credits(boxes)
-    mean_h = page_mean_height(boxes)
+    mean_h = page_mean(boxes, "top", "bottom", 10.0)
     rest, tables, figures = group_regions(boxes)
     tables = merge_cross_page_tables(tables, mean_h)
     rest, tbl_caps, fig_caps = assign_captions(rest, tables, figures)
@@ -623,39 +577,12 @@ def assemble(boxes: list[dict], html_tables: bool = False) -> tuple[list[dict], 
         texts = fig_caps.get(k, []) + [b["text"] for b in bxs if (b["text"] or "").strip()]
         txt = "\n".join(t for t in texts if t)
         ref = next((b["media_ref"] for b in bxs if b["media_ref"]), "")
-        first = min(bxs, key=lambda b: (b["pn"] * PAGE_H + b["top"], b["x0"]))
-        media.append(
-            {
-                "kind": "figure",
-                "text": txt,
-                "media_ref": ref,
-                "pn": first["pn"],
-                "x0": first["x0"],
-                "x1": max(b["x1"] for b in bxs),
-                "top": first["top"],
-                "bottom": max(b["pn"] * PAGE_H + b["bottom"] for b in bxs) - first["pn"] * PAGE_H,
-                "lo": -1,
-            }
-        )
+        media.append(_media_span("figure", txt, ref, bxs))
     for k, bxs in tables.items():
         # caption concatenation mirrors the reference's accumulating `cap`
         # (construct_table pops caption boxes into one string, tsr.py:137-146)
         cap = "".join(tbl_caps.get(k, []))
         txt = construct_table(bxs, cap=cap, html=html_tables)
-        if not txt:
-            continue
-        first = min(bxs, key=lambda b: (b["pn"] * PAGE_H + b["top"], b["x0"]))
-        media.append(
-            {
-                "kind": "table",
-                "text": txt,
-                "media_ref": "",
-                "pn": first["pn"],
-                "x0": first["x0"],
-                "x1": max(b["x1"] for b in bxs),
-                "top": first["top"],
-                "bottom": max(b["pn"] * PAGE_H + b["bottom"] for b in bxs) - first["pn"] * PAGE_H,
-                "lo": -1,
-            }
-        )
+        if txt:
+            media.append(_media_span("table", txt, "", bxs))
     return rest, media

@@ -404,7 +404,6 @@ def book_chunk(
 
 def laws_chunk(
     sections: list[tuple[str, str]],
-    eng: bool,
     chunk_token_num: int = 512,
     delimiter: str = "\n。；！？",
 ) -> list[str]:
@@ -720,7 +719,7 @@ def qa_pairs_markdown(lines: list[str]) -> list[tuple[str, str]]:
     return pairs
 
 
-def manual_chunk(sections: list[tuple[str, str]], is_english: bool = True) -> list[str]:
+def manual_chunk(sections: list[tuple[str, str]]) -> list[str]:
     """Manual template (rag/app/manual.py:214-253, non-outline PDF path):
     bullet dialect → per-section outline levels → section ids that advance
     when a title-level section changes level; then a fold that keeps

@@ -221,14 +221,13 @@ def chunk_doc(
         texts, media_refs = chunkers.naive_merge_with_media(
             stream, chunk_token_num, delimiter, overlapped_percent
         )
-    elif chunker in ("book", "laws", "manual"):
+    elif chunker == "book":
         eng = doc_is_english([t for t, _ in sections])
-        if chunker == "book":
-            texts = chunkers.book_chunk(sections, eng, chunk_token_num=256, delimiter=delimiter)
-        elif chunker == "laws":
-            texts = chunkers.laws_chunk(sections, eng, chunk_token_num, delimiter)
-        else:
-            texts = chunkers.manual_chunk(sections, eng)
+        texts = chunkers.book_chunk(sections, eng, chunk_token_num=256, delimiter=delimiter)
+    elif chunker == "laws":
+        texts = chunkers.laws_chunk(sections, chunk_token_num, delimiter)
+    elif chunker == "manual":
+        texts = chunkers.manual_chunk(sections)
     elif chunker == "paper":
         paper = chunkers.paper_chunk(sections)
         texts = ([paper["abstract"]] if paper["abstract"] else []) + paper["chunks"]

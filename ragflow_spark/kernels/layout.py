@@ -107,45 +107,40 @@ def median_height(boxes: list[dict]) -> float:
     return _median([b["bottom"] - b["top"] for b in boxes]) or 10.0
 
 
-def page_mean_height(boxes: list[dict]) -> dict[int, float]:
-    # pure-python means: these run per document per stage on tiny lists,
-    # where numpy's per-call overhead dominates the arithmetic
+def page_mean(boxes: list[dict], lo: str, hi: str, default: float) -> dict[int, float]:
+    """Per page, the mean ``b[hi] - b[lo]`` of its boxes (``default`` when
+    that is zero). Pure-python means: these run per document per stage on
+    tiny lists, where numpy's per-call overhead dominates the arithmetic."""
     acc: dict[int, list[float]] = {}
     for b in boxes:
-        acc.setdefault(b["pn"], []).append(b["bottom"] - b["top"])
-    return {pn: ((sum(v) / len(v)) or 10.0) for pn, v in acc.items()}
+        acc.setdefault(b["pn"], []).append(b[hi] - b[lo])
+    return {pn: ((sum(v) / len(v)) or default) for pn, v in acc.items()}
 
 
-def page_mean_width(boxes: list[dict]) -> dict[int, float]:
-    acc: dict[int, list[float]] = {}
-    for b in boxes:
-        acc.setdefault(b["pn"], []).append(b["x1"] - b["x0"])
-    return {pn: ((sum(v) / len(v)) or 100.0) for pn, v in acc.items()}
+def _sorted_by(boxes: list[dict], *keys) -> list[dict]:
+    """``boxes`` in lexicographic order of the per-box ``keys`` (most
+    significant first), ties in input order."""
+    order = np.lexsort((np.arange(len(boxes)), *reversed(keys)))
+    return [boxes[i] for i in order]
 
 
 def sort_y(boxes: list[dict], threshold: float) -> list[dict]:
     """Banded stable Y-then-X sort: quantize global top by ``threshold`` and
     lexsort (page, band, x0) — the vectorized equivalent of the reference's
     pairwise comparator (recognizer.py:54-62, SURVEY.md §2.2)."""
-    if not boxes:
-        return boxes
     top = np.array([b["pn"] * PAGE_H + b["top"] for b in boxes])
     x0 = np.array([b["x0"] for b in boxes])
     band = np.rint(top / threshold).astype(np.int64) if threshold > 0 else top
-    order = np.lexsort((np.arange(len(boxes)), x0, band))
-    return [boxes[i] for i in order]
+    return _sorted_by(boxes, band, x0)
 
 
 def sort_x(boxes: list[dict], threshold: float) -> list[dict]:
     """Banded stable X-then-Y sort (recognizer.py:64-74 sort_X_firstly):
     quantize x0 by ``threshold``, then order by (page, x-band, top)."""
-    if not boxes:
-        return boxes
     x0 = np.array([b["x0"] for b in boxes])
     top = np.array([b["pn"] * PAGE_H + b["top"] for b in boxes])
     band = np.rint(x0 / threshold).astype(np.int64) if threshold > 0 else x0
-    order = np.lexsort((np.arange(len(boxes)), top, band))
-    return [boxes[i] for i in order]
+    return _sorted_by(boxes, band, top)
 
 
 def sort_c(boxes: list[dict], threshold: float) -> list[dict]:
@@ -153,8 +148,6 @@ def sort_c(boxes: list[dict], threshold: float) -> list[dict]:
     explicit column id when present (TSR ``C`` tag → cell key "cn"), else
     the x-band; the reference's bubble re-sort passes are equivalent to one
     lexsort on (column, top)."""
-    if not boxes:
-        return boxes
     col = np.array(
         [
             b["cn"]
@@ -164,16 +157,13 @@ def sort_c(boxes: list[dict], threshold: float) -> list[dict]:
         ]
     )
     top = np.array([b["pn"] * PAGE_H + b["top"] for b in boxes])
-    order = np.lexsort((np.arange(len(boxes)), top, col))
-    return [boxes[i] for i in order]
+    return _sorted_by(boxes, col, top)
 
 
 def sort_r(boxes: list[dict], threshold: float) -> list[dict]:
     """Row-major sort (recognizer.py:95-111 sort_R_firstly): order by the
     explicit row id when present (TSR ``R`` tag → cell key "rn"), else the
     y-band; then x0."""
-    if not boxes:
-        return boxes
     row = np.array(
         [
             b["rn"]
@@ -187,8 +177,7 @@ def sort_r(boxes: list[dict], threshold: float) -> list[dict]:
         ]
     )
     x0 = np.array([b["x0"] for b in boxes])
-    order = np.lexsort((np.arange(len(boxes)), x0, row))
-    return [boxes[i] for i in order]
+    return _sorted_by(boxes, row, x0)
 
 
 def detect_column_width(boxes: list[dict]) -> float:
@@ -198,40 +187,34 @@ def detect_column_width(boxes: list[dict]) -> float:
     return _median([b["x1"] - b["x0"] for b in boxes])
 
 
-def assign_columns(boxes: list[dict], threshold: float) -> np.ndarray:
-    """Cluster x0 into column ids: sort distinct x0, start a new column when
-    the gap exceeds ``threshold`` — the closed form of the reference's
-    bubble-restore in sort_X_by_page (pdf_parser.py:182-195)."""
-    x0 = np.array([b["x0"] for b in boxes])
-    if len(x0) == 0:
-        return np.array([], dtype=np.int64)
-    uniq = np.unique(x0)
-    col_of = {}
-    col = 0
-    prev = None
-    for v in uniq:
+def gap_clusters(vals: list[float], threshold: float) -> list[int]:
+    """Cluster id of each value: over the sorted distinct values, a gap
+    above ``threshold`` starts the next cluster — the closed form of the
+    reference's sort-and-scan tagging of columns (pdf_parser.py:182-195)
+    and of table rows and columns (table_structure_recognizer.py:160-197).
+    Equal values always share a cluster, whatever the threshold. Python
+    floats, not numpy: the lists are one doc's boxes or one table's cells."""
+    cluster: dict[float, int] = {}
+    cur, prev = 0, None
+    for v in sorted(set(vals)):
         if prev is not None and v - prev > threshold:
-            col += 1
-        col_of[v] = col
+            cur += 1
+        cluster[v] = cur
         prev = v
-    return np.array([col_of[v] for v in x0], dtype=np.int64)
+    return [cluster[v] for v in vals]
 
 
 def reading_order(boxes: list[dict]) -> list[dict]:
     """Multi-column reading order: when median box width < page_width/2,
     re-sort as (page, column, top, x0) with column threshold col_w/2
     (rag/app/paper.py:64-67 + pdf_parser.py:182-195)."""
-    if not boxes:
-        return boxes
     col_w = detect_column_width(boxes)
     if col_w >= PAGE_W / 2:
         return boxes
-    cols = assign_columns(boxes, col_w / 2)
-    pn = np.array([b["pn"] for b in boxes])
-    top = np.array([b["top"] for b in boxes])
-    x0 = np.array([b["x0"] for b in boxes])
-    order = np.lexsort((np.arange(len(boxes)), x0, top, cols, pn))
-    return [boxes[i] for i in order]
+    x0 = [b["x0"] for b in boxes]
+    pn = [b["pn"] for b in boxes]
+    top = [b["top"] for b in boxes]
+    return _sorted_by(boxes, pn, gap_clusters(x0, col_w / 2), top, x0)
 
 
 def _same_line(b: dict, b_: dict, mh: float) -> bool:
@@ -242,13 +225,13 @@ def _same_line(b: dict, b_: dict, mh: float) -> bool:
 _CELLISH = ("table", "table header", "figure")
 
 
-def horizontal_merge(boxes: list[dict], col_threshold: float | None = None) -> list[dict]:
+def horizontal_merge(boxes: list[dict]) -> list[dict]:
     """Merge adjacent boxes on the same visual line within the same region
     (pdf_parser.py:388-404: same layoutno, not table/figure, |Δy|<mean_h/3).
     Region proxy for spans without an explicit layoutno: (page, kind, column)."""
     if not boxes:
         return boxes
-    mh = page_mean_height(boxes)
+    mh = page_mean(boxes, "top", "bottom", 10.0)
     out: list[dict] = [dict(boxes[0])]
     for b in boxes[1:]:
         p = out[-1]
@@ -306,8 +289,8 @@ def vertical_merge(boxes: list[dict], is_english: bool) -> list[dict]:
     concat feature overrides."""
     if not boxes:
         return boxes
-    mh = page_mean_height(boxes)
-    mw = page_mean_width(boxes)
+    mh = page_mean(boxes, "top", "bottom", 10.0)
+    mw = page_mean(boxes, "x0", "x1", 100.0)
     out: list[dict] = []
     n = len(boxes)
     # b is the (copied, growing) current box and boxes[k] the one below it;
@@ -481,17 +464,23 @@ def overlapped_area(a: dict, b: dict, ratio: bool = True) -> float:
     return ov
 
 
-def layouts_cleanup(boxes: list[dict], far: int = 2, thr: float = 0.7) -> list[dict]:
+# layouts_cleanup compares each region with its next _NMS_FAR regions and
+# merges two that overlap by _NMS_THR or more (recognizer.py:134-176)
+_NMS_FAR = 2
+_NMS_THR = 0.7
+
+
+def layouts_cleanup(boxes: list[dict]) -> list[dict]:
     """NMS-style dedup of overlapping same-kind layout regions
     (recognizer.py:134-176 layouts_cleanup). Real detector output overlaps
     constantly: the same table detected twice produces two region ids
     covering the same cells. Regions here are implicit — (page, lo) groups —
     so the port (a) reconstructs each region's envelope, (b) walks the
-    Y-sorted region list comparing each region with its next ``far``
-    neighbors, (c) when two same-kind regions overlap >=``thr`` (either
+    Y-sorted region list comparing each region with its next 2
+    neighbors, (c) when two same-kind regions overlap >=0.7 (either
     direction) keeps the one covering more text area and reassigns the
     loser's boxes to it, then (d) drops boxes that duplicate a same-text
-    box they overlap >=``thr`` within the merged region."""
+    box they overlap >=0.7 within the merged region."""
     regions: dict[tuple, list[dict]] = {}
     for b in boxes:
         if b["lo"] >= 0:
@@ -520,14 +509,14 @@ def layouts_cleanup(boxes: list[dict], far: int = 2, thr: float = 0.7) -> list[d
     i = 0
     while i + 1 < len(regs):
         hit = None
-        for j in range(i + 1, min(i + 1 + far, len(regs))):
+        for j in range(i + 1, min(i + 1 + _NMS_FAR, len(regs))):
             rj = regs[j]
             ri = regs[i]
             if rj["pn"] != ri["pn"] or rj["kind"] != ri["kind"]:
                 continue
             if (
-                overlapped_area(ri, rj) >= thr
-                or overlapped_area(rj, ri) >= thr
+                overlapped_area(ri, rj) >= _NMS_THR
+                or overlapped_area(rj, ri) >= _NMS_THR
             ):
                 hit = j
                 break
@@ -560,7 +549,7 @@ def layouts_cleanup(boxes: list[dict], far: int = 2, thr: float = 0.7) -> list[d
         dup = any(
             (x["text"] or "") == (nb["text"] or "")
             and (
-                overlapped_area(x, nb) >= thr or overlapped_area(nb, x) >= thr
+                overlapped_area(x, nb) >= _NMS_THR or overlapped_area(nb, x) >= _NMS_THR
             )
             for x in merged_members.get(tgt, [])
         )
@@ -617,7 +606,7 @@ def _scrap_usefull(b: dict, pw: float, mh: float) -> bool:
     return b["bottom"] - b["top"] > mh
 
 
-def filter_scraps(boxes: list[dict], page_w: float = PAGE_W) -> list[dict]:
+def filter_scraps(boxes: list[dict]) -> list[dict]:
     """Scrap filter (pdf_parser.py:922-992 __filterout_scraps): walk the
     stream grouping each useful box with following useful boxes on the same
     page that are x-aligned (<page_width/10) or projection-continuations;
@@ -628,17 +617,17 @@ def filter_scraps(boxes: list[dict], page_w: float = PAGE_W) -> list[dict]:
     original reading order."""
     if not boxes:
         return boxes
-    mh = page_mean_height(boxes)
+    mh = page_mean(boxes, "top", "bottom", 10.0)
     order = {id(b): i for i, b in enumerate(boxes)}
     # the stream reversed, so taking its head (or a box near it) pops from
     # the end of the list: the stream's i-th box, counting from 1, is rev[-i]
     rev = boxes[::-1]
-    x_near = page_w / 10
+    x_near = PAGE_W / 10
     kept: list[dict] = []
     while rev:
         first = rev.pop()
         mhp = mh.get(first["pn"], 10.0)
-        if not _scrap_usefull(first, page_w, mhp):
+        if not _scrap_usefull(first, PAGE_W, mhp):
             continue  # waste: narrow, short, untagged
         mj = bool(proj_match((first["text"] or "").strip())) or first["kind"] == "title"
         cur, mmj = first, mj
@@ -654,7 +643,7 @@ def filter_scraps(boxes: list[dict], page_w: float = PAGE_W) -> list[dict]:
                 y_dis = abs(cur_y - (b["pn"] * PAGE_H + (b["top"] + b["bottom"]) / 2))
                 if not mmj and y_dis >= 3 * mhp and cur_h < 1.5 * mhp:
                     break
-                if not _scrap_usefull(b, page_w, mhp):
+                if not _scrap_usefull(b, PAGE_W, mhp):
                     continue
                 x_overlap = not (cur["x1"] < b["x0"] or cur["x0"] > b["x1"])
                 x_dis = 0.0 if x_overlap else min(
@@ -669,7 +658,7 @@ def filter_scraps(boxes: list[dict], page_w: float = PAGE_W) -> list[dict]:
             lines.append(cur)
             mmj = bool(proj_match((cur["text"] or "").strip())) or cur["kind"] == "title"
         mw = sum(b["x1"] - b["x0"] for b in lines) / len(lines)
-        if mj or mw / page_w >= 0.35 or mw > 200:
+        if mj or mw / PAGE_W >= 0.35 or mw > 200:
             kept.extend(lines)
     kept.sort(key=lambda b: order[id(b)])
     return kept

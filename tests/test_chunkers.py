@@ -111,6 +111,30 @@ def test_all_chunker_rows_golden_digest():
     )
 
 
+def test_html_table_spans_golden_digest():
+    """sha256 of each doc's ``extract_doc(spans, html_tables=True)`` spans
+    over datagen seed 1, docs 0-299, taken before the table grid's row and
+    column mirrors were merged. It pins the html render and the html branch
+    of span resolution, which the chunker digests (description render)
+    never run. Corpus: datagen ``CORPUS_VERSION`` 7; a version bump
+    regenerates the docs and needs a new digest."""
+    from ragflow_spark.datagen import CORPUS_VERSION, gen_docs
+    from ragflow_spark.kernels.extract import extract_doc
+
+    assert CORPUS_VERSION == 7
+    h = hashlib.sha256()
+    n = tables = 0
+    for d in gen_docs(1, 0, 300):
+        out = extract_doc(d["spans"], html_tables=True)
+        h.update(json.dumps([d["doc_id"], out], sort_keys=True).encode())
+        n += len(out)
+        tables += sum(o["kind"] == "table" for o in out)
+    assert (n, tables) == (6698, 111)
+    assert h.hexdigest() == (
+        "389093a2f959c297d762f7f448fde236c68cd8ecbbc5006443b7ef6c09491508"
+    )
+
+
 def test_make_colon_as_title():
     body = "x" * 40 + "。" + "key terms follow:"
     secs = [(body, ""), ("item one, item two", "")]

@@ -16,7 +16,7 @@ def test_laws_hierarchical():
         ("第二章 数据安全", "title"),
         ("第三条 国家建立数据分类保护制度", "text"),
     ]
-    chunks = laws_chunk(secs, eng=False)
+    chunks = laws_chunk(secs)
     joined = "\n\n".join(chunks)
     # every article lands in some chunk, chapter titles chain above articles
     assert "第一条" in joined and "第三条" in joined
@@ -26,7 +26,7 @@ def test_laws_hierarchical():
 
 def test_laws_fallback_naive():
     secs = [(f"plain sentence number {i}.", "text") for i in range(10)]
-    chunks = laws_chunk(secs, eng=True, chunk_token_num=16)
+    chunks = laws_chunk(secs, chunk_token_num=16)
     assert len(chunks) >= 2
     assert "".join(chunks).count("plain sentence") == 10
 

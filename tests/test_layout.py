@@ -205,6 +205,34 @@ def test_construct_table_singleton_column_relocation():
     assert "<td>stray</td>" in html
 
 
+def test_construct_table_singleton_row_relocation():
+    # 5 rows x 4 cols; row 2 holds one cell ("3", under "qty") whose upper
+    # neighbor (row 1, "qty") is empty -> the singleton merges up and the
+    # row is dropped (tsr.py:266-324, applied when cols >= 4)
+    xs = [90, 190, 290, 390]
+    cells = [box(h, kind="table header", x0=xs[ci], x1=xs[ci] + 90, top=100, bottom=110, lo=0)
+             for ci, h in enumerate(["item", "qty", "price", "note"])]
+    rows = {1: ["apple", None, "1.5", "fresh"], 3: ["pear", "7", "2.0", "ripe"],
+            4: ["plum", "9", "3.5", "dry"]}
+    for ri, vals in rows.items():
+        for ci, v in enumerate(vals):
+            if v is not None:
+                cells.append(box(v, kind="table", x0=xs[ci], x1=xs[ci] + 90,
+                                 top=100 + ri * 14, bottom=110 + ri * 14, lo=0))
+    cells.append(box("3", kind="table", x0=xs[1], x1=xs[1] + 90, top=128, bottom=138, lo=0))
+    assert construct_table(cells) == (
+        "item：apple; qty：3; price：1.5; note：fresh\n"
+        "item：pear; qty：7; price：2.0; note：ripe\n"
+        "item：plum; qty：9; price：3.5; note：dry"
+    )
+    assert construct_table(cells, html=True) == (
+        "<table><tr><th>item</th><th>qty</th><th>price</th><th>note</th></tr>"
+        "<tr><td>apple</td><td>3</td><td>1.5</td><td>fresh</td></tr>"
+        "<tr><td>pear</td><td>7</td><td>2.0</td><td>ripe</td></tr>"
+        "<tr><td>plum</td><td>9</td><td>3.5</td><td>dry</td></tr></table>"
+    )
+
+
 def test_assemble_caption_to_nearest():
     cells = [
         box("h", kind="table", x0=90, x1=180, top=100, bottom=110, lo=0),

@@ -2,9 +2,11 @@
 equal the forms they replaced. The replaced forms are kept here as the
 reference: the ``_SPACES.sub`` ToC-heading key, ``_DOT_LEADER.search``,
 ``_JUNK_RE.search``, the sequential ``_PROJ_PATTERNS`` loop,
-``re.match(re.escape(prefix), t)``, ``np.median``, ``np.mean``, and the
-``horizontal_merge``, ``vertical_merge`` and ``filter_scraps`` loops; for
-the chunkers, the ``re.match``-per-bullet-pattern loops with and without
+``re.match(re.escape(prefix), t)``, ``np.median``, ``np.mean``, the
+``horizontal_merge``, ``vertical_merge`` and ``filter_scraps`` loops, the
+two per-page means, the four banded sorts and ``reading_order``, and the
+table grid's mirrored pairs (``assign_columns`` and ``_cluster_1d``, the
+singleton column and row relocations); for the chunkers, the ``re.match``-per-bullet-pattern loops with and without
 ``not_bullet``, ``remove_contents_table``'s ``re.sub``/``re.escape`` form,
 ``filter_toc``'s pop loop and ``doc_is_english``'s three strips. Each
 predicate is compared on every box text of the seed-1 mixed corpus
@@ -23,6 +25,7 @@ import pytest
 from ragflow_spark.datagen import gen_docs
 from ragflow_spark.functions.textstats import doc_is_english
 from ragflow_spark.kernels import chunkers as C
+from ragflow_spark.kernels import assemble as A
 from ragflow_spark.kernels import layout as L
 from ragflow_spark.kernels.assemble import _mean
 from ragflow_spark.kernels.extract import finalize_doc, strip_rows
@@ -81,6 +84,20 @@ def median_ref(xs: list) -> float:
     return float(np.median(xs))
 
 
+def page_mean_height_ref(boxes):
+    acc = {}
+    for b in boxes:
+        acc.setdefault(b["pn"], []).append(b["bottom"] - b["top"])
+    return {pn: ((sum(v) / len(v)) or 10.0) for pn, v in acc.items()}
+
+
+def page_mean_width_ref(boxes):
+    acc = {}
+    for b in boxes:
+        acc.setdefault(b["pn"], []).append(b["x1"] - b["x0"])
+    return {pn: ((sum(v) / len(v)) or 100.0) for pn, v in acc.items()}
+
+
 # ------------------------------------------------ the replaced pass loops
 # verbatim from the previous kernels, with the unchanged helpers taken from
 # the module
@@ -89,7 +106,7 @@ def median_ref(xs: list) -> float:
 def horizontal_merge_ref(boxes):
     if not boxes:
         return boxes
-    mh = L.page_mean_height(boxes)
+    mh = page_mean_height_ref(boxes)
     out = []
     for b in boxes:
         b = dict(b)
@@ -122,8 +139,8 @@ def horizontal_merge_ref(boxes):
 def vertical_merge_ref(boxes, is_english):
     if not boxes:
         return boxes
-    mh = L.page_mean_height(boxes)
-    mw = L.page_mean_width(boxes)
+    mh = page_mean_height_ref(boxes)
+    mw = page_mean_width_ref(boxes)
     out = []
     i = 0
     bxs = [dict(b) for b in boxes]
@@ -178,7 +195,7 @@ def vertical_merge_ref(boxes, is_english):
 def filter_scraps_ref(boxes, page_w=L.PAGE_W):
     if not boxes:
         return boxes
-    mh = L.page_mean_height(boxes)
+    mh = page_mean_height_ref(boxes)
     order = {id(b): i for i, b in enumerate(boxes)}
     bxs = list(boxes)
     kept = []
@@ -757,3 +774,374 @@ def test_doc_is_english_equals_the_three_strip_form(texts, doc_sections):
     assert {doc_is_english_ref(x) for x in lists} == {True, False}
     for x in lists:
         assert doc_is_english(x) == doc_is_english_ref(x), x
+
+
+# --------------------------------------- the replaced row/column mirrors
+# verbatim from the previous kernels: each axis of a mirrored pair had its
+# own copy, and each sort its own lexsort tail
+def sort_y_ref(boxes, threshold):
+    if not boxes:
+        return boxes
+    top = np.array([b["pn"] * L.PAGE_H + b["top"] for b in boxes])
+    x0 = np.array([b["x0"] for b in boxes])
+    band = np.rint(top / threshold).astype(np.int64) if threshold > 0 else top
+    order = np.lexsort((np.arange(len(boxes)), x0, band))
+    return [boxes[i] for i in order]
+
+
+def sort_x_ref(boxes, threshold):
+    if not boxes:
+        return boxes
+    x0 = np.array([b["x0"] for b in boxes])
+    top = np.array([b["pn"] * L.PAGE_H + b["top"] for b in boxes])
+    band = np.rint(x0 / threshold).astype(np.int64) if threshold > 0 else x0
+    order = np.lexsort((np.arange(len(boxes)), top, band))
+    return [boxes[i] for i in order]
+
+
+def sort_c_ref(boxes, threshold):
+    if not boxes:
+        return boxes
+    col = np.array([
+        b["cn"] if "cn" in b
+        else (np.rint(b["x0"] / threshold) if threshold > 0 else b["x0"])
+        for b in boxes
+    ])
+    top = np.array([b["pn"] * L.PAGE_H + b["top"] for b in boxes])
+    order = np.lexsort((np.arange(len(boxes)), top, col))
+    return [boxes[i] for i in order]
+
+
+def sort_r_ref(boxes, threshold):
+    if not boxes:
+        return boxes
+    row = np.array([
+        b["rn"] if "rn" in b
+        else (
+            np.rint((b["pn"] * L.PAGE_H + b["top"]) / threshold)
+            if threshold > 0 else b["pn"] * L.PAGE_H + b["top"]
+        )
+        for b in boxes
+    ])
+    x0 = np.array([b["x0"] for b in boxes])
+    order = np.lexsort((np.arange(len(boxes)), x0, row))
+    return [boxes[i] for i in order]
+
+
+def assign_columns_ref(boxes, threshold):
+    x0 = np.array([b["x0"] for b in boxes])
+    if len(x0) == 0:
+        return np.array([], dtype=np.int64)
+    uniq = np.unique(x0)
+    col_of = {}
+    col = 0
+    prev = None
+    for v in uniq:
+        if prev is not None and v - prev > threshold:
+            col += 1
+        col_of[v] = col
+        prev = v
+    return np.array([col_of[v] for v in x0], dtype=np.int64)
+
+
+def reading_order_ref(boxes):
+    if not boxes:
+        return boxes
+    col_w = L.detect_column_width(boxes)
+    if col_w >= L.PAGE_W / 2:
+        return boxes
+    cols = assign_columns_ref(boxes, col_w / 2)
+    pn = np.array([b["pn"] for b in boxes])
+    top = np.array([b["top"] for b in boxes])
+    x0 = np.array([b["x0"] for b in boxes])
+    order = np.lexsort((np.arange(len(boxes)), x0, top, cols, pn))
+    return [boxes[i] for i in order]
+
+
+def cluster_1d_ref(vals, thr):
+    order = np.argsort(vals, kind="stable").tolist()
+    v_list = vals.tolist()
+    ids = [0] * len(v_list)
+    cur = 0
+    prev = None
+    for idx in order:
+        v = v_list[idx]
+        if prev is not None and v - prev > thr:
+            cur += 1
+        ids[idx] = cur
+        prev = v
+    return np.array(ids, dtype=np.int64)
+
+
+def relocate_singleton_cols_ref(grid, cells):
+    if len(grid) < 4:
+        return
+    j = 0
+    while grid and j < len(grid[0]):
+        occ = [i for i in range(len(grid)) if grid[i][j]]
+        if len(occ) != 1:
+            j += 1
+            continue
+        ii = occ[0]
+        n_cols = len(grid[0])
+        left_filled = j == 0 or bool(grid[ii][j - 1])
+        right_filled = j + 1 >= n_cols or bool(grid[ii][j + 1])
+        if left_filled and right_filled:
+            j += 1
+            continue
+        bx = cells[grid[ii][j][0]]
+        left_gap = right_gap = float("inf")
+        if j > 0 and not left_filled:
+            for i in range(len(grid)):
+                for a in grid[i][j - 1]:
+                    left_gap = min(left_gap, bx["x0"] - cells[a]["x1"])
+        if j + 1 < n_cols and not right_filled:
+            for i in range(len(grid)):
+                for a in grid[i][j + 1]:
+                    right_gap = min(right_gap, cells[a]["x0"] - bx["x1"])
+        tgt = j - 1 if left_gap < right_gap else j + 1
+        for a in grid[ii][j]:
+            cells[a]["cn"] = tgt
+        grid[ii][tgt].extend(grid[ii][j])
+        for row in grid:
+            row.pop(j)
+        for row in grid:
+            for col in row:
+                for a in col:
+                    if cells[a]["cn"] > j:
+                        cells[a]["cn"] -= 1
+
+
+def relocate_singleton_rows_ref(grid, cells):
+    if not grid or len(grid[0]) < 4:
+        return
+    i = 0
+    while i < len(grid):
+        occ = [j for j in range(len(grid[i])) if grid[i][j]]
+        if len(occ) != 1:
+            i += 1
+            continue
+        jj = occ[0]
+        up_filled = i == 0 or bool(grid[i - 1][jj])
+        down_filled = i + 1 >= len(grid) or bool(grid[i + 1][jj])
+        if up_filled and down_filled:
+            i += 1
+            continue
+        bx = cells[grid[i][jj][0]]
+        up_gap = down_gap = float("inf")
+        if i > 0 and not up_filled:
+            for j in range(len(grid[i - 1])):
+                for a in grid[i - 1][j]:
+                    up_gap = min(up_gap, bx["top"] - cells[a]["bottom"])
+        if i + 1 < len(grid) and not down_filled:
+            for j in range(len(grid[i + 1])):
+                for a in grid[i + 1][j]:
+                    down_gap = min(down_gap, cells[a]["top"] - bx["bottom"])
+        tgt = i - 1 if up_gap < down_gap else i + 1
+        for a in grid[i][jj]:
+            cells[a]["rn"] = tgt
+        grid[tgt][jj].extend(grid[i][jj])
+        grid.pop(i)
+        for row in grid:
+            for col in row:
+                for a in col:
+                    if cells[a]["rn"] > i:
+                        cells[a]["rn"] -= 1
+
+
+def relocate_ref(grid, cells):
+    relocate_singleton_cols_ref(grid, cells)
+    relocate_singleton_rows_ref(grid, cells)
+    return grid
+
+
+def _outcome(f, *args):
+    """``f(*args)``, or the type of the exception it raises."""
+    try:
+        return f(*args)
+    except Exception as e:  # noqa: BLE001 — compared by type
+        return type(e)
+
+
+# coordinates that stress the arithmetic: duplicates, signed zeros,
+# infinities and values whose differences overflow
+GEOM_VALUES = [0.0, -0.0, 1.0, 72.0, 100.0, 100.5, 300.0, 1e308, -1e308,
+               math.inf, -math.inf, 5e-324]
+
+
+def _value(r):
+    return r.choice(GEOM_VALUES) if r.random() < 0.3 else float(r.choice(
+        [r.uniform(-50, 700), r.randrange(0, 700, 7)]))
+
+
+def _geom_boxes(r, n):
+    boxes = []
+    for _ in range(n):
+        b = {"kind": "text", "text": "t", "media_ref": "", "pn": r.randrange(3),
+             "x0": _value(r), "x1": _value(r), "top": _value(r), "bottom": _value(r),
+             "lo": -1}
+        if r.random() < 0.5:
+            b["x1"] = b["x0"] + r.choice([-20.0, 0.0, 50.0, 200.0, 450.0])
+            b["bottom"] = b["top"] + r.choice([-5.0, 0.0, 10.0, 12.0])
+        if r.random() < 0.2:
+            b["cn"] = r.randrange(4)
+        if r.random() < 0.2:
+            b["rn"] = r.randrange(4)
+        boxes.append(b)
+    return boxes
+
+
+SORTS = {
+    "sort_y": (L.sort_y, sort_y_ref),
+    "sort_x": (L.sort_x, sort_x_ref),
+    "sort_c": (L.sort_c, sort_c_ref),
+    "sort_r": (L.sort_r, sort_r_ref),
+}
+
+
+def _same_order(got, want):
+    """The same boxes (by identity) in the same order, or the same
+    exception type."""
+    if isinstance(want, type) or isinstance(got, type):
+        return got == want
+    return [id(b) for b in got] == [id(b) for b in want]
+
+
+def test_page_mean_equals_the_two_page_means():
+    r = random.Random(31)
+    for _ in range(3000):
+        boxes = _geom_boxes(r, r.choice([0, 1, 2, 5, 9, 30]))
+        assert repr(L.page_mean(boxes, "top", "bottom", 10.0)) == repr(
+            page_mean_height_ref(boxes))
+        assert repr(L.page_mean(boxes, "x0", "x1", 100.0)) == repr(
+            page_mean_width_ref(boxes))
+
+
+def test_sorts_equal_their_lexsort_bodies():
+    r = random.Random(37)
+    thresholds = [0.0, -1.0, 0.5, 3.3, 10.0, 1e-300, math.inf, -math.inf, math.nan]
+    with np.errstate(all="ignore"):
+        for _ in range(4000):
+            boxes = _geom_boxes(r, r.choice([0, 1, 2, 3, 6, 20]))
+            before = [dict(b) for b in boxes]
+            thr = r.choice(thresholds)
+            for new, ref in SORTS.values():
+                assert _same_order(_outcome(new, boxes, thr), _outcome(ref, boxes, thr))
+            assert _same_order(_outcome(L.reading_order, boxes),
+                               _outcome(reading_order_ref, boxes))
+            assert boxes == before
+
+
+def test_gap_clusters_equal_assign_columns_and_cluster_1d():
+    """Over distinct values, so a negative threshold (assign_columns gets
+    one whenever the median box width is negative) keeps equal values
+    together as assign_columns did; _cluster_1d's thresholds are never
+    below 1 (or NaN), where a scan over the sequence agrees."""
+    # a sequence scan splits equal values under a negative threshold
+    assert cluster_1d_ref(np.array([1.0, 1.0]), -1.0).tolist() == [0, 1]
+    assert L.gap_clusters([1.0, 1.0], -1.0) == [0, 0]
+    r = random.Random(41)
+    col_thr = [-300.0, -1.0, -0.0, 0.0, 0.5, 10.0, 1e308, math.inf, -math.inf, math.nan]
+    grid_thr = [1.0, 1.5, 7.0, 60.0, 1e308, math.inf, math.nan]
+    with np.errstate(all="ignore"):
+        for _ in range(50000):
+            vals = [_value(r) for _ in range(r.choice([0, 1, 2, 3, 5, 9, 25]))]
+            if r.random() < 0.3 and vals:
+                vals += r.sample(vals, r.randrange(len(vals)) + 1)
+            thr = r.choice(col_thr)
+            want = assign_columns_ref([{"x0": v} for v in vals], thr)
+            assert L.gap_clusters(vals, thr) == want.tolist(), (vals, thr)
+            if vals:
+                thr = r.choice(grid_thr)
+                want = cluster_1d_ref(np.array(vals), thr)
+                assert L.gap_clusters(vals, thr) == want.tolist(), (vals, thr)
+
+
+def _random_grid(r):
+    """A rectangular grid of cell-index lists and its cells (rn/cn set to
+    their position): holes, stacked cells and hostile coordinates."""
+    n_rows, n_cols = r.randint(1, 7), r.randint(1, 7)
+    fill = r.choice([0.3, 0.6, 0.9])
+    grid = [[[] for _ in range(n_cols)] for _ in range(n_rows)]
+    cells = []
+    for i in range(n_rows):
+        for j in range(n_cols):
+            for _ in range(r.choice([1, 1, 1, 2]) if r.random() < fill else 0):
+                top = 100.0 + 14 * i + r.choice([0.0, r.uniform(-6, 6)])
+                x0 = 90.0 + 100 * j + r.choice([0.0, r.uniform(-40, 40)])
+                c = {"x0": x0, "x1": x0 + r.choice([90.0, r.uniform(5, 250)]),
+                     "top": top, "bottom": top + r.choice([10.0, r.uniform(1, 30)]),
+                     "pn": 0, "rn": i, "cn": j}
+                if r.random() < 0.1:
+                    c[r.choice(["x0", "x1", "top", "bottom"])] = _value(r)
+                grid[i][j].append(len(cells))
+                cells.append(c)
+    return grid, cells
+
+
+def _check_relocation(grid, cells):
+    """Both forms on copies: the same grid and cells, or the same
+    exception type. Returns whether a cell moved."""
+    g1, c1 = [[list(x) for x in row] for row in grid], [dict(c) for c in cells]
+    g2, c2 = [[list(x) for x in row] for row in grid], [dict(c) for c in cells]
+    got, want = _outcome(A._relocate_singletons, g1, c1), _outcome(relocate_ref, g2, c2)
+    if isinstance(want, type) or isinstance(got, type):
+        assert got == want, (grid, cells)
+        return False
+    assert (got, c1) == (want, c2), (grid, cells)
+    return got != grid
+
+
+def test_relocation_equals_the_column_and_row_pair():
+    r = random.Random(43)
+    moved = 0
+    for _ in range(60000):
+        moved += _check_relocation(*_random_grid(r))
+    assert moved > 5000
+
+
+def test_mirrors_equal_their_pairs_on_the_corpus(corpus, monkeypatch):
+    """Every sort_y, reading_order, column clustering, grid clustering and
+    relocation call ``layout_doc`` makes for every corpus doc."""
+    from ragflow_spark.kernels import extract as kx
+
+    calls = {"sort_y": 0, "reading_order": 0, "columns": 0, "grid": 0, "relocate": 0}
+
+    def sort_y(boxes, thr):
+        calls["sort_y"] += 1
+        got = L.sort_y(boxes, thr)
+        assert _same_order(got, sort_y_ref(boxes, thr))
+        return got
+
+    def reading_order(boxes):
+        calls["reading_order"] += 1
+        got = L.reading_order(boxes)
+        assert _same_order(got, reading_order_ref(boxes))
+        return got
+
+    def clusters(name, ref):
+        def run(vals, thr):
+            calls[name] += 1
+            got = gap_clusters(vals, thr)
+            assert got == ref(vals, thr).tolist()
+            return got
+        return run
+
+    def build_grid(cells):
+        calls["relocate"] += 1
+        grid = build(cells)
+        _check_relocation(grid, cells)
+        return grid
+
+    gap_clusters, build = L.gap_clusters, A._build_grid
+    monkeypatch.setattr(kx, "sort_y", sort_y)
+    monkeypatch.setattr(kx, "reading_order", reading_order)
+    monkeypatch.setattr(L, "gap_clusters", clusters(
+        "columns", lambda v, t: assign_columns_ref([{"x0": x} for x in v], t)))
+    monkeypatch.setattr(A, "gap_clusters", clusters(
+        "grid", lambda v, t: cluster_1d_ref(np.array(v), t)))
+    monkeypatch.setattr(A, "_build_grid", build_grid)
+    for rows, _ in corpus:
+        finalize_doc(rows)
+    assert calls["sort_y"] > 1000 and calls["reading_order"] > 1000
+    assert min(calls["columns"], calls["grid"], calls["relocate"]) > 500, calls
